@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import scala.collection.mutable
@@ -10,10 +10,14 @@ import scala.collection.mutable
   *
   * Split per SURVEY.md §2.8:
   *   - the HEAVY part — the "derivative heap" of empirical next-symbol
-  *     distributions φ̂_y for every context y, |y| ≤ L — is distributed
-  *     n-gram counting (`explode` + `groupBy().count()`, map-side combined);
+  *     counts for every context y, |y| ≤ L — is one distributed pass: on
+  *     the long form the [[graft.functions.PfsaHeapLong]] aggregate folds
+  *     each cluster's t-ordered rows into a count table (runs join at
+  *     merge, so counts are exact under any partitioning) and prunes it
+  *     before the collect; the array path counts `explode`d n-grams;
   *   - the TINY part — ε-synchronization, BFS state discovery, SCC
-  *     restriction — runs on the driver over the ≤|Σ|^L-entry heap;
+  *     restriction — runs on the driver over the heap, which holds at most
+  *     Σ_{l≤L} |Σ|^l < |Σ|²/(ε(|Σ|−1)) contexts for in-alphabet data;
   *   - the π̃ transition-count pass is a second distributed sweep with the
   *     inferred skeleton broadcast.
   *
@@ -74,27 +78,34 @@ object GenESeSS {
       .groupBy("cluster", "ctx", "nxt")
       .agg(count(lit(1)).as("cnt"))
 
-  /** [[ngramCounts]] over LONG-FORM `(seq_id, t, symbol, cluster)` rows — the
-    * array-free heap builder: each row's context suffixes come from `lag`
-    * windows (per-sequence partitioned, never a whole-sequence cell), so the
-    * hottest inference stage has no sequence-length ceiling. Produces counts
-    * IDENTICAL to [[ngramCounts]] on the equivalent arrays (spec-checked). */
-  def ngramCountsLong(longDf: DataFrame, maxCtxLen: Int): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("seq_id")).orderBy(col("t"))
-    val lags = (maxCtxLen to 1 by -1).map(j =>
-      lag(col("symbol").cast("byte"), j).over(w))
-    longDf
-      .select(col("cluster"), col("symbol").cast("int").as("nxt"),
-        array(lags: _*).as("hist"),
-        least(row_number().over(w) - 1, lit(maxCtxLen)).as("avail"))
-      .filter(col("avail") >= 1)
-      .select(col("cluster"), explode(expr(
-        s"transform(sequence(1, avail), l -> slice(hist, $maxCtxLen - l + 1, l))")).as("ctx"),
-        col("nxt"))
-      .groupBy("cluster", "ctx", "nxt")
-      .agg(count(lit(1)).as("cnt"))
+  /** [[ngramCounts]] over LONG-FORM `(seq_id, t, symbol, cluster)` rows:
+    * the same (cluster, ctx, nxt, cnt) counts, unpruned, from one
+    * [[graft.functions.PfsaHeapLong]] aggregate per cluster — no sequence is
+    * ever one array cell, so there is no sequence-length ceiling, and the
+    * per-cluster state is the context table (bounded by the alphabet and L)
+    * plus one open run per sequence. The input is partitioned by seq_id and
+    * t-sorted first, so each sequence folds as one run. */
+  def ngramCountsLong(longDf: DataFrame, maxCtxLen: Int): DataFrame =
+    heapLong(presorted(longDf), maxCtxLen, minCtxCount = 1L, maxContexts = Int.MaxValue)
+      .select(col("cluster"), inline(col("heap")))
+
+  /** Per-cluster (cluster, heap: array<struct<ctx, nxt, cnt>>) over long-form
+    * rows, pruned inside the aggregate (see [[graft.functions.PfsaHeapLong]]). */
+  private[core] def heapLong(longDf: DataFrame, maxCtxLen: Int, minCtxCount: Long,
+                       maxContexts: Int): DataFrame = {
+    import org.apache.spark.sql.graft.ColumnBridge
+    val heap = ColumnBridge.column(graft.functions.PfsaHeapLong(
+      ColumnBridge.expression(col("seq_id")),
+      ColumnBridge.expression(col("t").cast("long")),
+      ColumnBridge.expression(col("symbol").cast("byte")),
+      maxCtxLen, minCtxCount, maxContexts).toAggregateExpression())
+    longDf.groupBy(col("cluster")).agg(heap.as("heap"))
   }
+
+  /** One partition per sequence, t-ascending: the shape the run-based
+    * aggregates fold in a single run per sequence. */
+  private def presorted(longDf: DataFrame): DataFrame =
+    longDf.repartition(col("seq_id")).sortWithinPartitions(col("seq_id"), col("t"))
 
   /** Driver-side finish for one cluster: heap → (conn, states, annErr, syn). */
   private final case class Skeleton(
@@ -310,27 +321,33 @@ object GenESeSS {
   }
 
   /** [[inferAll]] over LONG-FORM labeled rows `(seq_id, t, symbol, cluster)`
-    * — no sequence is ever one array cell: the heap comes from
-    * [[ngramCountsLong]] lag windows and the π̃ sweep folds through the
-    * [[graft.functions.PfsaVisitLong]] TypedImperativeAggregate (per-group
-    * state O(|Q|·|Σ|)). Produces the same machines as [[inferAll]] on the
-    * equivalent arrays (spec-checked), with no sequence-length ceiling. */
-  /** @param presort false when the caller already hash-partitioned by seq_id
-    *                 and sorted by (seq_id, t) — e.g. fit's cached frame —
-    *                 so the visit sweep adds no redundant exchange */
-  /** @param knownClusters the distinct `cluster` ids present in
-    *                       `longLabeled`, when the caller already holds them
-    *                       (fit's frequency relabel does) — skips a full
-    *                       re-scan of the labeled join just to re-derive
-    *                       them (r16: that distinct measured ~0.5 s per fit
-    *                       at sf0.1, pure job latency over a known answer) */
+    * — no sequence is ever one array cell. Two aggregates read the same
+    * seq_id-partitioned, t-sorted input: the [[graft.functions.PfsaHeapLong]]
+    * heap (counted, floored at `minCtxCount` and cut to the `maxContexts`
+    * largest contexts per cluster inside the aggregate, so only the pruned
+    * heap is collected) and the [[graft.functions.PfsaVisitLong]] π̃ sweep
+    * (per-group state O(|Q|·|Σ|)). Produces the same machines as
+    * [[inferAll]] on the equivalent arrays (spec-checked), with no
+    * sequence-length ceiling.
+    *
+    * @param presort false when the caller already hash-partitioned by seq_id
+    *                and sorted by (seq_id, t) — e.g. fit's cached frame —
+    *                so neither aggregate adds an exchange of the raw rows
+    * @param knownClusters the distinct `cluster` ids present in
+    *                      `longLabeled`, when the caller already holds them
+    *                      (fit's frequency relabel does) — skips a full
+    *                      re-scan of the labeled join just to re-derive them */
   def inferAllLong(spark: SparkSession, longLabeled: DataFrame, alphabetSize: Int,
                    params: Params = Params(), presort: Boolean = true,
                    knownClusters: Option[Seq[Int]] = None): Map[Int, Pfsa] = {
     import org.apache.spark.sql.graft.ColumnBridge
     val k = alphabetSize
     val L = contextLength(k, params.eps, params.maxL)
-    val counts = collectHeaps(ngramCountsLong(longLabeled, L), k, params)
+    val src = if (presort) presorted(longLabeled) else longLabeled
+    val counts = heapLong(src, L, params.minCtxCount, params.maxContexts).collect()
+      .map(r => r.getInt(0) -> heapOf(
+        r.getSeq[Row](1).map(e => (e.getSeq[Byte](0), e.getInt(1), e.getLong(2))), k))
+      .toMap
     val allClusters = knownClusters.map(_.toArray).getOrElse(
       longLabeled.select("cluster").distinct().collect().map(_.getInt(0)))
     val skeletons = allClusters.map { cluster =>
@@ -342,13 +359,8 @@ object GenESeSS {
       ColumnBridge.expression(col("t").cast("long")),
       ColumnBridge.expression(col("symbol").cast("byte")),
       skeletons.map { case (c, s) => c -> s.conn }, k).toAggregateExpression())
-    // one partition per sequence, t-ascending: each group folds in one
-    // in-order head run (the repartition also satisfies the (cluster,
-    // seq_id) grouping — seq_id colocates the pair, no second exchange)
-    val src =
-      if (presort) longLabeled.repartition(col("seq_id"))
-        .sortWithinPartitions(col("seq_id"), col("t"))
-      else longLabeled
+    // grouping by (cluster, seq_id) reuses src's seq_id partitioning — seq_id
+    // colocates the pair, no second exchange
     val visitRows = src
       .groupBy(col("cluster"), col("seq_id"))
       .agg(visitsAgg.as("v"))
@@ -362,9 +374,9 @@ object GenESeSS {
     assemblePfsas(skeletons, visitRows, k, params)
   }
 
-  /** Shared heap collection: prune distributively (frequency floor +
+  /** Array-path heap collection: prune distributively (frequency floor +
     * per-cluster top-`maxContexts` by mass), collect ≤ k·maxContexts·|Σ|
-    * rows, re-encode contexts to the compact string form. */
+    * rows, and assemble each cluster's heap with [[heapOf]]. */
   private def collectHeaps(ngrams: DataFrame, k: Int,
                            params: Params): Map[Int, Map[String, (Array[Double], Long)]] = {
     val raw = ngrams.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -379,26 +391,29 @@ object GenESeSS {
       .collect()
       .groupBy(_.getInt(0))
       .map { case (cluster, rows) =>
-        // driver boundary: array<tinyint> contexts → compact string form
-        val byCtx = rows.groupBy(r => r.getSeq[Byte](1).map(enc).mkString)
-          .map { case (ctx, rs) =>
-            val dist = new Array[Double](k)
-            var tot = 0L
-            rs.foreach { r =>
-              // out-of-alphabet next-symbols are skipped, matching localHeap
-              // and the scoring kernels (they tolerate caller-supplied
-              // alphabetSize smaller than the data's true domain)
-              val nxt = r.getInt(2)
-              if (nxt >= 0 && nxt < k) { dist(nxt) += r.getLong(3).toDouble; tot += r.getLong(3) }
-            }
-            var i = 0
-            while (i < k && tot > 0L) { dist(i) /= tot; i += 1 }
-            ctx -> (dist, tot)
-          }
-        cluster -> byCtx
+        cluster -> heapOf(rows.toSeq.map(r => (r.getSeq[Byte](1), r.getInt(2), r.getLong(3))), k)
       }
     finally raw.unpersist()
   }
+
+  /** Driver boundary for one cluster's pruned (ctx, nxt, cnt) rows: contexts
+    * → compact string form, counts → (φ̂, freq). */
+  private def heapOf(rows: Seq[(Seq[Byte], Int, Long)],
+                     k: Int): Map[String, (Array[Double], Long)] =
+    rows.groupBy(_._1.map(enc).mkString)
+      .map { case (ctx, rs) =>
+        val dist = new Array[Double](k)
+        var tot = 0L
+        rs.foreach { case (_, nxt, cnt) =>
+          // out-of-alphabet next-symbols are skipped, matching localHeap
+          // and the scoring kernels (they tolerate caller-supplied
+          // alphabetSize smaller than the data's true domain)
+          if (nxt >= 0 && nxt < k) { dist(nxt) += cnt.toDouble; tot += cnt }
+        }
+        var i = 0
+        while (i < k && tot > 0L) { dist(i) /= tot; i += 1 }
+        ctx -> (dist, tot)
+      }
 
   /** Shared π̃ assembly: smoothed visit counts → row-stochastic emissions. */
   private def assemblePfsas(

@@ -98,7 +98,7 @@ object AnomalyDetection {
     * fit-then-predict pair re-quantized + re-shuffled the input and re-ran
     * the full scoring pass predict needs — but the fit's own-member stats
     * pass already scores every (sequence, cluster) against the final
-    * library, so the fused form checkpoints that one llk matrix
+    * library, so the fused form caches that one llk matrix
     * (sequence-count × k rows, tiny) and derives BOTH the stats and the
     * predictions from it, reading the fit's cached quantized frame and
     * never touching the source again. Values are identical by
@@ -127,6 +127,10 @@ object AnomalyDetection {
     // throws mid-fit
     var feat: Option[DataFrame] = None
     var labels: DataFrame = null
+    var llkCache: DataFrame = null
+    def scoreCached(library: IndexedSeq[Pfsa]): DataFrame =
+      Llk.scoreAllLong(spark, q, library, presort = false)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val maxSym = q.agg(max(col("symbol"))).head()
       require(!maxSym.isNullAt(0), "AnomalyDetection.fit: input has no rows after quantization")
@@ -180,16 +184,20 @@ object AnomalyDetection {
 
       // __reduce_clusters fixpoint (detection.py:401-469): merge clusters whose
       // PFSAs confuse each other; driver-side SCC on the tiny k×k matrix.
+      // Each iteration caches the library's (seq, cluster) llk matrix
+      // (sequence-count × k rows, tiny); when the loop converges the library
+      // is unchanged since that scoring, so the matrix is reused below.
       if (params.reduceClusters && k > 1) {
         var iter = 0
         var converged = false
         while (!converged && iter < 5) {
-          val ordered = (0 until k).map(lib)
-          val llks = Llk.scoreAllLong(spark, q, ordered, presort = false)
-          val fracs = Cluster.confusionFractions(llks, labels)
+          llkCache = scoreCached((0 until k).map(lib))
+          val fracs = Cluster.confusionFractions(llkCache, labels)
             .collect().map(r => (r.getInt(0), r.getInt(1), r.getDouble(2))).toSeq
           val reduced = Cluster.reducedClusterCount(fracs, k)
           if (reduced < k) {
+            llkCache.unpersist()
+            llkCache = null
             labels.unpersist()
             val res = inferForK(reduced)
             labels = res._1; lib = res._2
@@ -199,13 +207,14 @@ object AnomalyDetection {
         }
       }
 
-      // per-cluster llk stats over OWN members (detection.py:472-499), ddof=1
+      // per-cluster llk stats over OWN members (detection.py:472-499), ddof=1.
+      // One cached llk matrix feeds the stats and, on the fused path, the
+      // predictions — re-scored only when the library changed after the
+      // last scoring (no fixpoint, a reduction on the final iteration, or
+      // the iteration cap).
       val ordered = (0 until k).map(lib)
-      // on the fused path the full (seq, cluster) llk matrix is
-      // checkpointed (output-sized) so the prediction below reuses it
-      // instead of running a second identical scoring pass over q
-      val llksAll = Llk.scoreAllLong(spark, q, ordered, presort = false)
-      val llks = if (alsoPredict) llksAll.localCheckpoint(true) else llksAll
+      if (llkCache == null) llkCache = scoreCached(ordered)
+      val llks = llkCache
       val ownScores = llks
         .join(labels, "seq_id")
         .filter(col("cluster_id") === col("cluster"))
@@ -222,6 +231,7 @@ object AnomalyDetection {
         else None
       (model, pred)
     } finally {
+      if (llkCache != null) llkCache.unpersist()
       if (labels != null) labels.unpersist()
       feat.foreach(_.unpersist())
       q.unpersist()

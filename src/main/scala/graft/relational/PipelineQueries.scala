@@ -187,7 +187,7 @@ object PipelineQueries {
   /** pfsa_infer (GenESeSS, detection.py:372-395): one PFSA per event_type
     * cluster, SELF-VERIFIED as distributed/local parity (the
     * llk_score_long pattern): the long-form inference engine
-    * ([[GenESeSS.inferAllLong]] — lag-window heap + visit-sweep aggregate,
+    * ([[GenESeSS.inferAllLong]] — run-based heap + visit-sweep aggregates,
     * no collect_list) must reproduce the array kernel machine-for-machine
     * on the same labeled data, and the verdict grid is what the DuckDB
     * oracle pins (clusters enumerate from the event_type domain). This

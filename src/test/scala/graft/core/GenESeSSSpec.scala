@@ -105,6 +105,89 @@ class GenESeSSSpec extends AnyFunSuite {
     }
   }
 
+  test("long-form heap and inference are exact under any plan shape") {
+    import org.apache.spark.sql.functions._
+    // (seq_id, cluster, t of the i-th symbol, symbols): dense t from 0, t
+    // starting at 1000, sparse t (stride 3, starting at 7), sequences
+    // shorter than L = 5, a single symbol, and arbitrary bytes (-1, 5, -128,
+    // 127) besides the alphabet {0, 1}. Cluster 2's periodic sequences tie
+    // many context totals at the maxContexts cut.
+    def withNoise(s: Array[Byte], seed: Long): Seq[Byte] = {
+      val rnd = new scala.util.Random(seed)
+      s.toSeq.map(b => if (rnd.nextInt(50) == 0) Seq[Byte](-1, 5, -128, 127)(rnd.nextInt(4)) else b)
+    }
+    val data: Seq[(Long, Int, Int => Long, Seq[Byte])] = Seq(
+      (0L, 0, i => i.toLong, withNoise(Pfsa.m2.sample(1500, 51), 1)),
+      (1L, 0, i => 1000L + i, Pfsa.m2.sample(1200, 52).toSeq),
+      (2L, 1, i => 7L + 3L * i, withNoise(Pfsa.m2u.sample(1500, 53), 2)),
+      (3L, 1, i => 2L + i, Seq[Byte](1, 0, 1)),
+      (4L, 1, i => 40L + i, Seq[Byte](0)),
+      (5L, 2, i => i.toLong, Seq.fill(20)(Seq[Byte](-1, 0, 5)).flatten),
+      (6L, 2, i => 5L * i, Seq.fill(15)(Seq[Byte](5, 1, -1, 0)).flatten))
+    val L = GenESeSS.contextLength(2, 0.05)
+    assert(L == 5)
+    val full = GenESeSS.Params(eps = 0.05)
+    val pruned = GenESeSS.Params(eps = 0.05, minCtxCount = 2L, maxContexts = 3)
+
+    def countsOf(rows: Array[org.apache.spark.sql.Row]) =
+      rows.map(r => (r.getInt(0), r.getSeq[Byte](1).toList, r.getInt(2)) -> r.getLong(3)).toMap
+    def sameMachines(a: Map[Int, Pfsa], b: Map[Int, Pfsa], what: String): Unit = {
+      assert(a.keySet == b.keySet, what)
+      for (c <- a.keySet) {
+        assert(a(c).conn.map(_.toSeq).toSeq == b(c).conn.map(_.toSeq).toSeq, s"$what: cluster $c skeleton")
+        assert(a(c).pitilde.map(_.toSeq).toSeq == b(c).pitilde.map(_.toSeq).toSeq, s"$what: cluster $c emissions")
+        assert(a(c).symFrq.toSeq == b(c).symFrq.toSeq, s"$what: cluster $c symFrq")
+      }
+    }
+
+    // reference: the array path on the main session
+    val seqs = data.map { case (_, c, _, s) => (c, s) }.toDF("cluster", "symbols")
+    val want = countsOf(GenESeSS.ngramCounts(seqs, L).collect())
+    val libFull = GenESeSS.inferAll(spark, seqs, alphabetSize = 2, full)
+    val libPruned = GenESeSS.inferAll(spark, seqs, alphabetSize = 2, pruned)
+    // the prune recomputed on the driver from the full counts: floor at 2,
+    // then the 3 largest totals, ties by context in signed-byte order
+    def ctxOrder(a: List[Byte], b: List[Byte]): Boolean =
+      a.zip(b).find { case (x, y) => x != y }.map { case (x, y) => x < y }
+        .getOrElse(a.length < b.length)
+    val keptCtx = want.groupBy { case ((c, ctx, _), _) => (c, ctx) }
+      .map { case (key, rows) => key -> rows.values.sum }
+      .filter(_._2 >= 2L)
+      .groupBy(_._1._1).toSeq
+      .flatMap { case (_, tots) =>
+        tots.toSeq.sortWith { case (((_, a), ta), ((_, b), tb)) =>
+          ta > tb || (ta == tb && ctxOrder(a, b)) }.take(3).map(_._1)
+      }.toSet
+    val wantPruned = want.filter { case ((c, ctx, _), _) => keptCtx((c, ctx)) }
+    assert(keptCtx.size == 9 && wantPruned.size < want.size)
+
+    for (parts <- Seq(1, 3, 8); aqe <- Seq(true, false); fallback <- Seq(1, 128)) {
+      val shape = s"parts=$parts aqe=$aqe fallback=$fallback"
+      val ss = spark.newSession()
+      ss.conf.set("spark.sql.shuffle.partitions", parts.toLong)
+      ss.conf.set("spark.sql.adaptive.enabled", aqe)
+      ss.conf.set("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", fallback.toLong)
+      // t-blocks of 3 (shorter than L), reverse t order within each
+      // partition: partial buffers hold many short runs that only join at
+      // merge/eval, and every buffer crosses the exchange serialized
+      val rows = data.flatMap { case (sid, c, tOf, s) =>
+        s.zipWithIndex.map { case (sym, i) => (sid, tOf(i), sym, c) } }
+      val long = ss.createDataFrame(rows).toDF("seq_id", "t", "symbol", "cluster")
+        .repartition(parts, expr("cast(t / 3 as int)"))
+        .sortWithinPartitions(col("t").desc)
+
+      assert(countsOf(GenESeSS.ngramCountsLong(long, L).collect()) == want, s"$shape: ngramCountsLong")
+      def heap(minCtx: Long, maxCtx: Int) = countsOf(GenESeSS.heapLong(long, L, minCtx, maxCtx)
+        .select(col("cluster"), inline(col("heap"))).collect())
+      assert(heap(1L, Int.MaxValue) == want, s"$shape: unpruned heap")
+      assert(heap(2L, 3) == wantPruned, s"$shape: pruned heap")
+      sameMachines(libFull, GenESeSS.inferAllLong(ss, long, alphabetSize = 2, full, presort = false),
+        s"$shape: full heap")
+      sameMachines(libPruned, GenESeSS.inferAllLong(ss, long, alphabetSize = 2, pruned, presort = false),
+        s"$shape: pruned heap")
+    }
+  }
+
   test("degenerate input yields a usable 1-state machine") {
     val p = GenESeSS.inferSingle(spark, Array[Byte](1), alphabetSize = 2)
     assert(p.numStates == 1)

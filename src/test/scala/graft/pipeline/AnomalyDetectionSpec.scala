@@ -178,8 +178,22 @@ class AnomalyDetectionSpec extends AnyFunSuite {
     val model = AnomalyDetection.fit(spark, train, params)
     assert(model.library.size <= 4 && model.library.nonEmpty)
     assert(model.llkMeans.length == model.library.size)
-    val pred = AnomalyDetection.predict(spark, model, train)
-      .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
+    val predRows = AnomalyDetection.predict(spark, model, train).collect()
+    val pred = predRows.map(r => r.getLong(0) -> r.getBoolean(1)).toMap
     assert(pred.values.forall(!_), "training data anomalous after reduce loop")
+
+    // the fused path (the fixpoint's llk matrix reused for the stats and the
+    // predictions) must return exactly what fit then predict return
+    val (fused, fusedPred) = AnomalyDetection.fitPredict(spark, train, params)
+    def machines(m: AnomalyDetection.Model) = m.library.map(p =>
+      (p.conn.map(_.toSeq).toSeq, p.pitilde.map(_.toSeq).toSeq, p.symFrq.toSeq))
+    def bits(xs: Array[Double]) = xs.toSeq.map(java.lang.Double.doubleToRawLongBits)
+    assert(machines(fused) == machines(model), "fitPredict inferred a different library")
+    assert(bits(fused.llkMeans) == bits(model.llkMeans), "llkMeans differ")
+    assert(bits(fused.llkStds) == bits(model.llkStds), "llkStds differ")
+    def rowsOf(rs: Array[org.apache.spark.sql.Row]) = rs.map(r =>
+      (r.getLong(0), r.getBoolean(1), r.getInt(2), java.lang.Double.doubleToRawLongBits(r.getDouble(3))))
+      .sortBy(_._1).toSeq
+    assert(rowsOf(fusedPred.collect()) == rowsOf(predRows), "fused predictions differ from predict")
   }
 }
