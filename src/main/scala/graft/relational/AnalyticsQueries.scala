@@ -457,7 +457,7 @@ object AnalyticsQueries {
     * unroll the exact same computation. */
   private[relational] val PrIters = 10
   private[relational] val PrDamping = 0.85
-  private[relational] val PrK = 3
+  private val PrK = 3
 
   /** PAGERANK over the corpus's k-NN similarity graph — graph centrality
     * as a data-quality/importance signal (which documents sit at the core
@@ -497,7 +497,7 @@ object AnalyticsQueries {
     * (Similarity.adaptiveBits), but integer-exact (no floating log) so
     * the oracle's CASE-chain replica cannot disagree at power-of-two
     * boundaries. */
-  private[relational] def graphBits(n: Long): Int = {
+  private def graphBits(n: Long): Int = {
     var b = 4
     while (b < 24 && n > GraphTargetBucket.toLong * (1L << b)) b += 1
     b
@@ -658,15 +658,7 @@ object AnalyticsQueries {
       tmp.toString
     })
 
-  /** @param bitsOverride dev-only geometry knob for [[AnnKnobStudy]]:
-    *                      > 0 pins the code width instead of
-    *                      [[graphBits]]; the gate path always passes the
-    *                      default (adaptive), which the oracle replays.
-    * @param cap           bucket-cap knob, same study; default is the
-    *                      oracle-pinned [[GraphBucketCap]]. */
-  private[relational] def annKnnEdges(emb: DataFrame, checkpoint: Boolean = true,
-                                      bitsOverride: Int = -1,
-                                      cap: Long = GraphBucketCap.toLong): DataFrame = {
+  private[relational] def annKnnEdges(emb: DataFrame, checkpoint: Boolean = true): DataFrame = {
     import graft.text.Similarity
     // one bounded job for both plan-time scalars: corpus size (code
     // width) and dimensionality (sign-literal length). max(size) is NULL
@@ -676,7 +668,7 @@ object AnalyticsQueries {
     if (head.getLong(0) == 0L)
       return emb.select(col("vec_id").as("src"), col("vec_id").as("dst"),
         lit(0d).as("cos")).limit(0)
-    val bits = if (bitsOverride > 0) bitsOverride else graphBits(head.getLong(0))
+    val bits = graphBits(head.getLong(0))
     val dim = head.getInt(1)
     // signs depend only on (t, b, i): computed once on the driver, shipped
     // as referenced double[] constants into the native VecDotConst kernel
@@ -706,7 +698,7 @@ object AnalyticsQueries {
     // swarm guard: a bucket over the cap is dropped entirely (deterministic,
     // oracle-replayable) — the capped-join bound from Similarity.nearDupPairs
     val ok = bk.groupBy(col("t"), col("code")).agg(count(lit(1)).as("bn"))
-      .filter(col("bn") <= cap).select(col("t"), col("code"))
+      .filter(col("bn") <= GraphBucketCap.toLong).select(col("t"), col("code"))
     val bk2 = bk.join(ok, Seq("t", "code")).select(col("t"), col("code"), col("vec_id"))
     // Hamming-radius-1 multiprobe on the src side (the similarity_ann
     // recall boost): each node probes its own code plus the `bits`

@@ -24,6 +24,7 @@ object DataPipelineQueries {
     * (external-table DROP removes only catalog metadata). */
   private[relational] def deleteRecursively(tmp: java.nio.file.Path): Unit = {
     import scala.jdk.CollectionConverters._
+    if (!java.nio.file.Files.exists(tmp)) return
     val walk = java.nio.file.Files.walk(tmp)
     try walk.iterator().asScala.toSeq.reverse
       .foreach(p => java.nio.file.Files.deleteIfExists(p))
@@ -336,7 +337,7 @@ object DataPipelineQueries {
     // (doc_id, norm_md5) staged once: history and arrival branches both
     // read it, and the history-side join key INFERS isnotnull(md5(norm)),
     // re-inlining normalize+md5 into an interpreted Filter without the
-    // barrier (ExplodeTaxAudit r16) — 3 corpus hash passes become 1.
+    // barrier — 3 corpus hash passes become 1.
     val all = docs(s, d)
       .select(col("doc_id"), md5(TextOps.normalized("text")).as("norm_md5"))
       .localCheckpoint(true)
@@ -522,7 +523,7 @@ object DataPipelineQueries {
     * ([[streamDecontaminateFuzzy]]) provably share one definition — the
     * streaming query can only differ in WHERE the band hits came from,
     * and the oracle hash proves even that difference is invisible. */
-  private[relational] def fuzzyScreenVerdict(bench: DataFrame, corp: DataFrame,
+  private def fuzzyScreenVerdict(bench: DataFrame, corp: DataFrame,
                                  bandHits: DataFrame,
                                  observeName: String): DataFrame = {
     val keep = bandHits
@@ -649,7 +650,7 @@ object DataPipelineQueries {
     * verify chain runs as the batch post-pass over the sink files. The
     * driver never holds a hit: at the 100× fixture the memory sink's
     * >30 M collected rows OOM a 24 g heap while this shape completes with
-    * a bounded driver (StreamScreenProfile's sink mode measures it).
+    * a bounded driver.
     * Oracle = text_decontaminate_fuzzy's SQL VERBATIM — the third gate
     * proving the same screen definition (batch, memory-sink stream,
     * parquet-sink stream) reaches bit-identical verdicts. */
@@ -825,8 +826,8 @@ object DataPipelineQueries {
     // the m2 join side, the final join spine), and the two inner
     // equi-joins on `simhash` each INFER isnotnull(simhash64(tokens)),
     // re-inlining the tokenize+digest chain into interpreted Filters —
-    // 4 corpus-wide code computations collapse to 1 (ExplodeTaxAudit
-    // r16). 16 B/row: at 100 TB this IS the production code table.
+    // 4 corpus-wide code computations collapse to 1. 16 B/row: at 100 TB
+    // this IS the production code table.
     val sh = docs(s, d)
       .select(col("doc_id"), TextOps.simhashCol(TextOps.tokens("text")).as("simhash"))
       .localCheckpoint(true)
@@ -2799,8 +2800,8 @@ object DataPipelineQueries {
     // `input.isInstanceOf[Attribute]`), and the r15-measured 3x tax was
     // exactly the named-column shape — the inferred size(grams) > 0 &&
     // isnotnull(grams) filter re-inlined the whole tokenize+ngram chain
-    // twice below the Project (ExplodeTaxAudit flagged it; the inline
-    // shape plans with NO filter and one chain evaluation per row)
+    // twice below the Project (the inline shape plans with NO filter
+    // and one chain evaluation per row)
     val base = docs(s, d)
       .withColumn("toks", TextOps.tokens("text"))
       .withColumn("is_benchmark", col("doc_id") % 10 === 0)
@@ -2831,8 +2832,8 @@ object DataPipelineQueries {
   private def textBoilerplate(s: SparkSession, d: String): DataFrame = {
     // ngrams exploded INLINE, not via a named `grams` column — the
     // attribute-child generate shape pays the InferFiltersFromGenerate
-    // re-inline tax (see textDecontaminate; ExplodeTaxAudit flagged this
-    // query with the full 5-gram chain duplicated into a Filter)
+    // re-inline tax (see textDecontaminate; it duplicated this query's
+    // full 5-gram chain into a Filter)
     val base = docs(s, d)
       .withColumn("toks", TextOps.tokens("text"))
     val g = base.select(col("doc_id"), explode(wordNgrams("toks", 5)).as("g"))
@@ -2917,7 +2918,7 @@ object DataPipelineQueries {
     // tokenizations of the 3-class regexp without the barrier), and the
     // rank side's equi-join on n_tokens additionally INFERS
     // isnotnull(n_tokens), re-inlining the regexp into an interpreted
-    // Filter (ExplodeTaxAudit r16) — 3 corpus-wide tokenize passes
+    // Filter — 3 corpus-wide tokenize passes
     // collapse to 1. Same 100-TB story as corpusPrep's stats table.
     val toks = docs(s, d).select(col("doc_id"),
       expr("cast(size(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9 ]', 0)) as long)")
@@ -3474,7 +3475,7 @@ object DataPipelineQueries {
     // tokenize+normalize+md5 chain from the scan — plus the survivor
     // join's INFERRED isnotnull(norm_md5) and the pushed-down
     // n_tokens >= 10 filter re-inline the chain into interpreted Filters
-    // (2 extra corpus-wide evaluations each, ExplodeTaxAudit r16). At
+    // (2 extra corpus-wide evaluations each). At
     // 100 TB this checkpoint is the per-doc stats table every curation
     // pipeline stages anyway (~40 B/row vs the corpus text; a production
     // deployment writes it as parquet beside the corpus).
@@ -3878,12 +3879,6 @@ object DataPipelineQueries {
     * token frequencies as a PLAIN array<double> (the MLlib vector exists
     * only inside the bounded fit input — see the scoring note in
     * [[qualityClassifier]]). Lazy plan; callers persist or sink. */
-  /** Dev accessors for R16QualityProfile (profiling main) — not gate surface. */
-  private[relational] def qualityFeaturesDev(s: SparkSession, d: String): DataFrame =
-    qualityFeatures(s, d)
-  private[relational] def lmScoresDev(s: SparkSession, d: String): DataFrame =
-    lmScores(s, d)
-
   private def qualityFeatures(s: SparkSession, d: String): DataFrame = {
     val hv = (pos: Int) =>
       s"IF(ascii(substr(hx, $pos, 1)) >= 97, ascii(substr(hx, $pos, 1)) - 87," +

@@ -282,14 +282,6 @@ object QualityQueries {
     * debris leaking into the read IS a hash mismatch. At scale the
     * manifest is the table-format snapshot and "publish" is one atomic
     * pointer swap; audit cost is one pass over the new files only. */
-  private def deleteRecursively(tmp: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    val walk = java.nio.file.Files.walk(tmp)
-    try walk.iterator().asScala.toSeq.reverse
-      .foreach(p => java.nio.file.Files.deleteIfExists(p))
-    finally walk.close()
-  }
-
   private def sinkWriteAuditPublish(s: SparkSession, d: String): DataFrame = {
     val tmp = java.nio.file.Files.createTempDirectory("graft_wap")
     try {
@@ -329,7 +321,7 @@ object QualityQueries {
       .withColumn("audit_pk_ok", lit(auditOk))
       .orderBy(col("lang"))
       .localCheckpoint(true)
-    } finally deleteRecursively(tmp)
+    } finally DataPipelineQueries.deleteRecursively(tmp)
   }
 
   /** ENCRYPTED-AT-REST parquet sink — Parquet MODULAR ENCRYPTION through
@@ -383,7 +375,7 @@ object QualityQueries {
         .withColumn("footer_encrypted", lit(magic == "PARE"))
         .orderBy(col("lang"))
         .localCheckpoint(true)
-    } finally deleteRecursively(tmp)
+    } finally DataPipelineQueries.deleteRecursively(tmp)
   }
 
   /** IN-FLIGHT observability — Spark's `Observation` API: QC counters

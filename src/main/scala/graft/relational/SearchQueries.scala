@@ -42,7 +42,7 @@ object SearchQueries {
       // contains an [a-z] char. The previous filter(size(toks) > 0) was
       // pushed below the Project computing toks, re-inlining the full
       // regexp tokenization into an interpreted Filter (a second
-      // corpus-wide tokenize — ExplodeTaxAudit r16); this single-char
+      // corpus-wide tokenize); this single-char
       // rlike scans cheaply and leaves exactly one tokenize in the plan
       .filter(lower(col("text")).rlike("[a-z]"))
       .select(col("doc_id"), TextOps.tokens("text").as("toks"))
@@ -108,7 +108,7 @@ object SearchQueries {
     // the previous named-column shape (`base.select(explode(col("toks")))`)
     // paid InferFiltersFromGenerate's re-inline tax — size(tokens) > 0 &&
     // isnotnull(tokens) pushed below the Project, tokenizing the corpus
-    // twice more per row (ExplodeTaxAudit r16). Inline children infer
+    // twice more per row. Inline children infer
     // nothing (the Spark 4.1 rule guards on Attribute children).
     val hits = docs(s, d)
       .select(col("doc_id"), explode(TextOps.tokens("text")).as("token"))

@@ -29,13 +29,6 @@ object SeriesQueries {
   private def eventsUs(s: SparkSession, d: String): DataFrame = Tables.eventsTsUs(s, d)
   private def docsT(s: SparkSession, d: String): DataFrame = Tables.tbl(s, d, "documents")
 
-  private def deleteRecursively(p: Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    if (Files.exists(p)) {
-      Files.walk(p).iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
-    }
-  }
-
   // ----------------------------------------------------- rolling z-score anomaly
   /** Rolling z-score anomaly detection: each event scored against the
     * trailing 20 events of ITS OWN user (frame excludes the current row —
@@ -278,7 +271,7 @@ object SeriesQueries {
           countDistinct(col("doc_id")).as("n_distinct"))
         .orderBy(col("source"))
         .localCheckpoint(true)
-    } finally deleteRecursively(tmp)
+    } finally DataPipelineQueries.deleteRecursively(tmp)
   }
 
   /** Compaction file counts (for the spec): (small-file count, bytes,
@@ -293,7 +286,7 @@ object SeriesQueries {
       s.read.parquet(s"$tmp/small").repartition(nOut)
         .write.mode("overwrite").parquet(s"$tmp/compact")
       (parts.length, bytes, nOut, parquetParts(s, s"$tmp/compact").length)
-    } finally deleteRecursively(tmp)
+    } finally DataPipelineQueries.deleteRecursively(tmp)
   }
 
   // -------------------------------------------------------- distribution moments
@@ -437,7 +430,7 @@ object SeriesQueries {
         .agg(count(lit(1)).as("n"), round(sum(col("value")), 6).as("sum_value"))
         .orderBy(col("event_type"))
         .localCheckpoint(true)
-    } finally deleteRecursively(tmp)
+    } finally DataPipelineQueries.deleteRecursively(tmp)
   }
 
   /** The pruned-scan plan + row metric for the spec: builds the same
@@ -683,7 +676,7 @@ object SeriesQueries {
         .csv(s"$tmp/docs")
         .orderBy(col("doc_id"))
         .localCheckpoint(true)
-    } finally deleteRecursively(tmp)
+    } finally DataPipelineQueries.deleteRecursively(tmp)
   }
 
   // ----------------------------------------------------------- gaps and islands
