@@ -1,5 +1,7 @@
 package graft.relational
 
+import graft.core.SessionMemo
+import graft.core.SessionMemo.withTempDir
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -557,9 +559,7 @@ object AnalyticsQueries {
     * the next insert). A corpus REWRITTEN under the same path within one
     * session would serve stale edges — fine for immutable fixture data,
     * and [[annKnnEdges]] remains the uncached bypass. */
-  private val edgeMemo = new graft.core.SessionMemo[String](dir =>
-    DataPipelineQueries.deleteRecursively(java.nio.file.Paths.get(dir)),
-    name = "ann_edges")
+  private val edgeMemo = new SessionMemo[String]("ann_edges")
 
   /** Spec for the persisted k-NN edge artifact: adaptive-width md5-sign
     * hyperplane codes, [[GraphTables]] tables, Hamming-1 multiprobe,
@@ -583,19 +583,17 @@ object AnalyticsQueries {
     * (r15 verdict ask #3; "the persisted similarity graph" the
     * sample_hard_negatives scaladoc promises). Oracle =
     * sample_hard_negatives' SQL VERBATIM. */
-  private def annEdgesPersist(s: SparkSession, d: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_edges_persist_")
-    try {
+  private def annEdgesPersist(s: SparkSession, d: String): DataFrame =
+    withTempDir("edges_persist") { tmp =>
       saveAnnEdges(s, d, tmp.toString)
       hardNegativesFrom(s, d, loadAnnEdges(s, tmp.toString)).localCheckpoint(true)
-    } finally DataPipelineQueries.deleteRecursively(tmp)
-  }
+    }
 
   private[relational] def sharedAnnEdges(s: SparkSession, d: String): DataFrame =
     s.read.parquet(annEdgesDir(s, d))
 
   private def annEdgesDir(s: SparkSession, d: String): String =
-    edgeMemo.getOrBuild(s, d) {
+    edgeMemo.getOrBuild(s, d) { tmp =>
       val emb = Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       // materialized as a parquet TABLE, not a cached frame: the bench
@@ -607,7 +605,6 @@ object AnalyticsQueries {
       // dir lifecycle is the memo's: deleted when the owning session's
       // entry evicts, or by the memo's single JVM shutdown sweep — no
       // per-build hooks, no orphans in long-lived multi-session reuse
-      val tmp = java.nio.file.Files.createTempDirectory("graft_knn_edges_")
       annKnnEdges(emb).write.mode("overwrite").parquet(tmp.toString)
       tmp.toString
     }
@@ -617,13 +614,10 @@ object AnalyticsQueries {
     * call — each paying a distinct-exchange over the edge table for the
     * same answer (the sharedAnnEdges amortization rule one step deeper).
     * Edge-sized parquet; lifecycle identical to the edge memo's. */
-  private val undMemo = new graft.core.SessionMemo[String](dir =>
-    DataPipelineQueries.deleteRecursively(java.nio.file.Paths.get(dir)),
-    name = "und_edges")
+  private val undMemo = new SessionMemo[String]("und_edges")
 
   private[relational] def sharedUndEdges(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(undMemo.getOrBuild(s, d) {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_und_edges_")
+    s.read.parquet(undMemo.getOrBuild(s, d) { tmp =>
       sharedAnnEdges(s, d)
         .select(least(col("src"), col("dst")).as("a"),
           greatest(col("src"), col("dst")).as("b"))
@@ -637,13 +631,10 @@ object AnalyticsQueries {
     * oriented wedge join + LEFT SEMI closure + 3-corner aggregate — the
     * family's most expensive derived relation after the edges themselves.
     * Node-sized parquet (node, t). */
-  private val triMemo = new graft.core.SessionMemo[String](dir =>
-    DataPipelineQueries.deleteRecursively(java.nio.file.Paths.get(dir)),
-    name = "tri_counts")
+  private val triMemo = new SessionMemo[String]("tri_counts")
 
   private[relational] def sharedTriCounts(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(triMemo.getOrBuild(s, d) {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_tri_counts_")
+    s.read.parquet(triMemo.getOrBuild(s, d) { tmp =>
       val und = sharedUndEdges(s, d)
       val wedges = und.select(col("a").as("x"), col("b").as("y"))
         .join(und.select(col("a").as("y"), col("b").as("z")), "y")
@@ -1078,12 +1069,10 @@ object AnalyticsQueries {
     * community table is also the production shape — partition quality
     * metrics are served FROM the stored clustering, not by re-running
     * it). Build time lands in the bench's `family_builds` ledger. */
-  private val lpMemo = new graft.core.SessionMemo[String](dir =>
-    DataPipelineQueries.deleteRecursively(java.nio.file.Paths.get(dir)),
-    name = "lp_labels")
+  private val lpMemo = new SessionMemo[String]("lp_labels")
 
   private[relational] def sharedLpLabels(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(lpMemo.getOrBuild(s, d) {
+    s.read.parquet(lpMemo.getOrBuild(s, d) { tmp =>
       val emb = Tables.embeddings(s, d)
         .select(col("vec_id"), col("label"), col("embedding").cast("array<double>").as("v"))
       val und = sharedUndEdges(s, d)
@@ -1104,7 +1093,6 @@ object AnalyticsQueries {
           .select(col("vec_id"), coalesce(col("next_label"), col("label")).as("label"))
           .localCheckpoint(true)
       }
-      val tmp = java.nio.file.Files.createTempDirectory("graft_lp_labels_")
       labels.write.mode("overwrite").parquet(tmp.toString)
       adj.unpersist()
       tmp.toString
@@ -1516,9 +1504,7 @@ object AnalyticsQueries {
     * forward pass and DAG join, amortized like the family's edge table
     * (parquet-backed for the same block-manager-hygiene reason as
     * [[edgeMemo]]); [[bfsSigmaForward]] stays the unmemoized bypass. */
-  private val bfsMemo = new graft.core.SessionMemo[String](dir =>
-    DataPipelineQueries.deleteRecursively(java.nio.file.Paths.get(dir)),
-    name = "bfs_sigma")
+  private val bfsMemo = new SessionMemo[String]("bfs_sigma")
 
   /** Returns (vis, dag): the reached-node σ state and the level-respecting
     * shortest-path DAG edges, both parquet-memoized per (session, corpus) —
@@ -1526,8 +1512,7 @@ object AnalyticsQueries {
     * lives in the memo beside its inputs instead of being re-joined (and
     * re-checkpointed) once per consumer. */
   private def sharedBfsSigma(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    val dir = bfsMemo.getOrBuild(s, d) {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_bfs_")
+    val dir = bfsMemo.getOrBuild(s, d) { tmp =>
       val (und, vis) = bfsSigmaForward(s, d)
       und.write.mode("overwrite").parquet(s"$tmp/und")
       vis.write.mode("overwrite").parquet(s"$tmp/vis")
@@ -2086,15 +2071,14 @@ object AnalyticsQueries {
     * with a manifest table and compacts small files into parquet/ORC
     * early (scan_orc is the next stage); this entry exercises the
     * pattern's Spark plumbing end to end. */
-  private def scanBinaryfile(s: SparkSession, d: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_binscan")
-    val dir = tmp.toString
+  private def scanBinaryfile(s: SparkSession, d: String): DataFrame =
     // the raw landing dir is a CORPUS-SIZED copy (one file per doc) — it
     // must die with the call on all paths (the scanJsonl/scanBucketed
     // discipline; pre-fix this leaked ~20 MB per invocation at sf0.1,
     // i.e. a full corpus copy per run at scale), so the read-back is
-    // eagerly materialized before the finally removes the files
-    try {
+    // eagerly materialized before withTempDir removes the files
+    withTempDir("binscan") { tmp =>
+      val dir = tmp.toString
       // Parallel landing write (r17, guide §2.6 idle capacity): the source
       // parquet is a single split at gate scale, so ONE task wrote every
       // .bin file serially (~1.5 s of the query — the dominant phase,
@@ -2148,8 +2132,7 @@ object AnalyticsQueries {
           .orderBy(col("doc_id"))
           .localCheckpoint(true)
       finally s.conf.set(costKey, prevCost)
-    } finally DataPipelineQueries.deleteRecursively(tmp)
-  }
+    }
 
   // ----------------------------------------------------- semi-structured JSON
   /** Semi-structured extraction from the `events.props` JSON payload —
@@ -2431,14 +2414,13 @@ object AnalyticsQueries {
     * costs a footer-read per file; at 100 TB a table format (Delta/
     * Iceberg) holds the union schema in metadata instead — same
     * semantics, no per-file pass. */
-  private def scanSchemaEvolution(s: SparkSession, d: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_evo")
-    val dir = tmp.toString
+  private def scanSchemaEvolution(s: SparkSession, d: String): DataFrame =
     // same per-call dir lifecycle as scan_binaryfile/scanJsonl (this was
     // the leak audit's second find: the two corpus-projection batches
-    // stayed on /tmp after every invocation) — materialize the merged
-    // read eagerly, then the finally removes the files
-    try {
+    // stayed in the temp dir after every invocation) — materialize the
+    // merged read eagerly, then withTempDir removes the files
+    withTempDir("evo") { tmp =>
+      val dir = tmp.toString
       val docs = Tables.tbl(s, d, "documents")
       docs.filter(pmod(col("doc_id"), lit(2)) === 0)
         .select(col("doc_id"), col("lang"))
@@ -2451,8 +2433,7 @@ object AnalyticsQueries {
           col("batch").cast("long").as("batch"))
         .orderBy(col("doc_id"))
         .localCheckpoint(true)
-    } finally DataPipelineQueries.deleteRecursively(tmp)
-  }
+    }
 
   // ------------------------------------------------------ substring dedup
   /** EXACT-SUBSTRING duplicate spans (the Lee et al. 2022 "Deduplicating

@@ -1,5 +1,7 @@
 package graft.relational
 
+import graft.core.SessionMemo
+import graft.core.SessionMemo.withTempDir
 import graft.text.{Components, Multimodal, Similarity, TextOps}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -20,17 +22,6 @@ import org.apache.spark.sql.functions._
 object DataPipelineQueries {
 
   private def docs(s: SparkSession, d: String) = Tables.tbl(s, d, "documents")
-  /** Depth-first temp-dir cleanup shared by every write-then-read query
-    * (external-table DROP removes only catalog metadata). */
-  private[relational] def deleteRecursively(tmp: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    if (!java.nio.file.Files.exists(tmp)) return
-    val walk = java.nio.file.Files.walk(tmp)
-    try walk.iterator().asScala.toSeq.reverse
-      .foreach(p => java.nio.file.Files.deleteIfExists(p))
-    finally walk.close()
-  }
-
   private def embeds(s: SparkSession, d: String) = Tables.embeddings(s, d)
 
   // ------------------------------------------------------------------- dedup
@@ -103,8 +94,7 @@ object DataPipelineQueries {
     * line) because the history memo was keyed by the even-parity SPLIT,
     * not by doc. At 100 TB this table is the bucketed layout
     * scan_bucketed demonstrates: band probes and set_key joins co-locate. */
-  private val minhashSigsMemo = new graft.core.SessionMemo[String](dir =>
-    deleteRecursively(java.nio.file.Paths.get(dir)), name = "minhash_sigs")
+  private val minhashSigsMemo = new SessionMemo[String]("minhash_sigs")
 
   private[relational] def minhashSigsTables(
       s: SparkSession, d: String): (DataFrame, DataFrame) = {
@@ -113,7 +103,7 @@ object DataPipelineQueries {
   }
 
   private def minhashSigsRoot(s: SparkSession, d: String): String =
-    minhashSigsMemo.getOrBuild(s, d) {
+    minhashSigsMemo.getOrBuild(s, d) { tmp =>
       // the collapse shuffles only (doc_id, set_key, norm) rows — the
       // shingle arrays (~350 strings/doc, ~5× the text bytes plus
       // per-element overhead) are NOT materialized upstream of the
@@ -128,28 +118,28 @@ object DataPipelineQueries {
       // from the staged file. Disk-backed on purpose: a MEMORY_AND_DISK
       // cache of the normalized corpus OOMed the 100× fixture build
       // (corpus-sized cache vs execution memory in one 8g heap) — the
-      // staged-parquet form is the one that scales.
-      val tmp = java.nio.file.Files.createTempDirectory("graft_minhash_sigs_")
-      docs(s, d)
-        .select(col("doc_id"), TextOps.normalized("text").as("norm"))
-        .withColumn("set_key", md5(col("norm")))
-        .write.mode("overwrite").parquet(s"$tmp/staged")
-      val withKey = s.read.parquet(s"$tmp/staged")
-      withKey.select(col("doc_id"), col("set_key"))
-        .write.mode("overwrite").parquet(s"$tmp/members")
-      withKey.groupBy(col("set_key"))
-        .agg(first(col("norm")).as("norm"))
-        .withColumn("sh", TextOps.charShingles("norm", 5))
-        .drop("norm")
-        .withColumn("sig", TextOps.minhashSigCol(col("sh"), 64))
-        // the 16 per-band bucket hashes as ONE narrow column: posexploded
-        // for bucket joins, zip_with-compared per candidate pair for
-        // shared-band counts — computed once per distinct text, ever
-        .withColumn("bb", TextOps.bandBucketCols(col("sig"), 16, 4))
-        .write.mode("overwrite").parquet(s"$tmp/sigs")
-      // the staged corpus copy served its two derivations — drop it so the
-      // memo holds only the narrow members + sigs tables
-      deleteRecursively(java.nio.file.Paths.get(s"$tmp/staged"))
+      // staged-parquet form is the one that scales. The staged corpus
+      // copy lives in its own scratch dir, deleted once it has served its
+      // two derivations, so the memo holds only the narrow members + sigs.
+      withTempDir("minhash_staged") { staged =>
+        docs(s, d)
+          .select(col("doc_id"), TextOps.normalized("text").as("norm"))
+          .withColumn("set_key", md5(col("norm")))
+          .write.mode("overwrite").parquet(staged.toString)
+        val withKey = s.read.parquet(staged.toString)
+        withKey.select(col("doc_id"), col("set_key"))
+          .write.mode("overwrite").parquet(s"$tmp/members")
+        withKey.groupBy(col("set_key"))
+          .agg(first(col("norm")).as("norm"))
+          .withColumn("sh", TextOps.charShingles("norm", 5))
+          .drop("norm")
+          .withColumn("sig", TextOps.minhashSigCol(col("sh"), 64))
+          // the 16 per-band bucket hashes as ONE narrow column: posexploded
+          // for bucket joins, zip_with-compared per candidate pair for
+          // shared-band counts — computed once per distinct text, ever
+          .withColumn("bb", TextOps.bandBucketCols(col("sig"), 16, 4))
+          .write.mode("overwrite").parquet(s"$tmp/sigs")
+      }
       tmp.toString
     }
 
@@ -193,14 +183,12 @@ object DataPipelineQueries {
     * raw corpus), so a hash match proves the persisted artifact serves
     * BIT-identical results — parquet round-trips every column type here
     * exactly. Eagerly materialized before the artifact dir is deleted. */
-  private def dedupMinhashPersist(s: SparkSession, d: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_minhash_persist_")
-    try {
+  private def dedupMinhashPersist(s: SparkSession, d: String): DataFrame =
+    withTempDir("minhash_persist") { tmp =>
       saveMinhashSigs(s, d, tmp.toString)
       val (m, g) = loadMinhashSigs(s, tmp.toString)
       dedupMinhashFrom(m, g).localCheckpoint(true)
-    } finally deleteRecursively(tmp)
-  }
+    }
 
   private def dedupMinhash(s: SparkSession, d: String): DataFrame = {
     val (members0, sigsT) = minhashSigsTables(s, d)
@@ -656,8 +644,7 @@ object DataPipelineQueries {
     * parquet-sink stream) reaches bit-identical verdicts. */
   private def streamDecontaminateSink(s: SparkSession, d: String): DataFrame = {
     val (all, bench, corp, arriving) = fuzzyStreamScreen(s, d)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_fuzzy_sink_")
-    try {
+    withTempDir("fuzzy_sink") { tmp =>
       val q = arriving.writeStream.format("parquet")
         .option("path", s"$tmp/hits")
         .option("checkpointLocation", s"$tmp/ckpt")
@@ -672,7 +659,7 @@ object DataPipelineQueries {
         "stream_decontaminate_sink_cap")
       all.unpersist()
       out
-    } finally deleteRecursively(tmp)
+    }
   }
 
   /** Cross-corpus LINE dedup (the C4/RefinedWeb repetition-removal rule):
@@ -900,12 +887,10 @@ object DataPipelineQueries {
     * harness's block-manager hygiene; dir lifecycle belongs to the memo
     * (evicted with its session or by the JVM shutdown sweep).
     * [[ngramJaccardPairs]] stays as the unmemoized bypass. */
-  private val pairMemo = new graft.core.SessionMemo[String](dir =>
-    deleteRecursively(java.nio.file.Paths.get(dir)), name = "ngram_pairs")
+  private val pairMemo = new SessionMemo[String]("ngram_pairs")
 
   private def sharedNgramPairs(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(pairMemo.getOrBuild(s, d) {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_ngram_pairs_")
+    s.read.parquet(pairMemo.getOrBuild(s, d) { tmp =>
       ngramJaccardPairs(s, d, sink = Some(tmp.toString))
       tmp.toString
     })
@@ -1095,15 +1080,13 @@ object DataPipelineQueries {
     * build (the lp_labels pattern one derivation deeper: pairs memo → CC
     * memo), output-sized parquet: (doc_id, group_id, is_canonical,
     * group_size). [[groupsFromPairs]] stays as the unmemoized bypass. */
-  private val dupGroupsMemo = new graft.core.SessionMemo[String](dir =>
-    deleteRecursively(java.nio.file.Paths.get(dir)), name = "dup_groups")
+  private val dupGroupsMemo = new SessionMemo[String]("dup_groups")
 
   private def sharedDupGroups(s: SparkSession, d: String): DataFrame =
     s.read.parquet(dupGroupsDir(s, d))
 
   private def dupGroupsDir(s: SparkSession, d: String): String =
-    dupGroupsMemo.getOrBuild(s, d) {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_dup_groups_")
+    dupGroupsMemo.getOrBuild(s, d) { tmp =>
       groupsFromPairs(docs(s, d).select(col("doc_id")), sharedNgramPairs(s, d))
         .write.mode("overwrite").parquet(tmp.toString)
       tmp.toString
@@ -1131,13 +1114,11 @@ object DataPipelineQueries {
     * cross-session form of the dup_groups memo (r15 verdict ask #3).
     * Oracle = dedup_groups' recursive-CC SQL VERBATIM, so hash equality
     * proves the persisted component table is bit-faithful. */
-  private def dedupGroupsPersist(s: SparkSession, d: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_groups_persist_")
-    try {
+  private def dedupGroupsPersist(s: SparkSession, d: String): DataFrame =
+    withTempDir("groups_persist") { tmp =>
       saveDupGroups(s, d, tmp.toString)
       loadDupGroups(s, tmp.toString).orderBy(col("doc_id")).localCheckpoint(true)
-    } finally deleteRecursively(tmp)
-  }
+    }
 
   /** QUALITY-AWARE representative selection — the step a production
     * dedup pipeline runs AFTER grouping: within each near-dup component
@@ -1298,8 +1279,7 @@ object DataPipelineQueries {
     * materialize, like [[scanBucketed]]. */
   private def scanJsonl(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.types._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_jsonl")
-    try {
+    withTempDir("jsonl") { tmp =>
       docs(s, d).write.mode("overwrite").json(s"$tmp/documents")
       val schema = StructType(Seq(
         StructField("doc_id", LongType), StructField("text", StringType),
@@ -1310,7 +1290,7 @@ object DataPipelineQueries {
           col("text"))
         .orderBy(col("doc_id"))
         .localCheckpoint(true)
-    } finally deleteRecursively(tmp)
+    }
   }
 
   /** ORC round-trip — the second columnar interchange format (Spark ships
@@ -1320,17 +1300,15 @@ object DataPipelineQueries {
     * bloom stripe indexes), and column-pruned — the format a Hive-era
     * lakehouse hands an ingest pipeline. Snappy-compressed stripes are
     * the default, matching the parquet side's scan economics at 100 TB. */
-  private def scanOrc(s: SparkSession, d: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_orc")
-    try {
+  private def scanOrc(s: SparkSession, d: String): DataFrame =
+    withTempDir("orc") { tmp =>
       docs(s, d).write.mode("overwrite").orc(s"$tmp/documents")
       s.read.orc(s"$tmp/documents")
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"),
           col("text"))
         .orderBy(col("doc_id"))
         .localCheckpoint(true)
-    } finally deleteRecursively(tmp)
-  }
+    }
 
   /** Partitioned parquet sink + partition-pruned read-back — the OTHER
     * ingest-time layout (besides bucketing) that makes a 100-TB corpus
@@ -1340,17 +1318,15 @@ object DataPipelineQueries {
     * round-trip values of one partition; SinkPartitionedSpec asserts the
     * read plan actually prunes (PartitionFilters, one directory scanned).
     * Temp output is deleted on all paths after an eager materialize. */
-  private def sinkPartitioned(s: SparkSession, d: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_part")
-    try {
+  private def sinkPartitioned(s: SparkSession, d: String): DataFrame =
+    withTempDir("part") { tmp =>
       docs(s, d).write.mode("overwrite").partitionBy("lang").parquet(s"$tmp/docs")
       s.read.parquet(s"$tmp/docs")
         .filter(col("lang") === "en")
         .select(col("doc_id"), col("lang"), col("n_chars"))
         .orderBy(col("doc_id"))
         .localCheckpoint(true)
-    } finally deleteRecursively(tmp)
-  }
+    }
 
   /** DYNAMIC PARTITION PRUNING through the gate — the Catalyst runtime
     * optimization `sink_partitioned` sets up for: when a partitioned fact
@@ -1364,9 +1340,8 @@ object DataPipelineQueries {
     * difference between scanning 2 partitions and all of them. The
     * oracle recomputes the joined aggregate; ScanDppSpec asserts the
     * plan carries `dynamicpruningexpression` on the fact scan. */
-  private def scanDpp(s: SparkSession, d: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_dpp")
-    try {
+  private def scanDpp(s: SparkSession, d: String): DataFrame =
+    withTempDir("dpp") { tmp =>
       docs(s, d).write.mode("overwrite").partitionBy("lang").parquet(s"$tmp/docs")
       val fact = s.read.parquet(s"$tmp/docs")
       val dim = dppDim(s, d)
@@ -1375,8 +1350,7 @@ object DataPipelineQueries {
         .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
         .orderBy(col("lang"))
         .localCheckpoint(true)
-    } finally deleteRecursively(tmp)
-  }
+    }
 
   /** The approved-lang dimension: langs observed in the src0 slice. The
     * SELECTIVE predicate is on `source`, NOT the join column — so nothing
@@ -1403,30 +1377,30 @@ object DataPipelineQueries {
     * Tables are materialized eagerly and dropped before returning so
     * nothing leaks into later queries' catalog or disk. */
   private def scanBucketed(s: SparkSession, d: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_bucketed")
     val tag = java.util.UUID.randomUUID().toString.replace("-", "").take(8)
     val (ta, tb) = (s"graft_bkt_a_$tag", s"graft_bkt_b_$tag")
     // the drops AND the on-disk cleanup must run on the failure path too:
     // DROP TABLE on an EXTERNAL table removes only catalog metadata, so
-    // without the walk the two projected copies of the corpus would leak
-    // to /tmp on every invocation
-    try {
-      Bucketed.writeBucketed(
-        docs(s, d).select(col("doc_id"), col("lang"),
-          length(col("text")).cast("long").as("n_chars")),
-        ta, s"$tmp/a", "doc_id", nBuckets = 8)
-      Bucketed.writeBucketed(
-        docs(s, d).select(col("doc_id"),
-          size(TextOps.tokens("text")).cast("long").as("n_tokens")),
-        tb, s"$tmp/b", "doc_id", nBuckets = 8)
-      Bucketed.coLocatedJoin(s, ta, tb, "doc_id")
-        .select(col("doc_id"), col("lang"), col("n_chars"), col("n_tokens"))
-        .orderBy(col("doc_id"))
-        .localCheckpoint(true) // materialized — safe to drop tables + files
-    } finally {
-      s.sql(s"DROP TABLE IF EXISTS $ta")
-      s.sql(s"DROP TABLE IF EXISTS $tb")
-      deleteRecursively(tmp)
+    // without withTempDir the two projected copies of the corpus would
+    // leak to the temp dir on every invocation
+    withTempDir("bucketed") { tmp =>
+      try {
+        Bucketed.writeBucketed(
+          docs(s, d).select(col("doc_id"), col("lang"),
+            length(col("text")).cast("long").as("n_chars")),
+          ta, s"$tmp/a", "doc_id", nBuckets = 8)
+        Bucketed.writeBucketed(
+          docs(s, d).select(col("doc_id"),
+            size(TextOps.tokens("text")).cast("long").as("n_tokens")),
+          tb, s"$tmp/b", "doc_id", nBuckets = 8)
+        Bucketed.coLocatedJoin(s, ta, tb, "doc_id")
+          .select(col("doc_id"), col("lang"), col("n_chars"), col("n_tokens"))
+          .orderBy(col("doc_id"))
+          .localCheckpoint(true) // materialized — safe to drop tables + files
+      } finally {
+        s.sql(s"DROP TABLE IF EXISTS $ta")
+        s.sql(s"DROP TABLE IF EXISTS $tb")
+      }
     }
   }
 
@@ -1804,8 +1778,7 @@ object DataPipelineQueries {
     val idx = Similarity.ivfPqIndex(e, k = 64)
     val fromFit = Similarity.ivfpqTopK(e, q, k = 5, nProbe = 6, rerank = 20,
       index = Some(idx)).localCheckpoint(true)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ivfpq_persist_")
-    try {
+    withTempDir("ivfpq_persist") { tmp =>
       Similarity.saveIvfPqIndex(idx, tmp.toString)
       val reloaded = Similarity.loadIvfPqIndex(s, tmp.toString)
       val fromLoad = Similarity.ivfpqTopK(e, q, k = 5, nProbe = 6, rerank = 20,
@@ -1825,7 +1798,7 @@ object DataPipelineQueries {
           lit(identical).as("loaded_matches_fit"),
           lit(nFound >= 8L).as("found_true_neighbor"))
         .orderBy(col("qid"))
-    } finally deleteRecursively(tmp)
+    }
   }
 
   /** Streaming exact dedup, REALLY executed as a Structured Streaming query
@@ -2014,7 +1987,9 @@ object DataPipelineQueries {
       // state rows each, floor 8), capped at the session's setting, which
       // a production deployment sizes to its cluster: at gate scale this
       // is 8 (measured ~20% off the query), at corpus scale it returns to
-      // the session value. Restored after start for the batch verdict side.
+      // the session value. Floor INSIDE the cap, as in streamStateParts: a
+      // session running < 8 shuffle partitions is respected. Restored
+      // after start for the batch verdict side.
       val partKey = "spark.sql.shuffle.partitions"
       val prevParts = s.conf.get(partKey)
       import graft.streaming.StreamingNearDup.{DefaultBands, DefaultNumHashes}
@@ -2024,7 +1999,7 @@ object DataPipelineQueries {
         sum(when(col("doc_id") % 10 === 0, 1L).otherwise(0L))).collect()(0)
       val (nDocs, nCopies) = (cnts.getLong(0), cnts.getLong(1))
       val stateRows = nDocs * DefaultBands
-      val parts = math.max(8L, math.min(prevParts.toLong, stateRows / 10000L))
+      val parts = math.min(prevParts.toLong, math.max(8L, stateRows / 10000L))
       s.conf.set(partKey, parts.toString)
       val q =
         try graft.streaming.StreamingNearDup.nearDupPairs(withCopies)
@@ -2501,9 +2476,8 @@ object DataPipelineQueries {
     * pointer-swap discipline as sink_write_audit_publish. The batch
     * oracle (per-user argmax over all events) equals the final state
     * because argmax folding is order-insensitive across batches. */
-  private def streamCdcUpsert(s: SparkSession, d: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_cdc")
-    try {
+  private def streamCdcUpsert(s: SparkSession, d: String): DataFrame =
+    withTempDir("cdc") { tmp =>
       val src = streamEvents(s, d)
       val raw = src.select(col("user_id"), col("event_id"), col("value"),
         graft.relational.Tables.tsUsCol(src).as("ts_us"))
@@ -2521,13 +2495,12 @@ object DataPipelineQueries {
           .start()
         q.awaitTermination()
       } finally s.conf.set(partKey, prevParts)
-      // localCheckpoint BEFORE the finally deletes the state dirs the
+      // localCheckpoint BEFORE withTempDir deletes the state dirs the
       // lazy read would otherwise scan — same lifecycle as the other sinks
       s.read.parquet(cdcStateDirs(tmp).last.getPath)
         .orderBy(col("user_id"))
         .localCheckpoint(true)
-    } finally deleteRecursively(tmp)
-  }
+    }
 
   /** The versioned state dirs, oldest→newest. Shared with the spec so the
     * cross-batch/idempotence behavior pinned there is the REGISTERED
@@ -3718,8 +3691,7 @@ object DataPipelineQueries {
       |         round(sum(c * logp) / sum(c), 6) AS lm_logp
       |  FROM dbg JOIN model USING (bg) GROUP BY doc_id)""".stripMargin
 
-  private val lmMemo = new graft.core.SessionMemo[String](dir =>
-    deleteRecursively(java.nio.file.Paths.get(dir)), name = "lm_scores")
+  private val lmMemo = new SessionMemo[String]("lm_scores")
 
   /** The corpus-bigram LM scoring behind text_lm_score, memoized per
     * (session, corpus dir) as a parquet table — text_lm_score and
@@ -3732,7 +3704,7 @@ object DataPipelineQueries {
     s.read.parquet(lmScoresDir(s, d))
 
   private def lmScoresDir(s: SparkSession, d: String): String =
-    lmMemo.getOrBuild(s, d) {
+    lmMemo.getOrBuild(s, d) { tmp =>
       val base = docs(s, d).select(col("doc_id"), TextOps.normalized("text").as("norm"))
       // r13 (verdict ask #3): PER-DOC bigram counts first. A doc's exploded
       // bigrams all live in one partition (a generator never splits its
@@ -3772,7 +3744,6 @@ object DataPipelineQueries {
         .select(col("doc_id"),
           coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"),
           coalesce(col("lm_logp"), lit(0.0)).as("lm_logp"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft_lm_scores_")
       out.write.mode("overwrite").parquet(tmp.toString)
       tmp.toString
     }
@@ -3799,13 +3770,11 @@ object DataPipelineQueries {
     * verdict ask #3 — the lm_scores memo, like the quality model it
     * feeds, becomes a cross-session table). Doubles round-trip parquet
     * bit-exactly; oracle = text_lm_score's SQL VERBATIM. */
-  private def textLmPersist(s: SparkSession, d: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_lm_persist_")
-    try {
+  private def textLmPersist(s: SparkSession, d: String): DataFrame =
+    withTempDir("lm_persist") { tmp =>
       saveLmScores(s, d, tmp.toString)
       loadLmScores(s, tmp.toString).orderBy(col("doc_id")).localCheckpoint(true)
-    } finally deleteRecursively(tmp)
-  }
+    }
 
   /** CCNet-STYLE PERPLEXITY BUCKETS (Wenzek et al. 2020): split the corpus
     * into head / middle / tail TERTILES by LM score — the standard
@@ -3911,14 +3880,12 @@ object DataPipelineQueries {
     *           accuracy/separation certification at serve time
     * Doubles round-trip parquet bit-exactly, so a loaded-model score is
     * bit-identical to an in-memory one (QualityModelPersistSpec pins it). */
-  private val qualityModelMemo = new graft.core.SessionMemo[String](dir =>
-    deleteRecursively(java.nio.file.Paths.get(dir)), name = "quality_model")
+  private val qualityModelMemo = new SessionMemo[String]("quality_model")
 
   private[relational] def qualityModelRoot(s: SparkSession, d: String): String =
-    qualityModelMemo.getOrBuild(s, d) {
+    qualityModelMemo.getOrBuild(s, d) { tmp =>
       import org.apache.spark.ml.classification.LogisticRegression
       import org.apache.spark.ml.functions.array_to_vector
-      val tmp = java.nio.file.Files.createTempDirectory("graft_quality_model_")
       qualityFeatures(s, d).write.mode("overwrite").parquet(s"$tmp/feats")
       val feats = s.read.parquet(s"$tmp/feats")
       // weak-label strata from the memoized LM table (tertile construction

@@ -1,6 +1,7 @@
 package graft.relational
 
 import graft.core._
+import graft.core.SessionMemo.withTempDir
 import graft.pipeline.AnomalyDetection
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -42,10 +43,8 @@ object PipelineQueries {
     * hygiene between queries would destroy memoized checkpoint blocks.
     * [[AnomalyDetection.fit]] stays the unmemoized bypass (multilevel /
     * streaming fits use their own windows + params and never share). */
-  private val fitMemo = new graft.core.SessionMemo[(DataFrame, AnomalyDetection.Model, String)](
-    onEvict = v => DataPipelineQueries.deleteRecursively(
-      java.nio.file.Paths.get(v._3)),
-    name = "fitted_model")
+  private val fitMemo =
+    new SessionMemo[(DataFrame, AnomalyDetection.Model, String)]("fitted_model")
 
   private def fitOn(s: SparkSession, d: String): (DataFrame, AnomalyDetection.Model) = {
     val (long, model, _) = fitOnWithPred(s, d)
@@ -54,10 +53,9 @@ object PipelineQueries {
 
   private def fitOnWithPred(
       s: SparkSession, d: String): (DataFrame, AnomalyDetection.Model, String) =
-    fitMemo.getOrBuild(s, d) {
+    fitMemo.getOrBuild(s, d) { tmp =>
       val long = Tables.eventsLong(s, d).withColumnRenamed("user_id", "seq_id")
       val (model, pred) = AnomalyDetection.fitPredict(s, long, fitParams)
-      val tmp = java.nio.file.Files.createTempDirectory("graft_fitted_pred_")
       pred.write.mode("overwrite").parquet(tmp.toString)
       (long, model, tmp.toString)
     }
@@ -396,9 +394,8 @@ object PipelineQueries {
     * machines are fixed, so the oracle pins every row's value; a codec
     * drift, a mis-projected column, or a broken service registration
     * hash-fails the gate. */
-  def sourcePfsaTable(s: SparkSession, d: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_pfsa_src")
-    try {
+  def sourcePfsaTable(s: SparkSession, d: String): DataFrame =
+    withTempDir("pfsa_src") { tmp =>
       Seq("m2" -> Pfsa.m2, "m2u" -> Pfsa.m2u).foreach { case (n, p) =>
         java.nio.file.Files.write(tmp.resolve(s"$n.pfsa"),
           p.toText.getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -406,8 +403,7 @@ object PipelineQueries {
       s.read.format("pfsa").load(tmp.toString)
         .orderBy(col("machine"), col("state"), col("symbol"))
         .localCheckpoint(true)
-    } finally DataPipelineQueries.deleteRecursively(tmp)
-  }
+    }
 
   /** sink_pfsa_connector: the WRITE side of the pfsa DSv2 connector —
     * transition rows go in scrambled (reversed row order, repartition(7))
@@ -422,8 +418,7 @@ object PipelineQueries {
     * hash-fails. */
   def sinkPfsaConnector(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_pfsa_sink")
-    try {
+    withTempDir("pfsa_sink") { tmp =>
       val rows = for {
         (n, p) <- Seq("m2" -> Pfsa.m2, "m2u" -> Pfsa.m2u)
         q <- p.conn.indices; sym <- 0 until p.alphabetSize
@@ -434,7 +429,7 @@ object PipelineQueries {
       s.read.format("pfsa").load(tmp.toString)
         .orderBy(col("machine"), col("state"), col("symbol"))
         .localCheckpoint(true)
-    } finally DataPipelineQueries.deleteRecursively(tmp)
+    }
   }
 
   /** sink_model_dill + source_model_dill (detection.py:166-243): JSON model
@@ -451,12 +446,12 @@ object PipelineQueries {
   def modelRoundtrip(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val (_, model) = fitOn(s, d)
-    val path = s"/tmp/graft_model_${java.util.UUID.randomUUID().toString.take(8)}"
     // KB-sized, but the same leak class scanBinaryfile had: the saved
     // dir must not outlive the call (modelLoadServe's discipline)
-    AnomalyDetection.save(s, model, path)
-    val loaded = try AnomalyDetection.load(s, path)
-    finally DataPipelineQueries.deleteRecursively(java.nio.file.Paths.get(path))
+    val loaded = withTempDir("model") { tmp =>
+      AnomalyDetection.save(s, model, tmp.toString)
+      AnomalyDetection.load(s, tmp.toString)
+    }
     // bit-pattern equality for the stats: a cluster whose own-member llks
     // include +inf has a NaN sample std, which round-trips faithfully but
     // fails ==; doubleToLongBits treats it as the equal bits it is
@@ -493,10 +488,9 @@ object PipelineQueries {
     * loudly rather than shifting scores silently). */
   def modelLoadServe(s: SparkSession, d: String): DataFrame = {
     val (long, model) = fitOn(s, d)
-    val path = s"/tmp/graft_model_src_${java.util.UUID.randomUUID().toString.take(8)}"
-    AnomalyDetection.save(s, model, path)
-    try {
-      val loaded = AnomalyDetection.load(s, path)
+    withTempDir("model_src") { tmp =>
+      AnomalyDetection.save(s, model, tmp.toString)
+      val loaded = AnomalyDetection.load(s, tmp.toString)
       val fromLoaded = AnomalyDetection.predict(s, loaded, long)
         .select(col("seq_id"), col("is_anomaly"), col("closest"), col("llk"))
       // DELIBERATELY a fresh predict, NOT the memoized prediction table:
@@ -520,8 +514,7 @@ object PipelineQueries {
             .as("loaded_matches_fit"))
         .orderBy(col("seq_id"))
         .localCheckpoint(true) // materialized — the saved dir can go
-    } finally DataPipelineQueries.deleteRecursively(
-      java.nio.file.Paths.get(path))
+    }
   }
 
   /** sink_png analog (detection.py:257-269): graphviz DOT source per PFSA

@@ -1,5 +1,6 @@
 package graft.relational
 
+import graft.core.SessionMemo.withTempDir
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -282,47 +283,45 @@ object QualityQueries {
     * debris leaking into the read IS a hash mismatch. At scale the
     * manifest is the table-format snapshot and "publish" is one atomic
     * pointer swap; audit cost is one pass over the new files only. */
-  private def sinkWriteAuditPublish(s: SparkSession, d: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_wap")
-    try {
-    val stage = tmp.resolve("stage").toFile
-    val docs = Tables.tbl(s, d, "documents").filter(col("n_chars") > 0)
-    docs.repartition(4).write.mode("overwrite").parquet(stage.getPath)
-    // the committed write's file list — at scale the commit protocol
-    // returns this; locally we snapshot the directory BEFORE any debris
-    val committed = stage.listFiles().filter(_.getName.endsWith(".parquet"))
-      .map(_.getPath).sorted
-    val staged = s.read.parquet(committed: _*)
-    // audit: count + PK uniqueness, one bounded 1-row aggregate
-    val a = staged.agg(count(lit(1)).as("n"),
-      countDistinct(col("doc_id")).as("nd")).head()
-    val auditOk = a.getLong(0) > 0 && a.getLong(0) == a.getLong(1)
-    // publish: manifest names exactly the audited files
-    val manifest = tmp.resolve("_manifest.json")
-    val body = s"""{"rows":${a.getLong(0)},"audit_pk_ok":$auditOk,"files":[${
-      committed.map(f => "\"" + f + "\"").mkString(",")}]}"""
-    java.nio.file.Files.writeString(manifest, body)
-    // debris lands AFTER the manifest — an uncommitted task's leftover
-    docs.limit(50).coalesce(1).write.mode("overwrite")
-      .parquet(tmp.resolve("orphan").toString)
-    tmp.resolve("orphan").toFile.listFiles()
-      .filter(_.getName.endsWith(".parquet")).take(1).foreach { f =>
-        java.nio.file.Files.copy(f.toPath,
-          stage.toPath.resolve("part-99999-orphan-uncommitted.parquet"))
-      }
-    // the reader path: resolve the manifest, read ONLY its files
-    val mj = java.nio.file.Files.readString(manifest)
-    val files = "\"([^\"]+\\.parquet)\"".r.findAllMatchIn(mj).map(_.group(1)).toSeq
-    // localCheckpoint BEFORE the finally deletes the staged files the
-    // lazy read would otherwise scan
-    s.read.parquet(files: _*)
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("doc_id")).as("sum_doc_id"))
-      .withColumn("audit_pk_ok", lit(auditOk))
-      .orderBy(col("lang"))
-      .localCheckpoint(true)
-    } finally DataPipelineQueries.deleteRecursively(tmp)
-  }
+  private def sinkWriteAuditPublish(s: SparkSession, d: String): DataFrame =
+    withTempDir("wap") { tmp =>
+      val stage = tmp.resolve("stage").toFile
+      val docs = Tables.tbl(s, d, "documents").filter(col("n_chars") > 0)
+      docs.repartition(4).write.mode("overwrite").parquet(stage.getPath)
+      // the committed write's file list — at scale the commit protocol
+      // returns this; locally we snapshot the directory BEFORE any debris
+      val committed = stage.listFiles().filter(_.getName.endsWith(".parquet"))
+        .map(_.getPath).sorted
+      val staged = s.read.parquet(committed: _*)
+      // audit: count + PK uniqueness, one bounded 1-row aggregate
+      val a = staged.agg(count(lit(1)).as("n"),
+        countDistinct(col("doc_id")).as("nd")).head()
+      val auditOk = a.getLong(0) > 0 && a.getLong(0) == a.getLong(1)
+      // publish: manifest names exactly the audited files
+      val manifest = tmp.resolve("_manifest.json")
+      val body = s"""{"rows":${a.getLong(0)},"audit_pk_ok":$auditOk,"files":[${
+        committed.map(f => "\"" + f + "\"").mkString(",")}]}"""
+      java.nio.file.Files.writeString(manifest, body)
+      // debris lands AFTER the manifest — an uncommitted task's leftover
+      docs.limit(50).coalesce(1).write.mode("overwrite")
+        .parquet(tmp.resolve("orphan").toString)
+      tmp.resolve("orphan").toFile.listFiles()
+        .filter(_.getName.endsWith(".parquet")).take(1).foreach { f =>
+          java.nio.file.Files.copy(f.toPath,
+            stage.toPath.resolve("part-99999-orphan-uncommitted.parquet"))
+        }
+      // the reader path: resolve the manifest, read ONLY its files
+      val mj = java.nio.file.Files.readString(manifest)
+      val files = "\"([^\"]+\\.parquet)\"".r.findAllMatchIn(mj).map(_.group(1)).toSeq
+      // localCheckpoint BEFORE withTempDir deletes the staged files the
+      // lazy read would otherwise scan
+      s.read.parquet(files: _*)
+        .groupBy(col("lang"))
+        .agg(count(lit(1)).as("n_docs"), sum(col("doc_id")).as("sum_doc_id"))
+        .withColumn("audit_pk_ok", lit(auditOk))
+        .orderBy(col("lang"))
+        .localCheckpoint(true)
+    }
 
   /** ENCRYPTED-AT-REST parquet sink — Parquet MODULAR ENCRYPTION through
     * Spark's own hook (`parquet.crypto.factory.class` →
@@ -339,9 +338,8 @@ object QualityQueries {
     * round trip (the oracle recomputes it from the source, so a decrypt
     * corruption is a hash mismatch). Encryption is pure per-file CPU —
     * no plan change, no extra shuffle, scale-free. */
-  private def sinkParquetEncrypted(s: SparkSession, d: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_enc")
-    try {
+  private def sinkParquetEncrypted(s: SparkSession, d: String): DataFrame =
+    withTempDir("enc") { tmp =>
       val out = tmp.resolve("docs_enc").toString
       // crypto config travels as PER-OPERATION DataFrameWriter/Reader
       // options (Spark merges them into that job's hadoop conf via
@@ -375,8 +373,7 @@ object QualityQueries {
         .withColumn("footer_encrypted", lit(magic == "PARE"))
         .orderBy(col("lang"))
         .localCheckpoint(true)
-    } finally DataPipelineQueries.deleteRecursively(tmp)
-  }
+    }
 
   /** IN-FLIGHT observability — Spark's `Observation` API: QC counters
     * (row count, char mass, empty-doc count, null-lang count) are

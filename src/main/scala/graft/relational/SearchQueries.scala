@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.SessionMemo
+import graft.core.SessionMemo.withTempDir
 import graft.text.{Similarity, TextOps}
 
 /** Retrieval wave: RAG-style document chunking, inverted-index
@@ -256,62 +258,61 @@ object SearchQueries {
     * `round(sum(double), 4)` flipped at 4-dp half boundaries with
     * partition order: the round's one driver-gate hash-fail); the vec
     * score is the 6-dp cosine lifted to micros. */
-  private val hybridLegsMemo = new graft.core.SessionMemo[String](dir =>
-    DataPipelineQueries.deleteRecursively(java.nio.file.Paths.get(dir)),
-    name = "hybrid_legs")
+  private val hybridLegsMemo = new SessionMemo[String]("hybrid_legs")
 
   private def hybridLegsTable(s: SparkSession, d: String): DataFrame =
     s.read.parquet(hybridLegsDir(s, d))
 
   private def hybridLegsDir(s: SparkSession, d: String): String =
-    hybridLegsMemo.getOrBuild(s, d) {
+    hybridLegsMemo.getOrBuild(s, d) { tmp =>
       val base = docs(s, d).select(col("doc_id"), TextOps.tokens("text").as("toks"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val dl = base.select(col("doc_id"), size(col("toks")).cast("double").as("dl"))
-      val qTerms = base.filter(col("doc_id") < 10)
-        .select(col("doc_id").as("qid"), explode(array_distinct(col("toks"))).as("token"))
-      val qTok = qTerms.select(col("token")).distinct()
-      // postings restricted to query terms BEFORE aggregation (the bm25 plan
-      // rule); eager because df and the per-query fan-out both read it
-      val qHits = base.select(col("doc_id"), explode(col("toks")).as("token"))
-        .join(broadcast(qTok), "token")
-        .groupBy(col("doc_id"), col("token"))
-        .agg(count(lit(1)).cast("double").as("tf"))
-        .localCheckpoint(true)
-      val dfT = qHits.groupBy(col("token")).agg(count(lit(1)).cast("double").as("dft"))
-      val stats = dl.agg(count(lit(1)).cast("double").as("n_docs"),
-        round(avg(col("dl")), 6).as("avgdl"))
-      val lexScores = qHits
-        .join(broadcast(qTerms), "token")
-        .filter(col("doc_id") =!= col("qid"))
-        .join(dl, "doc_id")
-        .join(broadcast(dfT), "token")
-        .crossJoin(broadcast(stats))
-        .withColumn("idf_r",
-          round(log((col("n_docs") - col("dft") + 0.5) / (col("dft") + 0.5) + 1.0), 6))
-        .withColumn("w_r", round(
-          col("idf_r") * col("tf") * 2.2 /
-            (col("tf") + (col("dl") / col("avgdl") * 0.75 + 0.25) * 1.2), 6))
-        .withColumn("w_micros", expr("cast(round(w_r * 1000000) as bigint)"))
-        .groupBy(col("qid"), col("doc_id"))
-        .agg(sum(col("w_micros")).as("score_micros"))
-      val lex = lexScores
-        .withColumn("rank", row_number().over(
-          Window.partitionBy(col("qid")).orderBy(col("score_micros").desc, col("doc_id"))))
-        .filter(col("rank") <= HybridLegK)
-        .select(lit("lex").as("leg"), col("qid"), col("doc_id"),
-          col("score_micros"), col("rank").cast("long").as("rank"))
-      val e = Tables.embeddings(s, d)
-      val vec = Similarity.bruteForceTopK(e, e.filter(col("vec_id") < 10), k = HybridLegK)
-        .withColumn("score_micros", expr("cast(round(cosine * 1000000) as bigint)"))
-        .withColumn("rank", row_number().over(
-          Window.partitionBy(col("qid")).orderBy(col("score_micros").desc, col("neighbor"))))
-        .select(lit("vec").as("leg"), col("qid"), col("neighbor").as("doc_id"),
-          col("score_micros"), col("rank").cast("long").as("rank"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft_hybrid_legs_")
-      lex.unionByName(vec).write.mode("overwrite").parquet(tmp.toString)
-      base.unpersist()
-      tmp.toString
+      // released on every path out, so a failed build leaks no cache
+      try {
+        val dl = base.select(col("doc_id"), size(col("toks")).cast("double").as("dl"))
+        val qTerms = base.filter(col("doc_id") < 10)
+          .select(col("doc_id").as("qid"), explode(array_distinct(col("toks"))).as("token"))
+        val qTok = qTerms.select(col("token")).distinct()
+        // postings restricted to query terms BEFORE aggregation (the bm25 plan
+        // rule); eager because df and the per-query fan-out both read it
+        val qHits = base.select(col("doc_id"), explode(col("toks")).as("token"))
+          .join(broadcast(qTok), "token")
+          .groupBy(col("doc_id"), col("token"))
+          .agg(count(lit(1)).cast("double").as("tf"))
+          .localCheckpoint(true)
+        val dfT = qHits.groupBy(col("token")).agg(count(lit(1)).cast("double").as("dft"))
+        val stats = dl.agg(count(lit(1)).cast("double").as("n_docs"),
+          round(avg(col("dl")), 6).as("avgdl"))
+        val lexScores = qHits
+          .join(broadcast(qTerms), "token")
+          .filter(col("doc_id") =!= col("qid"))
+          .join(dl, "doc_id")
+          .join(broadcast(dfT), "token")
+          .crossJoin(broadcast(stats))
+          .withColumn("idf_r",
+            round(log((col("n_docs") - col("dft") + 0.5) / (col("dft") + 0.5) + 1.0), 6))
+          .withColumn("w_r", round(
+            col("idf_r") * col("tf") * 2.2 /
+              (col("tf") + (col("dl") / col("avgdl") * 0.75 + 0.25) * 1.2), 6))
+          .withColumn("w_micros", expr("cast(round(w_r * 1000000) as bigint)"))
+          .groupBy(col("qid"), col("doc_id"))
+          .agg(sum(col("w_micros")).as("score_micros"))
+        val lex = lexScores
+          .withColumn("rank", row_number().over(
+            Window.partitionBy(col("qid")).orderBy(col("score_micros").desc, col("doc_id"))))
+          .filter(col("rank") <= HybridLegK)
+          .select(lit("lex").as("leg"), col("qid"), col("doc_id"),
+            col("score_micros"), col("rank").cast("long").as("rank"))
+        val e = Tables.embeddings(s, d)
+        val vec = Similarity.bruteForceTopK(e, e.filter(col("vec_id") < 10), k = HybridLegK)
+          .withColumn("score_micros", expr("cast(round(cosine * 1000000) as bigint)"))
+          .withColumn("rank", row_number().over(
+            Window.partitionBy(col("qid")).orderBy(col("score_micros").desc, col("neighbor"))))
+          .select(lit("vec").as("leg"), col("qid"), col("neighbor").as("doc_id"),
+            col("score_micros"), col("rank").cast("long").as("rank"))
+        lex.unionByName(vec).write.mode("overwrite").parquet(tmp.toString)
+        tmp.toString
+      } finally base.unpersist()
     }
 
   /** Weighted-sum hybrid — the MIN-MAX-normalized alpha-blend fusion
@@ -357,13 +358,11 @@ object SearchQueries {
     * table; production search stacks persist per-leg scores and fuse at
     * query time). All-integer legs round-trip parquet exactly; oracle =
     * search_hybrid_weighted's SQL VERBATIM. */
-  private def searchHybridPersist(s: SparkSession, d: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_legs_persist_")
-    try {
+  private def searchHybridPersist(s: SparkSession, d: String): DataFrame =
+    withTempDir("legs_persist") { tmp =>
       saveHybridLegs(s, d, tmp.toString)
       weightedFuseFromLegs(loadHybridLegs(s, tmp.toString)).localCheckpoint(true)
-    } finally DataPipelineQueries.deleteRecursively(tmp)
-  }
+    }
 
   /** The weighted fusion math factored like [[rrfFuse]] so the spec can
     * pin it on synthetic legs: min-max normalize each leg per query to

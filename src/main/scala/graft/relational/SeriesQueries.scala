@@ -1,7 +1,8 @@
 package graft.relational
 
-import java.nio.file.{Files, Path}
+import java.nio.file.Path
 
+import graft.core.SessionMemo.withTempDir
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -256,9 +257,8 @@ object SeriesQueries {
     * tasks of 128 MB — NameNode/listing pressure and task overhead both
     * drop three orders of magnitude; the repartition is one round-robin
     * exchange sized by the measured input bytes, never a collect. */
-  private def compactSmallFiles(s: SparkSession, d: String): DataFrame = {
-    val tmp = Files.createTempDirectory("graft_compact")
-    try {
+  private def compactSmallFiles(s: SparkSession, d: String): DataFrame =
+    withTempDir("compact") { tmp =>
       docsT(s, d).repartition(64).write.mode("overwrite").parquet(s"$tmp/small")
       val bytes = parquetParts(s, s"$tmp/small").map(_.getLen).sum
       val nOut = math.max(1, math.ceil(bytes.toDouble / CompactTargetBytes).toInt)
@@ -271,14 +271,12 @@ object SeriesQueries {
           countDistinct(col("doc_id")).as("n_distinct"))
         .orderBy(col("source"))
         .localCheckpoint(true)
-    } finally DataPipelineQueries.deleteRecursively(tmp)
-  }
+    }
 
   /** Compaction file counts (for the spec): (small-file count, bytes,
     * planned output count, actual compacted file count). */
-  private[relational] def compactCounts(s: SparkSession, d: String): (Int, Long, Int, Int) = {
-    val tmp = Files.createTempDirectory("graft_compact_spec")
-    try {
+  private[relational] def compactCounts(s: SparkSession, d: String): (Int, Long, Int, Int) =
+    withTempDir("compact_spec") { tmp =>
       docsT(s, d).repartition(64).write.mode("overwrite").parquet(s"$tmp/small")
       val parts = parquetParts(s, s"$tmp/small")
       val bytes = parts.map(_.getLen).sum
@@ -286,8 +284,7 @@ object SeriesQueries {
       s.read.parquet(s"$tmp/small").repartition(nOut)
         .write.mode("overwrite").parquet(s"$tmp/compact")
       (parts.length, bytes, nOut, parquetParts(s, s"$tmp/compact").length)
-    } finally DataPipelineQueries.deleteRecursively(tmp)
-  }
+    }
 
   // -------------------------------------------------------- distribution moments
   /** Higher distribution moments per return flag: population std, skewness
@@ -416,9 +413,8 @@ object SeriesQueries {
     * `sink_partitioned` (directory pruning) and `sort_zorder`
     * (multi-column locality): one range-exchange at ingest buys
     * stats-skipping on every later range scan. */
-  private def scanStatsPruning(s: SparkSession, d: String): DataFrame = {
-    val tmp = Files.createTempDirectory("graft_stats")
-    try {
+  private def scanStatsPruning(s: SparkSession, d: String): DataFrame =
+    withTempDir("stats") { tmp =>
       eventsUs(s, d).filter(col("value").isNotNull)
         .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
         .repartitionByRange(8, col("user_id"))
@@ -430,8 +426,7 @@ object SeriesQueries {
         .agg(count(lit(1)).as("n"), round(sum(col("value")), 6).as("sum_value"))
         .orderBy(col("event_type"))
         .localCheckpoint(true)
-    } finally DataPipelineQueries.deleteRecursively(tmp)
-  }
+    }
 
   /** The pruned-scan plan + row metric for the spec: builds the same
     * sorted layout, returns (filtered DataFrame, total row count). The
@@ -663,9 +658,8 @@ object SeriesQueries {
     * many moderate files (as here: one per input partition) or re-codecs
     * to bzip2/zstd-seekable before wide processing. The oracle checks the
     * projection survives the round trip bit-for-bit. */
-  private def scanCsvGzip(s: SparkSession, d: String): DataFrame = {
-    val tmp = Files.createTempDirectory("graft_csvgz")
-    try {
+  private def scanCsvGzip(s: SparkSession, d: String): DataFrame =
+    withTempDir("csvgz") { tmp =>
       docsT(s, d).select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
         .write.mode("overwrite")
         .option("compression", "gzip").option("header", "false")
@@ -676,8 +670,7 @@ object SeriesQueries {
         .csv(s"$tmp/docs")
         .orderBy(col("doc_id"))
         .localCheckpoint(true)
-    } finally DataPipelineQueries.deleteRecursively(tmp)
-  }
+    }
 
   // ----------------------------------------------------------- gaps and islands
   /** Longest CONSECUTIVE-same-type run per user (the gaps-and-islands

@@ -1,10 +1,11 @@
-package graft.relational
+package graft.core
 
 import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The shared temp-dir cleanup every write-then-read query ends with. */
+/** The temp-dir cleanup behind [[SessionMemo]]'s artifact dirs and
+  * every `SessionMemo.withTempDir` scratch dir. */
 class DeleteRecursivelySpec extends AnyFunSuite {
 
   test("a nested temp tree is removed completely") {
@@ -14,15 +15,15 @@ class DeleteRecursivelySpec extends AnyFunSuite {
     Files.writeString(root.resolve("a/mid.txt"), "y")
     Files.writeString(deep.resolve("leaf.parquet"), "z")
     Files.createDirectories(root.resolve("empty"))
-    DataPipelineQueries.deleteRecursively(root)
+    SessionMemo.deleteRecursively(root)
     assert(!Files.exists(root))
   }
 
   test("a missing path is a no-op") {
     val root = Files.createTempDirectory("graft_rmrf_missing")
     Files.delete(root)
-    DataPipelineQueries.deleteRecursively(root)
-    DataPipelineQueries.deleteRecursively(root.resolve("never/created"))
+    SessionMemo.deleteRecursively(root)
+    SessionMemo.deleteRecursively(root.resolve("never/created"))
     assert(!Files.exists(root))
   }
 }

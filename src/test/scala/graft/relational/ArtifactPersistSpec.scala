@@ -25,7 +25,7 @@ class ArtifactPersistSpec extends AnyFunSuite {
     java.nio.file.Files.createTempDirectory("graft_artifact_spec_").toString
 
   private def rm(p: String): Unit =
-    DataPipelineQueries.deleteRecursively(
+    graft.core.SessionMemo.deleteRecursively(
       java.nio.file.Paths.get(p))
 
   test("save -> load round-trips rows exactly (both difference directions empty)") {

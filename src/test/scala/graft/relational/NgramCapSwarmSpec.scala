@@ -76,6 +76,6 @@ class NgramCapSwarmSpec extends AnyFunSuite {
     }
     assert(engine.size < bruteCount,
       s"expected capped recall < brute (${engine.size} vs $bruteCount)")
-    DataPipelineQueries.deleteRecursively(java.nio.file.Paths.get(dir))
+    graft.core.SessionMemo.deleteRecursively(java.nio.file.Paths.get(dir))
   }
 }

@@ -48,7 +48,7 @@ class QualityModelPersistSpec extends AnyFunSuite {
       }
       assert(probs(w1, b1).except(probs(w2, b2)).count() === 0L)
       assert(probs(w2, b2).except(probs(w1, b1)).count() === 0L)
-    } finally DataPipelineQueries.deleteRecursively(tmp)
+    } finally graft.core.SessionMemo.deleteRecursively(tmp)
   }
 
   test("loader fails loudly on truncated or spec-incompatible model tables") {
@@ -70,7 +70,7 @@ class QualityModelPersistSpec extends AnyFunSuite {
         DataPipelineQueries.loadedQualityModel(spark, tmp.toString)
       }
       assert(e2.getMessage.contains("incompatible feature spec"))
-    } finally DataPipelineQueries.deleteRecursively(tmp)
+    } finally graft.core.SessionMemo.deleteRecursively(tmp)
   }
 
   test("quality_score_serve: complete integer-exact deciles + load certificate") {

@@ -22,7 +22,7 @@ class ScanDppSpec extends AnyFunSuite {
       val plan = probe.queryExecution.executedPlan.toString.toLowerCase
       assert(plan.contains("dynamicpruning"),
         s"expected a dynamic pruning expression on the partitioned scan:\n$plan")
-    } finally DataPipelineQueries.deleteRecursively(tmp)
+    } finally graft.core.SessionMemo.deleteRecursively(tmp)
   }
 
   test("scan_dpp values equal the direct unpartitioned recompute") {

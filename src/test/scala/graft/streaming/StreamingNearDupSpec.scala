@@ -136,6 +136,36 @@ class StreamingNearDupSpec extends AnyFunSuite {
       s"synthesized-pair / state-metrics verdict grid broken: $rows")
   }
 
+  test("registered stream_neardup keeps its state partitions within the session cap") {
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    val dir = java.nio.file.Files.createTempDirectory("sneardup_parts").toString
+    (0 until 40).map(i => (i.toLong, "web", "en", s"document $i $baseText tail $i"))
+      .toDF("doc_id", "source", "lang", "text")
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val parts = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Long]()
+    val l = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+        if (e.progress.name != null && e.progress.name.startsWith("stream_neardup_"))
+          Option(e.progress.stateOperators).toSeq.flatten
+            .foreach(op => parts.add(op.numShufflePartitions))
+    }
+    spark.streams.addListener(l)
+    try {
+      graft.relational.DataPipelineQueries.queries("stream_neardup")(spark, dir).count()
+      org.apache.spark.sql.graft.ColumnBridge
+        .waitListenerBusEmpty(spark.sparkContext, 30000L)
+    } finally spark.streams.removeListener(l)
+    val cap = spark.conf.get("spark.sql.shuffle.partitions").toLong
+    val seen = parts.asScala.toSeq.map(_.longValue)
+    assert(seen.nonEmpty, "the streaming query must report its state operators")
+    assert(seen.forall(_ <= cap),
+      s"state partitions $seen exceed the session's $cap shuffle partitions")
+  }
+
   test("state-store metrics: state rows and bytes track the documented per-doc bound") {
     import spark.implicits._
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
