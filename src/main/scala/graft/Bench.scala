@@ -22,6 +22,9 @@ object Bench {
       (cols.take(3).sum + cols.drop(5).take(2).sum, if (cols.length > 7) cols(7) else 0L)
     } catch { case _: Throwable => (-1L, -1L) }
 
+  private def compiles(): Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val loadBefore = loadavg()
@@ -100,6 +103,10 @@ object Bench {
       // build ledger around each query so the artifact reports build and
       // serve separately instead of charging the first family member.
       val ledger0 = graft.core.SessionMemo.buildLedger.size
+      // generated-class compiles (Janino) the query triggered: codegen
+      // cache misses, repeated ones included — a plan shape that outgrows
+      // the session's codegen cache recompiles on every run
+      val compiles0 = compiles()
       val t0 = System.nanoTime()
       // a crashing query must read as a FAILURE, not a fast time
       try { fn(spark, sfDir).count() } catch {
@@ -109,6 +116,7 @@ object Bench {
       }
       val elapsed = (System.nanoTime() - t0) / 1e9
       val builds = graft.core.SessionMemo.buildLedger.drop(ledger0)
+      val qCompiles = compiles() - compiles0
       val (qBusy1, qSteal1) = cpuJiffies()
       val qSteal =
         if (qBusy0 < 0 || qBusy1 + qSteal1 <= qBusy0 + qSteal0) -1.0
@@ -120,10 +128,10 @@ object Bench {
       // OUTSIDE the timed window: bench harness hygiene, not query cost,
       // and it keeps a query's time independent of what ran before it.
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      (name, elapsed, qSteal, builds)
+      (name, elapsed, qSteal, builds, qCompiles)
     }
     def pct(v: Double): String = String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
-    val qs = results.map { case (k, v, _, _) => s"\"" + k + "\":" + v }
+    val qs = results.map { case (k, v, _, _, _) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     // calibration-NORMALIZED per-query values (seconds / calib_s): the
     // round-over-round comparable number. r10's driver window ran at
@@ -134,9 +142,9 @@ object Bench {
     // carries up to ~25% quantization error — defeating the purpose
     def norm4(v: Double): String = String.format(java.util.Locale.ROOT,
       "%.4f", Double.box(if (calibS > 0) v / calibS else -1.0))
-    val qsNorm = results.map { case (k, v, _, _) => s"\"" + k + "\":" + norm4(v) }
+    val qsNorm = results.map { case (k, v, _, _, _) => s"\"" + k + "\":" + norm4(v) }
       .mkString("{", ",", "}")
-    val qsSteal = results.map { case (k, _, s, _) => s"\"" + k + "\":" + pct(s) }
+    val qsSteal = results.map { case (k, _, s, _, _) => s"\"" + k + "\":" + pct(s) }
       .mkString("{", ",", "}")
     // family-build accounting (r12 verdict ask #4): `family_builds` totals
     // each named memo's one-time build (warm-up-paid builds included via
@@ -147,7 +155,9 @@ object Bench {
     val familyJson = familyBuilds
       .map { case (n, s) => "\"" + n + "\":" + pct(s) }.mkString("{", ",", "}")
     val qsBuild = results.filter(_._4.nonEmpty)
-      .map { case (k, _, _, b) => s"\"" + k + "\":" + pct(b.map(_._2).sum) }
+      .map { case (k, _, _, b, _) => s"\"" + k + "\":" + pct(b.map(_._2).sum) }
+      .mkString("{", ",", "}")
+    val qsCompiles = results.map { case (k, _, _, _, c) => s"\"" + k + "\":" + c }
       .mkString("{", ",", "}")
     // full JSON string escape shared with Verify: a Spark
     // AnalysisException message is routinely multi-line — a raw \n inside
@@ -179,6 +189,7 @@ object Bench {
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
       s""""queries_norm":$qsNorm,"total_norm":$totalNorm,""" +
       s""""family_builds":$familyJson,"queries_build":$qsBuild,""" +
+      s""""compiles":${results.map(_._5).sum},"queries_compiles":$qsCompiles,""" +
       s""""observed":$observedJson,""" +
       s""""errors":$errJson,$env,"sf":"$sfDir"}"""
     // The driver keeps only a ~2,000-char TAIL of stdout and parses a JSON
@@ -209,7 +220,7 @@ object Bench {
     // top-10 slowest queries: the per-query signal that matters for grading,
     // small enough to always fit beside totals/errors/calibration
     val top = results.sortBy(-_._2).take(10)
-      .map { case (k, v, _, _) => "\"" + k + "\":" + pct(v) }.mkString("{", ",", "}")
+      .map { case (k, v, _, _, _) => "\"" + k + "\":" + pct(v) }.mkString("{", ",", "}")
     // errors capped at 5 (full list is in the detail file) so a
     // many-failure run cannot push the summary line past the tail window.
     // Sanitize BEFORE truncating: q() expands quotes/backslashes 2x and

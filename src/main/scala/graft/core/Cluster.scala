@@ -4,7 +4,6 @@ import org.apache.spark.ml.{Estimator, Model}
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.linalg.Vectors
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Sequence clustering (reference detection.py:311-354).
@@ -44,21 +43,17 @@ object Cluster {
   }
 
   /** LONG-FORM features: llk vector vs base models folded directly over
-    * `(seq_id, t, symbol)` rows ([[Llk.scoreAllLong]], bit-exact with the
+    * `(seq_id, t, symbol)` rows ([[Llk.scoreWide]], bit-exact with the
     * array kernel) — the fit path never materializes a sequence as one
-    * array cell. The inner `collect_list` gathers the |bases| per-model
-    * scores (a 4-element array per sequence), NOT symbols. */
+    * array cell. The vector is the wide row's |bases| scores, in base
+    * order. */
   def featuresLong(spark: SparkSession, longDf: DataFrame, alphabetSize: Int,
                    presort: Boolean = true): DataFrame = {
-    val bases = basePfsas(alphabetSize)
     val toVec = udf { llks: Seq[Double] =>
       Vectors.dense(llks.map(v => if (v.isInfinite || v.isNaN) 1e6 else v).toArray)
     }
-    Llk.scoreAllLong(spark, longDf, bases, presort = presort)
-      .groupBy(col("seq_id"))
-      .agg(expr("transform(array_sort(collect_list(struct(cluster_id, llk))), x -> x.llk)")
-        .as("lk"))
-      .select(col("seq_id"), toVec(col("lk")).as("features"))
+    Llk.scoreWide(spark, longDf, basePfsas(alphabetSize), presort = presort)
+      .select(col("seq_id"), toVec(col("llks")).as("features"))
   }
 
   /** Cluster labels from a `(seq_id, …, features)` frame, relabeled so 0 =
@@ -187,22 +182,33 @@ object Cluster {
       relabelCol.cast("int").as("cluster")), centers, sizes)
   }
 
-  /** Row-normalized confusion fractions between fitted clusters (reference
-    * detection.py:430-442): fraction of cluster-i members whose best-scoring
-    * model is j. Input long llk matrix (seq_id, cluster_id, llk) + membership
-    * (seq_id, cluster). */
-  def confusionFractions(llks: DataFrame, members: DataFrame): DataFrame = {
-    val best = llks
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("seq_id")).orderBy(col("llk").asc_nulls_last, col("cluster_id"))))
-      .filter(col("rn") === 1)
-      .select(col("seq_id"), col("cluster_id").as("best_cluster"))
-    members.join(best, "seq_id")
-      .groupBy(col("cluster").as("src_cluster"), col("best_cluster"))
-      .agg(count(lit(1)).as("n"))
-      .withColumn("frac", col("n").cast("double")
-        / sum(col("n")).over(Window.partitionBy(col("src_cluster"))))
-      .select(col("src_cluster"), col("best_cluster"), col("frac"))
+  /** Per fitted cluster i: `counts(i)(j)` = members whose [[Llk.argmin]]
+    * is j, `stats(i)` = (mean, sample std; 0 for a lone member) of the
+    * members' own-model llk (reference detection.py:472-499). */
+  final case class LlkTally(counts: Map[Int, Array[Long]], stats: Map[Int, (Double, Double)]) {
+    /** Nonzero row-normalized confusion fractions (i, j, n_ij / Σ_j n_ij),
+      * reference detection.py:430-442. */
+    def fractions: Seq[(Int, Int, Double)] =
+      counts.toSeq.sortBy(_._1).flatMap { case (i, row) =>
+        val total = row.sum
+        row.indices.filter(row(_) > 0).map(j => (i, j, row(j).toDouble / total.toDouble))
+      }
+  }
+
+  /** [[LlkTally]] in one aggregate over [[Llk.scoreWide]] rows of a k-model
+    * library joined with `(seq_id, cluster)` membership: k rows reach the
+    * driver, never the N×k matrix. */
+  def llkTally(wide: DataFrame, members: DataFrame, k: Int): LlkTally = {
+    val best = Llk.argmin(col("llks"))
+    val own = element_at(col("llks"), col("cluster") + 1)
+    val rows = wide.join(members, "seq_id")
+      .groupBy(col("cluster"))
+      .agg(avg(own).as("m"),
+        stddev_samp(own).as("s") +: (0 until k).map(j => count_if(best === j)): _*)
+      .collect()
+    LlkTally(
+      rows.map(r => r.getInt(0) -> Array.tabulate(k)(j => r.getLong(3 + j))).toMap,
+      rows.map(r => r.getInt(0) -> (r.getDouble(1), if (r.isNullAt(2)) 0.0 else r.getDouble(2))).toMap)
   }
 
   /** Cluster-reduction step (reference __reduce_clusters,

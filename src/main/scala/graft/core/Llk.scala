@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Sequence log-likelihood scoring (reference Alg. 1, tex/ms.tex:261-287;
@@ -90,6 +90,9 @@ object Llk {
     * `collect_list` cell (the array path's ceiling; reference streams cap at
     * 500k symbols, examples/M2.cfg:15-17).
     *
+    * The result is the WIDE cluster_llks matrix (reference detection.py:131):
+    * one row `(seq_id, llks)` per sequence, `llks(j)` = llk under `library(j)`.
+    *
     * @param presort true (default) hash-partitions by seq_id and sorts by t
     *                within partitions first: each sequence folds in one
     *                in-order pass, BIT-EXACT with the array path. false
@@ -104,8 +107,8 @@ object Llk {
     *               when presort=false; t < 0 is rejected) and
     *               `symbol` (tinyint)
     */
-  def scoreAllLong(spark: SparkSession, longDf: DataFrame, library: Seq[Pfsa],
-                   presort: Boolean = true): DataFrame = {
+  def scoreWide(spark: SparkSession, longDf: DataFrame, library: Seq[Pfsa],
+                presort: Boolean = true): DataFrame = {
     import org.apache.spark.sql.graft.ColumnBridge
     val agg = ColumnBridge.column(
       graft.functions.LlkLongScore(
@@ -117,9 +120,17 @@ object Llk {
       else longDf
     // the groupBy reuses the repartition's hashpartitioning (no second
     // exchange — EnsureRequirements sees the child distribution satisfied)
-    src.groupBy(col("seq_id"))
-      .agg(agg.as("llks"))
-      .select(col("seq_id"), posexplode_outer(col("llks")).as(Seq("cluster_id", "llk")))
-      .filter(col("cluster_id").isNotNull)
+    src.groupBy(col("seq_id")).agg(agg.as("llks"))
   }
+
+  /** [[scoreWide]] as long (seq_id, cluster_id, llk) rows. */
+  def scoreAllLong(spark: SparkSession, longDf: DataFrame, library: Seq[Pfsa],
+                   presort: Boolean = true): DataFrame =
+    scoreWide(spark, longDf, library, presort)
+      .select(col("seq_id"), posexplode(col("llks")).as(Seq("cluster_id", "llk")))
+
+  /** 0-based index of the lowest model reaching the row's minimum llk — the
+    * one tie rule for the predicted `closest` and the confusion argmin. */
+  def argmin(llks: Column): Column =
+    (array_position(llks, array_min(llks)) - 1).cast("int")
 }

@@ -13,6 +13,10 @@ import org.apache.spark.sql.functions._
   * sequence against the broadcast library; anomalous iff llk exceeds
   * mean + sensitivity·std for EVERY cluster (detection.py:147-149).
   *
+  * Like the reference's `cluster_llks`, the llk matrix stays WIDE (one row
+  * per sequence, [[Llk.scoreWide]]): the confusion and stats
+  * ([[Cluster.llkTally]]) and the predictions are all read off that row.
+  *
   * Input is the long/tidy form `(seq_id, t, value)` (SURVEY.md §1.4) rather
   * than the reference's row-per-sequence wide frame — the representation that
   * scales: partitioned by seq_id, no wide schemas, models broadcast.
@@ -74,7 +78,7 @@ object AnomalyDetection {
     * sortable t. The window reuses the exchange + sort directly below it, so
     * this costs no extra shuffle; downstream passes consume the result with
     * `presort = false`. */
-  private def densify(df: DataFrame): DataFrame =
+  private[pipeline] def densify(df: DataFrame): DataFrame =
     df.repartition(col("seq_id"))
       .sortWithinPartitions(col("seq_id"), col("t"))
       .withColumn("t", (row_number().over(
@@ -82,7 +86,7 @@ object AnomalyDetection {
 
   /** Fit works entirely on the LONG form — features, inference heap, π̃
     * visit sweep and the scoring passes all fold over `(seq_id, t, symbol)`
-    * rows (Llk.scoreAllLong / GenESeSS.inferAllLong), so no stage ever
+    * rows (Llk.scoreWide / GenESeSS.inferAllLong), so no stage ever
     * materializes a sequence as one array cell and training streams have no
     * length ceiling (the reference caps at 500k symbols, examples/M2.cfg).
     *
@@ -96,15 +100,14 @@ object AnomalyDetection {
   /** [[fit]] fused with a [[predict]] over the SAME input (r17, guide §2.4
     * "two operations keyed the same way can share"): a separate
     * fit-then-predict pair re-quantized + re-shuffled the input and re-ran
-    * the full scoring pass predict needs — but the fit's own-member stats
-    * pass already scores every (sequence, cluster) against the final
-    * library, so the fused form caches that one llk matrix
-    * (sequence-count × k rows, tiny) and derives BOTH the stats and the
-    * predictions from it, reading the fit's cached quantized frame and
-    * never touching the source again. Values are identical by
+    * the full scoring pass predict needs — but the fit already scores every
+    * sequence against the final library for its stats, so the fused form
+    * projects the predictions from that cached wide llk matrix (one row of
+    * k llks per sequence, tiny), reading the fit's cached quantized frame
+    * and never touching the source again. Values are identical by
     * construction: predict's scoring input densify(quantize(longDf)) IS
-    * the fit's cached frame, and the prediction aggregate is the same
-    * [[predictFromLlks]] both paths share. The returned predictions are
+    * the fit's cached frame, and the projection is the same
+    * [[predictions]] both paths share. The returned predictions are
     * eagerly materialized (the fit's caches are released before return). */
   def fitPredict(spark: SparkSession, longDf: DataFrame, params: Params = Params(),
                  clusterer: Option[org.apache.spark.ml.Estimator[_ <: org.apache.spark.ml.Model[_]]] = None): (Model, DataFrame) = {
@@ -127,10 +130,7 @@ object AnomalyDetection {
     // throws mid-fit
     var feat: Option[DataFrame] = None
     var labels: DataFrame = null
-    var llkCache: DataFrame = null
-    def scoreCached(library: IndexedSeq[Pfsa]): DataFrame =
-      Llk.scoreAllLong(spark, q, library, presort = false)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    var wide: DataFrame = null
     try {
       val maxSym = q.agg(max(col("symbol"))).head()
       require(!maxSym.isNullAt(0), "AnomalyDetection.fit: input has no rows after quantization")
@@ -182,56 +182,42 @@ object AnomalyDetection {
       // effective k is the library size
       k = lib.size
 
+      // one cached wide llk row per sequence; a single k-row collect reads
+      // the confusion and the stats off it, and fitPredict projects it
+      def tally(): Cluster.LlkTally = {
+        wide = Llk.scoreWide(spark, q, (0 until k).map(lib), presort = false)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        Cluster.llkTally(wide, labels, k)
+      }
+      var t = tally()
+
       // __reduce_clusters fixpoint (detection.py:401-469): merge clusters whose
-      // PFSAs confuse each other; driver-side SCC on the tiny k×k matrix.
-      // Each iteration caches the library's (seq, cluster) llk matrix
-      // (sequence-count × k rows, tiny); when the loop converges the library
-      // is unchanged since that scoring, so the matrix is reused below.
+      // PFSAs confuse each other; driver-side SCC on the tiny k×k matrix. The
+      // last tally always scored the final library, so it holds its stats.
       if (params.reduceClusters && k > 1) {
         var iter = 0
-        var converged = false
-        while (!converged && iter < 5) {
-          llkCache = scoreCached((0 until k).map(lib))
-          val fracs = Cluster.confusionFractions(llkCache, labels)
-            .collect().map(r => (r.getInt(0), r.getInt(1), r.getDouble(2))).toSeq
-          val reduced = Cluster.reducedClusterCount(fracs, k)
-          if (reduced < k) {
-            llkCache.unpersist()
-            llkCache = null
-            labels.unpersist()
-            val res = inferForK(reduced)
-            labels = res._1; lib = res._2
-            k = lib.size
-            iter += 1
-          } else converged = true
+        var reduced = Cluster.reducedClusterCount(t.fractions, k)
+        while (reduced < k && iter < 5) {
+          wide.unpersist()
+          labels.unpersist()
+          val res = inferForK(reduced)
+          labels = res._1; lib = res._2
+          k = lib.size
+          iter += 1
+          t = tally()
+          reduced = Cluster.reducedClusterCount(t.fractions, k)
         }
       }
 
-      // per-cluster llk stats over OWN members (detection.py:472-499), ddof=1.
-      // One cached llk matrix feeds the stats and, on the fused path, the
-      // predictions — re-scored only when the library changed after the
-      // last scoring (no fixpoint, a reduction on the final iteration, or
-      // the iteration cap).
-      val ordered = (0 until k).map(lib)
-      if (llkCache == null) llkCache = scoreCached(ordered)
-      val llks = llkCache
-      val ownScores = llks
-        .join(labels, "seq_id")
-        .filter(col("cluster_id") === col("cluster"))
-      val stats = ownScores.groupBy(col("cluster"))
-        .agg(avg(col("llk")).as("m"), stddev_samp(col("llk")).as("s"))
-        .collect().map(r => r.getInt(0) -> (r.getDouble(1), if (r.isNullAt(2)) 0.0 else r.getDouble(2)))
-        .toMap
-
-      val model = Model(params, complexModel, alphabetSize, ordered.toIndexedSeq,
-        (0 until k).map(c => stats.get(c).map(_._1).getOrElse(0.0)).toArray,
-        (0 until k).map(c => stats.get(c).map(_._2).getOrElse(0.0)).toArray)
+      val model = Model(params, complexModel, alphabetSize, (0 until k).map(lib),
+        (0 until k).map(c => t.stats.get(c).map(_._1).getOrElse(0.0)).toArray,
+        (0 until k).map(c => t.stats.get(c).map(_._2).getOrElse(0.0)).toArray)
       val pred =
-        if (alsoPredict) Some(predictFromLlks(llks, model).localCheckpoint(true))
+        if (alsoPredict) Some(predictions(wide, model).localCheckpoint(true))
         else None
       (model, pred)
     } finally {
-      if (llkCache != null) llkCache.unpersist()
+      if (wide != null) wide.unpersist()
       if (labels != null) labels.unpersist()
       feat.foreach(_.unpersist())
       q.unpersist()
@@ -242,44 +228,34 @@ object AnomalyDetection {
     *
     * Both fit and predict run entirely on the long form: scoring folds llk
     * DIRECTLY over the quantized `(seq_id, t, symbol)` rows
-    * ([[graft.core.Llk.scoreAllLong]], bit-exact with the array kernel) —
+    * ([[graft.core.Llk.scoreWide]], bit-exact with the array kernel) —
     * no stage materializes a sequence as one array cell, so stream length is
     * unbounded (the reference caps at 500k symbols/stream,
     * examples/M2.cfg:15-17).
     *
     * @return (seq_id, is_anomaly, closest, llk) — closest = argmin-llk
-    *         cluster (detection.py:152), llk = that minimum. Sequences no
-    *         model explains (all llk = +∞, e.g. alphabet-incompatible,
-    *         detection.py:139-144) are anomalous with closest = -1.
+    *         cluster (detection.py:152; lowest id on ties), llk = that
+    *         minimum. Sequences no model explains (all llk = +∞, e.g.
+    *         alphabet-incompatible, detection.py:139-144) are anomalous with
+    *         closest = -1.
     */
   def predict(spark: SparkSession, model: Model, longDf: DataFrame): DataFrame = {
     val (quantized, _) = quantizeLong(longDf, model.params, model.complexModel)
-    // same dense-t normalization as fit (one shuffle, which scoreAllLong then
+    // same dense-t normalization as fit (one shuffle, which scoreWide then
     // reuses via presort = false)
-    val llks = Llk.scoreAllLong(spark, densify(quantized), model.library, presort = false)
-    predictFromLlks(llks, model)
+    predictions(Llk.scoreWide(spark, densify(quantized), model.library, presort = false), model)
   }
 
-  /** The prediction aggregate over an already-scored (seq_id, cluster_id,
-    * llk) matrix — shared verbatim by [[predict]] and the fused
-    * [[fitPredict]] path so the two cannot diverge. */
-  private def predictFromLlks(llks: DataFrame, model: Model): DataFrame = {
-    // per-cluster bound as a literal-array lookup — stays inside whole-stage
-    // codegen (a lookup UDF here would break the span for one indexing op)
-    val boundCol = element_at(
-      array(model.bounds.map(lit).toIndexedSeq: _*), col("cluster_id") + 1)
-    llks
-      .withColumn("bound", boundCol)
-      .groupBy(col("seq_id"))
-      .agg(
-        bool_and(col("llk") > col("bound")).as("is_anomaly"),
-        min_by(col("cluster_id"), col("llk")).as("closest_raw"),
-        min(col("llk")).as("llk"))
-      .withColumn("closest",
-        when(col("llk") === lit(Double.PositiveInfinity), lit(-1))
-          .otherwise(col("closest_raw")).cast("int"))
-      .drop("closest_raw")
-      .select(col("seq_id"), col("is_anomaly"), col("closest"), col("llk"))
+  /** Predictions as a UDF-free projection of the wide llk rows, shared by
+    * [[predict]] and the fused [[fitPredict]] so the two cannot diverge. */
+  private def predictions(wide: DataFrame, model: Model): DataFrame = {
+    val bounds = array(model.bounds.map(lit).toIndexedSeq: _*)
+    val llk = array_min(col("llks"))
+    wide.select(col("seq_id"),
+      forall(zip_with(col("llks"), bounds, _ > _), identity).as("is_anomaly"),
+      when(llk === lit(Double.PositiveInfinity), lit(-1))
+        .otherwise(Llk.argmin(col("llks"))).as("closest"),
+      llk.as("llk"))
   }
 
   /** print_PFSAs parity (reference detection.py:246-254): the fitted

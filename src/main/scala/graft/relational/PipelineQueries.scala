@@ -325,10 +325,8 @@ object PipelineQueries {
       val lib = GenESeSS.inferAllLong(s, long.join(labels, "seq_id"),
         alphabetSize = 2, GenESeSS.Params(eps = 0.2))
       val ordered = lib.toSeq.sortBy(_._1).map(_._2)
-      val llks = Llk.scoreAllLong(s, long, ordered)
-      val fracs = Cluster.confusionFractions(llks, labels)
-        .collect().map(r => (r.getInt(0), r.getInt(1), r.getDouble(2))).toSeq
       val n = ordered.size
+      val fracs = Cluster.llkTally(Llk.scoreWide(s, long, ordered), labels, n).fractions
       val reduced = Cluster.reducedClusterCount(fracs, n)
       // independent recompute: reachability closure (Floyd-Warshall over
       // booleans), SCC = equivalence classes of mutual reachability

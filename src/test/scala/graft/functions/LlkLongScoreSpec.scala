@@ -97,4 +97,22 @@ class LlkLongScoreSpec extends AnyFunSuite {
     val want = kernel(Seq(5L -> Array[Byte](1)))
     assert(got == want)
   }
+
+  test("scoreAllLong is the posexplode of scoreWide, for both presort values") {
+    val seqs = Seq(
+      0L -> Pfsa.m2.sample(800, seed = 11L),
+      1L -> Pfsa.m2u.sample(800, seed = 12L),
+      2L -> Array[Byte](7, 0, 1))
+    for (presort <- Seq(true, false)) {
+      val longDf = longForm(seqs).repartition(3, col("seq_id")).sortWithinPartitions("seq_id", "t")
+      val wide = Llk.scoreWide(spark, longDf, lib, presort = presort).collect()
+        .flatMap(r => r.getSeq[Double](1).zipWithIndex.map { case (v, j) => (r.getLong(0), j) -> v })
+      val long = Llk.scoreAllLong(spark, longDf, lib, presort = presort).collect()
+        .map(r => (r.getLong(0), r.getInt(1)) -> r.getDouble(2))
+      assert(wide.length == seqs.size * lib.size, s"presort=$presort: ${wide.toSeq}")
+      def bitsOf(xs: Array[((Long, Int), Double)]) =
+        xs.map { case (k, v) => k -> java.lang.Double.doubleToRawLongBits(v) }.sortBy(_._1).toSeq
+      assert(bitsOf(wide) == bitsOf(long), s"presort=$presort")
+    }
+  }
 }

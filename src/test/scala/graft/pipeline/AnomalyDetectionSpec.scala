@@ -2,6 +2,9 @@ package graft.pipeline
 
 import graft.TestSpark
 import graft.core.Pfsa
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{IntegerType, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** End-to-end golden test per SURVEY.md §5 item 3: train on streams from the
@@ -86,20 +89,21 @@ class AnomalyDetectionSpec extends AnyFunSuite {
     import graft.core.Cluster
     // clusters 0 and 1 split their argmin between models 0/1 BOTH ways
     // (mutual ≥0.2 edges → one SCC); cluster 2 maps only to itself
-    val llks = Seq(
+    val wide = Seq(
       // seq, model0, model1, model2   (cluster 0 members: seqs 0-3)
       (0L, 0.1, 0.2, 9.0), (1L, 0.1, 0.2, 9.0), (2L, 0.2, 0.1, 9.0), (3L, 0.2, 0.1, 9.0),
       // cluster 1 members: seqs 4-7, also split between 0 and 1
       (4L, 0.1, 0.2, 9.0), (5L, 0.2, 0.1, 9.0), (6L, 0.2, 0.1, 9.0), (7L, 0.1, 0.2, 9.0),
       // cluster 2 members: decisively model 2
       (8L, 9.0, 9.0, 0.1), (9L, 9.0, 9.0, 0.1))
-      .flatMap { case (s, a, b, c) => Seq((s, 0, a), (s, 1, b), (s, 2, c)) }
-      .toDF("seq_id", "cluster_id", "llk")
+      .map { case (s, a, b, c) => (s, Seq(a, b, c)) }
+      .toDF("seq_id", "llks")
     val members = (Seq.tabulate(4)(i => (i.toLong, 0)) ++
       Seq.tabulate(4)(i => ((i + 4).toLong, 1)) ++ Seq((8L, 2), (9L, 2)))
       .toDF("seq_id", "cluster")
-    val fracs = Cluster.confusionFractions(llks, members)
-      .collect().map(r => (r.getInt(0), r.getInt(1), r.getDouble(2))).toSeq
+    val fracs = Cluster.llkTally(wide, members, 3).fractions
+    assert(fracs.toSet == Set((0, 0, 0.5), (0, 1, 0.5), (1, 0, 0.5), (1, 1, 0.5), (2, 2, 1.0)),
+      fracs.toString)
     assert(Cluster.reducedClusterCount(fracs, 3) == 2,
       s"clusters 0,1 must merge, 2 stays: $fracs")
   }
@@ -185,9 +189,6 @@ class AnomalyDetectionSpec extends AnyFunSuite {
     // the fused path (the fixpoint's llk matrix reused for the stats and the
     // predictions) must return exactly what fit then predict return
     val (fused, fusedPred) = AnomalyDetection.fitPredict(spark, train, params)
-    def machines(m: AnomalyDetection.Model) = m.library.map(p =>
-      (p.conn.map(_.toSeq).toSeq, p.pitilde.map(_.toSeq).toSeq, p.symFrq.toSeq))
-    def bits(xs: Array[Double]) = xs.toSeq.map(java.lang.Double.doubleToRawLongBits)
     assert(machines(fused) == machines(model), "fitPredict inferred a different library")
     assert(bits(fused.llkMeans) == bits(model.llkMeans), "llkMeans differ")
     assert(bits(fused.llkStds) == bits(model.llkStds), "llkStds differ")
@@ -196,4 +197,240 @@ class AnomalyDetectionSpec extends AnyFunSuite {
       .sortBy(_._1).toSeq
     assert(rowsOf(fusedPred.collect()) == rowsOf(predRows), "fused predictions differ from predict")
   }
+
+  // ---------------------------------------------------------------- wide llk
+  // The fit reads its confusion, stats and predictions off ONE wide llk row
+  // per sequence. The cases below hold it to the long-form tail it
+  // replaced, to the lowest-id tie rule, and to a Spark-job budget.
+
+  private def machines(m: AnomalyDetection.Model) = m.library.map(p =>
+    (p.conn.map(_.toSeq).toSeq, p.pitilde.map(_.toSeq).toSeq, p.symFrq.toSeq))
+  private def bits(xs: Array[Double]) = xs.toSeq.map(java.lang.Double.doubleToRawLongBits)
+  private def predRows(df: DataFrame) = df.collect().map(r =>
+    (r.getLong(0), r.getBoolean(1), r.getInt(2), java.lang.Double.doubleToRawLongBits(r.getDouble(3))))
+    .sortBy(_._1).toSeq
+
+  /** Two M2 / M2_u regimes of `perRegime` sequences of `len` symbols each;
+    * M2_u sequence i samples with seed `seed + uOffset + i`. */
+  private def twoRegimes(perRegime: Int, len: Int, seed: Long, uOffset: Long = 100L) = longForm(
+    (0 until perRegime).map(i => i.toLong -> Pfsa.m2.sample(len, seed = seed + i)) ++
+    (0 until perRegime).map(i => (perRegime + i).toLong -> Pfsa.m2u.sample(len, seed = seed + uOffset + i)))
+
+  /** The long-form fit tail the wide matrix replaced, rebuilt from
+    * `Llk.scoreAllLong` rows with the same caches: features regrouped by
+    * `collect_list`, window-argmin confusion, join/filter/group-by stats,
+    * `bool_and`/`min_by`/`min` predictions (quantize = false inputs). */
+  private object LongTail {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    import graft.core.{Cluster, GenESeSS, Llk, Quantize}
+
+    def features(q: DataFrame, alphabetSize: Int): DataFrame = {
+      val toVec = udf { llks: Seq[Double] =>
+        org.apache.spark.ml.linalg.Vectors.dense(
+          llks.map(v => if (v.isInfinite || v.isNaN) 1e6 else v).toArray)
+      }
+      Llk.scoreAllLong(spark, q, Cluster.basePfsas(alphabetSize), presort = false)
+        .groupBy(col("seq_id"))
+        .agg(expr("transform(array_sort(collect_list(struct(cluster_id, llk))), x -> x.llk)").as("lk"))
+        .select(col("seq_id"), toVec(col("lk")).as("features"))
+    }
+
+    def confusion(llks: DataFrame, members: DataFrame): Seq[(Int, Int, Double)] = {
+      val best = llks
+        .withColumn("rn", row_number().over(
+          Window.partitionBy(col("seq_id")).orderBy(col("llk").asc_nulls_last, col("cluster_id"))))
+        .filter(col("rn") === 1)
+        .select(col("seq_id"), col("cluster_id").as("best_cluster"))
+      members.join(best, "seq_id")
+        .groupBy(col("cluster").as("src_cluster"), col("best_cluster"))
+        .agg(count(lit(1)).as("n"))
+        .withColumn("frac", col("n").cast("double")
+          / sum(col("n")).over(Window.partitionBy(col("src_cluster"))))
+        .select(col("src_cluster"), col("best_cluster"), col("frac"))
+        .collect().map(r => (r.getInt(0), r.getInt(1), r.getDouble(2))).toSeq
+    }
+
+    def predictions(llks: DataFrame, bounds: Array[Double]): DataFrame =
+      llks
+        .withColumn("bound", element_at(array(bounds.map(lit).toIndexedSeq: _*), col("cluster_id") + 1))
+        .groupBy(col("seq_id"))
+        .agg(bool_and(col("llk") > col("bound")).as("is_anomaly"),
+          min_by(col("cluster_id"), col("llk")).as("closest_raw"),
+          min(col("llk")).as("llk"))
+        .select(col("seq_id"), col("is_anomaly"),
+          when(col("llk") === lit(Double.PositiveInfinity), lit(-1))
+            .otherwise(col("closest_raw")).cast("int").as("closest"),
+          col("llk"))
+
+    /** (model, k of every inference in order, fused predictions); each
+      * fixpoint step also checks the production tally's fractions. */
+    def fitPredict(longDf: DataFrame, params: AnomalyDetection.Params)
+        : (AnomalyDetection.Model, Seq[Int], Seq[(Long, Boolean, Int, Long)]) = {
+      val q = AnomalyDetection.densify(Quantize.passthrough(longDf)).persist(MEMORY_AND_DISK)
+      val alphabetSize = math.max(2, q.agg(max(col("symbol"))).head().getByte(0).toInt + 1)
+      val feat = features(q, alphabetSize).cache()
+      def inferForK(k: Int): (DataFrame, Map[Int, Pfsa]) = {
+        val (l, sizes) = Cluster.assignFeaturesWithStats(feat, k, params.kmeansSeed)
+        val lbl = l.cache()
+        (lbl, GenESeSS.inferAllLong(spark, q.join(lbl, "seq_id"), alphabetSize,
+          GenESeSS.Params(eps = params.eps), presort = false,
+          knownClusters = Some(sizes.zipWithIndex.collect { case (n, r) if n > 0 => r })))
+      }
+      def score(lib: IndexedSeq[Pfsa]) =
+        Llk.scoreAllLong(spark, q, lib, presort = false).persist(MEMORY_AND_DISK)
+      var (labels, lib) = inferForK(params.nClusters)
+      var k = lib.size
+      val ks = scala.collection.mutable.ArrayBuffer(k)
+      var llks: DataFrame = null
+      var iter = 0
+      var converged = false
+      while (params.reduceClusters && k > 1 && !converged && iter < 5) {
+        llks = score((0 until k).map(lib))
+        val fracs = confusion(llks, labels)
+        val wide = Cluster.llkTally(Llk.scoreWide(spark, q, (0 until k).map(lib), presort = false),
+          labels, k).fractions
+        assert(wide.toSet == fracs.toSet, s"wide confusion $wide != long-form $fracs")
+        val reduced = Cluster.reducedClusterCount(fracs, k)
+        if (reduced < k) {
+          llks.unpersist(); llks = null
+          labels.unpersist()
+          val res = inferForK(reduced)
+          labels = res._1; lib = res._2; k = lib.size; ks += k
+          iter += 1
+        } else converged = true
+      }
+      val ordered = (0 until k).map(lib)
+      if (llks == null) llks = score(ordered)
+      val stats = llks.join(labels, "seq_id").filter(col("cluster_id") === col("cluster"))
+        .groupBy(col("cluster"))
+        .agg(avg(col("llk")), stddev_samp(col("llk")))
+        .collect().map(r => r.getInt(0) -> (r.getDouble(1), if (r.isNullAt(2)) 0.0 else r.getDouble(2)))
+        .toMap
+      val model = AnomalyDetection.Model(params, None, alphabetSize, ordered,
+        (0 until k).map(c => stats.get(c).map(_._1).getOrElse(0.0)).toArray,
+        (0 until k).map(c => stats.get(c).map(_._2).getOrElse(0.0)).toArray)
+      val pred = predRows(predictions(llks, model.bounds))
+      Seq(llks, labels, feat, q).foreach(_.unpersist())
+      (model, ks.toSeq, pred)
+    }
+
+    def predict(model: AnomalyDetection.Model, longDf: DataFrame): Seq[(Long, Boolean, Int, Long)] =
+      predRows(predictions(Llk.scoreAllLong(spark,
+        AnomalyDetection.densify(Quantize.passthrough(longDf)), model.library, presort = false),
+        model.bounds))
+  }
+
+  private def assertMatchesLongTail(train: DataFrame, params: AnomalyDetection.Params,
+                                    merges: Boolean): Unit = {
+    val (ref, ks, refPred) = LongTail.fitPredict(train, params)
+    assert((ks.size > 1) == merges, s"inference k sequence $ks")
+    val fitted = AnomalyDetection.fit(spark, train, params)
+    val (fused, fusedPred) = AnomalyDetection.fitPredict(spark, train, params)
+    for ((name, m) <- Seq("fit" -> fitted, "fitPredict" -> fused)) {
+      assert(m.library.size == ks.last, s"$name: reduction ended at ${m.library.size}, reference $ks")
+      assert(machines(m) == machines(ref), s"$name: machines differ from the long-form tail")
+      assert(bits(m.llkMeans) == bits(ref.llkMeans), s"$name: llkMeans ${m.llkMeans.toSeq} vs ${ref.llkMeans.toSeq}")
+      assert(bits(m.llkStds) == bits(ref.llkStds), s"$name: llkStds ${m.llkStds.toSeq} vs ${ref.llkStds.toSeq}")
+    }
+    assert(predRows(fusedPred) == refPred, "fitPredict rows differ from the long-form tail")
+    assert(predRows(AnomalyDetection.predict(spark, fitted, train)) == LongTail.predict(ref, train),
+      "predict rows differ from the long-form tail")
+  }
+
+  test("wide llk tail equals the long-form tail: a corpus the fixpoint merges") {
+    // two regimes of short sequences over-cut into five clusters: the
+    // fixpoint merges two of them (k 5 → 4)
+    assertMatchesLongTail(twoRegimes(10, 1000, 3000L, uOffset = 500L),
+      AnomalyDetection.Params(anomalySensitivity = 2.0, nClusters = 5, reduceClusters = true,
+        quantize = false, eps = 0.05),
+      merges = true)
+  }
+
+  test("wide llk tail equals the long-form tail: a corpus that converges at once") {
+    assertMatchesLongTail(twoRegimes(6, 4000, 1700L),
+      AnomalyDetection.Params(anomalySensitivity = 2.0, nClusters = 2, reduceClusters = true,
+        quantize = false, eps = 0.05),
+      merges = false)
+  }
+
+  test("equal llks resolve to the lowest cluster id in the confusion, fit, fitPredict and predict") {
+    import graft.core.{Cluster, Llk}
+    // sequences 6-11 repeat 0-5 symbol for symbol, and the clusterer puts
+    // each copy in the other cluster: both clusters infer the same machine,
+    // so every sequence scores equal llks under models 0 and 1
+    val syms = (0 until 6).map(i => Pfsa.m2.sample(3000, seed = 2100L + i))
+    val train = longForm(syms.indices.map(i => i.toLong -> syms(i)) ++
+      syms.indices.map(i => (i + 6).toLong -> syms(i)))
+    val params = AnomalyDetection.Params(anomalySensitivity = 2.0, nClusters = 2,
+      reduceClusters = true, quantize = false, eps = 0.05)
+    val fitted = AnomalyDetection.fit(spark, train, params, Some(new SplitAtSix))
+    val (fused, fusedPred) = AnomalyDetection.fitPredict(spark, train, params, Some(new SplitAtSix))
+    for (m <- Seq(fitted, fused)) {
+      assert(m.library.size == 2 && machines(m).distinct.size == 1,
+        "precondition: the two clusters must infer one machine")
+    }
+    assert(predRows(fusedPred).forall(_._3 == 0), s"fitPredict closest: ${predRows(fusedPred)}")
+    assert(predRows(AnomalyDetection.predict(spark, fitted, train)).forall(_._3 == 0),
+      "predict closest must be the lower of two equal models")
+    // the confusion the fit reads: every member's best model is 0
+    val symbols = graft.core.Quantize.passthrough(train)
+    val members = train.select(col("seq_id")).distinct()
+      .withColumn("cluster", (col("seq_id") >= 6).cast("int"))
+    val tally = Cluster.llkTally(Llk.scoreWide(spark, symbols, fitted.library), members, 2)
+    assert(tally.counts.map { case (i, row) => i -> row.toSeq } == Map(0 -> Seq(6L, 0L), 1 -> Seq(6L, 0L)),
+      tally.counts.map { case (i, row) => i -> row.toSeq }.toString)
+    // a tie that is not at index 0: [m2u, m2, m2] must name 1, never 2
+    val model = fitted.copy(library = IndexedSeq(Pfsa.m2u, Pfsa.m2, Pfsa.m2),
+      llkMeans = Array(0.0, 0.0, 0.0), llkStds = Array(0.0, 0.0, 0.0))
+    val test = longForm((0L until 4L).map(i => i -> Pfsa.m2.sample(2000, seed = 2200L + i)))
+    val closest = predRows(AnomalyDetection.predict(spark, model, test)).map(_._3)
+    assert(closest == Seq(1, 1, 1, 1), closest.toString)
+  }
+
+  test("one converging fitPredict stays within its Spark-job budget") {
+    // with the long-form llk tail (window-argmin confusion, a separate stats
+    // join + group-by, a grouped prediction aggregate) this call ran 36
+    // jobs; the wide matrix reads confusion and stats in one k-row collect
+    // and projects the predictions
+    val budget = 32
+    val train = twoRegimes(6, 4000, 1700L)
+    val params = AnomalyDetection.Params(anomalySensitivity = 2.0, nClusters = 2,
+      reduceClusters = true, quantize = false, eps = 0.05)
+    val sc = spark.sparkContext
+    val group = "anomaly-detection-job-budget"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "fitPredict job budget")
+      try AnomalyDetection.fitPredict(spark, train, params)
+      finally sc.clearJobGroup()
+      org.apache.spark.sql.graft.ColumnBridge.waitListenerBusEmpty(sc, 30000L)
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get() <= budget, s"fitPredict ran ${jobs.get()} Spark jobs, budget $budget")
+  }
+}
+
+/** A clusterer that puts sequences 0-5 in one cluster and the rest in the
+  * other, whatever their features. */
+private class SplitAtSix(override val uid: String)
+    extends org.apache.spark.ml.Estimator[SplitAtSixModel] {
+  def this() = this(org.apache.spark.ml.util.Identifiable.randomUID("splitAtSix"))
+  override def fit(ds: org.apache.spark.sql.Dataset[_]): SplitAtSixModel = new SplitAtSixModel(uid)
+  override def transformSchema(schema: StructType): StructType = schema.add("raw_label", IntegerType)
+  override def copy(extra: org.apache.spark.ml.param.ParamMap): SplitAtSix = this
+}
+
+private class SplitAtSixModel(override val uid: String)
+    extends org.apache.spark.ml.Model[SplitAtSixModel] {
+  override def transform(ds: org.apache.spark.sql.Dataset[_]): DataFrame =
+    ds.withColumn("raw_label", (col("seq_id") >= 6).cast("int"))
+  override def transformSchema(schema: StructType): StructType = schema.add("raw_label", IntegerType)
+  override def copy(extra: org.apache.spark.ml.param.ParamMap): SplitAtSixModel = this
 }
