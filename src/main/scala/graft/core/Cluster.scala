@@ -1,10 +1,10 @@
 package graft.core
 
 import org.apache.spark.ml.{Estimator, Model}
-import org.apache.spark.ml.clustering.KMeans
-import org.apache.spark.ml.linalg.Vectors
+import org.apache.spark.ml.clustering.{KMeans, KMeansModel}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 
 /** Sequence clustering (reference detection.py:311-354).
   *
@@ -46,14 +46,12 @@ object Cluster {
     * `(seq_id, t, symbol)` rows ([[Llk.scoreWide]], bit-exact with the
     * array kernel) — the fit path never materializes a sequence as one
     * array cell. The vector is the wide row's |bases| scores, in base
-    * order. */
+    * order; `keys` as in [[Llk.scoreWide]]. */
   def featuresLong(spark: SparkSession, longDf: DataFrame, alphabetSize: Int,
-                   presort: Boolean = true): DataFrame = {
-    val toVec = udf { llks: Seq[Double] =>
-      Vectors.dense(llks.map(v => if (v.isInfinite || v.isNaN) 1e6 else v).toArray)
-    }
-    Llk.scoreWide(spark, longDf, basePfsas(alphabetSize), presort = presort)
-      .select(col("seq_id"), toVec(col("llks")).as("features"))
+                   presort: Boolean = true, keys: Seq[String] = Seq("seq_id")): DataFrame = {
+    Llk.scoreWide(spark, longDf, basePfsas(alphabetSize), presort = presort, keys = keys)
+      .select(col("seq_id"), ColumnBridge.column(
+        graft.functions.LlkFeatureVector(ColumnBridge.expression(col("llks")))).as("features"))
   }
 
   /** Cluster labels from a `(seq_id, …, features)` frame, relabeled so 0 =
@@ -72,18 +70,26 @@ object Cluster {
     * `GaussianMixture`); default is seeded KMeans. */
   /** Frequency relabel shared by every assign variant (reference's
     * double-argsort trick, detection.py:341-347): rank labels by
-    * descending member count over the k-row aggregate collected to the
-    * driver (k = nClusters, tiny), joined back as a broadcast when-chain —
-    * no window over the full data. Labels the clusterer fitted but
-    * assigned NO rows (KMeans can return an empty cluster) get the
-    * remaining ranks after the observed ones, in label order — every raw
-    * label 0..k-1 maps to a distinct rank, so center lookups keyed by
-    * rank can never collide or miss. Returns (relabel column,
-    * raw-label → rank map, member counts by rank). */
-  private def frequencyRelabel(labeled: DataFrame, nClusters: Int)
+    * descending member count (k = nClusters, tiny) and map them back
+    * through one referenced map literal — no window over the full data,
+    * and the same generated class whatever the ranks. Labels the
+    * clusterer fitted but assigned NO rows (KMeans can return an empty
+    * cluster) get the remaining ranks after the observed ones, in label
+    * order — every raw label 0..k-1 maps to a distinct rank, so center
+    * lookups keyed by rank can never collide or miss. The member counts
+    * come from the fitted model when it already holds them (KMeans'
+    * training summary counts its predictions during `fit`), else from a
+    * k-row aggregate of `labeled`. Returns (relabel column, raw-label →
+    * rank map, member counts by rank). */
+  private def frequencyRelabel(labeled: DataFrame, nClusters: Int, fitted: Option[Model[_]])
       : (org.apache.spark.sql.Column, Map[Int, Int], Seq[Long]) = {
-    val counts = labeled.groupBy(col("raw_label")).agg(count(lit(1)).as("cnt"))
-      .collect().map(r => (r.getInt(0), r.getLong(1)))
+    val counts = fitted match {
+      case Some(m: KMeansModel) if m.hasSummary =>
+        m.summary.clusterSizes.zipWithIndex.collect { case (n, lbl) if n > 0 => (lbl, n) }
+      case _ =>
+        labeled.groupBy(col("raw_label")).agg(count(lit(1)).as("cnt"))
+          .collect().map(r => (r.getInt(0), r.getLong(1)))
+    }
     val observed = counts
       .sortBy { case (lbl, cnt) => (-cnt, lbl) }
       .zipWithIndex.map { case ((lbl, _), rank) => lbl -> rank }
@@ -91,9 +97,7 @@ object Cluster {
       .filterNot(l => observed.exists(_._1 == l)).sorted
       .zipWithIndex.map { case (lbl, i) => lbl -> (observed.length + i) }
     val rankMap = (observed ++ unobserved).toMap
-    val relabelCol = rankMap.foldLeft(lit(0): org.apache.spark.sql.Column) {
-      case (acc, (lbl, rank)) => when(col("raw_label") === lbl, rank).otherwise(acc)
-    }
+    val relabelCol = coalesce(element_at(typedLit(rankMap), col("raw_label")), lit(0))
     val countsByLbl = counts.toMap
     val sizesByRank = rankMap.toSeq.sortBy(_._2)
       .map { case (lbl, _) => countsByLbl.getOrElse(lbl, 0L) }
@@ -129,8 +133,8 @@ object Cluster {
   def assignFeaturesWithStats(feat: DataFrame, nClusters: Int, seed: Long = 42L,
                               clusterer: Option[Estimator[_ <: Model[_]]] = None)
       : (DataFrame, Seq[Long]) = {
-    val labeled =
-      if (nClusters <= 1 && clusterer.isEmpty) feat.withColumn("raw_label", lit(0))
+    val (labeled, fitted): (DataFrame, Option[Model[_]]) =
+      if (nClusters <= 1 && clusterer.isEmpty) (feat.withColumn("raw_label", lit(0)), None)
       else {
         // eager checkpoint BEFORE the fit: the feature sweep behind `feat`
         // is otherwise re-evaluated by the sizing count, every estimator
@@ -146,9 +150,10 @@ object Cluster {
         val est = clusterer.getOrElse(
           new KMeans().setK(nClusters).setSeed(seed)
             .setFeaturesCol("features").setPredictionCol("raw_label"))
-        est.fit(sizedForFit(f)).transform(f)
+        val m = est.fit(sizedForFit(f))
+        (m.transform(f), Some(m))
       }
-    val (relabelCol, _, sizes) = frequencyRelabel(labeled, nClusters)
+    val (relabelCol, _, sizes) = frequencyRelabel(labeled, nClusters, fitted)
     // carry whatever payload columns rode along (symbols on the array path,
     // nothing extra on the long path) — only the ML bookkeeping is dropped
     val keep = feat.columns.filterNot(c => c == "features" || c == "raw_label")
@@ -175,7 +180,7 @@ object Cluster {
       .setFeaturesCol("features").setPredictionCol("raw_label")
     val model = est.fit(sizedForFit(f))
     val labeled = model.transform(f)
-    val (relabelCol, rankMap, sizes) = frequencyRelabel(labeled, nClusters)
+    val (relabelCol, rankMap, sizes) = frequencyRelabel(labeled, nClusters, Some(model))
     val centers = model.clusterCenters.zipWithIndex.map { case (c, lbl) =>
       rankMap(lbl) -> c.toArray }.toMap
     (labeled.select(col("seq_id"), col("features"),
@@ -196,20 +201,28 @@ object Cluster {
   }
 
   /** [[LlkTally]] in one aggregate over [[Llk.scoreWide]] rows of a k-model
-    * library joined with `(seq_id, cluster)` membership: k rows reach the
-    * driver, never the N×k matrix. */
-  def llkTally(wide: DataFrame, members: DataFrame, k: Int): LlkTally = {
+    * library keyed by `(seq_id, cluster)` membership: k rows reach the
+    * driver, never the N×k matrix. The argmin is counted for every
+    * j < `slots` (≥ k; slots past k count 0), so a fit whose k shrinks
+    * keeps one aggregate shape by passing its first k. */
+  def llkTally(wide: DataFrame, k: Int, slots: Int): LlkTally = {
+    require(slots >= k, s"llkTally: slots $slots < k $k")
     val best = Llk.argmin(col("llks"))
     val own = element_at(col("llks"), col("cluster") + 1)
-    val rows = wide.join(members, "seq_id")
+    val tally = wide
       .groupBy(col("cluster"))
       .agg(avg(own).as("m"),
-        stddev_samp(own).as("s") +: (0 until k).map(j => count_if(best === j)): _*)
-      .collect()
+        stddev_samp(own).as("s") +: (0 until slots).map(j => count_if(best === j)): _*)
+    val rows = ColumnBridge.collectRows(tally)
     LlkTally(
       rows.map(r => r.getInt(0) -> Array.tabulate(k)(j => r.getLong(3 + j))).toMap,
       rows.map(r => r.getInt(0) -> (r.getDouble(1), if (r.isNullAt(2)) 0.0 else r.getDouble(2))).toMap)
   }
+
+  /** [[llkTally]] of `(seq_id, llks)` rows joined with `(seq_id, cluster)`
+    * members. */
+  def llkTally(wide: DataFrame, members: DataFrame, k: Int): LlkTally =
+    llkTally(wide.join(members, "seq_id"), k, k)
 
   /** Cluster-reduction step (reference __reduce_clusters,
     * detection.py:401-469): edge i→j iff confusion fraction ≥ threshold;

@@ -344,7 +344,7 @@ object GenESeSS {
     val k = alphabetSize
     val L = contextLength(k, params.eps, params.maxL)
     val src = if (presort) presorted(longLabeled) else longLabeled
-    val counts = heapLong(src, L, params.minCtxCount, params.maxContexts).collect()
+    val counts = ColumnBridge.collectRows(heapLong(src, L, params.minCtxCount, params.maxContexts))
       .map(r => r.getInt(0) -> heapOf(
         r.getSeq[Row](1).map(e => (e.getSeq[Byte](0), e.getInt(1), e.getLong(2))), k))
       .toMap
@@ -361,15 +361,14 @@ object GenESeSS {
       skeletons.map { case (c, s) => c -> s.conn }, k).toAggregateExpression())
     // grouping by (cluster, seq_id) reuses src's seq_id partitioning — seq_id
     // colocates the pair, no second exchange
-    val visitRows = src
+    val visitRows = ColumnBridge.collectRows(src
       .groupBy(col("cluster"), col("seq_id"))
       .agg(visitsAgg.as("v"))
       .select(col("cluster").cast("int").as("cluster"),
         posexplode_outer(col("v")).as(Seq("idx", "c")))
       .filter(col("idx").isNotNull)
       .groupBy("cluster", "idx")
-      .agg(sum(col("c")).as("c"))
-      .collect()
+      .agg(sum(col("c")).as("c")))
       .groupBy(_.getInt(0))
     assemblePfsas(skeletons, visitRows, k, params)
   }

@@ -106,9 +106,12 @@ object Llk {
     *               one run per gap; per-partition arrival must be t-ascending
     *               when presort=false; t < 0 is rejected) and
     *               `symbol` (tinyint)
+    * @param keys   grouping columns, `seq_id` among them: the rows of one
+    *               group are one sequence (e.g. `Seq("cluster", "seq_id")`
+    *               keeps a per-sequence label beside its llks)
     */
   def scoreWide(spark: SparkSession, longDf: DataFrame, library: Seq[Pfsa],
-                presort: Boolean = true): DataFrame = {
+                presort: Boolean = true, keys: Seq[String] = Seq("seq_id")): DataFrame = {
     import org.apache.spark.sql.graft.ColumnBridge
     val agg = ColumnBridge.column(
       graft.functions.LlkLongScore(
@@ -120,7 +123,7 @@ object Llk {
       else longDf
     // the groupBy reuses the repartition's hashpartitioning (no second
     // exchange — EnsureRequirements sees the child distribution satisfied)
-    src.groupBy(col("seq_id")).agg(agg.as("llks"))
+    src.groupBy(keys.map(col): _*).agg(agg.as("llks"))
   }
 
   /** [[scoreWide]] as long (seq_id, cluster_id, llk) rows. */

@@ -83,7 +83,7 @@ final case class Pfsa(
     * detection.py:730; Markov simulation per tex/ms.tex:109-114).
     *
     * The randomness is COUNTER-BASED, not generator-state-based: the t-th
-    * uniform is [[Pfsa.hashUniform]](seed, t) (t = -1 draws the stationary
+    * uniform is [[Pfsa.HashUniform]](seed)(t) (t = -1 draws the stationary
     * start state), so a sample path is a pure function of (machine, seed)
     * with no sequential RNG state. That is the distributed-sampling shape —
     * any partitioning, task retry, or evaluation order reproduces the same
@@ -92,17 +92,17 @@ final case class Pfsa(
     * md5-derived uniforms in SQL and walks the machine with a recursive
     * CTE). */
   def sample(len: Int, seed: Long): Array[Byte] = {
-    val md = java.security.MessageDigest.getInstance("MD5")
+    val uniform = new Pfsa.HashUniform(seed)
     val out = new Array[Byte](len)
     // start from the stationary distribution
     var q = {
-      val u = Pfsa.hashUniform(md, seed, -1L); var acc = 0.0; var i = 0
+      val u = uniform(-1L); var acc = 0.0; var i = 0
       while (i < numStates - 1 && { acc += stationary(i); acc <= u }) i += 1
       i
     }
     var t = 0
     while (t < len) {
-      val u = Pfsa.hashUniform(md, seed, t.toLong)
+      val u = uniform(t.toLong)
       var acc = 0.0
       var s = 0
       while (s < alphabetSize - 1 && { acc += pitilde(q)(s); acc <= u }) s += 1
@@ -133,11 +133,46 @@ object Pfsa {
     * md5("<seed>:<t>") over 2³². Exactly reproducible in SQL (first 8 hex
     * digits of DuckDB's `md5`), and the 2⁻³² value grid keeps every
     * cumulative-probability comparison away from fp boundary effects, so
-    * the Scala walk and a SQL replay take identical branches. */
-  private[graft] def hashUniform(md: java.security.MessageDigest, seed: Long, t: Long): Double = {
-    val d = md.digest(s"$seed:$t".getBytes(java.nio.charset.StandardCharsets.US_ASCII))
-    val v = ((d(0) & 0xffL) << 24) | ((d(1) & 0xffL) << 16) | ((d(2) & 0xffL) << 8) | (d(3) & 0xffL)
-    v.toDouble / 4294967296.0
+    * the Scala walk and a SQL replay take identical branches.
+    *
+    * One instance per seed: the ASCII of `"<seed>:"` is written once and
+    * each draw appends the digits of `t` in the same buffer and digests
+    * into a reused array, so a draw allocates nothing. */
+  private[graft] final class HashUniform(seed: Long) {
+    private val md = java.security.MessageDigest.getInstance("MD5")
+    // "-9223372036854775808:" is 21 bytes, and so is any t
+    private val buf = new Array[Byte](42)
+    private val prefix = { val n = HashUniform.writeLong(seed, buf, 0); buf(n) = ':'; n + 1 }
+    private val out = new Array[Byte](16)
+
+    def apply(t: Long): Double = {
+      md.update(buf, 0, HashUniform.writeLong(t, buf, prefix))
+      md.digest(out, 0, out.length)
+      val v = ((out(0) & 0xffL) << 24) | ((out(1) & 0xffL) << 16) |
+        ((out(2) & 0xffL) << 8) | (out(3) & 0xffL)
+      v.toDouble / 4294967296.0
+    }
+  }
+
+  private[graft] object HashUniform {
+    /** Writes the decimal ASCII of `x` (as `Long.toString`) at `from`;
+      * returns the end offset. Digits come from the negated value, so
+      * `Long.MinValue` needs no special case. */
+    def writeLong(x: Long, buf: Array[Byte], from: Int): Int = {
+      var neg = if (x < 0) x else -x
+      var len = if (x < 0) 2 else 1
+      var probe = neg / 10
+      while (probe != 0) { len += 1; probe /= 10 }
+      val end = from + len
+      var i = end - 1
+      while (i >= from + (if (x < 0) 1 else 0)) {
+        buf(i) = ('0' - (neg % 10)).toByte
+        neg /= 10
+        i -= 1
+      }
+      if (x < 0) buf(from) = '-'
+      end
+    }
   }
 
   /** Parse the reference text form written by [[Pfsa.toText]]. */

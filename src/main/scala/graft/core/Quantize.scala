@@ -58,25 +58,63 @@ object Quantize {
     */
   def fitComplex(df: DataFrame, valCol: String = "value", nBins: Int = 8,
                  detrend: Boolean = false, relErr: Double = 1e-4,
-                 seqCol: String = "seq_id", tCol: String = "t"): ComplexModel = {
+                 seqCol: String = "seq_id", tCol: String = "t"): ComplexModel =
+    fitComplexWithMaxSymbol(df, valCol, nBins, detrend, relErr, seqCol, tCol)._1
+
+  /** [[fitComplex]] plus the largest symbol [[applyComplex]] assigns on
+    * `df` (None when `df` has no rows), read off the same pass: the
+    * aggregate is Spark's own `approxQuantile` plan (posexplode of the
+    * value, `approx_percentile` grouped by the column index, same
+    * accuracy), so the cutoffs are bit-identical. NaN and NULL values are
+    * kept out of the sketch by a NULL-ing `when` instead of
+    * approxQuantile's `where`, which feeds the sketch the same values in
+    * the same order, and the sketch is also asked for its 1.0 quantile,
+    * its exact maximum. A second sketch over a 0/1 NaN flag answers
+    * whether any value is NaN (Spark orders NaN above every number). Both
+    * are imperative aggregates: no declarative buffer, so the pass
+    * generates no classes beyond the quantile plan's own. */
+  def fitComplexWithMaxSymbol(df: DataFrame, valCol: String = "value", nBins: Int = 8,
+                              detrend: Boolean = false, relErr: Double = 1e-4,
+                              seqCol: String = "seq_id", tCol: String = "t")
+      : (ComplexModel, Option[Int]) = {
+    import org.apache.spark.sql.graft.ColumnBridge
     val base = if (detrend) {
       df.withColumn("__v",
         coalesce(col(valCol) - lag(col(valCol), 1).over(seqW(seqCol, tCol)), lit(0.0)))
     } else df.withColumn("__v", col(valCol))
     val probes = (1 until nBins).map(_.toDouble / nBins).toArray
-    val cuts = base.stat.approxQuantile("__v", probes, relErr)
-    ComplexModel(cuts.distinct.sorted, detrend)
+    val accuracy = math.min(Int.MaxValue, math.ceil(1.0 / relErr).toLong).toInt
+    val v = col("value")
+    val rows = ColumnBridge.collectRows(base.select(col("__v"))
+      .select(posexplode(array(col("__v").cast("double"))).as(Seq("index", "value")))
+      .groupBy("index")
+      .agg(approx_percentile(when(!isnan(v), v), lit(probes :+ 1.0), lit(accuracy)),
+        approx_percentile(when(isnan(v), 1.0).when(v.isNotNull, 0.0), lit(Array(1.0)),
+          lit(accuracy))))
+    rows.headOption match {
+      case None => (ComplexModel(Array.empty, detrend), None)
+      case Some(r) =>
+        val sketch = if (r.isNullAt(1)) Array.empty[Double] else r.getSeq[Double](1).toArray
+        val model = ComplexModel(sketch.dropRight(1).distinct.sorted, detrend)
+        val anyNaN = !r.isNullAt(2) && r.getSeq[Double](2).head == 1.0
+        val maxSymbol =
+          if (anyNaN) model.cutoffs.length
+          else sketch.lastOption.fold(0)(graft.functions.BinIndex.count(_, model.cutoffs))
+        (model, Some(maxSymbol))
+    }
   }
 
-  /** Apply a fitted partition: symbol = #cutoffs ≤ value (branch-free
-    * when-chain keeps it inside whole-stage codegen). */
+  /** Apply a fitted partition: symbol = #cutoffs < value
+    * ([[graft.functions.BinIndex]]: whole-stage codegen, the cutoffs ride
+    * as one referenced array, so every model shares one generated class). */
   def applyComplex(df: DataFrame, model: ComplexModel, valCol: String = "value",
                    seqCol: String = "seq_id", tCol: String = "t"): DataFrame = {
+    import org.apache.spark.sql.graft.ColumnBridge
     val v: Column = if (model.detrend)
       coalesce(col(valCol) - lag(col(valCol), 1).over(seqW(seqCol, tCol)), lit(0.0))
     else col(valCol)
-    val sym = model.cutoffs.foldLeft(lit(0): Column)((acc, c) =>
-      acc + when(v > c, 1).otherwise(0))
+    val sym = ColumnBridge.column(graft.functions.BinIndex(
+      ColumnBridge.expression(v.cast("double")), model.cutoffs))
     df.withColumn("symbol", sym.cast("tinyint"))
   }
 }

@@ -2,7 +2,6 @@ package graft.pipeline
 
 import graft.core._
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Batch anomaly detection — Spark-native rebuild of the reference's
@@ -75,14 +74,17 @@ object AnomalyDetection {
     * grow per-group buffer state linearly with sequence length, defeating
     * their O(|Q|·k) design. Dense re-ranking preserves order (the only thing
     * the fold semantics depend on) and restores the O(1)-runs shape for any
-    * sortable t. The window reuses the exchange + sort directly below it, so
-    * this costs no extra shuffle; downstream passes consume the result with
-    * `presort = false`. */
-  private[pipeline] def densify(df: DataFrame): DataFrame =
+    * sortable t. The rank is the row's [[graft.functions.PositionInRun]] of
+    * its seq_id in the sorted partition — `row_number() - 1` of the window
+    * over the same sort, without a window operator — so this costs no extra
+    * shuffle; downstream passes consume the result with `presort = false`. */
+  private[pipeline] def densify(df: DataFrame): DataFrame = {
+    import org.apache.spark.sql.graft.ColumnBridge
     df.repartition(col("seq_id"))
       .sortWithinPartitions(col("seq_id"), col("t"))
-      .withColumn("t", (row_number().over(
-        Window.partitionBy(col("seq_id")).orderBy(col("t"))) - 1).cast("long"))
+      .withColumn("t", ColumnBridge.column(
+        graft.functions.PositionInRun(ColumnBridge.expression(col("seq_id")))))
+  }
 
   /** Fit works entirely on the LONG form — features, inference heap, π̃
     * visit sweep and the scoring passes all fold over `(seq_id, t, symbol)`
@@ -115,26 +117,48 @@ object AnomalyDetection {
     (model, pred.get)
   }
 
+  /** Grouping of the fit's scoring passes: the visit sweep's keys, so the
+    * feature pass, the library scoring and the sweep share one aggregate
+    * shape. */
+  private val ByLabel = Seq("cluster", "seq_id")
+
   private def fitImpl(spark: SparkSession, longDf: DataFrame, params: Params,
                       clusterer: Option[org.apache.spark.ml.Estimator[_ <: org.apache.spark.ml.Model[_]]],
                       alsoPredict: Boolean): (Model, Option[DataFrame]) = {
-    val (quantized, complexModel) = quantizeLong(longDf, params, None)
+    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    // the complex quantizer's fit pass also reads the largest symbol off
+    // its aggregate; the other quantizers need one max query over q
+    val (quantized, complexModel, fittedMax) =
+      if (params.quantize && params.quantizeType == "complex") {
+        val (m, maxSym) = Quantize.fitComplexWithMaxSymbol(longDf, nBins = params.nSymbols)
+        (Quantize.applyComplex(longDf, m), Some(m), Some(maxSym))
+      } else {
+        val (d, m) = quantizeLong(longDf, params, None)
+        (d, m, None)
+      }
     // ONE shuffle + sort (+ dense-t re-rank, see densify) for the whole fit:
     // every downstream pass (features, inference heap, visit sweep, the
     // scoring passes) needs seq_id partitioning with t-ascending rows, so pay
-    // it once into the cache and run those passes with presort=false
-    val q = densify(quantized)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // it once into the cache and run those passes with presort=false. The
+    // cache has the labeled frames' schema (a constant `cluster` until the
+    // labels exist), so the feature and the library scoring passes run the
+    // same plan and share their generated classes.
+    val q = densify(quantized.select(col("seq_id"), col("t"), col("symbol")))
+      .withColumn("cluster", lit(0))
+      .persist(MEMORY_AND_DISK)
     // caches released in the finally (not just the happy path): repeated
     // fit callers in one session must not accumulate blocks when a stage
     // throws mid-fit
     var feat: Option[DataFrame] = None
-    var labels: DataFrame = null
+    var labeled: DataFrame = null
     var wide: DataFrame = null
     try {
-      val maxSym = q.agg(max(col("symbol"))).head()
-      require(!maxSym.isNullAt(0), "AnomalyDetection.fit: input has no rows after quantization")
-      val alphabetSize = math.max(2, maxSym.getByte(0).toInt + 1)
+      val maxSym = fittedMax.getOrElse {
+        val r = q.agg(max(col("symbol"))).head()
+        if (r.isNullAt(0)) None else Some(r.getByte(0).toInt)
+      }
+      require(maxSym.nonEmpty, "AnomalyDetection.fit: input has no rows after quantization")
+      val alphabetSize = math.max(2, maxSym.get + 1)
       val genParams = GenESeSS.Params(eps = params.eps)
 
       // llk features vs the base PFSAs depend only on (sequences, alphabet):
@@ -147,47 +171,53 @@ object AnomalyDetection {
       val k0 = math.max(1, params.nClusters)
       feat =
         if (k0 > 1 || clusterer.nonEmpty)
-          Some(Cluster.featuresLong(spark, q, alphabetSize, presort = false).cache())
+          Some(Cluster.featuresLong(spark, q, alphabetSize, presort = false,
+            keys = ByLabel).cache())
         else None
 
+      // One labeled long frame `(seq_id, t, symbol, cluster)` per fixpoint
+      // step, persisted: the inference heap, the visit sweep and the llk
+      // scoring all read it, so the label join runs once per step and the
+      // tally needs no join of its own.
       def inferForK(k: Int): (DataFrame, Map[Int, Pfsa]) = {
-        // observed cluster ids come FREE from the relabel's bounded collect
-        // (rank r has members iff sizes(r) > 0) — inferAllLong otherwise
-        // re-scans the labeled join just to re-derive them (r16)
+        // observed cluster ids come FREE from the relabel's counts (rank r
+        // has members iff sizes(r) > 0) — inferAllLong otherwise re-scans
+        // the labeled frame just to re-derive them (r16)
         val (lbl, observed) = feat match {
+          // the join key is the partitioning key, so the labels co-partition
+          // in and the joined frame keeps q's (seq_id, t) order
           case Some(f) =>
             val (l, sizes) = Cluster.assignFeaturesWithStats(
               f, k, params.kmeansSeed, clusterer)
-            (l.cache(), sizes.zipWithIndex.collect { case (n, r) if n > 0 => r })
-          // constant-label path: one distinct over the already-partitioned
-          // cache (no exchange), no feature sweep
-          case None =>
-            (q.select(col("seq_id")).distinct().withColumn("cluster", lit(0)).cache(),
-              Seq(0))
+            (q.drop("cluster").join(l, "seq_id").persist(MEMORY_AND_DISK),
+              sizes.zipWithIndex.collect { case (n, r) if n > 0 => r })
+          // constant label: q itself, no join
+          case None => (q, Seq(0))
         }
-        // the join key is the partitioning key, so labels co-partition in and
-        // the joined frame keeps q's (seq_id, t) order — no re-sort needed
-        val lib = GenESeSS.inferAllLong(spark, q.join(lbl, "seq_id"),
-          alphabetSize, genParams, presort = false,
-          knownClusters = Some(observed))
+        val lib = GenESeSS.inferAllLong(spark, lbl, alphabetSize, genParams,
+          presort = false, knownClusters = Some(observed))
         (lbl, lib)
       }
 
       var k = k0
       val r0 = inferForK(k)
-      labels = r0._1
+      labeled = r0._1
       var lib = r0._2
       // KMeans may emit fewer distinct labels than requested (duplicate
       // points); the frequency relabel makes label ids dense, so the
       // effective k is the library size
       k = lib.size
+      // the fixpoint only shrinks k: every tally counts argmins over the
+      // first library's size, so each step runs the same aggregate
+      val slots = k
 
-      // one cached wide llk row per sequence; a single k-row collect reads
-      // the confusion and the stats off it, and fitPredict projects it
+      // one cached wide llk row per (sequence, label); a single k-row
+      // collect reads the confusion and the stats off it, and fitPredict
+      // projects it
       def tally(): Cluster.LlkTally = {
-        wide = Llk.scoreWide(spark, q, (0 until k).map(lib), presort = false)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        Cluster.llkTally(wide, labels, k)
+        wide = Llk.scoreWide(spark, labeled, (0 until k).map(lib), presort = false,
+          keys = ByLabel).persist(MEMORY_AND_DISK)
+        Cluster.llkTally(wide, k, slots)
       }
       var t = tally()
 
@@ -199,9 +229,9 @@ object AnomalyDetection {
         var reduced = Cluster.reducedClusterCount(t.fractions, k)
         while (reduced < k && iter < 5) {
           wide.unpersist()
-          labels.unpersist()
+          labeled.unpersist()
           val res = inferForK(reduced)
-          labels = res._1; lib = res._2
+          labeled = res._1; lib = res._2
           k = lib.size
           iter += 1
           t = tally()
@@ -218,7 +248,7 @@ object AnomalyDetection {
       (model, pred)
     } finally {
       if (wide != null) wide.unpersist()
-      if (labels != null) labels.unpersist()
+      if (labeled != null) labeled.unpersist()
       feat.foreach(_.unpersist())
       q.unpersist()
     }

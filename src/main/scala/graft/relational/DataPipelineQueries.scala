@@ -1360,13 +1360,6 @@ object DataPipelineQueries {
     docs(s, d).filter(col("source") === "src0")
       .select(col("lang")).distinct()
 
-  /** The DPP fact-dim join frame WITHOUT the checkpoint, for the plan
-    * assertion (localCheckpoint truncates the lineage the spec reads). */
-  private[relational] def scanDppPlanProbe(s: SparkSession, factPath: String,
-                                           dim: DataFrame): DataFrame =
-    s.read.parquet(factPath).join(dim, Seq("lang"))
-      .groupBy(col("lang")).agg(count(lit(1)).as("n_docs"))
-
   /** Bucketed co-located join through the gate: two projections of the
     * documents table written as bucketed parquet (same key, same bucket
     * count) and joined back WITHOUT a shuffle — the ingest-time layout that

@@ -166,7 +166,7 @@ object PipelineQueries {
   /** pfsa_sample (reference Prun, detection.py:730): seeded sample paths.
     *
     * VALUE-LEVEL DuckDB oracle: the sampler's randomness is counter-based
-    * ([[Pfsa.hashUniform]] — md5 of "<seed>:<t>"), so the oracle recomputes
+    * ([[Pfsa.HashUniform]] — md5 of "<seed>:<t>"), so the oracle recomputes
     * the identical uniforms from md5 hex digits in SQL and replays the
     * Markov walk with a recursive CTE — every one of the 25 600 sampled
     * symbols is hash-checked by an independent engine. */
@@ -811,7 +811,7 @@ object PipelineQueries {
         |        FROM (SELECT node, min(label) AS ml FROM comp GROUP BY node)) AS n_components
         |FROM counts""".stripMargin,
     // exact replay of the counter-based sampler (see pfsaSample's scaladoc):
-    // the inlined expression is Pfsa.hashUniform in SQL — first 8 hex digits
+    // the inlined expression is Pfsa.HashUniform in SQL — first 8 hex digits
     // of md5("<seed>:<t>") as a 32-bit integer over 2^32 — and the recursive
     // CTE walks M2 (δ(q,σ)=σ, start state from the stationary (3/7, 4/7))
     // with the same cumulative-probability branches as the Scala kernel

@@ -273,19 +273,6 @@ object SeriesQueries {
         .localCheckpoint(true)
     }
 
-  /** Compaction file counts (for the spec): (small-file count, bytes,
-    * planned output count, actual compacted file count). */
-  private[relational] def compactCounts(s: SparkSession, d: String): (Int, Long, Int, Int) =
-    withTempDir("compact_spec") { tmp =>
-      docsT(s, d).repartition(64).write.mode("overwrite").parquet(s"$tmp/small")
-      val parts = parquetParts(s, s"$tmp/small")
-      val bytes = parts.map(_.getLen).sum
-      val nOut = math.max(1, math.ceil(bytes.toDouble / CompactTargetBytes).toInt)
-      s.read.parquet(s"$tmp/small").repartition(nOut)
-        .write.mode("overwrite").parquet(s"$tmp/compact")
-      (parts.length, bytes, nOut, parquetParts(s, s"$tmp/compact").length)
-    }
-
   // -------------------------------------------------------- distribution moments
   /** Higher distribution moments per return flag: population std, skewness
     * g₁ = m₃/m₂^1.5, excess kurtosis g₂ = m₄/m₂² − 3 — the shape stats a
@@ -427,21 +414,6 @@ object SeriesQueries {
         .orderBy(col("event_type"))
         .localCheckpoint(true)
     }
-
-  /** The pruned-scan plan + row metric for the spec: builds the same
-    * sorted layout, returns (filtered DataFrame, total row count). The
-    * range is a parameter so the spec can pick a slice that exists at its
-    * fixture's user cardinality. */
-  private[relational] def statsPruningProbe(s: SparkSession, d: String, dir: Path,
-      lo: Long, hi: Long): (DataFrame, Long) = {
-    eventsUs(s, d).filter(col("value").isNotNull)
-      .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
-      .repartitionByRange(8, col("user_id"))
-      .sortWithinPartitions(col("user_id"))
-      .write.mode("overwrite").parquet(s"$dir/sorted")
-    val all = s.read.parquet(s"$dir/sorted")
-    (all.filter(col("user_id").between(lo, hi)), all.count())
-  }
 
   // ------------------------------------------------------------- audio framing
   /** PCM16 frame length in samples (320 bytes at 2 bytes/sample). */

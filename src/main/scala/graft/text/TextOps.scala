@@ -47,7 +47,7 @@ object TextOps {
 
   // -------------------------------------------------- md5-parity base hashes
   // Every hash below derives from md5 of the value's UTF-8 bytes — NOT a
-  // JVM-private mixer (the r9 graph codes' technique, Pfsa.hashUniform's
+  // JVM-private mixer (the r9 graph codes' technique, Pfsa.HashUniform's
   // before them): a hash both engines compute identically is what lets the
   // DuckDB gate recompute signatures, band collisions and simhash codes
   // value-for-value in SQL instead of verdict-gating them.
@@ -125,13 +125,6 @@ object TextOps {
         16, 10).cast("long")
     }: _*)
 
-  /** (id, band, bucket) rows from (id, sig array). */
-  def bandBuckets(df: DataFrame, idCol: String, sigCol: String,
-                  bands: Int, rowsPerBand: Int): DataFrame =
-    df.select(col(idCol),
-      posexplode(bandBucketCols(col(sigCol), bands, rowsPerBand))
-        .as(Seq("band", "bucket")))
-
   // --------------------------------------------------------------- SimHash
   /** 64-bit SimHash over a token bag — the native codegen expression
     * [[graft.functions.SimHash64]]: one [[md5Bits64]]-parity digest per
@@ -141,10 +134,6 @@ object TextOps {
   def simhashCol(tokCol: Column): Column =
     org.apache.spark.sql.graft.ColumnBridge.column(graft.functions.SimHash64(
       org.apache.spark.sql.graft.ColumnBridge.expression(tokCol)))
-
-  /** (id, simhash) per row of `df`. */
-  def simhashCodes(df: DataFrame, idCol: String, tokCol: Column): DataFrame =
-    df.select(col(idCol), simhashCol(tokCol).as("simhash"))
 
   /** EXACT-complete candidate pairs for Jaccard ≥ `t` — prefix filtering
     * (the AllPairs/PPJoin family), the deterministic alternative to banding:

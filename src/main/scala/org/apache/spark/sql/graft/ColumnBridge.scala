@@ -22,6 +22,19 @@ object ColumnBridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** `df.collect()` without a generated deserializer: the rows convert
+    * through `CatalystTypeConverters` (what `SparkPlan.executeCollectPublic`
+    * does) inside the same SQL execution `collect` opens. Each result
+    * schema `collect` deserializes compiles one class into the session's
+    * bounded codegen cache; for the k-row driver reads of an iterative fit
+    * that class is pure working set. */
+  def collectRows(df: org.apache.spark.sql.DataFrame): Array[org.apache.spark.sql.Row] = {
+    val qe = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].queryExecution
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe, Some("collect")) {
+      qe.executedPlan.executeCollectPublic()
+    }
+  }
+
   /** Block until the async listener bus has DELIVERED every queued event
     * (`LiveListenerBus.waitUntilEmpty`, `private[spark]`) — the exact
     * drain barrier listener-tallying harness code needs; snapshot-polling

@@ -37,4 +37,33 @@ class PfsaSpec extends AnyFunSuite {
     assert(back.synStr.contains(Seq(0, 1)))
     assert(back.annErr == 0.01)
   }
+
+  test("HashUniform equals md5 of the \"<seed>:<t>\" string, draw for draw") {
+    val md = java.security.MessageDigest.getInstance("MD5")
+    def viaString(seed: Long, t: Long): Double = {
+      val d = md.digest(s"$seed:$t".getBytes(java.nio.charset.StandardCharsets.US_ASCII))
+      val v = ((d(0) & 0xffL) << 24) | ((d(1) & 0xffL) << 16) | ((d(2) & 0xffL) << 8) | (d(3) & 0xffL)
+      v.toDouble / 4294967296.0
+    }
+    val rnd = new scala.util.Random(20261019L)
+    val seeds = Seq(0L, 1L, -1L, Long.MinValue, Long.MaxValue) ++ Seq.fill(8)(rnd.nextLong())
+    val largeT = Seq(-1L, 9L, 10L, 99L, 100L, Int.MaxValue.toLong, Int.MaxValue + 1L,
+      Long.MaxValue, Long.MinValue, -1000000L) ++
+      (1 to 18).flatMap(e => Seq(math.pow(10, e).toLong - 1, math.pow(10, e).toLong)) ++
+      Seq.fill(200)(rnd.nextLong())
+    for (seed <- seeds) {
+      val u = new Pfsa.HashUniform(seed)
+      // every t from 0 to 10^6 for the edge seeds, a stride for the rest
+      val step = if (seed == 0L || seed == -1L || seed == Long.MinValue) 1L else 997L
+      var t = 0L
+      while (t <= 1000000L) {
+        val (a, b) = (u(t), viaString(seed, t))
+        if (a != b) fail(s"seed $seed t $t: $a != $b")
+        t += step
+      }
+      largeT.foreach { t =>
+        assert(u(t) == viaString(seed, t), s"seed $seed t $t")
+      }
+    }
+  }
 }

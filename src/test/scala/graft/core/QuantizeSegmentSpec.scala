@@ -78,4 +78,50 @@ class QuantizeSegmentSpec extends AnyFunSuite {
     assert(arrs(0L) == Seq[Byte](0, 1, 0, 1))
     assert(arrs(1L) == Seq[Byte](0, 1, 0, 1))
   }
+
+  test("complex quantizer: cutoffs are approxQuantile's bit for bit, the max symbol is exact") {
+    import org.apache.spark.sql.functions.{col, max}
+    val rnd = new scala.util.Random(77L)
+    def corpus(n: Int, special: Seq[java.lang.Double]) =
+      ((0 until n).map(i => (i % 7L, i.toLong, java.lang.Double.valueOf(rnd.nextGaussian() * 3))) ++
+        special.zipWithIndex.map { case (v, i) => (1L, n.toLong + i, v) })
+        .toDF("seq_id", "t", "value").repartition(5)
+    val cases = Seq(
+      "plain" -> corpus(20000, Nil),
+      "nulls" -> corpus(5000, Seq(null, null)),
+      "NaN" -> corpus(5000, Seq(Double.NaN)),
+      "ties at the top" -> corpus(50, Seq.fill(200)(java.lang.Double.valueOf(9.0))),
+      "all NaN" -> corpus(0, Seq(Double.NaN, Double.NaN)),
+      "all null" -> corpus(0, Seq(null)))
+    for ((name, df) <- cases; bins <- Seq(2, 3, 8); detrend <- Seq(false, true)) {
+      val (m, maxSym) = Quantize.fitComplexWithMaxSymbol(df, nBins = bins, detrend = detrend)
+      val base = if (!detrend) df.withColumn("__v", col("value")) else df.withColumn("__v",
+        org.apache.spark.sql.functions.coalesce(col("value") - org.apache.spark.sql.functions.lag(
+          col("value"), 1).over(org.apache.spark.sql.expressions.Window.partitionBy(col("seq_id"))
+          .orderBy(col("t"))), org.apache.spark.sql.functions.lit(0.0)))
+      val ref = base.stat.approxQuantile("__v", (1 until bins).map(_.toDouble / bins).toArray, 1e-4)
+        .distinct.sorted
+      assert(m.cutoffs.toSeq.map(java.lang.Double.doubleToRawLongBits) ==
+        ref.toSeq.map(java.lang.Double.doubleToRawLongBits), s"$name/$bins/$detrend cutoffs")
+      val exact = Quantize.applyComplex(df, m).agg(max(col("symbol"))).head()
+      assert(maxSym == (if (exact.isNullAt(0)) None else Some(exact.getByte(0).toInt)),
+        s"$name/$bins/$detrend max symbol")
+    }
+    assert(Quantize.fitComplexWithMaxSymbol(corpus(0, Nil))._2.isEmpty, "no rows")
+  }
+
+  test("complex quantizer: the cutoffs ride in references, not in the generated code") {
+    import org.apache.spark.sql.functions.col
+    // a range, not a local relation: the optimizer would evaluate a
+    // projection of local rows itself and generate no code
+    val df = spark.range(4).select(col("id").as("seq_id"), col("id").as("t"),
+      (col("id") + 0.5).as("value"))
+    val m = Quantize.ComplexModel(Array(1.2345678912345, 2.7182818284591), detrend = false)
+    val out = Quantize.applyComplex(df, m)
+    assert(out.orderBy("t").select("symbol").as[Byte].collect().toSeq == Seq[Byte](0, 1, 1, 2))
+    out.collect() // the adaptive plan is final once it ran
+    val code = out.queryExecution.debug.codegenToSeq().map(_._2).mkString("\n")
+    assert(code.nonEmpty && !code.contains("1.2345678912345") && !code.contains("2.7182818284591"),
+      "a cutoff is inlined in the generated code")
+  }
 }

@@ -11,13 +11,20 @@ class ScanDppSpec extends AnyFunSuite {
   private val spark = graft.TestSpark.spark
   private val sf = "/root/testdata/sf0.001"
 
+  /** The DPP fact-dim join frame WITHOUT the checkpoint, for the plan
+    * assertion (localCheckpoint truncates the lineage this spec reads). */
+  private def scanDppPlanProbe(factPath: String,
+                               dim: org.apache.spark.sql.DataFrame) =
+    spark.read.parquet(factPath).join(dim, Seq("lang"))
+      .groupBy(col("lang")).agg(count(lit(1)).as("n_docs"))
+
   test("the fact scan's partition filters carry a dynamic pruning expression") {
     val tmp = java.nio.file.Files.createTempDirectory("dpp_spec")
     try {
       Tables.tbl(spark, sf, "documents")
         .write.mode("overwrite").partitionBy("lang").parquet(s"$tmp/docs")
       val dim = DataPipelineQueries.dppDim(spark, sf)
-      val probe = DataPipelineQueries.scanDppPlanProbe(spark, s"$tmp/docs", dim)
+      val probe = scanDppPlanProbe(s"$tmp/docs", dim)
       probe.collect() // AQE finalizes the plan (DPP reuse decided at runtime)
       val plan = probe.queryExecution.executedPlan.toString.toLowerCase
       assert(plan.contains("dynamicpruning"),

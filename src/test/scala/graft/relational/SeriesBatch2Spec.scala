@@ -18,6 +18,20 @@ class SeriesBatch2Spec extends AnyFunSuite {
 
   private def q(name: String) = SeriesQueries.queries(name)(spark, sf)
 
+  /** The scan_stats_pruning layout written under `dir`: returns the range
+    * filter over it (plan and scan metrics for the assertions) and the
+    * total row count. */
+  private def statsPruningProbe(dir: java.nio.file.Path, lo: Long, hi: Long)
+      : (org.apache.spark.sql.DataFrame, Long) = {
+    Tables.eventsTsUs(spark, sf).filter(col("value").isNotNull)
+      .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
+      .repartitionByRange(8, col("user_id"))
+      .sortWithinPartitions(col("user_id"))
+      .write.mode("overwrite").parquet(s"$dir/sorted")
+    val all = spark.read.parquet(s"$dir/sorted")
+    (all.filter(col("user_id").between(lo, hi)), all.count())
+  }
+
   test("graph_triangles matches a brute-force driver recompute on the same kNN graph") {
     val got = AnalyticsQueries.queries("graph_triangles")(spark, sf).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -97,7 +111,7 @@ class SeriesBatch2Spec extends AnyFunSuite {
       val (lo, hi) = (users.getLong(0), users.getLong(1))
       val mid = lo + (hi - lo) / 2
       val width = math.max(1L, (hi - lo) / 10)
-      val (filtered, total) = SeriesQueries.statsPruningProbe(spark, sf, dir, mid, mid + width)
+      val (filtered, total) = statsPruningProbe(dir, mid, mid + width)
       // materialize THIS queryExecution — the scan metrics below belong to it
       val matched = filtered.collect().length.toLong
       val plan = filtered.queryExecution.executedPlan.toString

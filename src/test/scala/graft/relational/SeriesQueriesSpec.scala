@@ -18,6 +18,20 @@ class SeriesQueriesSpec extends AnyFunSuite {
 
   private def q(name: String) = SeriesQueries.queries(name)(spark, sf)
 
+  /** Compaction file counts: (small-file count, bytes, planned output
+    * count, actual compacted file count), built like compact_small_files. */
+  private def compactCounts(): (Int, Long, Int, Int) =
+    graft.core.SessionMemo.withTempDir("compact_spec") { tmp =>
+      Tables.tbl(spark, sf, "documents").repartition(64)
+        .write.mode("overwrite").parquet(s"$tmp/small")
+      val parts = SeriesQueries.parquetParts(spark, s"$tmp/small")
+      val bytes = parts.map(_.getLen).sum
+      val nOut = math.max(1, math.ceil(bytes.toDouble / SeriesQueries.CompactTargetBytes).toInt)
+      spark.read.parquet(s"$tmp/small").repartition(nOut)
+        .write.mode("overwrite").parquet(s"$tmp/compact")
+      (parts.length, bytes, nOut, SeriesQueries.parquetParts(spark, s"$tmp/compact").length)
+    }
+
   // ------------------------------------------------------------- z-score
   test("ts_anomaly_zscore: baseline excludes the current row and gates on n>=5, std>0") {
     val rows = q("ts_anomaly_zscore").collect()
@@ -205,7 +219,7 @@ class SeriesQueriesSpec extends AnyFunSuite {
 
   // ---------------------------------------------------------- compaction
   test("compact_small_files: 64 scattered files collapse to the planned right-sized count") {
-    val (nSmall, bytes, nPlanned, nActual) = SeriesQueries.compactCounts(spark, sf)
+    val (nSmall, bytes, nPlanned, nActual) = compactCounts()
     assert(nSmall === 64)
     assert(nPlanned === nActual, "compacted write must produce exactly the planned file count")
     assert(nActual < nSmall, "compaction must reduce the file count")

@@ -11,6 +11,18 @@ class TextOpsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
+  /** (id, band, bucket) rows from (id, sig array). */
+  private def bandBuckets(df: org.apache.spark.sql.DataFrame, idCol: String, sigCol: String,
+                          bands: Int, rowsPerBand: Int) =
+    df.select(col(idCol),
+      posexplode(TextOps.bandBucketCols(col(sigCol), bands, rowsPerBand))
+        .as(Seq("band", "bucket")))
+
+  /** (id, simhash) per row of `df`. */
+  private def simhashCodes(df: org.apache.spark.sql.DataFrame, idCol: String,
+                           tokCol: org.apache.spark.sql.Column) =
+    df.select(col(idCol), TextOps.simhashCol(tokCol).as("simhash"))
+
   private val base = "the quick brown fox jumps over the lazy dog while the " +
     "cat watches from the warm windowsill and the birds sing in the garden " +
     "under a bright morning sun with dew still on the grass"
@@ -82,7 +94,7 @@ class TextOpsSpec extends AnyFunSuite {
       .withColumn("sh", TextOps.charShingles("norm", 5))
       .withColumn("sig", TextOps.minhashSigCol(col("sh"), 64))
     val pairs = TextOps.candidatePairs(
-      TextOps.bandBuckets(sigDf, "doc_id", "sig", bands = 16, rowsPerBand = 4), "doc_id")
+      bandBuckets(sigDf, "doc_id", "sig", bands = 16, rowsPerBand = 4), "doc_id")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs.contains((0L, 1L)), "near-dup pair not a candidate")
     assert(pairs.contains((0L, 4L)), "exact-dup pair not a candidate")
@@ -97,7 +109,7 @@ class TextOpsSpec extends AnyFunSuite {
       .select(col("doc_id"), TextOps.normalized("text").as("norm"))
       .withColumn("sh", TextOps.charShingles("norm", 5))
       .withColumn("sig", TextOps.minhashSigCol(col("sh"), 16))
-    val buckets = TextOps.bandBuckets(swarm, "doc_id", "sig", bands = 4, rowsPerBand = 4)
+    val buckets = bandBuckets(swarm, "doc_id", "sig", bands = 4, rowsPerBand = 4)
     assert(TextOps.candidatePairs(buckets, "doc_id", maxBucketSize = 100).count() == 0L)
     // with a big enough cap the pairs appear (bounded quadratic is allowed)
     assert(TextOps.candidatePairs(buckets, "doc_id", maxBucketSize = 500).count() > 0L)
@@ -258,7 +270,7 @@ class TextOpsSpec extends AnyFunSuite {
       .withColumn("sh", TextOps.charShingles("norm", 5))
       .withColumn("sig", TextOps.minhashSigCol(col("sh"), 64))
     val pairs = TextOps.candidatePairs(
-      TextOps.bandBuckets(base, "doc_id", "sig", bands = 16, rowsPerBand = 4), "doc_id")
+      bandBuckets(base, "doc_id", "sig", bands = 16, rowsPerBand = 4), "doc_id")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs.contains((300L, 301L)), "near-dup pair missed by banding")
   }
@@ -309,7 +321,7 @@ class TextOpsSpec extends AnyFunSuite {
 
   test("simhash: near-dups within small Hamming distance, unrelated far") {
     def ham(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b)
-    val hs = TextOps.simhashCodes(corpus.withColumn("toks", TextOps.tokens("text")), "doc_id", col("toks"))
+    val hs = simhashCodes(corpus.withColumn("toks", TextOps.tokens("text")), "doc_id", col("toks"))
       .withColumnRenamed("simhash", "h")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(ham(hs(0L), hs(1L)) <= 6, s"near-dup hamming ${ham(hs(0L), hs(1L))}")
