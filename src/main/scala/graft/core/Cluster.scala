@@ -161,6 +161,23 @@ object Cluster {
       sizes)
   }
 
+  /** Seeded KMeans on `feat` (checkpointed first unless the caller
+    * persisted it — see [[assignFeaturesWithStats]]) and its frequency
+    * relabel: (features read, model, relabel column, raw label → rank,
+    * member counts by rank). */
+  private def fitKMeans(feat: DataFrame, nClusters: Int, seed: Long)
+      : (DataFrame, KMeansModel, org.apache.spark.sql.Column, Map[Int, Int], Seq[Long]) = {
+    val f =
+      if (feat.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+        feat.localCheckpoint(true)
+      else feat
+    val model = new KMeans().setK(nClusters).setSeed(seed)
+      .setFeaturesCol("features").setPredictionCol("raw_label")
+      .fit(sizedForFit(f))
+    val (relabelCol, rankMap, sizes) = frequencyRelabel(model.transform(f), nClusters, Some(model))
+    (f, model, relabelCol, rankMap, sizes)
+  }
+
   /** The seeded-KMeans assign additionally returning the fitted cluster
     * centers keyed by RELABELED rank (complete for every rank 0..k-1 —
     * [[frequencyRelabel]] maps empty clusters too) and the member counts
@@ -171,20 +188,23 @@ object Cluster {
     * driver — the same bounded-collect class as the relabel rank map. */
   def assignFeaturesWithCenters(feat: DataFrame, nClusters: Int, seed: Long = 42L)
       : (DataFrame, Map[Int, Array[Double]], Seq[Long]) = {
-    // eager checkpoint before the fit — see assignFeaturesWithStats
-    val f =
-      if (feat.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-        feat.localCheckpoint(true)
-      else feat
-    val est = new KMeans().setK(nClusters).setSeed(seed)
-      .setFeaturesCol("features").setPredictionCol("raw_label")
-    val model = est.fit(sizedForFit(f))
-    val labeled = model.transform(f)
-    val (relabelCol, rankMap, sizes) = frequencyRelabel(labeled, nClusters, Some(model))
+    val (f, model, relabelCol, rankMap, sizes) = fitKMeans(feat, nClusters, seed)
     val centers = model.clusterCenters.zipWithIndex.map { case (c, lbl) =>
       rankMap(lbl) -> c.toArray }.toMap
-    (labeled.select(col("seq_id"), col("features"),
+    (model.transform(f).select(col("seq_id"), col("features"),
       relabelCol.cast("int").as("cluster")), centers, sizes)
+  }
+
+  /** The default clusterer's label of one feature vector — seeded KMeans'
+    * own `predict` mapped through the frequency relabel, the `cluster`
+    * [[assignFeaturesWithStats]] projects — so a caller that reads the
+    * features row by row labels them without a plan of its own. Returns
+    * it with the member counts by rank. Needs `nClusters` > 1. */
+  def kmeansLabeler(feat: DataFrame, nClusters: Int, seed: Long = 42L)
+      : (org.apache.spark.ml.linalg.Vector => Int, Seq[Long]) = {
+    require(nClusters > 1, s"kmeansLabeler: nClusters $nClusters <= 1")
+    val (_, model, _, rankMap, sizes) = fitKMeans(feat, nClusters, seed)
+    ((v: org.apache.spark.ml.linalg.Vector) => rankMap.getOrElse(model.predict(v), 0), sizes)
   }
 
   /** Per fitted cluster i: `counts(i)(j)` = members whose [[Llk.argmin]]
@@ -200,23 +220,83 @@ object Cluster {
       }
   }
 
-  /** [[LlkTally]] in one aggregate over [[Llk.scoreWide]] rows of a k-model
-    * library keyed by `(seq_id, cluster)` membership: k rows reach the
-    * driver, never the N×k matrix. The argmin is counted for every
-    * j < `slots` (≥ k; slots past k count 0), so a fit whose k shrinks
-    * keeps one aggregate shape by passing its first k. */
+  /** [[LlkTally]] over [[Llk.scoreWide]] rows of a k-model library keyed by
+    * `(seq_id, cluster)` membership, in one pass: every partition folds its
+    * rows into one [[TallyBuffer]] per cluster and the driver merges them
+    * in partition order, so k rows per partition reach the driver, never
+    * the N×k matrix, and the pass runs one job with no exchange. The
+    * argmin ([[Llk.argmin]]) is counted for every j < `slots` (≥ k). */
   def llkTally(wide: DataFrame, k: Int, slots: Int): LlkTally = {
     require(slots >= k, s"llkTally: slots $slots < k $k")
-    val best = Llk.argmin(col("llks"))
-    val own = element_at(col("llks"), col("cluster") + 1)
-    val tally = wide
-      .groupBy(col("cluster"))
-      .agg(avg(own).as("m"),
-        stddev_samp(own).as("s") +: (0 until slots).map(j => count_if(best === j)): _*)
-    val rows = ColumnBridge.collectRows(tally)
+    val parts = ColumnBridge.foldPartitions(
+        wide.select(col("cluster").cast("int"), col("llks"))) { rows =>
+      val bufs = scala.collection.mutable.HashMap.empty[Int, TallyBuffer]
+      rows.foreach { r =>
+        if (!r.isNullAt(0) && !r.isNullAt(1))
+          bufs.getOrElseUpdate(r.getInt(0), new TallyBuffer(slots)).update(r.getInt(0), r.getArray(1))
+      }
+      bufs.toArray
+    }
+    val merged = scala.collection.mutable.HashMap.empty[Int, TallyBuffer]
+    parts.foreach(_.foreach { case (c, b) =>
+      merged.getOrElseUpdate(c, new TallyBuffer(slots)).merge(b) })
+    val nanForOne = org.apache.spark.sql.internal.SQLConf.get.legacyStatisticalAggregate
     LlkTally(
-      rows.map(r => r.getInt(0) -> Array.tabulate(k)(j => r.getLong(3 + j))).toMap,
-      rows.map(r => r.getInt(0) -> (r.getDouble(1), if (r.isNullAt(2)) 0.0 else r.getDouble(2))).toMap)
+      merged.map { case (c, b) => c -> b.best.take(k) }.toMap,
+      merged.map { case (c, b) =>
+        c -> (b.sum / b.count, b.stddevSamp(nanForOne).getOrElse(0.0)) }.toMap)
+  }
+
+  /** One cluster's tally: `avg`, `stddev_samp` and `count_if(argmin = j)`
+    * of its members, with the buffers, update and merge arithmetic of
+    * Spark's `Average` and `CentralMomentAgg`, so the statistics are the
+    * ones those aggregates return for the same rows in the same order. A
+    * member's own llk is `llks(cluster)`; an index outside the array, or a
+    * null element, counts as a null value. */
+  private final class TallyBuffer(slots: Int) extends Serializable {
+    var sum = 0.0
+    var count = 0L
+    private var n, avg, m2 = 0.0
+    val best = new Array[Long](slots)
+
+    def update(cluster: Int, llks: org.apache.spark.sql.catalyst.util.ArrayData): Unit = {
+      val size = llks.numElements()
+      val own = cluster >= 0 && cluster < size && !llks.isNullAt(cluster)
+      val x = if (own) llks.getDouble(cluster) else 0.0
+      sum = sum + x
+      if (own) {
+        count += 1
+        val newN = n + 1.0
+        val delta = x - avg
+        val deltaN = delta / newN
+        avg = avg + deltaN
+        m2 = m2 + delta * (delta - deltaN)
+        n = newN
+      }
+      val j = Llk.argminIndex(llks)
+      if (j >= 0 && j < slots) best(j) += 1
+    }
+
+    def merge(o: TallyBuffer): Unit = {
+      sum = sum + o.sum
+      count += o.count
+      val newN = n + o.n
+      val delta = o.avg - avg
+      val deltaN = if (newN == 0.0) 0.0 else delta / newN
+      val newAvg = avg + deltaN * o.n
+      m2 = m2 + o.m2 + delta * deltaN * n * o.n
+      avg = newAvg
+      n = newN
+      var j = 0
+      while (j < slots) { best(j) += o.best(j); j += 1 }
+    }
+
+    /** None where Spark returns null: no value, or one value unless
+      * `nanForOne` (legacy statistical aggregates) makes that NaN. */
+    def stddevSamp(nanForOne: Boolean): Option[Double] =
+      if (n == 0.0) None
+      else if (n == 1.0) (if (nanForOne) Some(Double.NaN) else None)
+      else Some(math.sqrt(m2 / (n - 1.0)))
   }
 
   /** [[llkTally]] of `(seq_id, llks)` rows joined with `(seq_id, cluster)`

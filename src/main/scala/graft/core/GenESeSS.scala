@@ -301,8 +301,7 @@ object GenESeSS {
 
     // ---- distributed π̃ estimation: run sequences through the embedded
     // skeletons counting (state, symbol) visits (tex/ms.tex:316-318) — a
-    // native codegen expression, and posexplode_OUTER so the kernel isn't
-    // cloned into inferred generate filters (see Llk.scoreAll)
+    // native codegen expression whose per-sequence arrays sum per cluster
     val visits = {
       import org.apache.spark.sql.graft.ColumnBridge
       ColumnBridge.column(graft.functions.PfsaVisitCounts(
@@ -310,14 +309,8 @@ object GenESeSS {
         ColumnBridge.expression(col("symbols")),
         skeletons.map { case (c, s) => c -> s.conn }, k))
     }
-    val visitRows = seqs
-      .select(col("cluster"), posexplode_outer(visits).as(Seq("idx", "c")))
-      .filter(col("idx").isNotNull)
-      .groupBy("cluster", "idx")
-      .agg(sum(col("c")).as("c"))
-      .collect()
-      .groupBy(_.getInt(0))
-    assemblePfsas(skeletons, visitRows, k, params)
+    assemblePfsas(skeletons,
+      sumVisits(seqs.select(col("cluster").cast("int"), visits.as("v")), at = 1), k, params)
   }
 
   /** [[inferAll]] over LONG-FORM labeled rows `(seq_id, t, symbol, cluster)`
@@ -360,17 +353,42 @@ object GenESeSS {
       ColumnBridge.expression(col("symbol").cast("byte")),
       skeletons.map { case (c, s) => c -> s.conn }, k).toAggregateExpression())
     // grouping by (cluster, seq_id) reuses src's seq_id partitioning — seq_id
-    // colocates the pair, no second exchange
-    val visitRows = ColumnBridge.collectRows(src
+    // colocates the pair, no second exchange; the per-sequence arrays sum
+    // per cluster inside their partition
+    val visits = sumVisits(src
       .groupBy(col("cluster"), col("seq_id"))
-      .agg(visitsAgg.as("v"))
-      .select(col("cluster").cast("int").as("cluster"),
-        posexplode_outer(col("v")).as(Seq("idx", "c")))
-      .filter(col("idx").isNotNull)
-      .groupBy("cluster", "idx")
-      .agg(sum(col("c")).as("c")))
-      .groupBy(_.getInt(0))
-    assemblePfsas(skeletons, visitRows, k, params)
+      .agg(visitsAgg.as("v")), at = 2)
+    assemblePfsas(skeletons, visits, k, params)
+  }
+
+  /** Per-cluster sums of the flat |Q|·|Σ| visit-count arrays of `visits`'
+    * rows (int `cluster` at ordinal 0, `array<bigint>` at `at`): each
+    * partition sums its rows, and the driver adds up the k arrays each
+    * partition returns — the sums a `posexplode` + `sum` aggregate gives,
+    * without its exchange and classes. Null clusters, arrays and counts
+    * are skipped. */
+  private def sumVisits(visits: DataFrame, at: Int): Map[Int, Array[Long]] = {
+    import org.apache.spark.sql.graft.ColumnBridge
+    def add(acc: Array[Long], n: Int, get: Int => Long, isNull: Int => Boolean): Array[Long] = {
+      val out = if (acc.length >= n) acc else java.util.Arrays.copyOf(acc, n)
+      var i = 0
+      while (i < n) { if (!isNull(i)) out(i) += get(i); i += 1 }
+      out
+    }
+    val parts = ColumnBridge.foldPartitions(visits) { rows =>
+      val sums = mutable.HashMap.empty[Int, Array[Long]]
+      rows.foreach { r =>
+        if (!r.isNullAt(0) && !r.isNullAt(at)) {
+          val v = r.getArray(at)
+          val c = r.getInt(0)
+          sums(c) = add(sums.getOrElse(c, Array.emptyLongArray), v.numElements(), v.getLong, v.isNullAt)
+        }
+      }
+      sums.toArray
+    }
+    parts.iterator.flatten.foldLeft(Map.empty[Int, Array[Long]]) { case (m, (c, a)) =>
+      m.updated(c, add(m.getOrElse(c, Array.emptyLongArray), a.length, a(_), _ => false))
+    }
   }
 
   /** Array-path heap collection: prune distributively (frequency floor +
@@ -417,14 +435,13 @@ object GenESeSS {
   /** Shared π̃ assembly: smoothed visit counts → row-stochastic emissions. */
   private def assemblePfsas(
       skeletons: Map[Int, Skeleton],
-      visitRows: Map[Int, Array[org.apache.spark.sql.Row]],
+      visits: Map[Int, Array[Long]],
       k: Int, params: Params): Map[Int, Pfsa] =
     skeletons.map { case (cluster, sk) =>
       val nq = sk.conn.length
       val counts = Array.fill(nq, k)(params.smooth) // Laplace smoothing: no 0-prob emissions
-      visitRows.getOrElse(cluster, Array.empty).foreach { r =>
-        val idx = r.getInt(1)
-        counts(idx / k)(idx % k) += r.getLong(2).toDouble
+      visits.getOrElse(cluster, Array.emptyLongArray).zipWithIndex.foreach { case (c, idx) =>
+        counts(idx / k)(idx % k) += c.toDouble
       }
       val pitilde = counts.map { row =>
         val tot = row.sum

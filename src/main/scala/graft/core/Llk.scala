@@ -136,4 +136,19 @@ object Llk {
     * one tie rule for the predicted `closest` and the confusion argmin. */
   def argmin(llks: Column): Column =
     (array_position(llks, array_min(llks)) - 1).cast("int")
+
+  /** [[argmin]] of one llk array outside SQL: the first non-null element
+    * no element is below in Spark's double order (NaN above every number,
+    * -0.0 equal to 0.0), or -1 when every element is null. */
+  private[core] def argminIndex(llks: org.apache.spark.sql.catalyst.util.ArrayData): Int = {
+    import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
+    var best = -1
+    var i = 0
+    while (i < llks.numElements()) {
+      if (!llks.isNullAt(i) &&
+          (best < 0 || compareDoubles(llks.getDouble(i), llks.getDouble(best)) < 0)) best = i
+      i += 1
+    }
+    best
+  }
 }

@@ -62,45 +62,63 @@ object Quantize {
     fitComplexWithMaxSymbol(df, valCol, nBins, detrend, relErr, seqCol, tCol)._1
 
   /** [[fitComplex]] plus the largest symbol [[applyComplex]] assigns on
-    * `df` (None when `df` has no rows), read off the same pass: the
-    * aggregate is Spark's own `approxQuantile` plan (posexplode of the
-    * value, `approx_percentile` grouped by the column index, same
-    * accuracy), so the cutoffs are bit-identical. NaN and NULL values are
-    * kept out of the sketch by a NULL-ing `when` instead of
-    * approxQuantile's `where`, which feeds the sketch the same values in
-    * the same order, and the sketch is also asked for its 1.0 quantile,
-    * its exact maximum. A second sketch over a 0/1 NaN flag answers
-    * whether any value is NaN (Spark orders NaN above every number). Both
-    * are imperative aggregates: no declarative buffer, so the pass
-    * generates no classes beyond the quantile plan's own. */
+    * `df` (None when `df` has no rows), read off the same pass. The pass
+    * is `approxQuantile`'s aggregate run by hand: every partition feeds
+    * its non-NaN values, in row order, to one sketch of Spark's
+    * `approx_percentile` (same accuracy), and the driver merges the
+    * serialized sketches in partition order, as the aggregate's final
+    * stage does — so the cutoffs are bit-identical, with no exchange and
+    * no generated class beyond the read of the values. The sketch is also
+    * asked for its 1.0 quantile, its exact maximum, and every partition
+    * notes whether it saw a NaN (Spark orders NaN above every number). */
   def fitComplexWithMaxSymbol(df: DataFrame, valCol: String = "value", nBins: Int = 8,
                               detrend: Boolean = false, relErr: Double = 1e-4,
                               seqCol: String = "seq_id", tCol: String = "t")
       : (ComplexModel, Option[Int]) = {
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal}
+    import org.apache.spark.sql.catalyst.expressions.aggregate.ApproximatePercentile
+    import org.apache.spark.sql.catalyst.util.ArrayData
     import org.apache.spark.sql.graft.ColumnBridge
-    val base = if (detrend) {
-      df.withColumn("__v",
-        coalesce(col(valCol) - lag(col(valCol), 1).over(seqW(seqCol, tCol)), lit(0.0)))
-    } else df.withColumn("__v", col(valCol))
-    val probes = (1 until nBins).map(_.toDouble / nBins).toArray
+    import org.apache.spark.sql.types.DoubleType
+    val raw = df.select(col(valCol))
+    // a double column is read as it is: a cast or alias would add a
+    // projection, and with it a generated class, to the pass
+    val values =
+      if (detrend) df.select(
+        coalesce(col(valCol) - lag(col(valCol), 1).over(seqW(seqCol, tCol)), lit(0.0)).cast("double"))
+      else if (raw.schema.head.dataType == DoubleType) raw
+      else raw.select(col(valCol).cast("double"))
+    val probes = (1 until nBins).map(_.toDouble / nBins).toArray :+ 1.0
     val accuracy = math.min(Int.MaxValue, math.ceil(1.0 / relErr).toLong).toInt
-    val v = col("value")
-    val rows = ColumnBridge.collectRows(base.select(col("__v"))
-      .select(posexplode(array(col("__v").cast("double"))).as(Seq("index", "value")))
-      .groupBy("index")
-      .agg(approx_percentile(when(!isnan(v), v), lit(probes :+ 1.0), lit(accuracy)),
-        approx_percentile(when(isnan(v), 1.0).when(v.isNotNull, 0.0), lit(Array(1.0)),
-          lit(accuracy))))
-    rows.headOption match {
-      case None => (ComplexModel(Array.empty, detrend), None)
-      case Some(r) =>
-        val sketch = if (r.isNullAt(1)) Array.empty[Double] else r.getSeq[Double](1).toArray
-        val model = ComplexModel(sketch.dropRight(1).distinct.sorted, detrend)
-        val anyNaN = !r.isNullAt(2) && r.getSeq[Double](2).head == 1.0
-        val maxSymbol =
-          if (anyNaN) model.cutoffs.length
-          else sketch.lastOption.fold(0)(graft.functions.BinIndex.count(_, model.cutoffs))
-        (model, Some(maxSymbol))
+    val sketch = new ApproximatePercentile(BoundReference(0, DoubleType, nullable = true),
+      Literal(probes), Literal(accuracy))
+    val partials = ColumnBridge.foldPartitions(values) { rows =>
+      if (!rows.hasNext) None
+      else {
+        val buf = sketch.createAggregationBuffer()
+        var nan = false
+        rows.foreach { r =>
+          if (!r.isNullAt(0)) {
+            val x = r.getDouble(0)
+            if (x.isNaN) nan = true else buf.add(x)
+          }
+        }
+        Some((sketch.serialize(buf), nan))
+      }
+    }.flatten
+    if (partials.isEmpty) (ComplexModel(Array.empty, detrend), None)
+    else {
+      val merged = partials.foldLeft(sketch.createAggregationBuffer()) { case (b, (bytes, _)) =>
+        sketch.merge(b, sketch.deserialize(bytes)) }
+      val sketched = sketch.eval(merged) match {
+        case a: ArrayData => a.toDoubleArray()
+        case _ => Array.empty[Double] // no non-NaN value
+      }
+      val model = ComplexModel(sketched.dropRight(1).distinct.sorted, detrend)
+      val maxSymbol =
+        if (partials.exists(_._2)) model.cutoffs.length
+        else sketched.lastOption.fold(0)(graft.functions.BinIndex.count(_, model.cutoffs))
+      (model, Some(maxSymbol))
     }
   }
 

@@ -183,14 +183,20 @@ object AnomalyDetection {
         // observed cluster ids come FREE from the relabel's counts (rank r
         // has members iff sizes(r) > 0) — inferAllLong otherwise re-scans
         // the labeled frame just to re-derive them (r16)
+        def ranks(sizes: Seq[Long]) = sizes.zipWithIndex.collect { case (n, r) if n > 0 => r }
         val (lbl, observed) = feat match {
-          // the join key is the partitioning key, so the labels co-partition
-          // in and the joined frame keeps q's (seq_id, t) order
+          // the default clusterer labels each feature row itself
+          case Some(f) if clusterer.isEmpty =>
+            val (label, seen) =
+              if (k > 1) {
+                val (l, sizes) = Cluster.kmeansLabeler(f, k, params.kmeansSeed)
+                (l, ranks(sizes))
+              } else ((_: org.apache.spark.ml.linalg.Vector) => 0, Seq(0))
+            (withLabels(q, f, label).persist(MEMORY_AND_DISK), seen)
           case Some(f) =>
             val (l, sizes) = Cluster.assignFeaturesWithStats(
               f, k, params.kmeansSeed, clusterer)
-            (q.drop("cluster").join(l, "seq_id").persist(MEMORY_AND_DISK),
-              sizes.zipWithIndex.collect { case (n, r) if n > 0 => r })
+            (q.drop("cluster").join(l, "seq_id").persist(MEMORY_AND_DISK), ranks(sizes))
           // constant label: q itself, no join
           case None => (q, Seq(0))
         }
@@ -252,6 +258,49 @@ object AnomalyDetection {
       feat.foreach(_.unpersist())
       q.unpersist()
     }
+  }
+
+  /** `q` with each row's `cluster` set to `label` of its sequence's
+    * features in `feat (seq_id, features)`: the rows of q's inner join
+    * with the labels on seq_id, in q's order and partitioning. The fit's
+    * features are an aggregate over q that adds no exchange, so partition
+    * i of `feat` holds the sequences of partition i of q, and the two zip
+    * partition by partition — no label plan, broadcast or join. A
+    * sequence without features in its partition fails the zip. */
+  private def withLabels(q: DataFrame, feat: DataFrame,
+                         label: org.apache.spark.ml.linalg.Vector => Int): DataFrame = {
+    import org.apache.spark.ml.linalg.{SQLDataTypes, Vector}
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.UnsafeRow
+    import org.apache.spark.sql.graft.ColumnBridge
+    import org.apache.spark.sql.types.{StructType, UserDefinedType}
+    val (qs, qc) = (q.schema.fieldIndex("seq_id"), q.schema.fieldIndex("cluster"))
+    val (fs, ff) = (feat.schema.fieldIndex("seq_id"), feat.schema.fieldIndex("features"))
+    val seqType = q.schema(qs).dataType
+    val udt = SQLDataTypes.VectorType.asInstanceOf[UserDefinedType[Vector]]
+    val width = udt.sqlType.asInstanceOf[StructType].length
+    val zipped = ColumnBridge.internalRows(q).zipPartitions(ColumnBridge.internalRows(feat)) {
+      (rows, features) =>
+        val byId = scala.collection.mutable.HashMap.empty[Any, Int]
+        features.foreach { r =>
+          if (!r.isNullAt(fs)) byId(InternalRow.copyValue(r.get(fs, seqType))) =
+            label(udt.deserialize(r.getStruct(ff, width)))
+        }
+        var out: UnsafeRow = null
+        rows.filter(!_.isNullAt(qs)).map { r =>
+          val id = r.get(qs, seqType)
+          val c = byId.getOrElse(id, throw new IllegalStateException(
+            s"AnomalyDetection.fit: sequence $id has no features in its partition"))
+          r match {
+            case u: UnsafeRow => // one reused row: the consumer copies it out
+              if (out == null) out = u.copy() else out.copyFrom(u)
+              out.setInt(qc, c); out
+            case g =>
+              val o = g.copy(); o.setInt(qc, c); o
+          }
+        }
+    }
+    ColumnBridge.sameLayout(q, zipped)
   }
 
   /** Score new long-form data against a fitted model.

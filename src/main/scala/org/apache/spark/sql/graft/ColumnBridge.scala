@@ -35,6 +35,60 @@ object ColumnBridge {
     }
   }
 
+  /** Fold each partition of `df`'s rows into one value and return the
+    * values in partition order, inside one SQL execution. A k-row read of
+    * a grouped aggregate done this way needs no exchange, no final
+    * aggregate and no deserializer, so it runs one job and compiles no
+    * class beyond the plan of `df` itself. `fold` must copy what it keeps
+    * of a row: the plan reuses its row buffers. */
+  def foldPartitions[U: scala.reflect.ClassTag](df: org.apache.spark.sql.DataFrame)(
+      fold: Iterator[org.apache.spark.sql.catalyst.InternalRow] => U): Array[U] = {
+    val qe = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].queryExecution
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe, Some("collect")) {
+      qe.executedPlan.execute().mapPartitions(rows => Iterator.single(fold(rows))).collect()
+    }
+  }
+
+  /** The rows of `df`'s executed plan, as the plan's own operators see
+    * them (no deserializer). */
+  def internalRows(df: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow] =
+    df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].queryExecution.executedPlan.execute()
+
+  /** A DataFrame over `rows`, which hold `like`'s rows partition for
+    * partition (each partition possibly changed in place, but no row moved
+    * to another partition or out of order): it has `like`'s schema and
+    * reports `like`'s output partitioning and ordering, so operators keyed
+    * like `like` add no exchange or sort over it. */
+  def sameLayout(like: org.apache.spark.sql.DataFrame,
+                 rows: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow])
+      : org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, SortOrder}
+    import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, UnknownPartitioning}
+    val ds = like.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+    // an adaptive plan reports no layout of its own; its physical plan does
+    val plan = ds.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    val output = org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(like.schema)
+    val byName = output.map(a => a.name -> a).toMap
+    val unique = byName.size == output.length
+    def rebind(e: Expression): Option[Expression] =
+      if (unique && e.references.forall(a => byName.contains(a.name)))
+        Some(e.transform { case a: Attribute => byName(a.name) })
+      else None
+    val partitioning = plan.outputPartitioning match {
+      case e: Expression => rebind(e).map(_.asInstanceOf[Partitioning])
+        .getOrElse(UnknownPartitioning(rows.getNumPartitions))
+      case other => other
+    }
+    val ordering = plan.outputOrdering.map(rebind).takeWhile(_.nonEmpty)
+      .map(_.get.asInstanceOf[SortOrder])
+    ofRows(ds.sparkSession, org.apache.spark.sql.execution.LogicalRDD(
+      output, rows, partitioning, ordering)(ds.sparkSession))
+  }
+
   /** Block until the async listener bus has DELIVERED every queued event
     * (`LiveListenerBus.waitUntilEmpty`, `private[spark]`) — the exact
     * drain barrier listener-tallying harness code needs; snapshot-polling

@@ -389,14 +389,67 @@ class AnomalyDetectionSpec extends AnyFunSuite {
     assert(closest == Seq(1, 1, 1, 1), closest.toString)
   }
 
+  test("string sequence ids label through the fit and predict every sequence") {
+    import org.apache.spark.sql.functions.{concat, lit}
+    val train = twoRegimes(6, 3000, 1900L)
+      .withColumn("seq_id", concat(lit("s"), col("seq_id").cast("string")))
+    val params = AnomalyDetection.Params(anomalySensitivity = 2.0, nClusters = 2,
+      reduceClusters = true, quantize = false, eps = 0.05)
+    val (model, pred) = AnomalyDetection.fitPredict(spark, train, params)
+    def rows(df: DataFrame) = df.collect().map(r => (r.getString(0), r.getBoolean(1),
+      r.getInt(2), java.lang.Double.doubleToRawLongBits(r.getDouble(3)))).sortBy(_._1).toSeq
+    val fused = rows(pred)
+    assert(fused.map(_._1) == (0 until 12).map(i => s"s$i").sorted)
+    assert(fused == rows(AnomalyDetection.predict(spark, model, train)))
+    assert(model.library.size == 2, model.library.size.toString)
+  }
+
+  test("llkTally's partition fold gives Spark's avg, stddev_samp and count_if bit for bit") {
+    import org.apache.spark.sql.functions.{avg, count_if, element_at, stddev_samp}
+    val rnd = new scala.util.Random(4242L)
+    val special = Array(-0.0, 0.0, Double.PositiveInfinity, Double.NaN, 1e300, -1e-300)
+    def llk(): Double =
+      if (rnd.nextInt(12) == 0) special(rnd.nextInt(special.length)) else rnd.nextGaussian() * 7
+    // cluster 3 has one member (stddev null → 0), cluster 4 only ties
+    val rows = (0 until 3000).map(i => (i.toLong, i % 3, Seq.fill(5)(llk()))) ++
+      Seq((5000L, 3, Seq(1.0, 2.0, 3.0, 4.0, 5.0))) ++
+      (0 until 7).map(i => (6000L + i, 4, Seq.fill(5)(2.5)))
+    val slots = 6
+    for (parts <- Seq(1, 3, 8)) {
+      val wide = rows.toDF("seq_id", "cluster", "llks").repartition(parts, col("seq_id"))
+        .persist()
+      try {
+        val got = graft.core.Cluster.llkTally(wide, 5, slots)
+        val best = graft.core.Llk.argmin(col("llks"))
+        val own = element_at(col("llks"), col("cluster") + 1)
+        val ref = wide.groupBy(col("cluster"))
+          .agg(avg(own), stddev_samp(own) +: (0 until slots).map(j => count_if(best === j)): _*)
+          .collect().map(r => r.getInt(0) -> r).toMap
+        assert(got.stats.keySet == ref.keySet && got.counts.keySet == ref.keySet)
+        ref.foreach { case (c, r) =>
+          val bits = java.lang.Double.doubleToRawLongBits _
+          val (m, sd) = got.stats(c)
+          assert(bits(m) == bits(r.getDouble(1)), s"$parts partitions, cluster $c: mean $m vs ${r.getDouble(1)}")
+          val refSd = if (r.isNullAt(2)) 0.0 else r.getDouble(2)
+          assert(bits(sd) == bits(refSd), s"$parts partitions, cluster $c: std $sd vs $refSd")
+          assert(got.counts(c).toSeq == (0 until 5).map(j => r.getLong(3 + j)),
+            s"$parts partitions, cluster $c: argmin counts")
+        }
+      } finally wide.unpersist()
+    }
+  }
+
   test("one converging fitPredict stays within its Spark-job budget") {
     // with the long-form llk tail (window-argmin confusion, a separate stats
     // join + group-by, a grouped prediction aggregate) this call ran 36
     // jobs; the wide matrix reads confusion and stats in one k-row collect
     // and projects the predictions (32); one labeled frame per fixpoint
     // step read by the heap, the visit sweep and the scoring, and the
-    // relabel counts taken from KMeans' training summary (28)
-    val budget = 28
+    // relabel counts taken from KMeans' training summary (28); the visit
+    // sums and the tally folded per partition instead of a second
+    // aggregate, and the labels zipped into the fit's frame instead of a
+    // broadcast join (25)
+    val budget = 25
     val train = twoRegimes(6, 4000, 1700L)
     val params = AnomalyDetection.Params(anomalySensitivity = 2.0, nClusters = 2,
       reduceClusters = true, quantize = false, eps = 0.05)
