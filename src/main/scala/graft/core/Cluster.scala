@@ -136,21 +136,7 @@ object Cluster {
     val (labeled, fitted): (DataFrame, Option[Model[_]]) =
       if (nClusters <= 1 && clusterer.isEmpty) (feat.withColumn("raw_label", lit(0)), None)
       else {
-        // eager checkpoint BEFORE the fit: the feature sweep behind `feat`
-        // is otherwise re-evaluated by the sizing count, every estimator
-        // pass, transform, AND the relabel collect (uncached verdict-grid
-        // callers paid it 3-4x); the frame is one row per sequence, so the
-        // materialization is KB-to-MB scale at any corpus size. Skipped
-        // when the caller already persisted it (the fit path does) — a
-        // second materialization of a cached frame is pure overhead (r16)
-        val f =
-          if (feat.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-            feat.localCheckpoint(true)
-          else feat
-        val est = clusterer.getOrElse(
-          new KMeans().setK(nClusters).setSeed(seed)
-            .setFeaturesCol("features").setPredictionCol("raw_label"))
-        val m = est.fit(sizedForFit(f))
+        val (f, m) = fitOn(feat)(clusterer.getOrElse(seededKMeans(nClusters, seed)).fit(_))
         (m.transform(f), Some(m))
       }
     val (relabelCol, _, sizes) = frequencyRelabel(labeled, nClusters, fitted)
@@ -161,19 +147,35 @@ object Cluster {
       sizes)
   }
 
-  /** Seeded KMeans on `feat` (checkpointed first unless the caller
-    * persisted it — see [[assignFeaturesWithStats]]) and its frequency
-    * relabel: (features read, model, relabel column, raw label → rank,
-    * member counts by rank). */
-  private def fitKMeans(feat: DataFrame, nClusters: Int, seed: Long)
-      : (DataFrame, KMeansModel, org.apache.spark.sql.Column, Map[Int, Int], Seq[Long]) = {
+  /** The default clusterer: KMeans labeling `features` into `raw_label`. */
+  private def seededKMeans(nClusters: Int, seed: Long): KMeans =
+    new KMeans().setK(nClusters).setSeed(seed)
+      .setFeaturesCol("features").setPredictionCol("raw_label")
+
+  /** Fit an estimator on `feat`, sized by [[sizedForFit]]: (features read,
+    * model).
+    *
+    * Eager checkpoint BEFORE the fit: the feature sweep behind `feat` is
+    * otherwise re-evaluated by the sizing count, every estimator pass,
+    * transform, AND the relabel collect (uncached verdict-grid callers paid
+    * it 3-4x); the frame is one row per sequence, so the materialization is
+    * KB-to-MB scale at any corpus size. Skipped when the caller already
+    * persisted it (the fit path does) — a second materialization of a
+    * cached frame is pure overhead (r16). */
+  private def fitOn[M](feat: DataFrame)(fit: DataFrame => M): (DataFrame, M) = {
     val f =
       if (feat.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
         feat.localCheckpoint(true)
       else feat
-    val model = new KMeans().setK(nClusters).setSeed(seed)
-      .setFeaturesCol("features").setPredictionCol("raw_label")
-      .fit(sizedForFit(f))
+    (f, fit(sizedForFit(f)))
+  }
+
+  /** Seeded KMeans on `feat` ([[fitOn]]) and its frequency relabel:
+    * (features read, model, relabel column, raw label → rank, member
+    * counts by rank). */
+  private def fitKMeans(feat: DataFrame, nClusters: Int, seed: Long)
+      : (DataFrame, KMeansModel, org.apache.spark.sql.Column, Map[Int, Int], Seq[Long]) = {
+    val (f, model) = fitOn(feat)(seededKMeans(nClusters, seed).fit(_))
     val (relabelCol, rankMap, sizes) = frequencyRelabel(model.transform(f), nClusters, Some(model))
     (f, model, relabelCol, rankMap, sizes)
   }

@@ -451,13 +451,6 @@ object GenESeSS {
         Some(sk.synStr).filter(_.nonEmpty))
     }
 
-  /** Same kernel on a single sequence (online library growth, reference
-    * detection.py:694-724). Delegates to the fully-local path — no Spark job
-    * for a single window. */
-  def inferSingle(spark: SparkSession, symbols: Array[Byte], alphabetSize: Int,
-                  params: Params = Params()): Pfsa =
-    inferLocal(symbols, alphabetSize, params)
-
   /** Local (single-JVM) derivative heap for ONE sequence — same counting as
     * [[ngramCounts]], for use where inference must run inside an executor /
     * stream state handler (no nested Spark jobs). Bounded by `maxContexts`

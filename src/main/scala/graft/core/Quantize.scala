@@ -122,6 +122,32 @@ object Quantize {
     }
   }
 
+  /** The `quantize_type` dispatch (reference __quantize,
+    * detection.py:272-308) of the batch and the online detector:
+    * passthrough when `quantize` is off, else simple | simple-second |
+    * complex. The complex partition is `fitted` when given, else fitted
+    * here on `df` with `nBins` bins.
+    *
+    * @return (symbol frame, complex partition, the largest symbol when
+    *         this call fitted the partition and its pass read it) */
+  def byType(df: DataFrame, quantize: Boolean, quantizeType: String, nBins: Int,
+             fitted: Option[ComplexModel] = None)
+      : (DataFrame, Option[ComplexModel], Option[Option[Int]]) =
+    if (!quantize) (passthrough(df), None, None)
+    else quantizeType match {
+      case "simple" => (simple(df), None, None)
+      case "simple-second" => (simpleSecond(df), None, None)
+      case "complex" =>
+        val (m, maxSymbol) = fitted match {
+          case Some(m) => (m, None)
+          case None =>
+            val (m, mx) = fitComplexWithMaxSymbol(df, nBins = nBins)
+            (m, Some(mx))
+        }
+        (applyComplex(df, m), Some(m), maxSymbol)
+      case other => throw new IllegalArgumentException(s"unknown quantize_type: $other")
+    }
+
   /** Apply a fitted partition: symbol = #cutoffs < value
     * ([[graft.functions.BinIndex]]: whole-stage codegen, the cutoffs ride
     * as one referenced array, so every model shares one generated class). */

@@ -46,20 +46,6 @@ object AnomalyDetection {
       }
   }
 
-  /** Quantize the long form according to params (reference __quantize,
-    * detection.py:272-308), reusing a fitted partition when given. */
-  private def quantizeLong(df: DataFrame, params: Params,
-                           fitted: Option[Quantize.ComplexModel]): (DataFrame, Option[Quantize.ComplexModel]) =
-    if (!params.quantize) (Quantize.passthrough(df), None)
-    else params.quantizeType match {
-      case "simple" => (Quantize.simple(df), None)
-      case "simple-second" => (Quantize.simpleSecond(df), None)
-      case "complex" =>
-        val m = fitted.getOrElse(Quantize.fitComplex(df, nBins = params.nSymbols))
-        (Quantize.applyComplex(df, m), Some(m))
-      case other => throw new IllegalArgumentException(s"unknown quantize_type: $other")
-    }
-
   /** Long quantized form → one row per sequence: (seq_id, symbols). */
   def toArrays(df: DataFrame): DataFrame =
     df.groupBy(col("seq_id"))
@@ -129,13 +115,7 @@ object AnomalyDetection {
     // the complex quantizer's fit pass also reads the largest symbol off
     // its aggregate; the other quantizers need one max query over q
     val (quantized, complexModel, fittedMax) =
-      if (params.quantize && params.quantizeType == "complex") {
-        val (m, maxSym) = Quantize.fitComplexWithMaxSymbol(longDf, nBins = params.nSymbols)
-        (Quantize.applyComplex(longDf, m), Some(m), Some(maxSym))
-      } else {
-        val (d, m) = quantizeLong(longDf, params, None)
-        (d, m, None)
-      }
+      Quantize.byType(longDf, params.quantize, params.quantizeType, params.nSymbols)
     // ONE shuffle + sort (+ dense-t re-rank, see densify) for the whole fit:
     // every downstream pass (features, inference heap, visit sweep, the
     // scoring passes) needs seq_id partitioning with t-ascending rows, so pay
@@ -319,7 +299,9 @@ object AnomalyDetection {
     *         closest = -1.
     */
   def predict(spark: SparkSession, model: Model, longDf: DataFrame): DataFrame = {
-    val (quantized, _) = quantizeLong(longDf, model.params, model.complexModel)
+    val p = model.params
+    val (quantized, _, _) =
+      Quantize.byType(longDf, p.quantize, p.quantizeType, p.nSymbols, model.complexModel)
     // same dense-t normalization as fit (one shuffle, which scoreWide then
     // reuses via presort = false)
     predictions(Llk.scoreWide(spark, densify(quantized), model.library, presort = false), model)

@@ -59,8 +59,8 @@ object ContinuousDetection {
     * @return (library after the window, emerged?, llk on the
     *         explaining/new entry, index of that entry)
     */
-  def step(lib: Vector[LibEntry], symbols: Array[Byte], p: Params,
-           seedBase: Long): (Vector[LibEntry], Boolean, Double, Int) = {
+  private def step(lib: Vector[LibEntry], symbols: Array[Byte], p: Params,
+                   seedBase: Long): (Vector[LibEntry], Boolean, Double, Int) = {
     // alphabet_size = max+1, NOT distinct count (detection.py:647-650;
     // load-bearing quirk per SURVEY §7.4.4)
     val alpha = if (symbols.isEmpty) 1 else symbols.map(_.toInt).max + 1
@@ -96,18 +96,10 @@ object ContinuousDetection {
 
   /** Quantize + segment the long form `(seq_id, t, value)` into per-window
     * symbol arrays `(seq_id, win_id, symbols)`. */
-  def segments(longDf: DataFrame, p: Params): DataFrame = {
-    val quantized =
-      if (!p.quantize) Quantize.passthrough(longDf)
-      else p.quantizeType match {
-        case "simple" => Quantize.simple(longDf)
-        case "simple-second" => Quantize.simpleSecond(longDf)
-        case "complex" =>
-          Quantize.applyComplex(longDf, Quantize.fitComplex(longDf, nBins = p.nSymbols))
-        case other => throw new IllegalArgumentException(s"unknown quantize_type: $other")
-      }
-    Segment.windowArrays(quantized, p.windowSize, p.windowOverlap)
-  }
+  def segments(longDf: DataFrame, p: Params): DataFrame =
+    Segment.windowArrays(
+      Quantize.byType(longDf, p.quantize, p.quantizeType, p.nSymbols)._1,
+      p.windowSize, p.windowOverlap)
 
   /** Batch replay of the online loop over long-form input holding one or
     * many independent streams. Windows are folded in win_id order inside one
@@ -141,6 +133,24 @@ object ContinuousDetection {
   private[graft] def seedBase(pSeed: Long, sid: Long, wid: Long): Long =
     pSeed + sid * 7919L + wid * 104729L
 
+  /** The online loop (detection.py:628-691) and [[step]]'s one caller:
+    * each `(win_id, symbols)` runs at its [[seedBase]] seed against the
+    * library the previous window left. The batch replay and the stream
+    * handlers only assemble the windows and keep the returned library.
+    *
+    * @return (library after the last window, one row per window in order) */
+  private[graft] def foldWindows(sid: Long, lib0: Vector[LibEntry],
+                                 windows: Iterator[(Long, Array[Byte])],
+                                 p: Params): (Vector[LibEntry], Array[WindowScore]) = {
+    var lib = lib0
+    val rows = windows.map { case (wid, syms) =>
+      val (next, emerged, llk, closest) = step(lib, syms, p, seedBase(p.seed, sid, wid))
+      lib = next
+      WindowScore(sid, wid, emerged, llk, closest, lib.size)
+    }.toArray
+    (lib, rows)
+  }
+
   /** The [[fitStream]] fold, emitting [[WindowEvidence]] rows. Seeds and
     * step semantics are identical — [[fitStream]] is a projection of this. */
   def fitStreamEvidence(spark: SparkSession, longDf: DataFrame, p: Params)
@@ -154,16 +164,14 @@ object ContinuousDetection {
       .groupByKey(_._1)
       .flatMapGroups { (sid: Long, it: Iterator[(Long, Long, Seq[Byte])]) =>
         val sorted = it.toArray.sortBy(_._2)
-        var lib = Vector.empty[LibEntry]
-        sorted.iterator.map { case (_, wid, syms) =>
-          val before = lib.size
-          val (next, emerged, llk, closest) =
-            step(lib, syms.toArray, p, seedBase = seedBase(p.seed, sid, wid))
-          val (bp, bm, bs) =
-            if (emerged) { val e = next.last; (Some(e.pfsa.toText), e.mean, e.std) }
-            else (None, 0.0, 0.0)
-          lib = next
-          WindowEvidence(sid, wid, emerged, llk, closest, before, next.size, bp, bm, bs, syms)
+        val (lib, rows) = foldWindows(sid, Vector.empty,
+          sorted.iterator.map { case (_, wid, syms) => (wid, syms.toArray) }, p)
+        // the library only grows: a newborn keeps its index, `closest`
+        rows.iterator.zip(sorted.iterator).map { case (s, (_, _, syms)) =>
+          val born = if (s.emerged) Some(lib(s.closest)) else None
+          WindowEvidence(sid, s.win_id, s.emerged, s.llk, s.closest, s.n_patterns - born.size,
+            s.n_patterns, born.map(_.pfsa.toText), born.fold(0.0)(_.mean), born.fold(0.0)(_.std),
+            syms)
         }
       }
   }

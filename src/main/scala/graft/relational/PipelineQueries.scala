@@ -260,7 +260,7 @@ object PipelineQueries {
   def pfsaInferSingle(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val one = Pfsa.m2.sample(4000, seed = 7L)
-    val p = GenESeSS.inferSingle(s, one, alphabetSize = 2, GenESeSS.Params(eps = 0.2))
+    val p = GenESeSS.inferLocal(one, alphabetSize = 2, GenESeSS.Params(eps = 0.2))
     (for (q <- p.pitilde.indices; sym <- 0 until p.alphabetSize)
       yield (q, sym, BigDecimal(p.pitilde(q)(sym)).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble,
         p.conn(q)(sym)))

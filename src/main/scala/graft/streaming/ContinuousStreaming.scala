@@ -34,16 +34,11 @@ object ContinuousStreaming {
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (sid: Long, it: Iterator[(Long, Long, Seq[Byte])],
          state: GroupState[Vector[LibEntry]]) =>
-          var lib = state.getOption.getOrElse(Vector.empty)
-          val out = it.toArray.sortBy(_._2).map { case (_, wid, syms) =>
-            val (next, emerged, llk, closest) =
-              ContinuousDetection.step(lib, syms.toArray, p,
-                seedBase = p.seed + sid * 7919L + wid * 104729L)
-            lib = next
-            WindowScore(sid, wid, emerged, llk, closest, lib.size)
-          }
+          val (lib, rows) = ContinuousDetection.foldWindows(sid,
+            state.getOption.getOrElse(Vector.empty),
+            it.toArray.sortBy(_._2).iterator.map { case (_, wid, syms) => (wid, syms.toArray) }, p)
           state.update(lib)
-          out.iterator
+          rows.iterator
       }
   }
 
@@ -89,9 +84,11 @@ object ContinuousStreaming {
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (sid: Long, it: Iterator[(Long, Long, Seq[Byte], java.sql.Timestamp)],
          state: GroupState[(Vector[LibEntry], Long, Map[Long, (Seq[Byte], Long)])]) =>
-          var (lib, nextWin, pending) =
+          val (lib0, nextWin0, pending0) =
             state.getOption.getOrElse(
               (Vector.empty[LibEntry], 0L, Map.empty[Long, (Seq[Byte], Long)]))
+          var nextWin = nextWin0
+          var pending = pending0
           // -1 when the watermark hasn't advanced yet; batch execution has
           // no watermark at all (the Try) — both mean "nothing is late"
           val wm = scala.util.Try(state.getCurrentWatermarkMs()).getOrElse(-1L)
@@ -103,42 +100,39 @@ object ContinuousStreaming {
             if ((wm <= 0L || ts.getTime >= wm) && wid >= nextWin && !pending.contains(wid))
               pending += wid -> (syms, ts.getTime)
           }
-          val out = scala.collection.mutable.ArrayBuffer[WindowScore]()
-          var progress = true
-          while (progress) {
-            pending.get(nextWin) match {
-              case Some((syms, _)) =>
-                val (next, emerged, llk, closest) =
-                  ContinuousDetection.step(lib, syms.toArray, p,
-                    seedBase = p.seed + sid * 7919L + nextWin * 104729L)
-                lib = next
-                out += WindowScore(sid, nextWin, emerged, llk, closest, lib.size)
-                pending -= nextWin
-                nextWin += 1
-              case None =>
-                // single traversal folds both minima (hole checks happen at
-                // most once per hole per trigger; no per-check full rescans)
-                var minWid = Long.MaxValue
-                var minTs = Long.MaxValue
-                pending.foreach { case (k2, (_, t2)) =>
-                  if (k2 < minWid) minWid = k2
-                  if (t2 < minTs) minTs = t2
-                }
-                val giveUp = pending.nonEmpty &&
-                  (pending.size > maxPending || (wm > 0L && minTs < wm))
-                if (giveUp) nextWin = minWid
-                else progress = false
+          // the frontier window is ready, or a hole before it is abandoned
+          // (the frontier jumps to the oldest pending window)
+          def ready: Boolean = pending.contains(nextWin) || {
+            // single traversal folds both minima (hole checks happen at
+            // most once per hole per trigger; no per-check full rescans)
+            var minWid = Long.MaxValue
+            var minTs = Long.MaxValue
+            pending.foreach { case (k2, (_, t2)) =>
+              if (k2 < minWid) minWid = k2
+              if (t2 < minTs) minTs = t2
             }
+            val giveUp = pending.nonEmpty &&
+              (pending.size > maxPending || (wm > 0L && minTs < wm))
+            if (giveUp) nextWin = minWid
+            giveUp
           }
+          val inOrder = Iterator.continually(()).takeWhile(_ => ready).map { _ =>
+            val wid = nextWin
+            val syms = pending(wid)._1
+            pending -= wid
+            nextWin += 1
+            (wid, syms.toArray)
+          }
+          val (lib, rows) = ContinuousDetection.foldWindows(sid, lib0, inOrder, p)
           state.update((lib, nextWin, pending))
-          out.iterator
+          rows.iterator
       }
   }
 
   /** Same online loop fed by a RAW symbol stream `(stream_id, t, symbol)` —
     * window assembly happens inside the state handler: per key, symbols are
     * buffered until `windowSize` accumulate, each completed window runs
-    * [[ContinuousDetection.step]], and the buffer keeps `windowOverlap`
+    * through [[ContinuousDetection.foldWindows]], and the buffer keeps `windowOverlap`
     * symbols of carry. State = (library, carry buffer ≤ windowSize, next
     * window id) — bounded per stream regardless of stream length.
     *
@@ -160,32 +154,22 @@ object ContinuousStreaming {
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (sid: Long, it: Iterator[(Long, Long, Byte)],
          state: GroupState[(Vector[LibEntry], Seq[Byte], Long)]) =>
-          var (lib, carry, nextWin) =
+          val (lib0, carry, nextWin) =
             state.getOption.getOrElse((Vector.empty[LibEntry], Seq.empty[Byte], 0L))
           // advancing-offset scan with ONE compaction per trigger: shifting
           // the remainder per emitted window (buf.remove(0, stride)) is
           // O(n²/stride) element moves for an n-symbol batch — a 1M-symbol
           // trigger at stride 500 would do ~2G moves; this does n
-          val carryArr = carry.toArray
-          val incoming = it.toArray.sortBy(_._2)
-          val all = new Array[Byte](carryArr.length + incoming.length)
-          System.arraycopy(carryArr, 0, all, 0, carryArr.length)
-          var ii = 0
-          while (ii < incoming.length) { all(carryArr.length + ii) = incoming(ii)._3; ii += 1 }
-          val out = scala.collection.mutable.ArrayBuffer[WindowScore]()
-          var off = 0
-          while (all.length - off >= p.windowSize) {
-            val win = java.util.Arrays.copyOfRange(all, off, off + p.windowSize)
-            val (next, emerged, llk, closest) =
-              ContinuousDetection.step(lib, win, p,
-                seedBase = p.seed + sid * 7919L + nextWin * 104729L)
-            lib = next
-            out += WindowScore(sid, nextWin, emerged, llk, closest, lib.size)
-            nextWin += 1
-            off += stride
-          }
-          state.update((lib, java.util.Arrays.copyOfRange(all, off, all.length).toSeq, nextWin))
-          out.iterator
+          val all = carry.toArray ++ it.toArray.sortBy(_._2).map(_._3)
+          val complete =
+            if (all.length < p.windowSize) 0 else (all.length - p.windowSize) / stride + 1
+          val wins = Iterator.range(0, complete).map(w =>
+            (nextWin + w, java.util.Arrays.copyOfRange(all, w * stride, w * stride + p.windowSize)))
+          val (lib, rows) = ContinuousDetection.foldWindows(sid, lib0, wins, p)
+          val off = rows.length * stride
+          state.update((lib, java.util.Arrays.copyOfRange(all, off, all.length).toSeq,
+            nextWin + rows.length))
+          rows.iterator
       }
   }
 }

@@ -12,7 +12,7 @@ class GenESeSSSpec extends AnyFunSuite {
 
   test("recovers M2's emission probabilities from sampled data") {
     val data = Pfsa.m2.sample(200000, seed = 11)
-    val inferred = GenESeSS.inferSingle(spark, data, alphabetSize = 2,
+    val inferred = GenESeSS.inferLocal(data, alphabetSize = 2,
       GenESeSS.Params(eps = 0.05))
     // M2 has 2 states with δ(q,σ)=σ: state ≡ last symbol. The inferred
     // machine must explain the data about as well as the generator itself.
@@ -189,7 +189,7 @@ class GenESeSSSpec extends AnyFunSuite {
   }
 
   test("degenerate input yields a usable 1-state machine") {
-    val p = GenESeSS.inferSingle(spark, Array[Byte](1), alphabetSize = 2)
+    val p = GenESeSS.inferLocal(Array[Byte](1), alphabetSize = 2)
     assert(p.numStates == 1)
     assert(math.abs(p.pitilde(0).sum - 1.0) < 1e-9)
   }

@@ -124,4 +124,14 @@ class QuantizeSegmentSpec extends AnyFunSuite {
     assert(code.nonEmpty && !code.contains("1.2345678912345") && !code.contains("2.7182818284591"),
       "a cutoff is inlined in the generated code")
   }
+
+  test("both detectors reject an unknown quantize_type with the dispatch's message") {
+    import graft.pipeline.{AnomalyDetection, ContinuousDetection}
+    val df = longDf((1 to 20).map(_.toDouble))
+    val batch = intercept[IllegalArgumentException](AnomalyDetection.fit(spark, df,
+      AnomalyDetection.Params(quantizeType = "bogus")))
+    val online = intercept[IllegalArgumentException](ContinuousDetection.fitStream(spark, df,
+      ContinuousDetection.Params(windowSize = 10, quantizeType = "bogus")))
+    Seq(batch, online).foreach(e => assert(e.getMessage == "unknown quantize_type: bogus"))
+  }
 }
