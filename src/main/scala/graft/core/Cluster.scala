@@ -2,6 +2,8 @@ package graft.core
 
 import org.apache.spark.ml.{Estimator, Model}
 import org.apache.spark.ml.clustering.{KMeans, KMeansModel}
+import org.apache.spark.ml.clustering.graft.KMeansLocal
+import org.apache.spark.ml.linalg.Vector
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
@@ -54,20 +56,6 @@ object Cluster {
         graft.functions.LlkFeatureVector(ColumnBridge.expression(col("llks")))).as("features"))
   }
 
-  /** Cluster labels from a `(seq_id, …, features)` frame, relabeled so 0 =
-    * most frequent (reference detection.py:332-354). The feature vectors
-    * depend only on the sequences and alphabet, so callers that re-cluster
-    * the same data at several k — the reduce-clusters fixpoint re-invokes
-    * inference per candidate k (detection.py:401-469) — persist the
-    * [[featuresLong]] frame once and pay the llk sweep once, not per
-    * iteration.
-    *
-    * `clusterer` makes the algorithm pluggable like the reference's
-    * `clustering_alg` constructor knob (detection.py:26,332-339;
-    * FeatureAgglomeration in examples/example3.ipynb): pass any MLlib
-    * estimator configured with `setFeaturesCol("features")` and
-    * `setPredictionCol("raw_label")` (e.g. `BisectingKMeans`,
-    * `GaussianMixture`); default is seeded KMeans. */
   /** Frequency relabel shared by every assign variant (reference's
     * double-argsort trick, detection.py:341-347): rank labels by
     * descending member count (k = nClusters, tiny) and map them back
@@ -76,20 +64,11 @@ object Cluster {
     * clusterer fitted but assigned NO rows (KMeans can return an empty
     * cluster) get the remaining ranks after the observed ones, in label
     * order — every raw label 0..k-1 maps to a distinct rank, so center
-    * lookups keyed by rank can never collide or miss. The member counts
-    * come from the fitted model when it already holds them (KMeans'
-    * training summary counts its predictions during `fit`), else from a
-    * k-row aggregate of `labeled`. Returns (relabel column, raw-label →
-    * rank map, member counts by rank). */
-  private def frequencyRelabel(labeled: DataFrame, nClusters: Int, fitted: Option[Model[_]])
+    * lookups keyed by rank can never collide or miss. `counts` are the
+    * (label, members) of the observed labels. Returns (relabel column,
+    * raw-label → rank map, member counts by rank). */
+  private def frequencyRelabel(counts: Seq[(Int, Long)], nClusters: Int)
       : (org.apache.spark.sql.Column, Map[Int, Int], Seq[Long]) = {
-    val counts = fitted match {
-      case Some(m: KMeansModel) if m.hasSummary =>
-        m.summary.clusterSizes.zipWithIndex.collect { case (n, lbl) if n > 0 => (lbl, n) }
-      case _ =>
-        labeled.groupBy(col("raw_label")).agg(count(lit(1)).as("cnt"))
-          .collect().map(r => (r.getInt(0), r.getLong(1)))
-    }
     val observed = counts
       .sortBy { case (lbl, cnt) => (-cnt, lbl) }
       .zipWithIndex.map { case ((lbl, _), rank) => lbl -> rank }
@@ -104,6 +83,17 @@ object Cluster {
     (relabelCol, rankMap, sizesByRank)
   }
 
+  /** The observed labels of a per-label member count array. */
+  private def observed(sizes: Array[Long]): Seq[(Int, Long)] =
+    sizes.toSeq.zipWithIndex.collect { case (n, lbl) if n > 0 => (lbl, n) }
+
+  /** Feature rows per clusterer partition. */
+  private val RowsPerFitPartition = 100000L
+
+  /** Below this many feature rows the clusterer's input is one partition
+    * ([[sizedForFit]]) and the default KMeans fits on the driver. */
+  private val LocalFitRows = 2 * RowsPerFitPartition
+
   /** Partition the clusterer's FIT input to the data size (optimization
     * guide §2.2, r16): MLlib estimators iterate RDD jobs whose task count
     * is the input frame's partition count, and AQE never touches RDD jobs
@@ -112,34 +102,98 @@ object Cluster {
     * as-is vs 1.13 s coalesced for k=2 at sf0.1). One partition per 100k
     * feature rows (rows are seq_id + a 4-8 double vector), floor 1, never
     * more than the frame already has — at corpus scale the row count rules
-    * and this is a no-op, so nothing here is tuned to local[32]. The
-    * count is one job over a frame every caller evaluates repeatedly
-    * anyway (the fit path caches it; the verdict-grid paths re-evaluate
-    * it for transform and the output select). */
-  private def sizedForFit(feat: DataFrame): DataFrame = {
-    val cur = feat.rdd.getNumPartitions
-    val target = math.min(cur.toLong, math.max(1L, feat.count() / 100000L)).toInt
-    if (target < cur) feat.coalesce(target) else feat
+    * and this is a no-op, so nothing here is tuned to local[32]. `rows` is
+    * the count [[readFeatures]] took. */
+  private def sizedForFit(f: DataFrame, rows: Long): DataFrame = {
+    val cur = f.rdd.getNumPartitions
+    val target = math.min(cur.toLong, math.max(1L, rows / RowsPerFitPartition)).toInt
+    if (target < cur) f.coalesce(target) else f
   }
 
+  /** The fit input's one read, a [[ColumnBridge.foldPartitions]] pass that
+    * also materializes a cached `f`: its row count and, with `keepRows`,
+    * its feature vectors in the order `f.coalesce(1)` reads them — the
+    * order in which MLlib iterates [[sizedForFit]]'s one partition. A
+    * partition ships its vectors only while it holds at most
+    * [[LocalFitRows]] / partitions rows, so the driver never holds more
+    * than about [[LocalFitRows]]; there are no vectors when `f` has
+    * [[LocalFitRows]] rows or more, or a null vector. */
+  private def readFeatures(f: DataFrame, keepRows: Boolean): (Long, Option[Array[Vector]]) = {
+    import org.apache.spark.ml.linalg.SQLDataTypes
+    import org.apache.spark.sql.types.{StructType, UserDefinedType}
+    val parts = f.rdd.getNumPartitions
+    val cap = if (keepRows) LocalFitRows / math.max(1, parts) else -1L
+    val ff = f.schema.fieldIndex("features")
+    val udt = SQLDataTypes.VectorType.asInstanceOf[UserDefinedType[Vector]]
+    val width = udt.sqlType.asInstanceOf[StructType].length
+    val read = ColumnBridge.foldPartitions(f) { rows =>
+      var n = 0L
+      var kept = if (cap >= 0) scala.collection.mutable.ArrayBuffer.empty[Vector] else null
+      rows.foreach { r =>
+        n += 1
+        if (kept != null) {
+          if (n > cap || r.isNullAt(ff)) kept = null
+          else kept += udt.deserialize(r.getStruct(ff, width))
+        }
+      }
+      (n, Option(kept).map(_.toArray))
+    }
+    val total = read.map(_._1).sum
+    val vectors =
+      if (total >= LocalFitRows || read.exists(_._2.isEmpty)) None
+      else (if (read.length > 1) KMeansLocal.coalescedOrder(f) else Some(read.indices))
+        .filter(_.sorted == read.indices)
+        .map(_.flatMap(i => read(i)._2.get).toArray)
+    (total, vectors)
+  }
+
+  /** Cluster labels from a `(seq_id, …, features)` frame, relabeled so 0 =
+    * most frequent (reference detection.py:332-354). The feature vectors
+    * depend only on the sequences and alphabet, so callers that re-cluster
+    * the same data at several k — the reduce-clusters fixpoint re-invokes
+    * inference per candidate k (detection.py:401-469) — persist the
+    * [[featuresLong]] frame once and pay the llk sweep once, not per
+    * iteration.
+    *
+    * `clusterer` makes the algorithm pluggable like the reference's
+    * `clustering_alg` constructor knob (detection.py:26,332-339;
+    * FeatureAgglomeration in examples/example3.ipynb): pass any MLlib
+    * estimator configured with `setFeaturesCol("features")` and
+    * `setPredictionCol("raw_label")` (e.g. `BisectingKMeans`,
+    * `GaussianMixture`); default is seeded KMeans ([[fitKMeans]]). */
   def assignFeatures(feat: DataFrame, nClusters: Int, seed: Long = 42L,
                      clusterer: Option[Estimator[_ <: Model[_]]] = None): DataFrame =
     assignFeaturesWithStats(feat, nClusters, seed, clusterer)._1
 
   /** [[assignFeatures]] plus the member counts by relabeled rank — the
-    * counts already exist in the relabel's bounded collect, so callers
+    * counts come with the fit (the default KMeans counts them on the
+    * driver; a pluggable KMeans' training summary holds them), so callers
     * that need them (the cluster verdict grids' frequency-rank invariant)
-    * must not pay a second job over the uncached feature lineage. */
+    * must not pay a second job over the uncached feature lineage. Other
+    * clusterers' counts take one k-row aggregate of the labels. */
   def assignFeaturesWithStats(feat: DataFrame, nClusters: Int, seed: Long = 42L,
                               clusterer: Option[Estimator[_ <: Model[_]]] = None)
       : (DataFrame, Seq[Long]) = {
-    val (labeled, fitted): (DataFrame, Option[Model[_]]) =
-      if (nClusters <= 1 && clusterer.isEmpty) (feat.withColumn("raw_label", lit(0)), None)
-      else {
-        val (f, m) = fitOn(feat)(clusterer.getOrElse(seededKMeans(nClusters, seed)).fit(_))
-        (m.transform(f), Some(m))
-      }
-    val (relabelCol, _, sizes) = frequencyRelabel(labeled, nClusters, fitted)
+    def labelCounts(labeled: DataFrame) =
+      labeled.groupBy(col("raw_label")).agg(count(lit(1)).as("cnt"))
+        .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
+    val (labeled, counts): (DataFrame, Seq[(Int, Long)]) = clusterer match {
+      case None if nClusters <= 1 =>
+        val l = feat.withColumn("raw_label", lit(0))
+        (l, labelCounts(l))
+      case None =>
+        val (f, model, sizes) = fitKMeans(feat, nClusters, seed)
+        (model.transform(f), observed(sizes))
+      case Some(est) =>
+        val f = materialized(feat)
+        val m = est.fit(sizedForFit(f, readFeatures(f, keepRows = false)._1))
+        val l = m.transform(f)
+        (l, m match {
+          case km: KMeansModel if km.hasSummary => observed(km.summary.clusterSizes)
+          case _ => labelCounts(l)
+        })
+    }
+    val (relabelCol, _, sizes) = frequencyRelabel(counts, nClusters)
     // carry whatever payload columns rode along (symbols on the array path,
     // nothing extra on the long path) — only the ML bookkeeping is dropped
     val keep = feat.columns.filterNot(c => c == "features" || c == "raw_label")
@@ -152,32 +206,38 @@ object Cluster {
     new KMeans().setK(nClusters).setSeed(seed)
       .setFeaturesCol("features").setPredictionCol("raw_label")
 
-  /** Fit an estimator on `feat`, sized by [[sizedForFit]]: (features read,
-    * model).
-    *
-    * Eager checkpoint BEFORE the fit: the feature sweep behind `feat` is
-    * otherwise re-evaluated by the sizing count, every estimator pass,
-    * transform, AND the relabel collect (uncached verdict-grid callers paid
-    * it 3-4x); the frame is one row per sequence, so the materialization is
-    * KB-to-MB scale at any corpus size. Skipped when the caller already
-    * persisted it (the fit path does) — a second materialization of a
-    * cached frame is pure overhead (r16). */
-  private def fitOn[M](feat: DataFrame)(fit: DataFrame => M): (DataFrame, M) = {
-    val f =
-      if (feat.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-        feat.localCheckpoint(true)
-      else feat
-    (f, fit(sizedForFit(f)))
-  }
+  /** `feat` materialized for a fit: an eager checkpoint, since the feature
+    * sweep behind `feat` is otherwise re-evaluated by the features read,
+    * every estimator pass, transform, AND the relabel collect (uncached
+    * verdict-grid callers paid it 3-4x); the frame is one row per
+    * sequence, so the materialization is KB-to-MB scale at any corpus
+    * size. `feat` itself when the caller already persisted it (the fit
+    * path does) — a second materialization of a cached frame is pure
+    * overhead (r16). */
+  private def materialized(feat: DataFrame): DataFrame =
+    if (feat.storageLevel == org.apache.spark.storage.StorageLevel.NONE) feat.localCheckpoint(true)
+    else feat
 
-  /** Seeded KMeans on `feat` ([[fitOn]]) and its frequency relabel:
-    * (features read, model, relabel column, raw label → rank, member
-    * counts by rank). */
-  private def fitKMeans(feat: DataFrame, nClusters: Int, seed: Long)
-      : (DataFrame, KMeansModel, org.apache.spark.sql.Column, Map[Int, Int], Seq[Long]) = {
-    val (f, model) = fitOn(feat)(seededKMeans(nClusters, seed).fit(_))
-    val (relabelCol, rankMap, sizes) = frequencyRelabel(model.transform(f), nClusters, Some(model))
-    (f, model, relabelCol, rankMap, sizes)
+  /** Seeded KMeans on `feat`: (features read, model, members per raw
+    * label under the model). Below [[LocalFitRows]] feature rows — where
+    * MLlib would run every pass as one task over one partition — the fit
+    * runs on the driver ([[KMeansLocal]]: MLlib's algorithm and kernels
+    * over the same rows in the same order, so the same model bits) and
+    * costs one Spark job, the features read. A larger input, or one
+    * `KMeansLocal` does not reproduce, goes to MLlib's `KMeans.fit` on
+    * [[sizedForFit]]'s partitions. */
+  private[core] def fitKMeans(feat: DataFrame, nClusters: Int, seed: Long)
+      : (DataFrame, KMeansModel, Array[Long]) = {
+    val f = materialized(feat)
+    val kmeans = seededKMeans(nClusters, seed)
+    kmeans.transformSchema(f.schema)
+    val (total, vectors) = readFeatures(f, keepRows = true)
+    vectors.flatMap(KMeansLocal.fit(kmeans, _)) match {
+      case Some(local) => (f, local.model, local.clusterSizes)
+      case None =>
+        val model = kmeans.fit(sizedForFit(f, total))
+        (f, model, model.summary.clusterSizes)
+    }
   }
 
   /** The seeded-KMeans assign additionally returning the fitted cluster
@@ -190,7 +250,8 @@ object Cluster {
     * driver — the same bounded-collect class as the relabel rank map. */
   def assignFeaturesWithCenters(feat: DataFrame, nClusters: Int, seed: Long = 42L)
       : (DataFrame, Map[Int, Array[Double]], Seq[Long]) = {
-    val (f, model, relabelCol, rankMap, sizes) = fitKMeans(feat, nClusters, seed)
+    val (f, model, counts) = fitKMeans(feat, nClusters, seed)
+    val (relabelCol, rankMap, sizes) = frequencyRelabel(observed(counts), nClusters)
     val centers = model.clusterCenters.zipWithIndex.map { case (c, lbl) =>
       rankMap(lbl) -> c.toArray }.toMap
     (model.transform(f).select(col("seq_id"), col("features"),
@@ -203,10 +264,11 @@ object Cluster {
     * features row by row labels them without a plan of its own. Returns
     * it with the member counts by rank. Needs `nClusters` > 1. */
   def kmeansLabeler(feat: DataFrame, nClusters: Int, seed: Long = 42L)
-      : (org.apache.spark.ml.linalg.Vector => Int, Seq[Long]) = {
+      : (Vector => Int, Seq[Long]) = {
     require(nClusters > 1, s"kmeansLabeler: nClusters $nClusters <= 1")
-    val (_, model, _, rankMap, sizes) = fitKMeans(feat, nClusters, seed)
-    ((v: org.apache.spark.ml.linalg.Vector) => rankMap.getOrElse(model.predict(v), 0), sizes)
+    val (_, model, counts) = fitKMeans(feat, nClusters, seed)
+    val (_, rankMap, sizes) = frequencyRelabel(observed(counts), nClusters)
+    ((v: Vector) => rankMap.getOrElse(model.predict(v), 0), sizes)
   }
 
   /** Per fitted cluster i: `counts(i)(j)` = members whose [[Llk.argmin]]

@@ -158,8 +158,10 @@ object AnomalyDetection {
       // One labeled long frame `(seq_id, t, symbol, cluster)` per fixpoint
       // step, persisted: the inference heap, the visit sweep and the llk
       // scoring all read it, so the label join runs once per step and the
-      // tally needs no join of its own.
-      def inferForK(k: Int): (DataFrame, Map[Int, Pfsa]) = {
+      // tally needs no join of its own. The default clusterer relabels the
+      // previous step's frame `prev` (q for the first step), so each step
+      // holds one cached copy of the long data.
+      def inferForK(k: Int, prev: DataFrame): (DataFrame, Map[Int, Pfsa]) = {
         // observed cluster ids come FREE from the relabel's counts (rank r
         // has members iff sizes(r) > 0) — inferAllLong otherwise re-scans
         // the labeled frame just to re-derive them (r16)
@@ -172,7 +174,7 @@ object AnomalyDetection {
                 val (l, sizes) = Cluster.kmeansLabeler(f, k, params.kmeansSeed)
                 (l, ranks(sizes))
               } else ((_: org.apache.spark.ml.linalg.Vector) => 0, Seq(0))
-            (withLabels(q, f, label).persist(MEMORY_AND_DISK), seen)
+            (withLabels(prev, f, label).persist(MEMORY_AND_DISK), seen)
           case Some(f) =>
             val (l, sizes) = Cluster.assignFeaturesWithStats(
               f, k, params.kmeansSeed, clusterer)
@@ -186,9 +188,12 @@ object AnomalyDetection {
       }
 
       var k = k0
-      val r0 = inferForK(k)
+      val r0 = inferForK(k, q)
       labeled = r0._1
       var lib = r0._2
+      // the heap job materialized the labeled frame, and only the pluggable
+      // clusterer's later steps join q again
+      if ((labeled ne q) && clusterer.isEmpty) q.unpersist()
       // KMeans may emit fewer distinct labels than requested (duplicate
       // points); the frequency relabel makes label ids dense, so the
       // effective k is the library size
@@ -215,8 +220,10 @@ object AnomalyDetection {
         var reduced = Cluster.reducedClusterCount(t.fractions, k)
         while (reduced < k && iter < 5) {
           wide.unpersist()
-          labeled.unpersist()
-          val res = inferForK(reduced)
+          val prev = labeled
+          val res = inferForK(reduced, prev)
+          // released once the new frame's heap job has read it
+          prev.unpersist()
           labeled = res._1; lib = res._2
           k = lib.size
           iter += 1
@@ -245,7 +252,8 @@ object AnomalyDetection {
     * with the labels on seq_id, in q's order and partitioning. The fit's
     * features are an aggregate over q that adds no exchange, so partition
     * i of `feat` holds the sequences of partition i of q, and the two zip
-    * partition by partition — no label plan, broadcast or join. A
+    * partition by partition — no label plan, broadcast or join. `q` may be
+    * an earlier result of this function, which keeps q's partitions. A
     * sequence without features in its partition fails the zip. */
   private def withLabels(q: DataFrame, feat: DataFrame,
                          label: org.apache.spark.ml.linalg.Vector => Int): DataFrame = {

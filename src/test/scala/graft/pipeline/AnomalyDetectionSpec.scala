@@ -448,8 +448,9 @@ class AnomalyDetectionSpec extends AnyFunSuite {
     // relabel counts taken from KMeans' training summary (28); the visit
     // sums and the tally folded per partition instead of a second
     // aggregate, and the labels zipped into the fit's frame instead of a
-    // broadcast join (25)
-    val budget = 25
+    // broadcast join (25); the default KMeans fitted on the driver from one
+    // read of the features, which also replaces the sizing count (13)
+    val budget = 13
     val train = twoRegimes(6, 4000, 1700L)
     val params = AnomalyDetection.Params(anomalySensitivity = 2.0, nClusters = 2,
       reduceClusters = true, quantize = false, eps = 0.05)
@@ -470,6 +471,44 @@ class AnomalyDetectionSpec extends AnyFunSuite {
     } finally sc.removeSparkListener(listener)
     info(s"${jobs.get()} Spark jobs")
     assert(jobs.get() <= budget, s"fitPredict ran ${jobs.get()} Spark jobs, budget $budget")
+  }
+
+  test("the fixpoint holds one cached copy of the long data after each step") {
+    // q (seq_id, t, symbol, cluster) is released once the first labeled
+    // frame exists, and each later step relabels the previous frame and
+    // releases it after the new one's heap job; the per-sequence caches
+    // (features, wide llk rows) are a thousand times smaller
+    val params = AnomalyDetection.Params(anomalySensitivity = 2.0, nClusters = 5,
+      reduceClusters = true, quantize = false, eps = 0.05)
+    val train = twoRegimes(10, 1000, 3000L, uOffset = 500L)
+    val sc = spark.sparkContext
+    val group = "anomaly-detection-long-caches"
+    val before = sc.getRDDStorageInfo.map(_.id).toSet
+    val steps = new java.util.concurrent.ConcurrentLinkedQueue[Seq[Long]]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      // the tally opens each step's scoring, after its inference
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group &&
+            e.stageInfos.exists(_.details.contains("Cluster$.llkTally(")))
+          steps.add(sc.getRDDStorageInfo.toSeq.filter(i => !before(i.id) && i.numCachedPartitions > 0)
+            .map(i => i.memSize + i.diskSize))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "fixpoint caches")
+      try AnomalyDetection.fitPredict(spark, train, params)
+      finally sc.clearJobGroup()
+      org.apache.spark.sql.graft.ColumnBridge.waitListenerBusEmpty(sc, 30000L)
+    } finally sc.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    val seen = steps.asScala.toSeq
+    info(s"cached bytes per step: $seen")
+    // two steps (k 5 -> 4), each tally running its scoring jobs
+    assert(seen.size >= 2, s"expected the tallies of two fixpoint steps, saw ${seen.size} jobs")
+    val largest = seen.flatten.max
+    seen.foreach { sizes =>
+      assert(sizes.count(_ * 10 > largest) == 1, s"long-data caches alive at a step: $sizes")
+    }
   }
 
   /** Continuous streams cut like the benchmark's fit workload: each stream
