@@ -3,10 +3,12 @@ package graft.core
 import org.apache.spark.ml.{Estimator, Model}
 import org.apache.spark.ml.clustering.{KMeans, KMeansModel}
 import org.apache.spark.ml.clustering.graft.KMeansLocal
-import org.apache.spark.ml.linalg.Vector
+import org.apache.spark.ml.linalg.{Vector, Vectors}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.types.DataType
 
 /** Sequence clustering (reference detection.py:311-354).
   *
@@ -16,6 +18,15 @@ import org.apache.spark.sql.graft.ColumnBridge
   * feature vector against a small FIXED set of base PFSAs — KMeans on those
   * features clusters in the metric the divergence induces (likelihood
   * smashing, tex/ms.tex:290-291) at O(N·bases) instead of O(N²).
+  *
+  * The batch fit reads the features off its cached sequence blocks
+  * ([[SeqBlocks]]): the blocks carry each sequence's vector from the pass
+  * that builds them, that pass ships the vectors to the driver for the
+  * default KMeans ([[readFeatures]]), and the labels are applied inside
+  * the later passes, per sequence, by [[kmeansLabeler]] (or from a
+  * pluggable clusterer's labels). The tally ([[llkTally]]) folds over the
+  * same blocks. The DataFrame forms ([[featuresLong]], [[assignFeatures]],
+  * [[llkTally]] over wide rows) serve the other callers.
   */
 object Cluster {
 
@@ -48,13 +59,18 @@ object Cluster {
     * `(seq_id, t, symbol)` rows ([[Llk.scoreWide]], bit-exact with the
     * array kernel) — the fit path never materializes a sequence as one
     * array cell. The vector is the wide row's |bases| scores, in base
-    * order; `keys` as in [[Llk.scoreWide]]. */
-  def featuresLong(spark: SparkSession, longDf: DataFrame, alphabetSize: Int,
-                   presort: Boolean = true, keys: Seq[String] = Seq("seq_id")): DataFrame = {
-    Llk.scoreWide(spark, longDf, basePfsas(alphabetSize), presort = presort, keys = keys)
+    * order. */
+  def featuresLong(spark: SparkSession, longDf: DataFrame, alphabetSize: Int): DataFrame = {
+    Llk.scoreWide(spark, longDf, basePfsas(alphabetSize))
       .select(col("seq_id"), ColumnBridge.column(
         graft.functions.LlkFeatureVector(ColumnBridge.expression(col("llks")))).as("features"))
   }
+
+  /** The clustering features of one sequence fed through
+    * [[SeqBlocks.Sequence]] against [[basePfsas]]: the values
+    * [[featuresLong]] gives its row. */
+  private[core] def sequenceFeatures(seq: SeqBlocks.Sequence): Array[Double] =
+    seq.llks.map(graft.functions.LlkFeatureVector.of)
 
   /** Frequency relabel shared by every assign variant (reference's
     * double-argsort trick, detection.py:341-347): rank labels by
@@ -138,13 +154,55 @@ object Cluster {
       }
       (n, Option(kept).map(_.toArray))
     }
+    gathered(read, KMeansLocal.coalescedOrder(f))
+  }
+
+  /** The row count and driver vectors of per-partition reads (row count,
+    * vectors kept), the vectors in the partition `order` a one-partition
+    * coalesce reads. */
+  private def gathered(read: Array[(Long, Option[Array[Vector]])], order: => Option[Seq[Int]])
+      : (Long, Option[Array[Vector]]) = {
     val total = read.map(_._1).sum
     val vectors =
       if (total >= LocalFitRows || read.exists(_._2.isEmpty)) None
-      else (if (read.length > 1) KMeansLocal.coalescedOrder(f) else Some(read.indices))
+      else (if (read.length > 1) order else Some(read.indices))
         .filter(_.sorted == read.indices)
         .map(_.flatMap(i => read(i)._2.get).toArray)
     (total, vectors)
+  }
+
+  /** [[readFeatures]] of the features `blocks` carry: the job that
+    * materializes the cached blocks also ships their vectors to the
+    * driver, in the order a one-partition coalesce reads the blocks. */
+  private[graft] def readFeatures(blocks: RDD[SeqBlock]): (Long, Option[Array[Vector]]) = {
+    val cap = LocalFitRows / math.max(1, blocks.getNumPartitions)
+    val read = blocks.mapPartitions { it =>
+      var n = 0L
+      var kept = scala.collection.mutable.ArrayBuffer.empty[Vector]
+      it.foreach(_.features.foreach { f =>
+        n += 1
+        if (kept != null) { if (n > cap) kept = null else kept += Vectors.dense(f) }
+      })
+      Iterator.single((n, Option(kept).map(_.toArray)))
+    }.collect()
+    gathered(read, KMeansLocal.coalescedOrder(blocks))
+  }
+
+  /** The `(seq_id, features)` frame of the features `blocks` carry, for
+    * the estimators that need a frame: MLlib's KMeans above
+    * [[LocalFitRows]] rows and a pluggable clusterer. */
+  private[graft] def featureFrame(spark: SparkSession, blocks: RDD[SeqBlock],
+                                  seqType: DataType): DataFrame = {
+    import org.apache.spark.ml.linalg.SQLDataTypes
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.types.{StructField, StructType, UserDefinedType}
+    val udt = SQLDataTypes.VectorType.asInstanceOf[UserDefinedType[Vector]]
+    val rows = blocks.mapPartitions(_.flatMap { b =>
+      b.ids.indices.iterator.map(i =>
+        InternalRow(b.ids(i), udt.serialize(Vectors.dense(b.features(i)))): InternalRow)
+    })
+    ColumnBridge.fromRows(spark, rows, StructType(Seq(StructField("seq_id", seqType),
+      StructField("features", SQLDataTypes.VectorType, nullable = false))))
   }
 
   /** Cluster labels from a `(seq_id, …, features)` frame, relabeled so 0 =
@@ -229,14 +287,22 @@ object Cluster {
   private[core] def fitKMeans(feat: DataFrame, nClusters: Int, seed: Long)
       : (DataFrame, KMeansModel, Array[Long]) = {
     val f = materialized(feat)
+    seededKMeans(nClusters, seed).transformSchema(f.schema)
+    val (model, sizes) = fitKMeans(readFeatures(f, keepRows = true), f, nClusters, seed)
+    (f, model, sizes)
+  }
+
+  /** [[fitKMeans]] of features already read: (model, members per raw
+    * label). `frame` is the features frame, built only for MLlib's fit. */
+  private def fitKMeans(read: (Long, Option[Array[Vector]]), frame: => DataFrame,
+                        nClusters: Int, seed: Long): (KMeansModel, Array[Long]) = {
     val kmeans = seededKMeans(nClusters, seed)
-    kmeans.transformSchema(f.schema)
-    val (total, vectors) = readFeatures(f, keepRows = true)
+    val (total, vectors) = read
     vectors.flatMap(KMeansLocal.fit(kmeans, _)) match {
-      case Some(local) => (f, local.model, local.clusterSizes)
+      case Some(local) => (local.model, local.clusterSizes)
       case None =>
-        val model = kmeans.fit(sizedForFit(f, total))
-        (f, model, model.summary.clusterSizes)
+        val model = kmeans.fit(sizedForFit(frame, total))
+        (model, model.summary.clusterSizes)
     }
   }
 
@@ -261,12 +327,23 @@ object Cluster {
   /** The default clusterer's label of one feature vector — seeded KMeans'
     * own `predict` mapped through the frequency relabel, the `cluster`
     * [[assignFeaturesWithStats]] projects — so a caller that reads the
-    * features row by row labels them without a plan of its own. Returns
-    * it with the member counts by rank. Needs `nClusters` > 1. */
-  def kmeansLabeler(feat: DataFrame, nClusters: Int, seed: Long = 42L)
-      : (Vector => Int, Seq[Long]) = {
+    * features sequence by sequence labels them without a plan of its own.
+    * `read` is the features read ([[readFeatures]]), `frame` the features
+    * frame MLlib's fit needs when the driver fit does not apply. Returns
+    * the label with the member counts by rank. Needs `nClusters` > 1. */
+  private[graft] def kmeansLabeler(read: (Long, Option[Array[Vector]]), frame: => DataFrame,
+                                   nClusters: Int, seed: Long): (Vector => Int, Seq[Long]) = {
     require(nClusters > 1, s"kmeansLabeler: nClusters $nClusters <= 1")
-    val (_, model, counts) = fitKMeans(feat, nClusters, seed)
+    // MLlib's AUTO solver takes its block solver for fewer rows than
+    // dimensions, and that solver fails with an index error when the rows
+    // are also fewer than k: name the cause, as sklearn's n_samples check
+    // does (N <= 3 and k <= 8 mapped; N >= k or N >= d fit unchanged)
+    read._2.foreach { v =>
+      if (v.nonEmpty && v.length < v.head.size && v.length < nClusters)
+        throw new IllegalArgumentException(s"KMeans: n_samples=${v.length} should be >= " +
+          s"n_clusters=$nClusters: ${v.length} sequences cannot form $nClusters clusters")
+    }
+    val (model, counts) = fitKMeans(read, frame, nClusters, seed)
     val (_, rankMap, sizes) = frequencyRelabel(observed(counts), nClusters)
     ((v: Vector) => rankMap.getOrElse(model.predict(v), 0), sizes)
   }
@@ -292,7 +369,7 @@ object Cluster {
     * argmin ([[Llk.argmin]]) is counted for every j < `slots` (≥ k). */
   def llkTally(wide: DataFrame, k: Int, slots: Int): LlkTally = {
     require(slots >= k, s"llkTally: slots $slots < k $k")
-    val parts = ColumnBridge.foldPartitions(
+    tallied(ColumnBridge.foldPartitions(
         wide.select(col("cluster").cast("int"), col("llks"))) { rows =>
       val bufs = scala.collection.mutable.HashMap.empty[Int, TallyBuffer]
       rows.foreach { r =>
@@ -300,7 +377,30 @@ object Cluster {
           bufs.getOrElseUpdate(r.getInt(0), new TallyBuffer(slots)).update(r.getInt(0), r.getArray(1))
       }
       bufs.toArray
-    }
+    }, k, slots)
+  }
+
+  /** [[llkTally]] of the sequences of cached `blocks`, scored against the
+    * k-model `library` in one fold ([[Llk.foreachScored]]), `label`
+    * naming each sequence's cluster (< 0: not a member). The sequences of
+    * a partition update its buffers in the order of the rows the wide
+    * frame of the same partition holds, so the statistics are the same. */
+  private[graft] def llkTally(blocks: RDD[SeqBlock], label: (Any, Array[Double]) => Int,
+                              library: Seq[Pfsa], k: Int, slots: Int): LlkTally = {
+    require(slots >= k, s"llkTally: slots $slots < k $k")
+    val lib = library.toArray
+    tallied(blocks.mapPartitions { it =>
+      val bufs = scala.collection.mutable.HashMap.empty[Int, TallyBuffer]
+      Llk.foreachScored(it, lib, label) { (_, c, llks) =>
+        bufs.getOrElseUpdate(c, new TallyBuffer(slots))
+          .update(c, org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(llks))
+      }
+      Iterator.single(bufs.toArray)
+    }.collect(), k, slots)
+  }
+
+  /** The tally of per-partition buffers, merged in partition order. */
+  private def tallied(parts: Array[Array[(Int, TallyBuffer)]], k: Int, slots: Int): LlkTally = {
     val merged = scala.collection.mutable.HashMap.empty[Int, TallyBuffer]
     parts.foreach(_.foreach { case (c, b) =>
       merged.getOrElseUpdate(c, new TallyBuffer(slots)).merge(b) })

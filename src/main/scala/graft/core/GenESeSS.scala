@@ -361,6 +361,95 @@ object GenESeSS {
     assemblePfsas(skeletons, visits, k, params)
   }
 
+  /** [[inferAllLong]] over cached sequence blocks, `label` naming each
+    * sequence's cluster (< 0: in none) and `clusters` the clusters to
+    * infer. Two folds feed the aggregates' buffers one sequence at a time:
+    * the heap ([[graft.functions.PfsaHeapLong]], one buffer per cluster
+    * and partition, merged on the driver — counts are integers, so the
+    * merge is exact for any split) and the π̃ sweep
+    * ([[graft.functions.PfsaVisitLong]], one buffer per sequence, summed
+    * per cluster). Same machines as [[inferAllLong]] on the same rows. */
+  private[graft] def inferBlocks(blocks: org.apache.spark.rdd.RDD[SeqBlock],
+                                 label: (Any, Array[Double]) => Int, alphabetSize: Int,
+                                 params: Params, clusters: Seq[Int]): Map[Int, Pfsa] = {
+    import graft.functions.{PfsaHeapLong, PfsaVisitLong}
+    val k = alphabetSize
+    val L = contextLength(k, params.eps, params.maxL)
+    val heaps = blocks.mapPartitions { it =>
+      val bufs = mutable.HashMap.empty[Int, PfsaHeapLong.Buffer]
+      SeqBlocks.foreachSequence(it, new SeqBlocks.Visitor {
+        private var buf: PfsaHeapLong.Buffer = null
+        def begin(id: Any, features: Array[Double]): Unit = {
+          val c = label(id, features)
+          buf = if (c < 0) null else bufs.getOrElseUpdate(c, new PfsaHeapLong.Buffer(L))
+          if (buf != null) buf.beginSequence()
+        }
+        def symbols(s: Array[Byte], from: Int, until: Int): Unit =
+          if (buf != null) { var i = from; while (i < until) { buf.feed(s(i)); i += 1 } }
+        def end(): Unit = ()
+      })
+      Iterator.single(bufs.toArray.map { case (c, b) => (c, b.toBytes) })
+    }.collect()
+    val merged = mutable.HashMap.empty[Int, PfsaHeapLong.Buffer]
+    heaps.foreach(_.foreach { case (c, bytes) =>
+      val b = PfsaHeapLong.Buffer.fromBytes(bytes, L)
+      merged.get(c) match {
+        case Some(m) => m.absorb(b)
+        case None => merged(c) = b
+      }
+    })
+    val counts = merged.map { case (c, b) =>
+      val heap = b.result(params.minCtxCount, params.maxContexts)
+      c -> heapOf((0 until heap.numElements()).map { i =>
+        val e = heap.getStruct(i, 3)
+        (e.getArray(0).toByteArray().toSeq, e.getInt(1), e.getLong(2))
+      }, k)
+    }
+    val skeletons = clusters.map(c => c -> buildSkeleton(counts.getOrElse(c, Map.empty), k, params)).toMap
+    val conns = skeletons.map { case (c, sk) => c -> sk.conn }
+    val visits = blocks.mapPartitions { it =>
+      val sums = mutable.HashMap.empty[Int, Array[Long]]
+      SeqBlocks.foreachSequence(it, new SeqBlocks.Visitor {
+        private var c = -1
+        private var t = 0L
+        private var buf: PfsaVisitLong.Buffer = null
+        def begin(id: Any, features: Array[Double]): Unit = {
+          c = label(id, features)
+          t = 0L
+          buf = if (conns.contains(c)) new PfsaVisitLong.Buffer else null
+        }
+        def symbols(s: Array[Byte], from: Int, until: Int): Unit =
+          if (buf != null) {
+            var i = from
+            while (i < until) { buf.add(c, t, s(i).toInt, conns, k); t += 1; i += 1 }
+          }
+        def end(): Unit =
+          if (buf != null) {
+            val v = buf.result(conns, k)
+            sums(c) = addCounts(sums.getOrElse(c, Array.emptyLongArray), v.length, v(_), _ => false)
+          }
+      })
+      Iterator.single(sums.toArray)
+    }.collect()
+    assemblePfsas(skeletons, mergedVisits(visits), k, params)
+  }
+
+  /** `acc` plus the `n` counts `get` reads, skipping those `isNull` flags,
+    * grown to `n` when shorter. */
+  private def addCounts(acc: Array[Long], n: Int, get: Int => Long,
+                        isNull: Int => Boolean): Array[Long] = {
+    val out = if (acc.length >= n) acc else java.util.Arrays.copyOf(acc, n)
+    var i = 0
+    while (i < n) { if (!isNull(i)) out(i) += get(i); i += 1 }
+    out
+  }
+
+  /** Per-partition visit sums added up per cluster. */
+  private def mergedVisits(parts: Array[Array[(Int, Array[Long])]]): Map[Int, Array[Long]] =
+    parts.iterator.flatten.foldLeft(Map.empty[Int, Array[Long]]) { case (m, (c, a)) =>
+      m.updated(c, addCounts(m.getOrElse(c, Array.emptyLongArray), a.length, a(_), _ => false))
+    }
+
   /** Per-cluster sums of the flat |Q|·|Σ| visit-count arrays of `visits`'
     * rows (int `cluster` at ordinal 0, `array<bigint>` at `at`): each
     * partition sums its rows, and the driver adds up the k arrays each
@@ -369,26 +458,17 @@ object GenESeSS {
     * are skipped. */
   private def sumVisits(visits: DataFrame, at: Int): Map[Int, Array[Long]] = {
     import org.apache.spark.sql.graft.ColumnBridge
-    def add(acc: Array[Long], n: Int, get: Int => Long, isNull: Int => Boolean): Array[Long] = {
-      val out = if (acc.length >= n) acc else java.util.Arrays.copyOf(acc, n)
-      var i = 0
-      while (i < n) { if (!isNull(i)) out(i) += get(i); i += 1 }
-      out
-    }
-    val parts = ColumnBridge.foldPartitions(visits) { rows =>
+    mergedVisits(ColumnBridge.foldPartitions(visits) { rows =>
       val sums = mutable.HashMap.empty[Int, Array[Long]]
       rows.foreach { r =>
         if (!r.isNullAt(0) && !r.isNullAt(at)) {
           val v = r.getArray(at)
           val c = r.getInt(0)
-          sums(c) = add(sums.getOrElse(c, Array.emptyLongArray), v.numElements(), v.getLong, v.isNullAt)
+          sums(c) = addCounts(sums.getOrElse(c, Array.emptyLongArray), v.numElements(), v.getLong, v.isNullAt)
         }
       }
       sums.toArray
-    }
-    parts.iterator.flatten.foldLeft(Map.empty[Int, Array[Long]]) { case (m, (c, a)) =>
-      m.updated(c, add(m.getOrElse(c, Array.emptyLongArray), a.length, a(_), _ => false))
-    }
+    })
   }
 
   /** Array-path heap collection: prune distributively (frequency floor +

@@ -106,12 +106,9 @@ object Llk {
     *               one run per gap; per-partition arrival must be t-ascending
     *               when presort=false; t < 0 is rejected) and
     *               `symbol` (tinyint)
-    * @param keys   grouping columns, `seq_id` among them: the rows of one
-    *               group are one sequence (e.g. `Seq("cluster", "seq_id")`
-    *               keeps a per-sequence label beside its llks)
     */
   def scoreWide(spark: SparkSession, longDf: DataFrame, library: Seq[Pfsa],
-                presort: Boolean = true, keys: Seq[String] = Seq("seq_id")): DataFrame = {
+                presort: Boolean = true): DataFrame = {
     import org.apache.spark.sql.graft.ColumnBridge
     val agg = ColumnBridge.column(
       graft.functions.LlkLongScore(
@@ -123,7 +120,49 @@ object Llk {
       else longDf
     // the groupBy reuses the repartition's hashpartitioning (no second
     // exchange — EnsureRequirements sees the child distribution satisfied)
-    src.groupBy(keys.map(col): _*).agg(agg.as("llks"))
+    src.groupBy(col("seq_id")).agg(agg.as("llks"))
+  }
+
+  /** Feeds each sequence of a partition's `blocks` whose `label` is not
+    * negative through [[graft.functions.LlkLongScore]]'s buffer for
+    * `library`, in t order from t = 0 — the buffer then folds [[llk]]'s
+    * arithmetic operation for operation, so `llks(j)` is
+    * `llk(symbols, library(j))` bit for bit, whatever the plan shape — and
+    * hands `f` its (seq_id, label, llks), in the blocks' order. */
+  private[graft] def foreachScored(blocks: Iterator[SeqBlock], library: Array[Pfsa],
+                                   label: (Any, Array[Double]) => Int)
+                                  (f: (Any, Int, Array[Double]) => Unit): Unit =
+    SeqBlocks.foreachSequence(blocks, new SeqBlocks.Visitor {
+      private var id: Any = null
+      private var c = -1
+      private var seq: SeqBlocks.Sequence = null
+      def begin(i: Any, features: Array[Double]): Unit = {
+        id = i
+        c = label(i, features)
+        seq = if (c < 0) null else new SeqBlocks.Sequence(library)
+      }
+      def symbols(s: Array[Byte], from: Int, until: Int): Unit =
+        if (seq != null) seq.addAll(s, from, until)
+      def end(): Unit = if (seq != null) f(id, c, seq.llks)
+    })
+
+  /** The wide llk rows `(seq_id, llks)` of [[scoreWide]], from one fold
+    * over sequence blocks ([[foreachScored]]). */
+  private[graft] def scoreBlocks(spark: SparkSession, blocks: org.apache.spark.rdd.RDD[SeqBlock],
+                                 seqType: org.apache.spark.sql.types.DataType,
+                                 library: Seq[Pfsa]): DataFrame = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    import org.apache.spark.sql.types._
+    val lib = library.toArray
+    val rows = blocks.mapPartitions { it =>
+      val out = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
+      foreachScored(it, lib, (_, _) => 0)((id, _, llks) => out += InternalRow(id, ArrayData.toArrayData(llks)))
+      out.iterator
+    }
+    org.apache.spark.sql.graft.ColumnBridge.fromRows(spark, rows, StructType(Seq(
+      StructField("seq_id", seqType),
+      StructField("llks", ArrayType(DoubleType, containsNull = false), nullable = false))))
   }
 
   /** [[scoreWide]] as long (seq_id, cluster_id, llk) rows. */

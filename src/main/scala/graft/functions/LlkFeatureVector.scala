@@ -20,10 +20,7 @@ case class LlkFeatureVector(child: Expression) extends UnaryExpression with Code
 
   override protected def nullSafeEval(input: Any): Any = {
     val llks = input.asInstanceOf[ArrayData]
-    val values = Array.tabulate(llks.numElements()) { i =>
-      val v = llks.getDouble(i)
-      if (v.isInfinite || v.isNaN) 1e6 else v
-    }
+    val values = Array.tabulate(llks.numElements())(i => LlkFeatureVector.of(llks.getDouble(i)))
     val row = new GenericInternalRow(4)
     row.setByte(0, 1)
     row.setNullAt(1)
@@ -34,4 +31,9 @@ case class LlkFeatureVector(child: Expression) extends UnaryExpression with Code
 
   override protected def withNewChildInternal(newChild: Expression): LlkFeatureVector =
     copy(child = newChild)
+}
+
+object LlkFeatureVector {
+  /** The feature value of one llk. */
+  def of(llk: Double): Double = if (llk.isInfinite || llk.isNaN) 1e6 else llk
 }

@@ -283,6 +283,17 @@ object PfsaHeapLong {
       lastRun = insert(lastRuns, r)
     }
 
+    // a caller that holds a whole sequence feeds it here in t order, and no
+    // other buffer sees it: its run counts exactly what add() would count,
+    // and needs no per-sequence entry to join at eval
+    private var fed: Run = null
+
+    /** Opens a sequence for [[feed]]. */
+    private[graft] def beginSequence(): Unit = fed = new Run(0L, -1L, L)
+
+    /** The next symbol of the sequence [[beginSequence]] opened. */
+    private[graft] def feed(s: Byte): Unit = append(fed, s)
+
     def absorb(other: Buffer): Unit = {
       // the other trie's node ids → this trie's (parents precede children)
       val map = new Array[Int](other.nodes)

@@ -9,16 +9,25 @@ import org.apache.spark.sql.functions._
   *
   * fit (detection.py:77-99): quantize → cluster → infer one PFSA per cluster
   * → per-cluster llk stats. predict (detection.py:102-163): score every
-  * sequence against the broadcast library; anomalous iff llk exceeds
+  * sequence against the library; anomalous iff llk exceeds
   * mean + sensitivity·std for EVERY cluster (detection.py:147-149).
-  *
-  * Like the reference's `cluster_llks`, the llk matrix stays WIDE (one row
-  * per sequence, [[Llk.scoreWide]]): the confusion and stats
-  * ([[Cluster.llkTally]]) and the predictions are all read off that row.
   *
   * Input is the long/tidy form `(seq_id, t, value)` (SURVEY.md §1.4) rather
   * than the reference's row-per-sequence wide frame — the representation that
-  * scales: partitioned by seq_id, no wide schemas, models broadcast.
+  * scales: partitioned by seq_id, no wide schemas.
+  *
+  * The paper's llk (Alg. 1) and GenESeSS inference (Alg. 2) each read one
+  * sequence in order, and so does the engine: after the quantizer, fit and
+  * predict exchange the rows once into cached per-partition sequence
+  * blocks ([[SeqBlocks]]) and run every pass as one RDD fold over them —
+  * no Catalyst plan, columnar cache or aggregate operator per pass. A
+  * converging fitPredict runs seven Spark jobs (the complex quantizer's
+  * sketch — or, for the other quantizers, a read of the largest symbol —
+  * the exchange, blocks + features, heap, visit sweep, scoring + tally,
+  * predictions), and each further fixpoint step three. Like the reference's
+  * `cluster_llks`, the llks of a sequence form one wide row: the
+  * confusion and stats ([[Cluster.llkTally]]) and the predictions are
+  * read off it.
   */
 object AnomalyDetection {
 
@@ -52,31 +61,15 @@ object AnomalyDetection {
       .agg(expr("transform(array_sort(collect_list(struct(t, symbol))), x -> x.symbol)")
         .as("symbols"))
 
-  /** Partition by seq_id, sort (seq_id, t) within partitions, and re-rank `t`
-    * DENSE (0, 1, 2, …) per sequence. The run-based aggregates
-    * ([[graft.functions.LlkLongScore]] / [[graft.functions.PfsaVisitLong]])
-    * extend a run only on `t == tLast + 1`, so sparse user t — epoch
-    * timestamps, strided window positions — would open one run PER ROW and
-    * grow per-group buffer state linearly with sequence length, defeating
-    * their O(|Q|·k) design. Dense re-ranking preserves order (the only thing
-    * the fold semantics depend on) and restores the O(1)-runs shape for any
-    * sortable t. The rank is the row's [[graft.functions.PositionInRun]] of
-    * its seq_id in the sorted partition — `row_number() - 1` of the window
-    * over the same sort, without a window operator — so this costs no extra
-    * shuffle; downstream passes consume the result with `presort = false`. */
-  private[pipeline] def densify(df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.graft.ColumnBridge
-    df.repartition(col("seq_id"))
-      .sortWithinPartitions(col("seq_id"), col("t"))
-      .withColumn("t", ColumnBridge.column(
-        graft.functions.PositionInRun(ColumnBridge.expression(col("seq_id")))))
-  }
-
-  /** Fit works entirely on the LONG form — features, inference heap, π̃
-    * visit sweep and the scoring passes all fold over `(seq_id, t, symbol)`
-    * rows (Llk.scoreWide / GenESeSS.inferAllLong), so no stage ever
-    * materializes a sequence as one array cell and training streams have no
-    * length ceiling (the reference caps at 500k symbols, examples/M2.cfg).
+  /** Fit reads its input once: the quantized rows go through ONE exchange
+    * by seq_id and a (seq_id, t) sort into compact per-partition sequence
+    * blocks ([[SeqBlocks]]), cached, and every later pass — the base-model
+    * features, the GenESeSS heap, the π̃ visit sweep, the llk scoring with
+    * its tally — is one plain fold over those blocks, feeding the
+    * aggregates' own buffers a sequence at a time. No stage materializes a
+    * sequence as one array cell (a long sequence spans blocks), so training
+    * streams have no length ceiling (the reference caps at 500k symbols,
+    * examples/M2.cfg). Only the t order matters, so any sortable t works.
     *
     * @param clusterer optional pluggable clustering estimator (reference
     *                   `clustering_alg`, detection.py:26) — see
@@ -85,131 +78,90 @@ object AnomalyDetection {
           clusterer: Option[org.apache.spark.ml.Estimator[_ <: org.apache.spark.ml.Model[_]]] = None): Model =
     fitImpl(spark, longDf, params, clusterer, alsoPredict = false)._1
 
-  /** [[fit]] fused with a [[predict]] over the SAME input (r17, guide §2.4
-    * "two operations keyed the same way can share"): a separate
-    * fit-then-predict pair re-quantized + re-shuffled the input and re-ran
-    * the full scoring pass predict needs — but the fit already scores every
-    * sequence against the final library for its stats, so the fused form
-    * projects the predictions from that cached wide llk matrix (one row of
-    * k llks per sequence, tiny), reading the fit's cached quantized frame
-    * and never touching the source again. Values are identical by
-    * construction: predict's scoring input densify(quantize(longDf)) IS
-    * the fit's cached frame, and the projection is the same
-    * [[predictions]] both paths share. The returned predictions are
-    * eagerly materialized (the fit's caches are released before return). */
+  /** [[fit]] fused with a [[predict]] over the SAME input: the
+    * predictions are scored from the fit's cached blocks with the final
+    * library, through the fold [[predict]] runs, and projected by the same
+    * [[predictions]] — so they equal fit-then-predict's bit for bit, and
+    * the source is read once. The returned predictions are eagerly
+    * materialized (the fit's cache is released before return). */
   def fitPredict(spark: SparkSession, longDf: DataFrame, params: Params = Params(),
                  clusterer: Option[org.apache.spark.ml.Estimator[_ <: org.apache.spark.ml.Model[_]]] = None): (Model, DataFrame) = {
     val (model, pred) = fitImpl(spark, longDf, params, clusterer, alsoPredict = true)
     (model, pred.get)
   }
 
-  /** Grouping of the fit's scoring passes: the visit sweep's keys, so the
-    * feature pass, the library scoring and the sweep share one aggregate
-    * shape. */
-  private val ByLabel = Seq("cluster", "seq_id")
-
   private def fitImpl(spark: SparkSession, longDf: DataFrame, params: Params,
                       clusterer: Option[org.apache.spark.ml.Estimator[_ <: org.apache.spark.ml.Model[_]]],
                       alsoPredict: Boolean): (Model, Option[DataFrame]) = {
+    import org.apache.spark.ml.linalg.Vectors
     import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // the complex quantizer's fit pass also reads the largest symbol off
-    // its aggregate; the other quantizers need one max query over q
+    // its aggregate; the other quantizers read it off the blocks
     val (quantized, complexModel, fittedMax) =
       Quantize.byType(longDf, params.quantize, params.quantizeType, params.nSymbols)
-    // ONE shuffle + sort (+ dense-t re-rank, see densify) for the whole fit:
-    // every downstream pass (features, inference heap, visit sweep, the
-    // scoring passes) needs seq_id partitioning with t-ascending rows, so pay
-    // it once into the cache and run those passes with presort=false. The
-    // cache has the labeled frames' schema (a constant `cluster` until the
-    // labels exist), so the feature and the library scoring passes run the
-    // same plan and share their generated classes.
-    val q = densify(quantized.select(col("seq_id"), col("t"), col("symbol")))
-      .withColumn("cluster", lit(0))
-      .persist(MEMORY_AND_DISK)
-    // caches released in the finally (not just the happy path): repeated
-    // fit callers in one session must not accumulate blocks when a stage
-    // throws mid-fit
-    var feat: Option[DataFrame] = None
-    var labeled: DataFrame = null
-    var wide: DataFrame = null
+    val (rows, seqType) = SeqBlocks.sortedRows(quantized)
+    // llk features vs the base PFSAs depend only on (sequences, alphabet),
+    // so the blocks carry them from the pass that builds them. With k <= 1
+    // and the default clusterer the label is a constant and no feature is
+    // computed.
+    val k0 = math.max(1, params.nClusters)
+    val withFeatures = k0 > 1 || clusterer.nonEmpty
+    // the ONE cached copy of the data for the whole fit, released in the
+    // finally on every exit path
+    var blocks: org.apache.spark.rdd.RDD[SeqBlock] = null
+    var feat: DataFrame = null
     try {
       val maxSym = fittedMax.getOrElse {
-        val r = q.agg(max(col("symbol"))).head()
-        if (r.isNullAt(0)) None else Some(r.getByte(0).toInt)
+        if (withFeatures) SeqBlocks.maxSymbol(SeqBlocks.cut(rows, seqType, None))
+        else {
+          blocks = SeqBlocks.cut(rows, seqType, None).persist(MEMORY_AND_DISK)
+          SeqBlocks.maxSymbol(blocks)
+        }
       }
       require(maxSym.nonEmpty, "AnomalyDetection.fit: input has no rows after quantization")
       val alphabetSize = math.max(2, maxSym.get + 1)
       val genParams = GenESeSS.Params(eps = params.eps)
+      if (blocks == null) blocks = SeqBlocks.cut(rows, seqType,
+        if (withFeatures) Some(Cluster.basePfsas(alphabetSize)) else None).persist(MEMORY_AND_DISK)
 
-      // llk features vs the base PFSAs depend only on (sequences, alphabet):
-      // compute them ONCE — the reduce-clusters fixpoint below re-invokes
-      // inferForK per candidate k, and without this the base-model llk sweep
-      // re-ran every iteration. With k <= 1 and the default clusterer the
-      // labels are a CONSTANT (Cluster.assignFeatures short-circuits), so the
-      // whole 4-base-model scoring sweep is skipped — the k = 1 fits in
-      // stream_fit_predict / multilevel level-2 were paying it for nothing.
-      val k0 = math.max(1, params.nClusters)
-      feat =
-        if (k0 > 1 || clusterer.nonEmpty)
-          Some(Cluster.featuresLong(spark, q, alphabetSize, presort = false,
-            keys = ByLabel).cache())
-        else None
-
-      // One labeled long frame `(seq_id, t, symbol, cluster)` per fixpoint
-      // step, persisted: the inference heap, the visit sweep and the llk
-      // scoring all read it, so the label join runs once per step and the
-      // tally needs no join of its own. The default clusterer relabels the
-      // previous step's frame `prev` (q for the first step), so each step
-      // holds one cached copy of the long data.
-      def inferForK(k: Int, prev: DataFrame): (DataFrame, Map[Int, Pfsa]) = {
-        // observed cluster ids come FREE from the relabel's counts (rank r
-        // has members iff sizes(r) > 0) — inferAllLong otherwise re-scans
-        // the labeled frame just to re-derive them (r16)
+      // the default clusterer's features reach the driver once, with the
+      // job that materializes the blocks, for every fixpoint step's KMeans
+      lazy val read = Cluster.readFeatures(blocks)
+      def frame: DataFrame = {
+        if (feat == null) feat = Cluster.featureFrame(spark, blocks, seqType).persist(MEMORY_AND_DISK)
+        feat
+      }
+      // each step's label of a sequence, applied inside the passes, and
+      // the clusters with members (rank r has members iff sizes(r) > 0)
+      def labels(k: Int): ((Any, Array[Double]) => Int, Seq[Int]) = {
         def ranks(sizes: Seq[Long]) = sizes.zipWithIndex.collect { case (n, r) if n > 0 => r }
-        val (lbl, observed) = feat match {
-          // the default clusterer labels each feature row itself
-          case Some(f) if clusterer.isEmpty =>
-            val (label, seen) =
-              if (k > 1) {
-                val (l, sizes) = Cluster.kmeansLabeler(f, k, params.kmeansSeed)
-                (l, ranks(sizes))
-              } else ((_: org.apache.spark.ml.linalg.Vector) => 0, Seq(0))
-            (withLabels(prev, f, label).persist(MEMORY_AND_DISK), seen)
-          case Some(f) =>
-            val (l, sizes) = Cluster.assignFeaturesWithStats(
-              f, k, params.kmeansSeed, clusterer)
-            (q.drop("cluster").join(l, "seq_id").persist(MEMORY_AND_DISK), ranks(sizes))
-          // constant label: q itself, no join
-          case None => (q, Seq(0))
+        clusterer match {
+          case None if withFeatures && k > 1 =>
+            val (label, sizes) = Cluster.kmeansLabeler(read, frame, k, params.kmeansSeed)
+            ((_: Any, f: Array[Double]) => label(Vectors.dense(f)), ranks(sizes))
+          case None => ((_: Any, _: Array[Double]) => 0, Seq(0))
+          case Some(_) =>
+            val (l, sizes) = Cluster.assignFeaturesWithStats(frame, k, params.kmeansSeed, clusterer)
+            val byId = org.apache.spark.sql.graft.ColumnBridge.internalRows(l.select(col("seq_id"),
+                col("cluster")))
+              .map(r => (org.apache.spark.sql.catalyst.InternalRow.copyValue(
+                if (r.isNullAt(0)) null else r.get(0, seqType)), r.getInt(1)))
+              .collect().toMap
+            ((id: Any, _: Array[Double]) => byId.getOrElse(id, -1), ranks(sizes))
         }
-        val lib = GenESeSS.inferAllLong(spark, lbl, alphabetSize, genParams,
-          presort = false, knownClusters = Some(observed))
-        (lbl, lib)
       }
 
       var k = k0
-      val r0 = inferForK(k, q)
-      labeled = r0._1
-      var lib = r0._2
-      // the heap job materialized the labeled frame, and only the pluggable
-      // clusterer's later steps join q again
-      if ((labeled ne q) && clusterer.isEmpty) q.unpersist()
+      var (label, observed) = labels(k)
+      var lib = GenESeSS.inferBlocks(blocks, label, alphabetSize, genParams, observed)
       // KMeans may emit fewer distinct labels than requested (duplicate
       // points); the frequency relabel makes label ids dense, so the
       // effective k is the library size
       k = lib.size
       // the fixpoint only shrinks k: every tally counts argmins over the
-      // first library's size, so each step runs the same aggregate
+      // first library's size, so each step runs the same fold
       val slots = k
-
-      // one cached wide llk row per (sequence, label); a single k-row
-      // collect reads the confusion and the stats off it, and fitPredict
-      // projects it
-      def tally(): Cluster.LlkTally = {
-        wide = Llk.scoreWide(spark, labeled, (0 until k).map(lib), presort = false,
-          keys = ByLabel).persist(MEMORY_AND_DISK)
-        Cluster.llkTally(wide, k, slots)
-      }
+      def tally() = Cluster.llkTally(blocks, label, (0 until k).map(lib), k, slots)
       var t = tally()
 
       // __reduce_clusters fixpoint (detection.py:401-469): merge clusters whose
@@ -219,12 +171,9 @@ object AnomalyDetection {
         var iter = 0
         var reduced = Cluster.reducedClusterCount(t.fractions, k)
         while (reduced < k && iter < 5) {
-          wide.unpersist()
-          val prev = labeled
-          val res = inferForK(reduced, prev)
-          // released once the new frame's heap job has read it
-          prev.unpersist()
-          labeled = res._1; lib = res._2
+          val step = labels(reduced)
+          label = step._1; observed = step._2
+          lib = GenESeSS.inferBlocks(blocks, label, alphabetSize, genParams, observed)
           k = lib.size
           iter += 1
           t = tally()
@@ -236,69 +185,26 @@ object AnomalyDetection {
         (0 until k).map(c => t.stats.get(c).map(_._1).getOrElse(0.0)).toArray,
         (0 until k).map(c => t.stats.get(c).map(_._2).getOrElse(0.0)).toArray)
       val pred =
-        if (alsoPredict) Some(predictions(wide, model).localCheckpoint(true))
+        if (alsoPredict)
+          Some(predictions(Llk.scoreBlocks(spark, blocks, seqType, model.library), model)
+            .localCheckpoint(true))
         else None
       (model, pred)
     } finally {
-      if (wide != null) wide.unpersist()
-      if (labeled != null) labeled.unpersist()
-      feat.foreach(_.unpersist())
-      q.unpersist()
+      if (feat != null) feat.unpersist()
+      if (blocks != null) blocks.unpersist()
     }
-  }
-
-  /** `q` with each row's `cluster` set to `label` of its sequence's
-    * features in `feat (seq_id, features)`: the rows of q's inner join
-    * with the labels on seq_id, in q's order and partitioning. The fit's
-    * features are an aggregate over q that adds no exchange, so partition
-    * i of `feat` holds the sequences of partition i of q, and the two zip
-    * partition by partition — no label plan, broadcast or join. `q` may be
-    * an earlier result of this function, which keeps q's partitions. A
-    * sequence without features in its partition fails the zip. */
-  private def withLabels(q: DataFrame, feat: DataFrame,
-                         label: org.apache.spark.ml.linalg.Vector => Int): DataFrame = {
-    import org.apache.spark.ml.linalg.{SQLDataTypes, Vector}
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.expressions.UnsafeRow
-    import org.apache.spark.sql.graft.ColumnBridge
-    import org.apache.spark.sql.types.{StructType, UserDefinedType}
-    val (qs, qc) = (q.schema.fieldIndex("seq_id"), q.schema.fieldIndex("cluster"))
-    val (fs, ff) = (feat.schema.fieldIndex("seq_id"), feat.schema.fieldIndex("features"))
-    val seqType = q.schema(qs).dataType
-    val udt = SQLDataTypes.VectorType.asInstanceOf[UserDefinedType[Vector]]
-    val width = udt.sqlType.asInstanceOf[StructType].length
-    val zipped = ColumnBridge.internalRows(q).zipPartitions(ColumnBridge.internalRows(feat)) {
-      (rows, features) =>
-        val byId = scala.collection.mutable.HashMap.empty[Any, Int]
-        features.foreach { r =>
-          if (!r.isNullAt(fs)) byId(InternalRow.copyValue(r.get(fs, seqType))) =
-            label(udt.deserialize(r.getStruct(ff, width)))
-        }
-        var out: UnsafeRow = null
-        rows.filter(!_.isNullAt(qs)).map { r =>
-          val id = r.get(qs, seqType)
-          val c = byId.getOrElse(id, throw new IllegalStateException(
-            s"AnomalyDetection.fit: sequence $id has no features in its partition"))
-          r match {
-            case u: UnsafeRow => // one reused row: the consumer copies it out
-              if (out == null) out = u.copy() else out.copyFrom(u)
-              out.setInt(qc, c); out
-            case g =>
-              val o = g.copy(); o.setInt(qc, c); o
-          }
-        }
-    }
-    ColumnBridge.sameLayout(q, zipped)
   }
 
   /** Score new long-form data against a fitted model.
     *
-    * Both fit and predict run entirely on the long form: scoring folds llk
-    * DIRECTLY over the quantized `(seq_id, t, symbol)` rows
-    * ([[graft.core.Llk.scoreWide]], bit-exact with the array kernel) —
-    * no stage materializes a sequence as one array cell, so stream length is
-    * unbounded (the reference caps at 500k symbols/stream,
-    * examples/M2.cfg:15-17).
+    * predict quantizes with the model's partition and scores through the
+    * fit's own fold: one exchange by seq_id and a (seq_id, t) sort into
+    * sequence blocks, each sequence fed in t order through
+    * [[graft.functions.LlkLongScore]]'s buffer — its llks are `Llk.llk`'s
+    * bit for bit, for any partitioning. No stage materializes a sequence
+    * as one array cell, so stream length is unbounded (the reference caps
+    * at 500k symbols/stream, examples/M2.cfg:15-17).
     *
     * @return (seq_id, is_anomaly, closest, llk) — closest = argmin-llk
     *         cluster (detection.py:152; lowest id on ties), llk = that
@@ -310,9 +216,9 @@ object AnomalyDetection {
     val p = model.params
     val (quantized, _, _) =
       Quantize.byType(longDf, p.quantize, p.quantizeType, p.nSymbols, model.complexModel)
-    // same dense-t normalization as fit (one shuffle, which scoreWide then
-    // reuses via presort = false)
-    predictions(Llk.scoreWide(spark, densify(quantized), model.library, presort = false), model)
+    val (rows, seqType) = SeqBlocks.sortedRows(quantized)
+    predictions(Llk.scoreBlocks(spark, SeqBlocks.cut(rows, seqType, None), seqType, model.library),
+      model)
   }
 
   /** Predictions as a UDF-free projection of the wide llk rows, shared by

@@ -491,15 +491,10 @@ object PipelineQueries {
       val loaded = AnomalyDetection.load(s, tmp.toString)
       val fromLoaded = AnomalyDetection.predict(s, loaded, long)
         .select(col("seq_id"), col("is_anomaly"), col("closest"), col("llk"))
-      // DELIBERATELY a fresh predict, NOT the memoized prediction table:
-      // this verdict compares llk with EXACT equality, and LlkLongScore's
-      // float fold is plan-shape-dependent at the ulp (ObjectHashAggregate
-      // sort-fallback splits a group's fold into merged partials when a
-      // post-AQE partition holds > 128 groups) — two predict() legs inside
-      // one join share a plan shape and fold identically, while a
-      // parquet-read comparator computed under the fit's plan diverged by
-      // one ulp for 1 of 150 sequences at sf0.01 (r17, measured).
-      val fromFit = AnomalyDetection.predict(s, model, long)
+      // the memoized prediction table: fit and predict fold each sequence
+      // canonically, whatever the plan shape, so its llks are predict's
+      // bit for bit and the comparison stays exact
+      val fromFit = fittedPred(s, d)
         .select(col("seq_id"), col("is_anomaly").as("m_anom"),
           col("closest").as("m_closest"), col("llk").as("m_llk"))
       fromLoaded.join(fromFit, Seq("seq_id"), "full_outer")
@@ -550,7 +545,7 @@ object PipelineQueries {
       .select(col("seq_id"),
         (col("is_anomaly").isNotNull && col("v_anom").isNotNull &&
           col("is_anomaly") === col("v_anom") && col("closest") === col("v_closest") &&
-          abs(col("llk") - col("v_llk")) <= lit(1e-9)).as("scalar_matches_full"))
+          col("llk") === col("v_llk")).as("scalar_matches_full"))
   }
 
   /** stream_fit_predict (StreamingDetection, detection.py:550-613): one long

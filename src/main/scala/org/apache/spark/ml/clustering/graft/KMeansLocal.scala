@@ -72,7 +72,13 @@ object KMeansLocal {
       case c: CoalescedRDD[_] => Some(c)
       case r => r.dependencies.headOption.flatMap(dep => find(dep.rdd))
     }
-    find(ColumnBridge.internalRows(df.coalesce(1))).map(_.partitions.toSeq)
-      .collect { case Seq(p: CoalescedRDDPartition) => p.parentsIndices.toSeq }
+    find(ColumnBridge.internalRows(df.coalesce(1))).flatMap(order)
   }
+
+  /** [[coalescedOrder]] of the partitions of `rdd`. */
+  def coalescedOrder[T](rdd: RDD[T]): Option[Seq[Int]] = order(rdd.coalesce(1))
+
+  private def order(coalesced: RDD[_]): Option[Seq[Int]] =
+    Some(coalesced.partitions.toSeq)
+      .collect { case Seq(p: CoalescedRDDPartition) => p.parentsIndices.toSeq }
 }

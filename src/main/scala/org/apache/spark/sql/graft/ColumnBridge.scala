@@ -55,38 +55,14 @@ object ColumnBridge {
       : org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow] =
     df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].queryExecution.executedPlan.execute()
 
-  /** A DataFrame over `rows`, which hold `like`'s rows partition for
-    * partition (each partition possibly changed in place, but no row moved
-    * to another partition or out of order): it has `like`'s schema and
-    * reports `like`'s output partitioning and ordering, so operators keyed
-    * like `like` add no exchange or sort over it. */
-  def sameLayout(like: org.apache.spark.sql.DataFrame,
-                 rows: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow])
-      : org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, SortOrder}
-    import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, UnknownPartitioning}
-    val ds = like.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
-    // an adaptive plan reports no layout of its own; its physical plan does
-    val plan = ds.queryExecution.executedPlan match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
-      case p => p
-    }
-    val output = org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(like.schema)
-    val byName = output.map(a => a.name -> a).toMap
-    val unique = byName.size == output.length
-    def rebind(e: Expression): Option[Expression] =
-      if (unique && e.references.forall(a => byName.contains(a.name)))
-        Some(e.transform { case a: Attribute => byName(a.name) })
-      else None
-    val partitioning = plan.outputPartitioning match {
-      case e: Expression => rebind(e).map(_.asInstanceOf[Partitioning])
-        .getOrElse(UnknownPartitioning(rows.getNumPartitions))
-      case other => other
-    }
-    val ordering = plan.outputOrdering.map(rebind).takeWhile(_.nonEmpty)
-      .map(_.get.asInstanceOf[SortOrder])
-    ofRows(ds.sparkSession, org.apache.spark.sql.execution.LogicalRDD(
-      output, rows, partitioning, ordering)(ds.sparkSession))
+  /** A DataFrame of `schema` over internal `rows`, with no layout of
+    * its own. */
+  def fromRows(spark: org.apache.spark.sql.SparkSession,
+               rows: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+               schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.DataFrame = {
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    ofRows(spark, org.apache.spark.sql.execution.LogicalRDD(
+      org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(schema), rows)(session))
   }
 
   /** Block until the async listener bus has DELIVERED every queued event

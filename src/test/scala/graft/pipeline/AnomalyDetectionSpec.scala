@@ -226,6 +226,13 @@ class AnomalyDetectionSpec extends AnyFunSuite {
     import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     import graft.core.{Cluster, GenESeSS, Llk, Quantize}
 
+    /** Partitioned by seq_id, (seq_id, t)-sorted, `t` re-ranked dense
+      * from 0 per sequence. */
+    def densify(df: DataFrame): DataFrame =
+      df.repartition(col("seq_id")).sortWithinPartitions(col("seq_id"), col("t"))
+        .withColumn("t", (row_number().over(Window.partitionBy(col("seq_id")).orderBy(col("t"))) - 1)
+          .cast("long"))
+
     def features(q: DataFrame, alphabetSize: Int): DataFrame = {
       val toVec = udf { llks: Seq[Double] =>
         org.apache.spark.ml.linalg.Vectors.dense(
@@ -268,7 +275,7 @@ class AnomalyDetectionSpec extends AnyFunSuite {
       * fixpoint step also checks the production tally's fractions. */
     def fitPredict(longDf: DataFrame, params: AnomalyDetection.Params)
         : (AnomalyDetection.Model, Seq[Int], Seq[(Long, Boolean, Int, Long)]) = {
-      val q = AnomalyDetection.densify(Quantize.passthrough(longDf)).persist(MEMORY_AND_DISK)
+      val q = densify(Quantize.passthrough(longDf)).persist(MEMORY_AND_DISK)
       val alphabetSize = math.max(2, q.agg(max(col("symbol"))).head().getByte(0).toInt + 1)
       val feat = features(q, alphabetSize).cache()
       def inferForK(k: Int): (DataFrame, Map[Int, Pfsa]) = {
@@ -318,7 +325,7 @@ class AnomalyDetectionSpec extends AnyFunSuite {
 
     def predict(model: AnomalyDetection.Model, longDf: DataFrame): Seq[(Long, Boolean, Int, Long)] =
       predRows(predictions(Llk.scoreAllLong(spark,
-        AnomalyDetection.densify(Quantize.passthrough(longDf)), model.library, presort = false),
+        densify(Quantize.passthrough(longDf)), model.library, presort = false),
         model.bounds))
   }
 
@@ -389,6 +396,21 @@ class AnomalyDetectionSpec extends AnyFunSuite {
     assert(closest == Seq(1, 1, 1, 1), closest.toString)
   }
 
+  test("an MLlib clusterer fits on the feature vectors the fit's blocks carry") {
+    import org.apache.spark.ml.clustering.BisectingKMeans
+    val train = twoRegimes(6, 3000, 2500L)
+    val params = AnomalyDetection.Params(anomalySensitivity = 2.0, nClusters = 2,
+      quantize = false, eps = 0.05)
+    val est = new BisectingKMeans().setK(2).setSeed(3L)
+      .setFeaturesCol("features").setPredictionCol("raw_label")
+    val (model, pred) = AnomalyDetection.fitPredict(spark, train, params, Some(est))
+    assert(model.library.size == 2, model.library.size.toString)
+    val closest = predRows(pred).map(r => r._1 -> r._3).toMap
+    val (m2, m2u) = ((0L until 6L).map(closest).toSet, (6L until 12L).map(closest).toSet)
+    assert(m2.size == 1 && m2u.size == 1 && m2 != m2u, s"closest by regime: $m2 vs $m2u")
+    assert(predRows(pred) == predRows(AnomalyDetection.predict(spark, model, train)))
+  }
+
   test("string sequence ids label through the fit and predict every sequence") {
     import org.apache.spark.sql.functions.{concat, lit}
     val train = twoRegimes(6, 3000, 1900L)
@@ -449,8 +471,10 @@ class AnomalyDetectionSpec extends AnyFunSuite {
     // sums and the tally folded per partition instead of a second
     // aggregate, and the labels zipped into the fit's frame instead of a
     // broadcast join (25); the default KMeans fitted on the driver from one
-    // read of the features, which also replaces the sizing count (13)
-    val budget = 13
+    // read of the features, which also replaces the sizing count (13); every
+    // pass one fold over cached sequence blocks: exchange, max symbol,
+    // blocks + features, heap, visit sweep, scoring + tally, predictions (7)
+    val budget = 7
     val train = twoRegimes(6, 4000, 1700L)
     val params = AnomalyDetection.Params(anomalySensitivity = 2.0, nClusters = 2,
       reduceClusters = true, quantize = false, eps = 0.05)
@@ -474,41 +498,48 @@ class AnomalyDetectionSpec extends AnyFunSuite {
   }
 
   test("the fixpoint holds one cached copy of the long data after each step") {
-    // q (seq_id, t, symbol, cluster) is released once the first labeled
-    // frame exists, and each later step relabels the previous frame and
-    // releases it after the new one's heap job; the per-sequence caches
-    // (features, wide llk rows) are a thousand times smaller
+    // the fit caches its data once, as sequence blocks, and every pass of
+    // every fixpoint step reads that copy: at each job of the fit at most
+    // one RDD of the fit is cached, always the same one, and none is left
+    // once the fit returns, or throws
     val params = AnomalyDetection.Params(anomalySensitivity = 2.0, nClusters = 5,
       reduceClusters = true, quantize = false, eps = 0.05)
     val train = twoRegimes(10, 1000, 3000L, uOffset = 500L)
     val sc = spark.sparkContext
     val group = "anomaly-detection-long-caches"
-    val before = sc.getRDDStorageInfo.map(_.id).toSet
-    val steps = new java.util.concurrent.ConcurrentLinkedQueue[Seq[Long]]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      // the tally opens each step's scoring, after its inference
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group &&
-            e.stageInfos.exists(_.details.contains("Cluster$.llkTally(")))
-          steps.add(sc.getRDDStorageInfo.toSeq.filter(i => !before(i.id) && i.numCachedPartitions > 0)
-            .map(i => i.memSize + i.diskSize))
+    def cached(before: Set[Int]) =
+      sc.getRDDStorageInfo.toSeq.filter(i => !before(i.id) && i.numCachedPartitions > 0).map(_.id)
+    def cachesOf(body: => Any): (Seq[Seq[Int]], Seq[Int]) = {
+      val before = sc.getRDDStorageInfo.map(_.id).toSet
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[Seq[Int]]()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+            seen.add(cached(before))
+      }
+      sc.addSparkListener(listener)
+      try {
+        sc.setJobGroup(group, "fixpoint caches")
+        try body finally sc.clearJobGroup()
+        org.apache.spark.sql.graft.ColumnBridge.waitListenerBusEmpty(sc, 30000L)
+      } finally sc.removeSparkListener(listener)
+      import scala.jdk.CollectionConverters._
+      (seen.asScala.toSeq, sc.getPersistentRDDs.keySet.filter(id => !before(id)).toSeq)
     }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "fixpoint caches")
-      try AnomalyDetection.fitPredict(spark, train, params)
-      finally sc.clearJobGroup()
-      org.apache.spark.sql.graft.ColumnBridge.waitListenerBusEmpty(sc, 30000L)
-    } finally sc.removeSparkListener(listener)
-    import scala.jdk.CollectionConverters._
-    val seen = steps.asScala.toSeq
-    info(s"cached bytes per step: $seen")
-    // two steps (k 5 -> 4), each tally running its scoring jobs
-    assert(seen.size >= 2, s"expected the tallies of two fixpoint steps, saw ${seen.size} jobs")
-    val largest = seen.flatten.max
-    seen.foreach { sizes =>
-      assert(sizes.count(_ * 10 > largest) == 1, s"long-data caches alive at a step: $sizes")
+    val (steps, left) = cachesOf(AnomalyDetection.fit(spark, train, params))
+    info(s"cached RDDs at each job: $steps")
+    assert(steps.size >= 8, s"expected the jobs of two fixpoint steps, saw ${steps.size}")
+    assert(steps.forall(_.size <= 1) && steps.flatten.distinct.size == 1,
+      s"the fit's cached RDDs at its jobs: $steps")
+    assert(left.isEmpty, s"the fit left persisted RDDs $left")
+    // a clusterer that fails after the blocks are cached
+    val failing = new SplitAtSix {
+      override def fit(ds: org.apache.spark.sql.Dataset[_]): SplitAtSixModel =
+        throw new IllegalStateException("planted clusterer failure")
     }
+    val (_, leftAfterFailure) = cachesOf(intercept[IllegalStateException](
+      AnomalyDetection.fit(spark, train, params.copy(nClusters = 2), Some(failing))))
+    assert(leftAfterFailure.isEmpty, s"a failed fit left persisted RDDs $leftAfterFailure")
   }
 
   /** Continuous streams cut like the benchmark's fit workload: each stream
