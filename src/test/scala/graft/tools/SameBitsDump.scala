@@ -18,8 +18,9 @@ import org.apache.spark.sql.types.{IntegerType, StructType}
   * Corpora: three shaped like the benchmark's fit workload (48 random-walk
   * streams cut into 1000/500 windows, complex quantizer), one the
   * reduce-clusters fixpoint merges (k 5 → 4), one with `quantize = false`,
-  * one with a pluggable clusterer, and `many_groups`: 600 short sequences,
-  * about 150 per partition, where an aggregate would fall back to sort. The
+  * one with a pluggable clusterer, and `many_groups`: PlanShapeFoldSpec's
+  * 600 short sequences, about 150 per partition, where an aggregate would
+  * fall back to sort. The
   * last also records, per entry point, how many llks differ from `Llk.llk`
   * on the sequence's symbols. */
 object SameBitsDump {
@@ -92,8 +93,9 @@ object SameBitsDump {
       "pluggable" -> (() => Corpus(longForm(twoRegimes(6, 3000, 1900L, 100L)), plain,
         Some(new SplitAtHalf(6L)))),
       "many_groups" -> { () =>
+        // PlanShapeFoldSpec's corpus
         val seqs = (0 until 600).map { i =>
-          i.toLong -> (if (i % 2 == 0) Pfsa.m2 else Pfsa.m2u).sample(40 + i % 17, seed = 6000L + i)
+          i.toLong -> (if (i % 3 == 0) Pfsa.m2u else Pfsa.m2).sample(30 + i % 23, seed = 8800L + i)
         }
         Corpus(longForm(seqs), plain.copy(nClusters = 3), symbols = Some(seqs.toMap))
       })
