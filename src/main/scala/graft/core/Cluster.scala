@@ -4,7 +4,6 @@ import org.apache.spark.ml.{Estimator, Model}
 import org.apache.spark.ml.clustering.{KMeans, KMeansModel}
 import org.apache.spark.ml.clustering.graft.KMeansLocal
 import org.apache.spark.ml.linalg.{Vector, Vectors}
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
@@ -19,14 +18,15 @@ import org.apache.spark.sql.types.DataType
   * features clusters in the metric the divergence induces (likelihood
   * smashing, tex/ms.tex:290-291) at O(N·bases) instead of O(N²).
   *
-  * The batch fit reads the features off its cached sequence blocks
-  * ([[SeqBlocks]]): the blocks carry each sequence's vector from the pass
-  * that builds them, that pass ships the vectors to the driver for the
-  * default KMeans ([[readFeatures]]), and the labels are applied inside
-  * the later passes, per sequence, by [[kmeansLabeler]] (or from a
-  * pluggable clusterer's labels). The tally ([[llkTally]]) folds over the
-  * same blocks. The DataFrame forms ([[featuresLong]], [[assignFeatures]],
-  * [[llkTally]] over wide rows) serve the other callers.
+  * The batch fit reads the features off its sequence blocks
+  * ([[SeqBlocks]], driver-held or cached): the blocks carry each
+  * sequence's vector from the pass that builds them, the first fold over
+  * them gathers the vectors for the default KMeans ([[readFeatures]]), and
+  * the labels are applied inside the later passes, per sequence, by
+  * [[kmeansLabeler]] (or from a pluggable clusterer's labels). The tally
+  * ([[llkTally]]) folds over the same blocks. The DataFrame forms
+  * ([[featuresLong]], [[assignFeatures]], [[llkTally]] over wide rows)
+  * serve the other callers.
   */
 object Cluster {
 
@@ -171,33 +171,33 @@ object Cluster {
     (total, vectors)
   }
 
-  /** [[readFeatures]] of the features `blocks` carry: the job that
-    * materializes the cached blocks also ships their vectors to the
-    * driver, in the order a one-partition coalesce reads the blocks. */
-  private[graft] def readFeatures(blocks: RDD[SeqBlock]): (Long, Option[Array[Vector]]) = {
-    val cap = LocalFitRows / math.max(1, blocks.getNumPartitions)
-    val read = blocks.mapPartitions { it =>
+  /** [[readFeatures]] of the features `blocks` carry, gathered in the
+    * order a one-partition coalesce reads the blocks; over cached blocks
+    * this is the job that materializes them. */
+  private[graft] def readFeatures(blocks: SeqBlocks.Parts): (Long, Option[Array[Vector]]) = {
+    val cap = LocalFitRows / math.max(1, blocks.numPartitions)
+    val read = blocks.fold { it =>
       var n = 0L
       var kept = scala.collection.mutable.ArrayBuffer.empty[Vector]
       it.foreach(_.features.foreach { f =>
         n += 1
         if (kept != null) { if (n > cap) kept = null else kept += Vectors.dense(f) }
       })
-      Iterator.single((n, Option(kept).map(_.toArray)))
-    }.collect()
-    gathered(read, KMeansLocal.coalescedOrder(blocks))
+      (n, Option(kept).map(_.toArray))
+    }
+    gathered(read, blocks.coalescedOrder)
   }
 
   /** The `(seq_id, features)` frame of the features `blocks` carry, for
     * the estimators that need a frame: MLlib's KMeans above
     * [[LocalFitRows]] rows and a pluggable clusterer. */
-  private[graft] def featureFrame(spark: SparkSession, blocks: RDD[SeqBlock],
+  private[graft] def featureFrame(spark: SparkSession, blocks: SeqBlocks.Parts,
                                   seqType: DataType): DataFrame = {
     import org.apache.spark.ml.linalg.SQLDataTypes
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.types.{StructField, StructType, UserDefinedType}
     val udt = SQLDataTypes.VectorType.asInstanceOf[UserDefinedType[Vector]]
-    val rows = blocks.mapPartitions(_.flatMap { b =>
+    val rows = blocks.rdd(spark.sparkContext).mapPartitions(_.flatMap { b =>
       b.ids.indices.iterator.map(i =>
         InternalRow(b.ids(i), udt.serialize(Vectors.dense(b.features(i)))): InternalRow)
     })
@@ -380,23 +380,23 @@ object Cluster {
     }, k, slots)
   }
 
-  /** [[llkTally]] of the sequences of cached `blocks`, scored against the
+  /** [[llkTally]] of the sequences of `blocks`, scored against the
     * k-model `library` in one fold ([[Llk.foreachScored]]), `label`
     * naming each sequence's cluster (< 0: not a member). The sequences of
     * a partition update its buffers in the order of the rows the wide
     * frame of the same partition holds, so the statistics are the same. */
-  private[graft] def llkTally(blocks: RDD[SeqBlock], label: (Any, Array[Double]) => Int,
+  private[graft] def llkTally(blocks: SeqBlocks.Parts, label: (Any, Array[Double]) => Int,
                               library: Seq[Pfsa], k: Int, slots: Int): LlkTally = {
     require(slots >= k, s"llkTally: slots $slots < k $k")
     val lib = library.toArray
-    tallied(blocks.mapPartitions { it =>
+    tallied(blocks.fold { it =>
       val bufs = scala.collection.mutable.HashMap.empty[Int, TallyBuffer]
       Llk.foreachScored(it, lib, label) { (_, c, llks) =>
         bufs.getOrElseUpdate(c, new TallyBuffer(slots))
           .update(c, org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(llks))
       }
-      Iterator.single(bufs.toArray)
-    }.collect(), k, slots)
+      bufs.toArray
+    }, k, slots)
   }
 
   /** The tally of per-partition buffers, merged in partition order. */

@@ -361,21 +361,21 @@ object GenESeSS {
     assemblePfsas(skeletons, visits, k, params)
   }
 
-  /** [[inferAllLong]] over cached sequence blocks, `label` naming each
-    * sequence's cluster (< 0: in none) and `clusters` the clusters to
-    * infer. Two folds feed the aggregates' buffers one sequence at a time:
-    * the heap ([[graft.functions.PfsaHeapLong]], one buffer per cluster
-    * and partition, merged on the driver — counts are integers, so the
-    * merge is exact for any split) and the π̃ sweep
+  /** [[inferAllLong]] over sequence blocks (driver-held or cached),
+    * `label` naming each sequence's cluster (< 0: in none) and `clusters`
+    * the clusters to infer. Two folds feed the aggregates' buffers one
+    * sequence at a time: the heap ([[graft.functions.PfsaHeapLong]], one
+    * buffer per cluster and partition, merged on the driver — counts are
+    * integers, so the merge is exact for any split) and the π̃ sweep
     * ([[graft.functions.PfsaVisitLong]], one buffer per sequence, summed
     * per cluster). Same machines as [[inferAllLong]] on the same rows. */
-  private[graft] def inferBlocks(blocks: org.apache.spark.rdd.RDD[SeqBlock],
+  private[graft] def inferBlocks(blocks: SeqBlocks.Parts,
                                  label: (Any, Array[Double]) => Int, alphabetSize: Int,
                                  params: Params, clusters: Seq[Int]): Map[Int, Pfsa] = {
     import graft.functions.{PfsaHeapLong, PfsaVisitLong}
     val k = alphabetSize
     val L = contextLength(k, params.eps, params.maxL)
-    val heaps = blocks.mapPartitions { it =>
+    val heaps = blocks.fold { it =>
       val bufs = mutable.HashMap.empty[Int, PfsaHeapLong.Buffer]
       SeqBlocks.foreachSequence(it, new SeqBlocks.Visitor {
         private var buf: PfsaHeapLong.Buffer = null
@@ -388,8 +388,8 @@ object GenESeSS {
           if (buf != null) { var i = from; while (i < until) { buf.feed(s(i)); i += 1 } }
         def end(): Unit = ()
       })
-      Iterator.single(bufs.toArray.map { case (c, b) => (c, b.toBytes) })
-    }.collect()
+      bufs.toArray.map { case (c, b) => (c, b.toBytes) }
+    }
     val merged = mutable.HashMap.empty[Int, PfsaHeapLong.Buffer]
     heaps.foreach(_.foreach { case (c, bytes) =>
       val b = PfsaHeapLong.Buffer.fromBytes(bytes, L)
@@ -407,7 +407,7 @@ object GenESeSS {
     }
     val skeletons = clusters.map(c => c -> buildSkeleton(counts.getOrElse(c, Map.empty), k, params)).toMap
     val conns = skeletons.map { case (c, sk) => c -> sk.conn }
-    val visits = blocks.mapPartitions { it =>
+    val visits = blocks.fold { it =>
       val sums = mutable.HashMap.empty[Int, Array[Long]]
       SeqBlocks.foreachSequence(it, new SeqBlocks.Visitor {
         private var c = -1
@@ -429,8 +429,8 @@ object GenESeSS {
             sums(c) = addCounts(sums.getOrElse(c, Array.emptyLongArray), v.length, v(_), _ => false)
           }
       })
-      Iterator.single(sums.toArray)
-    }.collect()
+      sums.toArray
+    }
     assemblePfsas(skeletons, mergedVisits(visits), k, params)
   }
 

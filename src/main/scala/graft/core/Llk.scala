@@ -147,22 +147,29 @@ object Llk {
     })
 
   /** The wide llk rows `(seq_id, llks)` of [[scoreWide]], from one fold
-    * over sequence blocks ([[foreachScored]]). */
-  private[graft] def scoreBlocks(spark: SparkSession, blocks: org.apache.spark.rdd.RDD[SeqBlock],
+    * over sequence blocks ([[foreachScored]]): over cached blocks a frame
+    * scored when it is read, over driver-held blocks a local relation of
+    * rows scored now. */
+  private[graft] def scoreBlocks(spark: SparkSession, blocks: SeqBlocks.Parts,
                                  seqType: org.apache.spark.sql.types.DataType,
                                  library: Seq[Pfsa]): DataFrame = {
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.catalyst.util.ArrayData
+    import org.apache.spark.sql.graft.ColumnBridge
     import org.apache.spark.sql.types._
     val lib = library.toArray
-    val rows = blocks.mapPartitions { it =>
+    val schema = StructType(Seq(
+      StructField("seq_id", seqType),
+      StructField("llks", ArrayType(DoubleType, containsNull = false), nullable = false)))
+    val scored = (it: Iterator[SeqBlock]) => {
       val out = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
       foreachScored(it, lib, (_, _) => 0)((id, _, llks) => out += InternalRow(id, ArrayData.toArrayData(llks)))
-      out.iterator
+      out
     }
-    org.apache.spark.sql.graft.ColumnBridge.fromRows(spark, rows, StructType(Seq(
-      StructField("seq_id", seqType),
-      StructField("llks", ArrayType(DoubleType, containsNull = false), nullable = false))))
+    blocks match {
+      case SeqBlocks.Parts.Cached(rdd) => ColumnBridge.fromRows(spark, rdd.mapPartitions(scored(_).iterator), schema)
+      case local => ColumnBridge.fromLocalRows(spark, local.fold(scored(_).toArray).flatten.toSeq, schema)
+    }
   }
 
   /** [[scoreWide]] as long (seq_id, cluster_id, llk) rows. */

@@ -3,6 +3,7 @@ package graft.core
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Continuous → finite-alphabet quantization (reference detection.py:272-308;
   * entropy-max spec tex/ms.tex:293-294).
@@ -75,38 +76,59 @@ object Quantize {
                               detrend: Boolean = false, relErr: Double = 1e-4,
                               seqCol: String = "seq_id", tCol: String = "t")
       : (ComplexModel, Option[Int]) = {
+    val (model, maxSymbol, _) = sketched(df, valCol, nBins, detrend, relErr, seqCol, tCol, 0L)
+    (model, maxSymbol)
+  }
+
+  /** [[fitComplexWithMaxSymbol]]'s pass, which with `keepRows` > 0 also
+    * reads each partition's `(value, seq_id, t)` rows to the driver while
+    * it holds at most `keepRows` / partitions rows: the rows when every
+    * partition did. The sketch sees the same values in the same order
+    * either way. */
+  private def sketched(df: DataFrame, valCol: String, nBins: Int, detrend: Boolean,
+                       relErr: Double, seqCol: String, tCol: String, keepRows: Long)
+      : (ComplexModel, Option[Int], Option[(Array[Array[Byte]], StructType)]) = {
     import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal}
     import org.apache.spark.sql.catalyst.expressions.aggregate.ApproximatePercentile
     import org.apache.spark.sql.catalyst.util.ArrayData
     import org.apache.spark.sql.graft.ColumnBridge
     import org.apache.spark.sql.types.DoubleType
-    val raw = df.select(col(valCol))
     // a double column is read as it is: a cast or alias would add a
     // projection, and with it a generated class, to the pass
-    val values =
-      if (detrend) df.select(
-        coalesce(col(valCol) - lag(col(valCol), 1).over(seqW(seqCol, tCol)), lit(0.0)).cast("double"))
-      else if (raw.schema.head.dataType == DoubleType) raw
-      else raw.select(col(valCol).cast("double"))
+    val value =
+      if (detrend) coalesce(col(valCol) - lag(col(valCol), 1).over(seqW(seqCol, tCol)), lit(0.0)).cast("double")
+      else if (df.schema.find(_.name == valCol).map(_.dataType)
+          .getOrElse(df.select(col(valCol)).schema.head.dataType) == DoubleType) col(valCol)
+      else col(valCol).cast("double")
+    val values = df.select((if (keepRows > 0) Seq(value, col(seqCol), col(tCol)) else Seq(value)): _*)
+    val schema = values.schema
     val probes = (1 until nBins).map(_.toDouble / nBins).toArray :+ 1.0
     val accuracy = math.min(Int.MaxValue, math.ceil(1.0 / relErr).toLong).toInt
     val sketch = new ApproximatePercentile(BoundReference(0, DoubleType, nullable = true),
       Literal(probes), Literal(accuracy))
-    val partials = ColumnBridge.foldPartitions(values) { rows =>
-      if (!rows.hasNext) None
-      else {
-        val buf = sketch.createAggregationBuffer()
-        var nan = false
-        rows.foreach { r =>
-          if (!r.isNullAt(0)) {
-            val x = r.getDouble(0)
-            if (x.isNaN) nan = true else buf.add(x)
+    val read = ColumnBridge.foldPartitionsOf(values) { parts =>
+      val cap = keepRows / math.max(1, parts)
+      rows => {
+        val kept = if (keepRows > 0) new SeqBlocks.Keep(schema, cap) else null
+        if (!rows.hasNext) (None, Option(kept).flatMap(_.result))
+        else {
+          val buf = sketch.createAggregationBuffer()
+          var nan = false
+          rows.foreach { r =>
+            if (kept != null) kept.add(r)
+            if (!r.isNullAt(0)) {
+              val x = r.getDouble(0)
+              if (x.isNaN) nan = true else buf.add(x)
+            }
           }
+          (Some((sketch.serialize(buf), nan)), Option(kept).flatMap(_.result))
         }
-        Some((sketch.serialize(buf), nan))
       }
-    }.flatten
-    if (partials.isEmpty) (ComplexModel(Array.empty, detrend), None)
+    }
+    val partials = read.flatMap(_._1)
+    val rows = Some(read.map(_._2)).filter(r => keepRows > 0 && r.forall(_.nonEmpty))
+      .map(r => (r.map(_.get), schema))
+    if (partials.isEmpty) (ComplexModel(Array.empty, detrend), None, rows)
     else {
       val merged = partials.foldLeft(sketch.createAggregationBuffer()) { case (b, (bytes, _)) =>
         sketch.merge(b, sketch.deserialize(bytes)) }
@@ -118,7 +140,7 @@ object Quantize {
       val maxSymbol =
         if (partials.exists(_._2)) model.cutoffs.length
         else sketched.lastOption.fold(0)(graft.functions.BinIndex.count(_, model.cutoffs))
-      (model, Some(maxSymbol))
+      (model, Some(maxSymbol), rows)
     }
   }
 
@@ -147,6 +169,47 @@ object Quantize {
         (applyComplex(df, m), Some(m), maxSymbol)
       case other => throw new IllegalArgumentException(s"unknown quantize_type: $other")
     }
+
+  /** [[byType]] for a fit, which also reads the rows to the driver when
+    * the input holds at most `keepRows` rows (each of the read's
+    * partitions at most `keepRows` / partitions), in the same one pass:
+    * the complex quantizer's sketch pass, or for the other quantizers a
+    * read of the symbol frame. The read's rows are `(x, seq_id, t)`, and
+    * its symbol of a row is the symbol frame's: for the complex quantizer
+    * x is the value and the symbol [[graft.functions.BinIndex]] of it
+    * cast as the frame casts it, else x is the symbol. With `keepRows`
+    * <= 0 this is [[byType]].
+    *
+    * @return (symbol frame, built when first called; complex partition;
+    *         the largest symbol when this call fitted the partition; the
+    *         rows read) */
+  private[graft] def byTypeRead(df: DataFrame, quantize: Boolean, quantizeType: String,
+                                nBins: Int, keepRows: Long)
+      : (() => DataFrame, Option[ComplexModel], Option[Option[Int]], Option[SeqBlocks.Read]) = {
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast}
+    import org.apache.spark.sql.types.{ByteType, DoubleType}
+    if (keepRows <= 0) {
+      val (q, m, mx) = byType(df, quantize, quantizeType, nBins)
+      (() => q, m, mx, None)
+    } else if (quantize && quantizeType == "complex") {
+      val (m, mx, rows) = sketched(df, "value", nBins, detrend = false, 1e-4, "seq_id", "t", keepRows)
+      lazy val q = applyComplex(df, m)
+      (() => q, Some(m), Some(mx), rows.map { case (parts, schema) =>
+        SeqBlocks.Read(parts, schema, Cast(graft.functions.BinIndex(
+          BoundReference(0, DoubleType, nullable = true), m.cutoffs), ByteType))
+      })
+    } else {
+      val (q, _, _) = byType(df, quantize, quantizeType, nBins) // throws on an unknown type
+      val symbols = q.select(col("symbol"), col("seq_id"), col("t"))
+      val schema = symbols.schema
+      val read = org.apache.spark.sql.graft.ColumnBridge.foldPartitionsOf(symbols) { parts =>
+        val cap = keepRows / math.max(1, parts)
+        rows => { val kept = new SeqBlocks.Keep(schema, cap); rows.foreach(kept.add); kept.result }
+      }
+      (() => q, None, None, Some(read).filter(_.forall(_.nonEmpty)).map(r =>
+        SeqBlocks.Read(r.map(_.get), schema, BoundReference(0, ByteType, nullable = true))))
+    }
+  }
 
   /** Apply a fitted partition: symbol = #cutoffs < value
     * ([[graft.functions.BinIndex]]: whole-stage codegen, the cutoffs ride

@@ -18,13 +18,19 @@ import org.apache.spark.sql.functions._
   *
   * The paper's llk (Alg. 1) and GenESeSS inference (Alg. 2) each read one
   * sequence in order, and so does the engine: after the quantizer, fit and
-  * predict exchange the rows once into cached per-partition sequence
-  * blocks ([[SeqBlocks]]) and run every pass as one RDD fold over them —
-  * no Catalyst plan, columnar cache or aggregate operator per pass. A
-  * converging fitPredict runs seven Spark jobs (the complex quantizer's
-  * sketch — or, for the other quantizers, a read of the largest symbol —
-  * the exchange, blocks + features, heap, visit sweep, scoring + tally,
-  * predictions), and each further fixpoint step three. Like the reference's
+  * predict exchange the rows once into per-partition sequence blocks
+  * ([[SeqBlocks]]) and run every pass as one fold over them — no Catalyst
+  * plan, columnar cache or aggregate operator per pass. The reference fits
+  * in process (detection.py:320-339), and so does a small fit here: up to
+  * 2^20 long rows the fit reads its input in ONE Spark job (the complex
+  * quantizer's sketch pass, or a read of the other quantizers' symbols,
+  * also ships the rows), replays the exchange and the sort on the driver,
+  * and runs every later pass there through the same folds, so a
+  * converging fitPredict with the default clusterer runs one job and its
+  * predictions are a local relation. A larger fit caches the blocks and
+  * runs seven Spark jobs (the sketch or largest-symbol read, the exchange,
+  * blocks + features, heap, visit sweep, scoring + tally, predictions),
+  * and each further fixpoint step three. Like the reference's
   * `cluster_llks`, the llks of a sequence form one wide row: the
   * confusion and stats ([[Cluster.llkTally]]) and the predictions are
   * read off it.
@@ -63,9 +69,10 @@ object AnomalyDetection {
 
   /** Fit reads its input once: the quantized rows go through ONE exchange
     * by seq_id and a (seq_id, t) sort into compact per-partition sequence
-    * blocks ([[SeqBlocks]]), cached, and every later pass — the base-model
-    * features, the GenESeSS heap, the π̃ visit sweep, the llk scoring with
-    * its tally — is one plain fold over those blocks, feeding the
+    * blocks ([[SeqBlocks]]) — held on the driver for a small input, cached
+    * otherwise — and every later pass — the base-model features, the
+    * GenESeSS heap, the π̃ visit sweep, the llk scoring with its tally — is
+    * one plain fold over those blocks, feeding the
     * aggregates' own buffers a sequence at a time. No stage materializes a
     * sequence as one array cell (a long sequence spans blocks), so training
     * streams have no length ceiling (the reference caps at 500k symbols,
@@ -79,16 +86,26 @@ object AnomalyDetection {
     fitImpl(spark, longDf, params, clusterer, alsoPredict = false)._1
 
   /** [[fit]] fused with a [[predict]] over the SAME input: the
-    * predictions are scored from the fit's cached blocks with the final
-    * library, through the fold [[predict]] runs, and projected by the same
+    * predictions are scored from the fit's blocks with the final library,
+    * through the fold [[predict]] runs, and projected by the same
     * [[predictions]] — so they equal fit-then-predict's bit for bit, and
     * the source is read once. The returned predictions are eagerly
-    * materialized (the fit's cache is released before return). */
+    * materialized: a local relation after a driver-side fit, else a
+    * checkpoint (the fit's cache is released before return). */
   def fitPredict(spark: SparkSession, longDf: DataFrame, params: Params = Params(),
                  clusterer: Option[org.apache.spark.ml.Estimator[_ <: org.apache.spark.ml.Model[_]]] = None): (Model, DataFrame) = {
     val (model, pred) = fitImpl(spark, longDf, params, clusterer, alsoPredict = true)
     (model, pred.get)
   }
+
+  /** Below this many long rows (each of the input read's partitions at
+    * most this many / partitions) the fit reads its input in one Spark
+    * job and runs every later pass on the driver. */
+  private val DriverFitRows: Long = 1L << 20
+
+  /** The bound the fits of the current thread use: [[DriverFitRows]],
+    * unless a test moves it to run one placement or the other. */
+  private[pipeline] val driverFitRows = new scala.util.DynamicVariable[Long](DriverFitRows)
 
   private def fitImpl(spark: SparkSession, longDf: DataFrame, params: Params,
                       clusterer: Option[org.apache.spark.ml.Estimator[_ <: org.apache.spark.ml.Model[_]]],
@@ -96,37 +113,43 @@ object AnomalyDetection {
     import org.apache.spark.ml.linalg.Vectors
     import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // the complex quantizer's fit pass also reads the largest symbol off
-    // its aggregate; the other quantizers read it off the blocks
-    val (quantized, complexModel, fittedMax) =
-      Quantize.byType(longDf, params.quantize, params.quantizeType, params.nSymbols)
-    val (rows, seqType) = SeqBlocks.sortedRows(quantized)
+    // its aggregate; the other quantizers read it off the blocks. A small
+    // input's rows reach the driver with the same pass, and the exchange
+    // and sort into blocks replay there.
+    val (quantized, complexModel, fittedMax, read) = Quantize.byTypeRead(longDf, params.quantize,
+      params.quantizeType, params.nSymbols, driverFitRows.value)
+    val local = read.map(SeqBlocks.replay(_, longDf.sparkSession.sessionState.conf.numShufflePartitions))
+    lazy val sorted = SeqBlocks.sortedRows(quantized())
+    val seqType = local.fold(sorted._2)(_.seqType)
+    def place(bases: Option[Seq[Pfsa]]): SeqBlocks.Parts =
+      local.fold[SeqBlocks.Parts](SeqBlocks.Parts.Cached(SeqBlocks.cut(sorted._1, seqType, bases)))(_.cut(bases))
     // llk features vs the base PFSAs depend only on (sequences, alphabet),
     // so the blocks carry them from the pass that builds them. With k <= 1
     // and the default clusterer the label is a constant and no feature is
     // computed.
     val k0 = math.max(1, params.nClusters)
     val withFeatures = k0 > 1 || clusterer.nonEmpty
-    // the ONE cached copy of the data for the whole fit, released in the
-    // finally on every exit path
-    var blocks: org.apache.spark.rdd.RDD[SeqBlock] = null
+    // the ONE copy of the data for the whole fit (cached when the blocks
+    // are an RDD), released in the finally on every exit path
+    var blocks: SeqBlocks.Parts = null
     var feat: DataFrame = null
     try {
       val maxSym = fittedMax.getOrElse {
-        if (withFeatures) SeqBlocks.maxSymbol(SeqBlocks.cut(rows, seqType, None))
+        if (withFeatures) SeqBlocks.maxSymbol(place(None))
         else {
-          blocks = SeqBlocks.cut(rows, seqType, None).persist(MEMORY_AND_DISK)
+          blocks = place(None).persist()
           SeqBlocks.maxSymbol(blocks)
         }
       }
       require(maxSym.nonEmpty, "AnomalyDetection.fit: input has no rows after quantization")
       val alphabetSize = math.max(2, maxSym.get + 1)
       val genParams = GenESeSS.Params(eps = params.eps)
-      if (blocks == null) blocks = SeqBlocks.cut(rows, seqType,
-        if (withFeatures) Some(Cluster.basePfsas(alphabetSize)) else None).persist(MEMORY_AND_DISK)
+      if (blocks == null)
+        blocks = place(if (withFeatures) Some(Cluster.basePfsas(alphabetSize)) else None).persist()
 
       // the default clusterer's features reach the driver once, with the
-      // job that materializes the blocks, for every fixpoint step's KMeans
-      lazy val read = Cluster.readFeatures(blocks)
+      // job that materializes cached blocks, for every fixpoint step's KMeans
+      lazy val features = Cluster.readFeatures(blocks)
       def frame: DataFrame = {
         if (feat == null) feat = Cluster.featureFrame(spark, blocks, seqType).persist(MEMORY_AND_DISK)
         feat
@@ -137,7 +160,7 @@ object AnomalyDetection {
         def ranks(sizes: Seq[Long]) = sizes.zipWithIndex.collect { case (n, r) if n > 0 => r }
         clusterer match {
           case None if withFeatures && k > 1 =>
-            val (label, sizes) = Cluster.kmeansLabeler(read, frame, k, params.kmeansSeed)
+            val (label, sizes) = Cluster.kmeansLabeler(features, frame, k, params.kmeansSeed)
             ((_: Any, f: Array[Double]) => label(Vectors.dense(f)), ranks(sizes))
           case None => ((_: Any, _: Array[Double]) => 0, Seq(0))
           case Some(_) =>
@@ -184,10 +207,11 @@ object AnomalyDetection {
       val model = Model(params, complexModel, alphabetSize, (0 until k).map(lib),
         (0 until k).map(c => t.stats.get(c).map(_._1).getOrElse(0.0)).toArray,
         (0 until k).map(c => t.stats.get(c).map(_._2).getOrElse(0.0)).toArray)
+      // scored off cached blocks, the predictions are checkpointed before
+      // the cache goes; off driver-held blocks they are a local relation
       val pred =
-        if (alsoPredict)
-          Some(predictions(Llk.scoreBlocks(spark, blocks, seqType, model.library), model)
-            .localCheckpoint(true))
+        if (alsoPredict) Some(predictions(Llk.scoreBlocks(spark, blocks, seqType, model.library),
+          model)).map(p => if (local.isEmpty) p.localCheckpoint(true) else p)
         else None
       (model, pred)
     } finally {
@@ -217,8 +241,8 @@ object AnomalyDetection {
     val (quantized, _, _) =
       Quantize.byType(longDf, p.quantize, p.quantizeType, p.nSymbols, model.complexModel)
     val (rows, seqType) = SeqBlocks.sortedRows(quantized)
-    predictions(Llk.scoreBlocks(spark, SeqBlocks.cut(rows, seqType, None), seqType, model.library),
-      model)
+    predictions(Llk.scoreBlocks(spark, SeqBlocks.Parts.Cached(SeqBlocks.cut(rows, seqType, None)),
+      seqType, model.library), model)
   }
 
   /** Predictions as a UDF-free projection of the wide llk rows, shared by

@@ -42,10 +42,19 @@ object ColumnBridge {
     * class beyond the plan of `df` itself. `fold` must copy what it keeps
     * of a row: the plan reuses its row buffers. */
   def foldPartitions[U: scala.reflect.ClassTag](df: org.apache.spark.sql.DataFrame)(
-      fold: Iterator[org.apache.spark.sql.catalyst.InternalRow] => U): Array[U] = {
+      fold: Iterator[org.apache.spark.sql.catalyst.InternalRow] => U): Array[U] =
+    foldPartitionsOf(df)(_ => fold)
+
+  /** [[foldPartitions]] with the fold made from the number of partitions
+    * the executed plan has (under adaptive execution, known only once its
+    * query stages ran). */
+  def foldPartitionsOf[U: scala.reflect.ClassTag](df: org.apache.spark.sql.DataFrame)(
+      fold: Int => Iterator[org.apache.spark.sql.catalyst.InternalRow] => U): Array[U] = {
     val qe = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].queryExecution
     org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe, Some("collect")) {
-      qe.executedPlan.execute().mapPartitions(rows => Iterator.single(fold(rows))).collect()
+      val rows = qe.executedPlan.execute()
+      val f = fold(rows.getNumPartitions)
+      rows.mapPartitions(it => Iterator.single(f(it))).collect()
     }
   }
 
@@ -63,6 +72,57 @@ object ColumnBridge {
     val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     ofRows(spark, org.apache.spark.sql.execution.LogicalRDD(
       org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(schema), rows)(session))
+  }
+
+  /** A DataFrame of `schema` over driver-held internal `rows`: a local
+    * relation, so a projection over it is evaluated while planning and a
+    * collect of it runs no job. */
+  def fromLocalRows(spark: org.apache.spark.sql.SparkSession,
+                    rows: Seq[org.apache.spark.sql.catalyst.InternalRow],
+                    schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.DataFrame =
+    ofRows(spark, org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
+      org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(schema), rows))
+
+  /** Internal rows of `schema` written as `collect` ships them to the
+    * driver: UnsafeRows, each `[size][bytes]`, through the configured I/O
+    * compression codec. */
+  final class RowWriter(schema: org.apache.spark.sql.types.StructType) {
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, InterpretedUnsafeProjection, UnsafeRow}
+    private val bytes = new java.io.ByteArrayOutputStream
+    private val out = new java.io.DataOutputStream(org.apache.spark.io.CompressionCodec
+      .createCodec(org.apache.spark.SparkEnv.get.conf).compressedOutputStream(bytes))
+    private val buf = new Array[Byte](4096)
+    private lazy val unsafe = InterpretedUnsafeProjection.createProjection(
+      schema.fields.toSeq.zipWithIndex.map { case (f, i) => BoundReference(i, f.dataType, f.nullable) })
+
+    def write(r: org.apache.spark.sql.catalyst.InternalRow): Unit = {
+      val u = r match {
+        case u: UnsafeRow => u
+        case other => unsafe(other)
+      }
+      out.writeInt(u.getSizeInBytes)
+      u.writeToStream(out, buf)
+    }
+
+    def toByteArray: Array[Byte] = { out.close(); bytes.toByteArray }
+  }
+
+  /** The rows of a [[RowWriter]]'s bytes with `fields` fields. */
+  def readRows(packed: Array[Byte], fields: Int): Array[org.apache.spark.sql.catalyst.expressions.UnsafeRow] = {
+    import org.apache.spark.sql.catalyst.expressions.UnsafeRow
+    val bytes = org.apache.spark.io.CompressionCodec.createCodec(org.apache.spark.SparkEnv.get.conf)
+      .compressedInputStream(new java.io.ByteArrayInputStream(packed)).readAllBytes()
+    val sizes = java.nio.ByteBuffer.wrap(bytes)
+    val rows = scala.collection.mutable.ArrayBuffer.empty[UnsafeRow]
+    var at = 0
+    while (at < bytes.length) {
+      val size = sizes.getInt(at)
+      val r = new UnsafeRow(fields)
+      r.pointTo(bytes, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET + at + 4, size)
+      rows += r
+      at += 4 + size
+    }
+    rows.toArray
   }
 
   /** Block until the async listener bus has DELIVERED every queued event

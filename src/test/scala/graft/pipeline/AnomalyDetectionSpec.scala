@@ -473,7 +473,9 @@ class AnomalyDetectionSpec extends AnyFunSuite {
     // broadcast join (25); the default KMeans fitted on the driver from one
     // read of the features, which also replaces the sizing count (13); every
     // pass one fold over cached sequence blocks: exchange, max symbol,
-    // blocks + features, heap, visit sweep, scoring + tally, predictions (7)
+    // blocks + features, heap, visit sweep, scoring + tally, predictions (7).
+    // The row bound is 0 here, so the fit takes the cached-blocks path a
+    // large input takes.
     val budget = 7
     val train = twoRegimes(6, 4000, 1700L)
     val params = AnomalyDetection.Params(anomalySensitivity = 2.0, nClusters = 2,
@@ -489,7 +491,7 @@ class AnomalyDetectionSpec extends AnyFunSuite {
     sc.addSparkListener(listener)
     try {
       sc.setJobGroup(group, "fitPredict job budget")
-      try AnomalyDetection.fitPredict(spark, train, params)
+      try AnomalyDetection.driverFitRows.withValue(0L)(AnomalyDetection.fitPredict(spark, train, params))
       finally sc.clearJobGroup()
       org.apache.spark.sql.graft.ColumnBridge.waitListenerBusEmpty(sc, 30000L)
     } finally sc.removeSparkListener(listener)
@@ -501,7 +503,8 @@ class AnomalyDetectionSpec extends AnyFunSuite {
     // the fit caches its data once, as sequence blocks, and every pass of
     // every fixpoint step reads that copy: at each job of the fit at most
     // one RDD of the fit is cached, always the same one, and none is left
-    // once the fit returns, or throws
+    // once the fit returns, or throws. The row bound is 0 here, so the fit
+    // takes the cached-blocks path a large input takes.
     val params = AnomalyDetection.Params(anomalySensitivity = 2.0, nClusters = 5,
       reduceClusters = true, quantize = false, eps = 0.05)
     val train = twoRegimes(10, 1000, 3000L, uOffset = 500L)
@@ -520,7 +523,7 @@ class AnomalyDetectionSpec extends AnyFunSuite {
       sc.addSparkListener(listener)
       try {
         sc.setJobGroup(group, "fixpoint caches")
-        try body finally sc.clearJobGroup()
+        try AnomalyDetection.driverFitRows.withValue(0L)(body) finally sc.clearJobGroup()
         org.apache.spark.sql.graft.ColumnBridge.waitListenerBusEmpty(sc, 30000L)
       } finally sc.removeSparkListener(listener)
       import scala.jdk.CollectionConverters._
@@ -540,6 +543,65 @@ class AnomalyDetectionSpec extends AnyFunSuite {
     val (_, leftAfterFailure) = cachesOf(intercept[IllegalStateException](
       AnomalyDetection.fit(spark, train, params.copy(nClusters = 2), Some(failing))))
     assert(leftAfterFailure.isEmpty, s"a failed fit left persisted RDDs $leftAfterFailure")
+  }
+
+  /** The Spark jobs `body` runs on this thread, and the RDDs persisted
+    * (new since `body` began) at each of them and after it, or after it
+    * threw. */
+  private def jobsAndPersisted(body: => Any): (Int, Seq[Seq[Int]], Seq[Int]) = {
+    val sc = spark.sparkContext
+    val group = s"anomaly-detection-driver-fit-${java.util.UUID.randomUUID()}"
+    val before = sc.getPersistentRDDs.keySet.toSet
+    def persisted() = sc.getPersistentRDDs.keySet.filter(id => !before(id)).toSeq.sorted
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Seq[Int]]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+          seen.add(persisted())
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "driver fit")
+      try scala.util.Try(body) finally sc.clearJobGroup()
+      org.apache.spark.sql.graft.ColumnBridge.waitListenerBusEmpty(sc, 30000L)
+    } finally sc.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    (seen.size, seen.asScala.toSeq, persisted())
+  }
+
+  test("a small converging fitPredict runs one Spark job, its predictions none") {
+    // below the row bound the fit reads its input once (the complex
+    // quantizer's sketch pass, or a read of the symbols) and runs every
+    // later pass on the driver; the predictions are a local relation
+    val windows = segmentedCorpus(4300L, 8, 3000)
+    try {
+      val corpora = Seq(
+        "complex" -> (windows, AnomalyDetection.Params(anomalySensitivity = 2.0, nClusters = 3,
+          reduceClusters = true, quantizeType = "complex", nSymbols = 3, eps = 0.2)),
+        "quantize = false" -> (twoRegimes(6, 4000, 1700L), AnomalyDetection.Params(
+          anomalySensitivity = 2.0, nClusters = 2, reduceClusters = true, quantize = false, eps = 0.05)))
+      corpora.foreach { case (name, (train, params)) =>
+        val (jobs, _, _) = jobsAndPersisted(AnomalyDetection.fitPredict(spark, train, params)._2.collect())
+        info(s"$name: $jobs Spark jobs")
+        assert(jobs == 1, s"$name: fitPredict and the read of its predictions ran $jobs Spark jobs")
+      }
+    } finally windows.unpersist()
+  }
+
+  test("a small fit persists no RDD at any job, nor after it returns or throws") {
+    val params = AnomalyDetection.Params(anomalySensitivity = 2.0, nClusters = 5,
+      reduceClusters = true, quantize = false, eps = 0.05)
+    val train = twoRegimes(10, 1000, 3000L, uOffset = 500L)
+    val (jobs, atJobs, after) = jobsAndPersisted(AnomalyDetection.fitPredict(spark, train, params)._2.collect())
+    assert(jobs >= 1 && atJobs.forall(_.isEmpty), s"persisted RDDs at the fit's jobs: $atJobs")
+    assert(after.isEmpty, s"the fit left persisted RDDs $after")
+    // one sequence cannot form two clusters: the default clusterer throws
+    // after the read
+    val one = longForm(Seq(0L -> Pfsa.m2.sample(500, seed = 10L)))
+    val (_, atFailedJobs, afterFailure) = jobsAndPersisted(assert(intercept[IllegalArgumentException](
+      AnomalyDetection.fit(spark, one, params.copy(nClusters = 2))).getMessage.contains("n_samples=1")))
+    assert(atFailedJobs.forall(_.isEmpty) && afterFailure.isEmpty,
+      s"a failed fit persisted RDDs: at its jobs $atFailedJobs, after $afterFailure")
   }
 
   /** Continuous streams cut like the benchmark's fit workload: each stream

@@ -3,7 +3,7 @@ package graft.tools
 import graft.core.{Llk, Pfsa, Segment}
 import graft.pipeline.AnomalyDetection
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, concat, lit, when}
 import org.apache.spark.sql.types.{IntegerType, StructType}
 
 /** Dumps the models and predictions of `fitPredict`, `fit` and `predict`
@@ -16,7 +16,8 @@ import org.apache.spark.sql.types.{IntegerType, StructType}
   * Usage: `Test/runMain graft.tools.SameBitsDump <out dir> [corpus ...]`
   *
   * Corpora: three shaped like the benchmark's fit workload (48 random-walk
-  * streams cut into 1000/500 windows, complex quantizer), one the
+  * streams cut into 1000/500 windows, complex quantizer), two more of that
+  * shape with string seq_ids and with NaN and null values, one the
   * reduce-clusters fixpoint merges (k 5 → 4), one with `quantize = false`,
   * one with a pluggable clusterer, and `many_groups`: PlanShapeFoldSpec's
   * 600 short sequences, about 150 per partition, where an aggregate would
@@ -88,6 +89,15 @@ object SameBitsDump {
       "fit_large_9301" -> (() => segmented(9301L)),
       "fit_large_9302" -> (() => segmented(9302L)),
       "fit_large_9303" -> (() => segmented(9303L)),
+      "complex_strings" -> { () =>
+        val c = segmented(9304L)
+        c.copy(df = c.df.withColumn("seq_id", concat(lit("w"), col("seq_id").cast("string"))))
+      },
+      "complex_gaps" -> { () =>
+        val c = segmented(9305L)
+        c.copy(df = c.df.withColumn("value", when(col("t") % 97 === 5, lit(Double.NaN))
+          .when(col("t") % 89 === 7, lit(null)).otherwise(col("value"))))
+      },
       "merging" -> (() => Corpus(longForm(twoRegimes(10, 1000, 3000L, 500L)), fixpoint)),
       "quantize_false" -> (() => Corpus(longForm(twoRegimes(6, 4000, 1700L, 100L)), plain)),
       "pluggable" -> (() => Corpus(longForm(twoRegimes(6, 3000, 1900L, 100L)), plain,
@@ -118,10 +128,11 @@ object SameBitsDump {
     sb.result()
   }
 
-  /** Prediction rows sorted by seq_id: (seq_id, is_anomaly, closest, llk). */
-  private def rows(pred: DataFrame): Seq[(Long, Boolean, Int, Double)] =
-    pred.collect().map(r => (r.getLong(0), r.getBoolean(1), r.getInt(2), r.getDouble(3)))
-      .sortBy(_._1).toSeq
+  /** Prediction rows sorted by seq_id (numeric ids in number order):
+    * (seq_id, is_anomaly, closest, llk). */
+  private def rows(pred: DataFrame): Seq[(Any, Boolean, Int, Double)] =
+    pred.collect().map(r => (r.get(0), r.getBoolean(1), r.getInt(2), r.getDouble(3)))
+      .sortBy(_._1 match { case id: Long => (id, ""); case id => (0L, id.toString) }).toSeq
 
   private def dump(spark: SparkSession, c: Corpus): String = {
     val df = c.df.persist()
@@ -137,7 +148,8 @@ object SameBitsDump {
         preds.foreach { case (id, an, cl, llk) => sb ++= s"$id $an $cl ${bits(llk)}\n" }
         c.symbols.foreach { syms =>
           val off = preds.count { case (id, _, cl, llk) =>
-            val want = if (cl < 0) Double.PositiveInfinity else Llk.llk(syms(id), m.library(cl))
+            val want = if (cl < 0) Double.PositiveInfinity
+              else Llk.llk(syms(id.asInstanceOf[Long]), m.library(cl))
             java.lang.Double.doubleToRawLongBits(want) != java.lang.Double.doubleToRawLongBits(llk)
           }
           sb ++= s"== $name llks that differ from Llk.llk: $off of ${preds.size}\n"
