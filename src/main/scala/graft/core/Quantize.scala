@@ -76,17 +76,17 @@ object Quantize {
                               detrend: Boolean = false, relErr: Double = 1e-4,
                               seqCol: String = "seq_id", tCol: String = "t")
       : (ComplexModel, Option[Int]) = {
-    val (model, maxSymbol, _) = sketched(df, valCol, nBins, detrend, relErr, seqCol, tCol, 0L)
+    val (model, maxSymbol, _) = sketched(df, valCol, nBins, detrend, relErr, seqCol, tCol, None)
     (model, maxSymbol)
   }
 
-  /** [[fitComplexWithMaxSymbol]]'s pass, which with `keepRows` > 0 also
-    * reads each partition's `(value, seq_id, t)` rows to the driver while
-    * it holds at most `keepRows` / partitions rows: the rows when every
-    * partition did. The sketch sees the same values in the same order
-    * either way. */
+  /** [[fitComplexWithMaxSymbol]]'s pass, which with `keepBytes` also
+    * reads each partition's `(value, seq_id, t)` rows to the driver
+    * ([[SeqBlocks.Keep]], each partition up to `keepBytes` / partitions
+    * bytes): the rows when every partition fit. The sketch sees the same
+    * values in the same order either way. */
   private def sketched(df: DataFrame, valCol: String, nBins: Int, detrend: Boolean,
-                       relErr: Double, seqCol: String, tCol: String, keepRows: Long)
+                       relErr: Double, seqCol: String, tCol: String, keepBytes: Option[Long])
       : (ComplexModel, Option[Int], Option[(Array[Array[Byte]], StructType)]) = {
     import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal}
     import org.apache.spark.sql.catalyst.expressions.aggregate.ApproximatePercentile
@@ -100,34 +100,33 @@ object Quantize {
       else if (df.schema.find(_.name == valCol).map(_.dataType)
           .getOrElse(df.select(col(valCol)).schema.head.dataType) == DoubleType) col(valCol)
       else col(valCol).cast("double")
-    val values = df.select((if (keepRows > 0) Seq(value, col(seqCol), col(tCol)) else Seq(value)): _*)
+    val values = df.select((if (keepBytes.nonEmpty) Seq(value, col(seqCol), col(tCol)) else Seq(value)): _*)
     val schema = values.schema
     val probes = (1 until nBins).map(_.toDouble / nBins).toArray :+ 1.0
     val accuracy = math.min(Int.MaxValue, math.ceil(1.0 / relErr).toLong).toInt
     val sketch = new ApproximatePercentile(BoundReference(0, DoubleType, nullable = true),
       Literal(probes), Literal(accuracy))
     val read = ColumnBridge.foldPartitionsOf(values) { parts =>
-      val cap = keepRows / math.max(1, parts)
+      val cap = keepBytes.map(_ / math.max(1, parts))
       rows => {
-        val kept = if (keepRows > 0) new SeqBlocks.Keep(schema, cap) else null
-        if (!rows.hasNext) (None, Option(kept).flatMap(_.result))
+        val kept = cap.map(new SeqBlocks.Keep(schema, _))
+        if (!rows.hasNext) (None, kept.flatMap(_.result))
         else {
           val buf = sketch.createAggregationBuffer()
           var nan = false
           rows.foreach { r =>
-            if (kept != null) kept.add(r)
+            kept.foreach(_.add(r))
             if (!r.isNullAt(0)) {
               val x = r.getDouble(0)
               if (x.isNaN) nan = true else buf.add(x)
             }
           }
-          (Some((sketch.serialize(buf), nan)), Option(kept).flatMap(_.result))
+          (Some((sketch.serialize(buf), nan)), kept.flatMap(_.result))
         }
       }
     }
     val partials = read.flatMap(_._1)
-    val rows = Some(read.map(_._2)).filter(r => keepRows > 0 && r.forall(_.nonEmpty))
-      .map(r => (r.map(_.get), schema))
+    val rows = SeqBlocks.allKept(read.map(_._2)).filter(_ => keepBytes.nonEmpty).map((_, schema))
     if (partials.isEmpty) (ComplexModel(Array.empty, detrend), None, rows)
     else {
       val merged = partials.foldLeft(sketch.createAggregationBuffer()) { case (b, (bytes, _)) =>
@@ -150,64 +149,61 @@ object Quantize {
     * complex. The complex partition is `fitted` when given, else fitted
     * here on `df` with `nBins` bins.
     *
-    * @return (symbol frame, complex partition, the largest symbol when
-    *         this call fitted the partition and its pass read it) */
+    * @return (symbol frame, complex partition) */
   def byType(df: DataFrame, quantize: Boolean, quantizeType: String, nBins: Int,
-             fitted: Option[ComplexModel] = None)
-      : (DataFrame, Option[ComplexModel], Option[Option[Int]]) =
-    if (!quantize) (passthrough(df), None, None)
+             fitted: Option[ComplexModel] = None): (DataFrame, Option[ComplexModel]) =
+    if (!quantize) (passthrough(df), None)
     else quantizeType match {
-      case "simple" => (simple(df), None, None)
-      case "simple-second" => (simpleSecond(df), None, None)
+      case "simple" => (simple(df), None)
+      case "simple-second" => (simpleSecond(df), None)
       case "complex" =>
-        val (m, maxSymbol) = fitted match {
-          case Some(m) => (m, None)
-          case None =>
-            val (m, mx) = fitComplexWithMaxSymbol(df, nBins = nBins)
-            (m, Some(mx))
-        }
-        (applyComplex(df, m), Some(m), maxSymbol)
+        val m = fitted.getOrElse(fitComplex(df, nBins = nBins))
+        (applyComplex(df, m), Some(m))
       case other => throw new IllegalArgumentException(s"unknown quantize_type: $other")
     }
 
-  /** [[byType]] for a fit, which also reads the rows to the driver when
-    * the input holds at most `keepRows` rows (each of the read's
-    * partitions at most `keepRows` / partitions), in the same one pass:
-    * the complex quantizer's sketch pass, or for the other quantizers a
-    * read of the symbol frame. The read's rows are `(x, seq_id, t)`, and
-    * its symbol of a row is the symbol frame's: for the complex quantizer
-    * x is the value and the symbol [[graft.functions.BinIndex]] of it
-    * cast as the frame casts it, else x is the symbol. With `keepRows`
-    * <= 0 this is [[byType]].
+  /** [[byType]] for a fit, in one pass over the input that also reads
+    * the largest symbol and, when the input fits in `keepBytes` (each of
+    * the pass's partitions in `keepBytes` / partitions, counted as
+    * [[SeqBlocks.Keep]] counts), its rows to the driver: the complex
+    * quantizer's sketch pass, or for the other quantizers a read of the
+    * symbol frame. The read's rows are `(x, seq_id, t)`, and its symbol
+    * of a row is the symbol frame's: for the complex quantizer x is the
+    * value and the symbol [[graft.functions.BinIndex]] of it cast as the
+    * frame casts it, else x is the symbol.
     *
     * @return (symbol frame, built when first called; complex partition;
-    *         the largest symbol when this call fitted the partition; the
-    *         rows read) */
+    *         the largest symbol, None when there is none; the rows read) */
   private[graft] def byTypeRead(df: DataFrame, quantize: Boolean, quantizeType: String,
-                                nBins: Int, keepRows: Long)
-      : (() => DataFrame, Option[ComplexModel], Option[Option[Int]], Option[SeqBlocks.Read]) = {
+                                nBins: Int, keepBytes: Long)
+      : (() => DataFrame, Option[ComplexModel], Option[Int], Option[SeqBlocks.Read]) = {
     import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast}
     import org.apache.spark.sql.types.{ByteType, DoubleType}
-    if (keepRows <= 0) {
-      val (q, m, mx) = byType(df, quantize, quantizeType, nBins)
-      (() => q, m, mx, None)
-    } else if (quantize && quantizeType == "complex") {
-      val (m, mx, rows) = sketched(df, "value", nBins, detrend = false, 1e-4, "seq_id", "t", keepRows)
+    if (quantize && quantizeType == "complex") {
+      val (m, mx, rows) = sketched(df, "value", nBins, detrend = false, 1e-4, "seq_id", "t", Some(keepBytes))
       lazy val q = applyComplex(df, m)
-      (() => q, Some(m), Some(mx), rows.map { case (parts, schema) =>
+      (() => q, Some(m), mx, rows.map { case (parts, schema) =>
         SeqBlocks.Read(parts, schema, Cast(graft.functions.BinIndex(
           BoundReference(0, DoubleType, nullable = true), m.cutoffs), ByteType))
       })
     } else {
-      val (q, _, _) = byType(df, quantize, quantizeType, nBins) // throws on an unknown type
+      val (q, _) = byType(df, quantize, quantizeType, nBins) // throws on an unknown type
       val symbols = q.select(col("symbol"), col("seq_id"), col("t"))
       val schema = symbols.schema
       val read = org.apache.spark.sql.graft.ColumnBridge.foldPartitionsOf(symbols) { parts =>
-        val cap = keepRows / math.max(1, parts)
-        rows => { val kept = new SeqBlocks.Keep(schema, cap); rows.foreach(kept.add); kept.result }
+        val cap = keepBytes / math.max(1, parts)
+        rows => {
+          val kept = new SeqBlocks.Keep(schema, cap)
+          var max = Int.MinValue
+          rows.foreach { r =>
+            kept.add(r)
+            if (!r.isNullAt(0) && r.getByte(0) > max) max = r.getByte(0)
+          }
+          (max, kept.result)
+        }
       }
-      (() => q, None, None, Some(read).filter(_.forall(_.nonEmpty)).map(r =>
-        SeqBlocks.Read(r.map(_.get), schema, BoundReference(0, ByteType, nullable = true))))
+      (() => q, None, read.map(_._1).filter(_ > Int.MinValue).maxOption,
+        SeqBlocks.allKept(read.map(_._2)).map(SeqBlocks.Read(_, schema, BoundReference(0, ByteType, nullable = true))))
     }
   }
 

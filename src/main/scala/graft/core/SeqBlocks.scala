@@ -200,14 +200,6 @@ object SeqBlocks {
     }
   }
 
-  /** The largest symbol of the blocks, None when they hold none. */
-  def maxSymbol(blocks: Parts): Option[Int] =
-    blocks.fold { it =>
-      var m = Int.MinValue
-      it.foreach(_.symbols.foreach(s => if (s > m) m = s))
-      m
-    }.filter(_ > Int.MinValue).maxOption
-
   /** Rows `(x, seq_id, t)` read to the driver in one pass, per input
     * partition as bytes ([[Keep]]), with `symbol` giving a row's symbol
     * (null: none) from its `x`. */
@@ -215,19 +207,24 @@ object SeqBlocks {
                                        symbol: Expression)
 
   /** A partition's rows kept as bytes ([[ColumnBridge.RowWriter]]) while
-    * the partition holds at most `cap` rows: [[result]] is None once it
-    * holds more. */
+    * they take at most `cap` bytes as the driver decodes them (each row
+    * its UnsafeRow and a 4-byte length): [[result]] is None once they
+    * take more, and no row is kept after that. */
   private[graft] final class Keep(schema: StructType, cap: Long) {
     private var kept = new ColumnBridge.RowWriter(schema)
-    private var n = 0L
 
-    def add(r: InternalRow): Unit = {
-      n += 1
-      if (n <= cap) kept.write(r) else kept = null
-    }
+    def add(r: InternalRow): Unit =
+      if (kept != null) {
+        kept.write(r)
+        if (kept.written > cap) kept = null
+      }
 
     def result: Option[Array[Byte]] = Option(kept).map(_.toByteArray)
   }
+
+  /** Every partition's [[Keep.result]], None unless each kept its rows. */
+  private[graft] def allKept(parts: Array[Option[Array[Byte]]]): Option[Array[Array[Byte]]] =
+    if (parts.forall(_.nonEmpty)) Some(parts.map(_.get)) else None
 
   /** [[sortedRows]] of a [[Read]], replayed on the driver: every row goes
     * to the partition Spark's `HashPartitioning(seq_id, partitions)` gives
@@ -252,13 +249,14 @@ object SeqBlocks {
       java.util.Arrays.sort(rows, new InterpretedOrdering(Seq(SortOrder(seqAt, Ascending),
         SortOrder(tAt, Ascending))))
       rows
-    }, read)
+    }, seqAt.dataType, read.symbol)
   }
 
-  /** [[sortedRows]]' partitions held on the driver ([[replay]]). */
-  private[graft] final class LocalRows(parts: Array[Array[UnsafeRow]], read: Read) {
-    val seqType: DataType = read.schema(1).dataType
-
+  /** [[sortedRows]]' partitions held on the driver ([[replay]]): rows
+    * `(x, seq_id, t)` of the given seq_id type, with `symbol` giving a
+    * row's symbol from its `x`. */
+  private[graft] final class LocalRows(parts: Array[Array[UnsafeRow]], val seqType: DataType,
+                                       symbol: Expression) {
     /** [[cut]] of these rows: the same blocks, on the driver. */
     def cut(bases: Option[Seq[Pfsa]]): Parts = {
       val lib = bases.map(_.toArray).orNull
@@ -266,7 +264,7 @@ object SeqBlocks {
         val row = new GenericInternalRow(2)
         cutPartition(parts(p).iterator.map { r =>
           row.update(0, if (r.isNullAt(1)) null else r.get(1, seqType))
-          row.update(1, read.symbol.eval(r))
+          row.update(1, symbol.eval(r))
           row
         }, seqType, lib).toArray
       })

@@ -21,19 +21,20 @@ import org.apache.spark.sql.functions._
   * predict exchange the rows once into per-partition sequence blocks
   * ([[SeqBlocks]]) and run every pass as one fold over them — no Catalyst
   * plan, columnar cache or aggregate operator per pass. The reference fits
-  * in process (detection.py:320-339), and so does a small fit here: up to
-  * 2^20 long rows the fit reads its input in ONE Spark job (the complex
-  * quantizer's sketch pass, or a read of the other quantizers' symbols,
-  * also ships the rows), replays the exchange and the sort on the driver,
-  * and runs every later pass there through the same folds, so a
-  * converging fitPredict with the default clusterer runs one job and its
-  * predictions are a local relation. A larger fit caches the blocks and
-  * runs seven Spark jobs (the sketch or largest-symbol read, the exchange,
-  * blocks + features, heap, visit sweep, scoring + tally, predictions),
-  * and each further fixpoint step three. Like the reference's
-  * `cluster_llks`, the llks of a sequence form one wide row: the
-  * confusion and stats ([[Cluster.llkTally]]) and the predictions are
-  * read off it.
+  * in process (detection.py:320-339), and so does a small fit here: the
+  * fit reads its input in ONE Spark job (the complex quantizer's sketch
+  * pass, or a read of the other quantizers' symbols, which also finds the
+  * largest symbol), and up to 36 MiB of rows as the driver decodes them
+  * (2^20 rows of a numeric value, seq_id and t) that job also ships the
+  * rows: the driver replays the exchange and the sort, and runs every
+  * later pass there through the same folds, so a converging fitPredict
+  * with the default clusterer runs one job and its predictions are a
+  * local relation. A larger fit caches the blocks and runs seven Spark
+  * jobs (the read, the exchange, blocks + features, heap, visit sweep,
+  * scoring + tally, predictions), and each further fixpoint step three.
+  * Like the reference's `cluster_llks`, the llks of a sequence form one
+  * wide row: the confusion and stats ([[Cluster.llkTally]]) and the
+  * predictions are read off it.
   */
 object AnomalyDetection {
 
@@ -98,31 +99,49 @@ object AnomalyDetection {
     (model, pred.get)
   }
 
-  /** Below this many long rows (each of the input read's partitions at
-    * most this many / partitions) the fit reads its input in one Spark
-    * job and runs every later pass on the driver. */
-  private val DriverFitRows: Long = 1L << 20
+  /** The bytes of input rows up to which the fit reads its input in one
+    * Spark job and runs every later pass on the driver (each of the
+    * input read's partitions at most this many / partitions), counted as
+    * the driver decodes them: 36 bytes a row of a numeric value, seq_id
+    * and t, so 2^20 such rows. */
+  private val DriverFitBytes: Long = 36L << 20
 
-  /** The bound the fits of the current thread use: [[DriverFitRows]],
+  /** The bound the fits of the current thread use: [[DriverFitBytes]],
     * unless a test moves it to run one placement or the other. */
-  private[pipeline] val driverFitRows = new scala.util.DynamicVariable[Long](DriverFitRows)
+  private[pipeline] val driverFitBytes = new scala.util.DynamicVariable[Long](DriverFitBytes)
+
+  /** The fit's blocks and what its one read of the input gave. */
+  private final case class Placed(blocks: SeqBlocks.Parts, seqType: org.apache.spark.sql.types.DataType,
+                                  complexModel: Option[Quantize.ComplexModel], alphabetSize: Int)
+
+  /** Quantize `longDf` and cut its blocks, with each sequence's features
+    * against the base PFSAs when `withFeatures`. The quantizer's pass
+    * reads the largest symbol, and a small input's rows too: those are
+    * exchanged and sorted on the driver and cut there. A larger input
+    * goes through one exchange and sort into blocks, persisted. Nothing
+    * of the rows read outlives this call but the blocks. */
+  private def place(longDf: DataFrame, params: Params, withFeatures: Boolean): Placed = {
+    val (quantized, complexModel, maxSym, read) = Quantize.byTypeRead(longDf, params.quantize,
+      params.quantizeType, params.nSymbols, driverFitBytes.value)
+    require(maxSym.nonEmpty, "AnomalyDetection.fit: input has no rows after quantization")
+    val alphabetSize = math.max(2, maxSym.get + 1)
+    val bases = if (withFeatures) Some(Cluster.basePfsas(alphabetSize)) else None
+    val (blocks, seqType) = read match {
+      case Some(r) =>
+        val rows = SeqBlocks.replay(r, longDf.sparkSession.sessionState.conf.numShufflePartitions)
+        (rows.cut(bases), rows.seqType)
+      case None =>
+        val (rows, seqType) = SeqBlocks.sortedRows(quantized())
+        (SeqBlocks.Parts.Cached(SeqBlocks.cut(rows, seqType, bases)).persist(), seqType)
+    }
+    Placed(blocks, seqType, complexModel, alphabetSize)
+  }
 
   private def fitImpl(spark: SparkSession, longDf: DataFrame, params: Params,
                       clusterer: Option[org.apache.spark.ml.Estimator[_ <: org.apache.spark.ml.Model[_]]],
                       alsoPredict: Boolean): (Model, Option[DataFrame]) = {
     import org.apache.spark.ml.linalg.Vectors
     import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // the complex quantizer's fit pass also reads the largest symbol off
-    // its aggregate; the other quantizers read it off the blocks. A small
-    // input's rows reach the driver with the same pass, and the exchange
-    // and sort into blocks replay there.
-    val (quantized, complexModel, fittedMax, read) = Quantize.byTypeRead(longDf, params.quantize,
-      params.quantizeType, params.nSymbols, driverFitRows.value)
-    val local = read.map(SeqBlocks.replay(_, longDf.sparkSession.sessionState.conf.numShufflePartitions))
-    lazy val sorted = SeqBlocks.sortedRows(quantized())
-    val seqType = local.fold(sorted._2)(_.seqType)
-    def place(bases: Option[Seq[Pfsa]]): SeqBlocks.Parts =
-      local.fold[SeqBlocks.Parts](SeqBlocks.Parts.Cached(SeqBlocks.cut(sorted._1, seqType, bases)))(_.cut(bases))
     // llk features vs the base PFSAs depend only on (sequences, alphabet),
     // so the blocks carry them from the pass that builds them. With k <= 1
     // and the default clusterer the label is a constant and no feature is
@@ -134,18 +153,9 @@ object AnomalyDetection {
     var blocks: SeqBlocks.Parts = null
     var feat: DataFrame = null
     try {
-      val maxSym = fittedMax.getOrElse {
-        if (withFeatures) SeqBlocks.maxSymbol(place(None))
-        else {
-          blocks = place(None).persist()
-          SeqBlocks.maxSymbol(blocks)
-        }
-      }
-      require(maxSym.nonEmpty, "AnomalyDetection.fit: input has no rows after quantization")
-      val alphabetSize = math.max(2, maxSym.get + 1)
+      val Placed(placed, seqType, complexModel, alphabetSize) = place(longDf, params, withFeatures)
+      blocks = placed
       val genParams = GenESeSS.Params(eps = params.eps)
-      if (blocks == null)
-        blocks = place(if (withFeatures) Some(Cluster.basePfsas(alphabetSize)) else None).persist()
 
       // the default clusterer's features reach the driver once, with the
       // job that materializes cached blocks, for every fixpoint step's KMeans
@@ -211,7 +221,10 @@ object AnomalyDetection {
       // the cache goes; off driver-held blocks they are a local relation
       val pred =
         if (alsoPredict) Some(predictions(Llk.scoreBlocks(spark, blocks, seqType, model.library),
-          model)).map(p => if (local.isEmpty) p.localCheckpoint(true) else p)
+          model)).map(p => blocks match {
+            case _: SeqBlocks.Parts.Cached => p.localCheckpoint(true)
+            case _: SeqBlocks.Parts.Local => p
+          })
         else None
       (model, pred)
     } finally {
@@ -238,7 +251,7 @@ object AnomalyDetection {
     */
   def predict(spark: SparkSession, model: Model, longDf: DataFrame): DataFrame = {
     val p = model.params
-    val (quantized, _, _) =
+    val (quantized, _) =
       Quantize.byType(longDf, p.quantize, p.quantizeType, p.nSymbols, model.complexModel)
     val (rows, seqType) = SeqBlocks.sortedRows(quantized)
     predictions(Llk.scoreBlocks(spark, SeqBlocks.Parts.Cached(SeqBlocks.cut(rows, seqType, None)),

@@ -95,6 +95,11 @@ object ColumnBridge {
     private lazy val unsafe = InterpretedUnsafeProjection.createProjection(
       schema.fields.toSeq.zipWithIndex.map { case (f, i) => BoundReference(i, f.dataType, f.nullable) })
 
+    private var n = 0L
+
+    /** Bytes written before compression: each row's size and its bytes. */
+    def written: Long = n
+
     def write(r: org.apache.spark.sql.catalyst.InternalRow): Unit = {
       val u = r match {
         case u: UnsafeRow => u
@@ -102,6 +107,7 @@ object ColumnBridge {
       }
       out.writeInt(u.getSizeInBytes)
       u.writeToStream(out, buf)
+      n += 4 + u.getSizeInBytes
     }
 
     def toByteArray: Array[Byte] = { out.close(); bytes.toByteArray }

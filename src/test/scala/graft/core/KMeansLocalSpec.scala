@@ -42,25 +42,6 @@ class KMeansLocalSpec extends AnyFunSuite {
   private def bits(m: KMeansModel) =
     m.clusterCenters.map(_.toArray.toSeq.map(java.lang.Double.doubleToRawLongBits)).toSeq
 
-  /** (result, Spark jobs `body` ran). */
-  private def jobsOf[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val group = "kmeans-local-" + java.util.UUID.randomUUID()
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "kmeans local")
-      val r = try body finally sc.clearJobGroup()
-      org.apache.spark.sql.graft.ColumnBridge.waitListenerBusEmpty(sc, 30000L)
-      (r, jobs.get())
-    } finally sc.removeSparkListener(listener)
-  }
-
   /** The messages of `e` and its causes. */
   private def messages(e: Throwable): String =
     Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
@@ -73,7 +54,7 @@ class KMeansLocalSpec extends AnyFunSuite {
   private def assertParity(feat: DataFrame, k: Int, seed: Long, what: String,
                            fitParts: Int = 1, checkpoint: Int = 0): Int = {
     import scala.util.{Failure, Success, Try}
-    val (engine, jobs) = jobsOf(Try(Cluster.fitKMeans(feat, k, seed)))
+    val (engine, jobs) = TestSpark.jobsOf(spark.sparkContext)(Try(Cluster.fitKMeans(feat, k, seed)))
     val f = engine.map(_._1).getOrElse(feat)
     (engine, Try(seeded(k, seed).fit(f.coalesce(fitParts)))) match {
       case (Failure(e), Failure(r)) =>
@@ -150,7 +131,7 @@ class KMeansLocalSpec extends AnyFunSuite {
     val windows = Segment.windows(streams.toDF("seq_id", "t", "value"), 1000, 500)
       .select((col("seq_id") * 1000000L + col("win_id")).as("seq_id"), col("pos").as("t"),
         col("value"))
-    val (symbols, _, _) = Quantize.byType(windows, quantize = true, "complex", 3)
+    val (symbols, _) = Quantize.byType(windows, quantize = true, "complex", 3)
     val feat = Cluster.featuresLong(spark, symbols, alphabetSize = 3).cache()
     try {
       assert(feat.count() == 240)

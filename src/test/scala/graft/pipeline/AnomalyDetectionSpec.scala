@@ -474,58 +474,36 @@ class AnomalyDetectionSpec extends AnyFunSuite {
     // read of the features, which also replaces the sizing count (13); every
     // pass one fold over cached sequence blocks: exchange, max symbol,
     // blocks + features, heap, visit sweep, scoring + tally, predictions (7).
-    // The row bound is 0 here, so the fit takes the cached-blocks path a
-    // large input takes.
+    // The bound is 0 here, so the fit takes the path a large input takes:
+    // the read that would have kept a small input's rows (it finds the
+    // largest symbol) instead of the max-symbol pass, then the cached blocks.
     val budget = 7
     val train = twoRegimes(6, 4000, 1700L)
     val params = AnomalyDetection.Params(anomalySensitivity = 2.0, nClusters = 2,
       reduceClusters = true, quantize = false, eps = 0.05)
-    val sc = spark.sparkContext
-    val group = "anomaly-detection-job-budget"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "fitPredict job budget")
-      try AnomalyDetection.driverFitRows.withValue(0L)(AnomalyDetection.fitPredict(spark, train, params))
-      finally sc.clearJobGroup()
-      org.apache.spark.sql.graft.ColumnBridge.waitListenerBusEmpty(sc, 30000L)
-    } finally sc.removeSparkListener(listener)
-    info(s"${jobs.get()} Spark jobs")
-    assert(jobs.get() <= budget, s"fitPredict ran ${jobs.get()} Spark jobs, budget $budget")
+    val (_, jobs) = graft.TestSpark.jobsOf(spark.sparkContext)(
+      AnomalyDetection.driverFitBytes.withValue(0L)(AnomalyDetection.fitPredict(spark, train, params)))
+    info(s"$jobs Spark jobs")
+    assert(jobs <= budget, s"fitPredict ran $jobs Spark jobs, budget $budget")
   }
 
   test("the fixpoint holds one cached copy of the long data after each step") {
     // the fit caches its data once, as sequence blocks, and every pass of
     // every fixpoint step reads that copy: at each job of the fit at most
     // one RDD of the fit is cached, always the same one, and none is left
-    // once the fit returns, or throws. The row bound is 0 here, so the fit
+    // once the fit returns, or throws. The bound is 0 here, so the fit
     // takes the cached-blocks path a large input takes.
     val params = AnomalyDetection.Params(anomalySensitivity = 2.0, nClusters = 5,
       reduceClusters = true, quantize = false, eps = 0.05)
     val train = twoRegimes(10, 1000, 3000L, uOffset = 500L)
     val sc = spark.sparkContext
-    val group = "anomaly-detection-long-caches"
     def cached(before: Set[Int]) =
       sc.getRDDStorageInfo.toSeq.filter(i => !before(i.id) && i.numCachedPartitions > 0).map(_.id)
     def cachesOf(body: => Any): (Seq[Seq[Int]], Seq[Int]) = {
       val before = sc.getRDDStorageInfo.map(_.id).toSet
       val seen = new java.util.concurrent.ConcurrentLinkedQueue[Seq[Int]]()
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
-            seen.add(cached(before))
-      }
-      sc.addSparkListener(listener)
-      try {
-        sc.setJobGroup(group, "fixpoint caches")
-        try AnomalyDetection.driverFitRows.withValue(0L)(body) finally sc.clearJobGroup()
-        org.apache.spark.sql.graft.ColumnBridge.waitListenerBusEmpty(sc, 30000L)
-      } finally sc.removeSparkListener(listener)
+      graft.TestSpark.inJobGroup(sc)(() => seen.add(cached(before)))(
+        AnomalyDetection.driverFitBytes.withValue(0L)(body))
       import scala.jdk.CollectionConverters._
       (seen.asScala.toSeq, sc.getPersistentRDDs.keySet.filter(id => !before(id)).toSeq)
     }
@@ -550,27 +528,16 @@ class AnomalyDetectionSpec extends AnyFunSuite {
     * threw. */
   private def jobsAndPersisted(body: => Any): (Int, Seq[Seq[Int]], Seq[Int]) = {
     val sc = spark.sparkContext
-    val group = s"anomaly-detection-driver-fit-${java.util.UUID.randomUUID()}"
     val before = sc.getPersistentRDDs.keySet.toSet
     def persisted() = sc.getPersistentRDDs.keySet.filter(id => !before(id)).toSeq.sorted
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[Seq[Int]]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
-          seen.add(persisted())
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "driver fit")
-      try scala.util.Try(body) finally sc.clearJobGroup()
-      org.apache.spark.sql.graft.ColumnBridge.waitListenerBusEmpty(sc, 30000L)
-    } finally sc.removeSparkListener(listener)
+    graft.TestSpark.inJobGroup(sc)(() => seen.add(persisted()))(scala.util.Try(body))
     import scala.jdk.CollectionConverters._
     (seen.size, seen.asScala.toSeq, persisted())
   }
 
   test("a small converging fitPredict runs one Spark job, its predictions none") {
-    // below the row bound the fit reads its input once (the complex
+    // below the bound the fit reads its input once (the complex
     // quantizer's sketch pass, or a read of the symbols) and runs every
     // later pass on the driver; the predictions are a local relation
     val windows = segmentedCorpus(4300L, 8, 3000)

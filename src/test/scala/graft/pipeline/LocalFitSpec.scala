@@ -9,8 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** A small fit reads its input in one job and runs every later pass on the
   * driver; a larger one caches its blocks and runs each pass as a job. The
   * two placements run the same folds, so they fit and predict the same
-  * bits: here every corpus is fitted with the row bound moved to 0 (cached
-  * blocks) and to the largest long (driver-held blocks), and the model
+  * bits: here every corpus is fitted with the bound moved to 0 (cached
+  * blocks, the path a large input takes) and to the largest long (driver-held blocks), and the model
   * dumps (raw bits of cutoffs, means and stds, and the machines) and the
   * sorted prediction rows of `fitPredict`, `fit` and `predict` must be
   * byte-identical. */
@@ -38,32 +38,13 @@ class LocalFitSpec extends AnyFunSuite {
     pred.collect().map(r => s"${r.get(0)} ${r.getBoolean(1)} ${r.getInt(2)} ${bits(r.getDouble(3))}")
       .sorted.mkString("\n")
 
-  /** The Spark jobs `body` runs on this thread. */
-  private def jobsOf[A](s: SparkSession)(body: => A): (A, Int) = {
-    val sc = s.sparkContext
-    val group = s"local-fit-${java.util.UUID.randomUUID()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "local fit")
-      val out = try body finally sc.clearJobGroup()
-      org.apache.spark.sql.graft.ColumnBridge.waitListenerBusEmpty(sc, 30000L)
-      (out, jobs.get())
-    } finally sc.removeSparkListener(listener)
-  }
-
-  /** The dump of fitPredict, fit and predict under the row bound `bound`,
+  /** The dump of fitPredict, fit and predict under the bound `bound`,
     * with the Spark jobs of the fitPredict and the read of its rows. */
   private def dump(s: SparkSession, df: DataFrame, params: AnomalyDetection.Params,
                    clusterer: Option[org.apache.spark.ml.Estimator[_ <: org.apache.spark.ml.Model[_]]],
                    bound: Long): (String, Int) =
-    AnomalyDetection.driverFitRows.withValue(bound) {
-      val ((fused, fusedRows), jobs) = jobsOf(s) {
+    AnomalyDetection.driverFitBytes.withValue(bound) {
+      val ((fused, fusedRows), jobs) = TestSpark.jobsOf(s.sparkContext) {
         val (m, pred) = AnomalyDetection.fitPredict(s, df, params, clusterer)
         (m, rows(pred))
       }
@@ -171,22 +152,28 @@ class LocalFitSpec extends AnyFunSuite {
     samePlacements(longForm(one, seqs), params, s = one)
   }
 
-  test("a partition past its share of the bound falls back after one sketch pass, same bits") {
-    // one input partition holds most rows: with the bound at the row count
-    // its share (a quarter) is crossed partway through the read
-    val windows = segmented(5501L, 8).collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    val (big, rest) = windows.splitAt(windows.length * 3 / 4)
-    val parts = Seq(big.toSeq) ++ rest.grouped(rest.length / 3 + 1).map(_.toSeq)
-    val uneven = spark.sparkContext.parallelize(parts, parts.length).flatMap(identity)
-      .toDF("seq_id", "t", "value").persist()
-    try {
-      uneven.count()
-      val (cached, cachedJobs) = dump(spark, uneven, complex, None, 0L)
-      val (fellBack, fellBackJobs) = dump(spark, uneven, complex, None, windows.length.toLong)
-      val (local, _) = dump(spark, uneven, complex, None, Long.MaxValue)
-      assert(fellBack == cached && local == cached, "a placement fitted or predicted other bits")
-      assert(fellBackJobs == cachedJobs,
-        s"the fallback ran $fellBackJobs jobs, the cached placement $cachedJobs: a second sketch pass?")
-    } finally uneven.unpersist()
+  test("a partition past its share of the bound falls back after one read, same bits") {
+    // one input partition holds most rows: with the bound at the bytes of
+    // all rows (36 a row of x, seq_id and t) its share (a quarter) is
+    // crossed partway through the read, which then runs to its end (it
+    // finds the largest symbol) but keeps no more rows
+    def fallsBack(df: DataFrame, params: AnomalyDetection.Params): Unit = {
+      val rows = df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      val (big, rest) = rows.splitAt(rows.length * 3 / 4)
+      val parts = Seq(big.toSeq) ++ rest.grouped(rest.length / 3 + 1).map(_.toSeq)
+      val uneven = spark.sparkContext.parallelize(parts, parts.length).flatMap(identity)
+        .toDF("seq_id", "t", "value").persist()
+      try {
+        uneven.count()
+        val (cached, cachedJobs) = dump(spark, uneven, params, None, 0L)
+        val (fellBack, fellBackJobs) = dump(spark, uneven, params, None, rows.length * 36L)
+        val (local, _) = dump(spark, uneven, params, None, Long.MaxValue)
+        assert(fellBack == cached && local == cached, "a placement fitted or predicted other bits")
+        assert(fellBackJobs == cachedJobs,
+          s"the fallback ran $fellBackJobs jobs, the cached placement $cachedJobs: a second read?")
+      } finally uneven.unpersist()
+    }
+    fallsBack(segmented(5501L, 8), complex)
+    fallsBack(twoRegimes(6, 3000, 1900L), plain)
   }
 }
