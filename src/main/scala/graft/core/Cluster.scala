@@ -24,9 +24,10 @@ import org.apache.spark.sql.types.DataType
   * them gathers the vectors for the default KMeans ([[readFeatures]]), and
   * the labels are applied inside the later passes, per sequence, by
   * [[kmeansLabeler]] (or from a pluggable clusterer's labels). The tally
-  * ([[llkTally]]) folds over the same blocks. The DataFrame forms
-  * ([[featuresLong]], [[assignFeatures]], [[llkTally]] over wide rows)
-  * serve the other callers.
+  * ([[llkTally]]) folds over the same blocks. The DataFrame forms serve
+  * the other callers: [[featuresLong]] is the frame of the same blocks'
+  * features ([[featureFrame]]); [[assignFeatures]] and [[llkTally]] over
+  * wide rows take any frame.
   */
 object Cluster {
 
@@ -55,20 +56,20 @@ object Cluster {
     Seq(uniform, geomFwd, geomRev, twoState)
   }
 
-  /** LONG-FORM features: llk vector vs base models folded directly over
-    * `(seq_id, t, symbol)` rows ([[Llk.scoreWide]], bit-exact with the
-    * array kernel) — the fit path never materializes a sequence as one
-    * array cell. The vector is the wide row's |bases| scores, in base
-    * order. */
+  /** LONG-FORM features `(seq_id, features)`: each sequence's llk vector
+    * against the base models, in base order, read off the sequence blocks
+    * of `(seq_id, t, symbol)` rows the fit cuts ([[SeqBlocks]],
+    * [[featureFrame]]) — no sequence is ever one array cell, and every
+    * value is [[sequenceFeatures]] of `Llk.llk` bit for bit. Rows with a
+    * null `t` or symbol are skipped; a repeated `(seq_id, t)` fails the
+    * call. */
   def featuresLong(spark: SparkSession, longDf: DataFrame, alphabetSize: Int): DataFrame = {
-    Llk.scoreWide(spark, longDf, basePfsas(alphabetSize))
-      .select(col("seq_id"), ColumnBridge.column(
-        graft.functions.LlkFeatureVector(ColumnBridge.expression(col("llks")))).as("features"))
+    val (blocks, seqType) = SeqBlocks.longForm(longDf, Some(basePfsas(alphabetSize)))
+    featureFrame(spark, blocks, seqType)
   }
 
   /** The clustering features of one sequence fed through
-    * [[SeqBlocks.Sequence]] against [[basePfsas]]: the values
-    * [[featuresLong]] gives its row. */
+    * [[SeqBlocks.Sequence]] against [[basePfsas]]. */
   private[core] def sequenceFeatures(seq: SeqBlocks.Sequence): Array[Double] =
     seq.llks.map(graft.functions.LlkFeatureVector.of)
 
@@ -189,8 +190,9 @@ object Cluster {
   }
 
   /** The `(seq_id, features)` frame of the features `blocks` carry, for
-    * the estimators that need a frame: MLlib's KMeans above
-    * [[LocalFitRows]] rows and a pluggable clusterer. */
+    * the estimators that need a frame (MLlib's KMeans above
+    * [[LocalFitRows]] rows and a pluggable clusterer) and for
+    * [[featuresLong]]. */
   private[graft] def featureFrame(spark: SparkSession, blocks: SeqBlocks.Parts,
                                   seqType: DataType): DataFrame = {
     import org.apache.spark.ml.linalg.SQLDataTypes
@@ -329,10 +331,10 @@ object Cluster {
     * [[assignFeaturesWithStats]] projects — so a caller that reads the
     * features sequence by sequence labels them without a plan of its own.
     * `read` is the features read ([[readFeatures]]), `frame` the features
-    * frame MLlib's fit needs when the driver fit does not apply. Returns
-    * the label with the member counts by rank. Needs `nClusters` > 1. */
+    * frame MLlib's fit needs when the driver fit does not apply. Needs
+    * `nClusters` > 1. */
   private[graft] def kmeansLabeler(read: (Long, Option[Array[Vector]]), frame: => DataFrame,
-                                   nClusters: Int, seed: Long): (Vector => Int, Seq[Long]) = {
+                                   nClusters: Int, seed: Long): Vector => Int = {
     require(nClusters > 1, s"kmeansLabeler: nClusters $nClusters <= 1")
     // MLlib's AUTO solver takes its block solver for fewer rows than
     // dimensions, and that solver fails with an index error when the rows
@@ -344,8 +346,8 @@ object Cluster {
           s"n_clusters=$nClusters: ${v.length} sequences cannot form $nClusters clusters")
     }
     val (model, counts) = fitKMeans(read, frame, nClusters, seed)
-    val (_, rankMap, sizes) = frequencyRelabel(observed(counts), nClusters)
-    ((v: Vector) => rankMap.getOrElse(model.predict(v), 0), sizes)
+    val (_, rankMap, _) = frequencyRelabel(observed(counts), nClusters)
+    (v: Vector) => rankMap.getOrElse(model.predict(v), 0)
   }
 
   /** Per fitted cluster i: `counts(i)(j)` = members whose [[Llk.argmin]]

@@ -11,15 +11,16 @@ import scala.collection.mutable
   * Split per SURVEY.md §2.8:
   *   - the HEAVY part — the "derivative heap" of empirical next-symbol
   *     counts for every context y, |y| ≤ L — is one distributed pass: on
-  *     the long form the [[graft.functions.PfsaHeapLong]] aggregate folds
-  *     each cluster's t-ordered rows into a count table (runs join at
-  *     merge, so counts are exact under any partitioning) and prunes it
-  *     before the collect; the array path counts `explode`d n-grams;
+  *     the long form ([[inferAllLong]], and the fit) a fold over sequence
+  *     blocks ([[SeqBlocks]]) feeds each sequence in t order into its
+  *     cluster's [[graft.functions.PfsaHeapLong]] count table, pruned on
+  *     the driver; the array path ([[inferAll]], the independent
+  *     comparator) counts `explode`d n-grams;
   *   - the TINY part — ε-synchronization, BFS state discovery, SCC
   *     restriction — runs on the driver over the heap, which holds at most
   *     Σ_{l≤L} |Σ|^l < |Σ|²/(ε(|Σ|−1)) contexts for in-alphabet data;
   *   - the π̃ transition-count pass is a second distributed sweep with the
-  *     inferred skeleton broadcast.
+  *     inferred skeletons in its closure.
   *
   * Exact numeric parity with the reference's C++ kernel is impossible (binary
   * absent); acceptance is behavioral — recovering known generators within ε
@@ -79,33 +80,81 @@ object GenESeSS {
       .agg(count(lit(1)).as("cnt"))
 
   /** [[ngramCounts]] over LONG-FORM `(seq_id, t, symbol, cluster)` rows:
-    * the same (cluster, ctx, nxt, cnt) counts, unpruned, from one
-    * [[graft.functions.PfsaHeapLong]] aggregate per cluster — no sequence is
-    * ever one array cell, so there is no sequence-length ceiling, and the
-    * per-cluster state is the context table (bounded by the alphabet and L)
-    * plus one open run per sequence. The input is partitioned by seq_id and
-    * t-sorted first, so each sequence folds as one run. */
+    * the same (cluster, ctx, nxt, cnt) counts, unpruned, from the heap fold
+    * of [[inferAllLong]] — no sequence is ever one array cell, so there is
+    * no sequence-length ceiling. Counted on the driver's call; the result
+    * is a local relation. */
   def ngramCountsLong(longDf: DataFrame, maxCtxLen: Int): DataFrame =
-    heapLong(presorted(longDf), maxCtxLen, minCtxCount = 1L, maxContexts = Int.MaxValue)
-      .select(col("cluster"), inline(col("heap")))
+    heapCountsLong(longDf, maxCtxLen, minCtxCount = 1L, maxContexts = Int.MaxValue)
 
-  /** Per-cluster (cluster, heap: array<struct<ctx, nxt, cnt>>) over long-form
-    * rows, pruned inside the aggregate (see [[graft.functions.PfsaHeapLong]]). */
-  private[core] def heapLong(longDf: DataFrame, maxCtxLen: Int, minCtxCount: Long,
-                       maxContexts: Int): DataFrame = {
+  /** The (cluster, ctx, nxt, cnt) rows of each cluster's heap of long-form
+    * labeled rows, pruned as [[inferAllLong]] prunes it
+    * ([[graft.functions.PfsaHeapLong.Buffer.result]]). */
+  private[core] def heapCountsLong(longDf: DataFrame, maxCtxLen: Int, minCtxCount: Long,
+                                   maxContexts: Int): DataFrame = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.util.ArrayData
     import org.apache.spark.sql.graft.ColumnBridge
-    val heap = ColumnBridge.column(graft.functions.PfsaHeapLong(
-      ColumnBridge.expression(col("seq_id")),
-      ColumnBridge.expression(col("t").cast("long")),
-      ColumnBridge.expression(col("symbol").cast("byte")),
-      maxCtxLen, minCtxCount, maxContexts).toAggregateExpression())
-    longDf.groupBy(col("cluster")).agg(heap.as("heap"))
+    import org.apache.spark.sql.types._
+    val rows = heaps(labeledBlocks(longDf), clusterOf, maxCtxLen).toSeq.sortBy(_._1).flatMap {
+      case (c, b) => b.result(minCtxCount, maxContexts).map { case (ctx, nxt, cnt) =>
+        InternalRow(c, ArrayData.toArrayData(ctx), nxt, cnt) }
+    }
+    ColumnBridge.fromLocalRows(longDf.sparkSession, rows, StructType(Seq(
+      StructField("cluster", IntegerType, nullable = false),
+      StructField("ctx", ArrayType(ByteType, containsNull = false), nullable = false),
+      StructField("nxt", IntegerType, nullable = false),
+      StructField("cnt", LongType, nullable = false))))
   }
 
-  /** One partition per sequence, t-ascending: the shape the run-based
-    * aggregates fold in a single run per sequence. */
-  private def presorted(longDf: DataFrame): DataFrame =
-    longDf.repartition(col("seq_id")).sortWithinPartitions(col("seq_id"), col("t"))
+  /** The sequence blocks of long-form labeled rows `(seq_id, t, symbol,
+    * cluster)`: a sequence is a (cluster, seq_id) pair, keyed by that
+    * struct, so [[clusterOf]] reads its cluster off the key. Not
+    * persisted. */
+  private def labeledBlocks(longLabeled: DataFrame): SeqBlocks.Parts =
+    SeqBlocks.longForm(longLabeled.select(
+      struct(col("cluster").cast("int").as("cluster"), col("seq_id").as("seq_id")).as("seq_id"),
+      col("t"), col("symbol")), None)._1
+
+  /** The cluster of a [[labeledBlocks]] sequence; a null cluster is none. */
+  private val clusterOf: (Any, Array[Double]) => Int = { (key, _) =>
+    val k = key.asInstanceOf[org.apache.spark.sql.catalyst.InternalRow]
+    if (k.isNullAt(0)) -1 else k.getInt(0)
+  }
+
+  /** The derivative heap of each cluster `label` names (< 0: none) over a
+    * fold of `blocks`: every partition feeds each sequence, in t order,
+    * into its cluster's [[graft.functions.PfsaHeapLong.Buffer]], and the
+    * driver adds the partitions' counts up — integers, so exact for any
+    * split. The clusters are the labels the fold saw. */
+  private def heaps(blocks: SeqBlocks.Parts, label: (Any, Array[Double]) => Int,
+                    L: Int): Map[Int, graft.functions.PfsaHeapLong.Buffer] = {
+    import graft.functions.PfsaHeapLong
+    val parts = blocks.fold { it =>
+      val bufs = mutable.HashMap.empty[Int, PfsaHeapLong.Buffer]
+      SeqBlocks.foreachSequence(it, new SeqBlocks.Visitor {
+        private var buf: PfsaHeapLong.Buffer = null
+        def begin(id: Any, features: Array[Double]): Unit = {
+          val c = label(id, features)
+          buf = if (c < 0) null else bufs.getOrElseUpdate(c, new PfsaHeapLong.Buffer(L))
+          if (buf != null) buf.beginSequence()
+        }
+        def symbols(s: Array[Byte], from: Int, until: Int): Unit =
+          if (buf != null) { var i = from; while (i < until) { buf.feed(s(i)); i += 1 } }
+        def end(): Unit = ()
+      })
+      bufs.toArray.map { case (c, b) => (c, b.toBytes) }
+    }
+    val merged = mutable.HashMap.empty[Int, PfsaHeapLong.Buffer]
+    parts.foreach(_.foreach { case (c, bytes) =>
+      val b = PfsaHeapLong.Buffer.fromBytes(bytes, L)
+      merged.get(c) match {
+        case Some(m) => m.absorb(b)
+        case None => merged(c) = b
+      }
+    })
+    merged.toMap
+  }
 
   /** Driver-side finish for one cluster: heap → (conn, states, annErr, syn). */
   private final case class Skeleton(
@@ -314,120 +363,63 @@ object GenESeSS {
   }
 
   /** [[inferAll]] over LONG-FORM labeled rows `(seq_id, t, symbol, cluster)`
-    * — no sequence is ever one array cell. Two aggregates read the same
-    * seq_id-partitioned, t-sorted input: the [[graft.functions.PfsaHeapLong]]
-    * heap (counted, floored at `minCtxCount` and cut to the `maxContexts`
-    * largest contexts per cluster inside the aggregate, so only the pruned
-    * heap is collected) and the [[graft.functions.PfsaVisitLong]] π̃ sweep
-    * (per-group state O(|Q|·|Σ|)). Produces the same machines as
-    * [[inferAll]] on the equivalent arrays (spec-checked), with no
-    * sequence-length ceiling.
-    *
-    * @param presort false when the caller already hash-partitioned by seq_id
-    *                and sorted by (seq_id, t) — e.g. fit's cached frame —
-    *                so neither aggregate adds an exchange of the raw rows
-    * @param knownClusters the distinct `cluster` ids present in
-    *                      `longLabeled`, when the caller already holds them
-    *                      (fit's frequency relabel does) — skips a full
-    *                      re-scan of the labeled join just to re-derive them */
+    * — no sequence is ever one array cell. A sequence is a (cluster,
+    * seq_id) pair: the rows are exchanged once into sequence blocks
+    * ([[SeqBlocks]], persisted for the two folds of [[inferBlocks]]), the
+    * fold the fit runs, and the clusters inferred are those the rows name.
+    * Produces the same machines as [[inferAll]] on the equivalent arrays
+    * (spec-checked), with no sequence-length ceiling. Only the t order
+    * matters, so sparse or negative t fold positionally; rows with a null
+    * `t` or symbol are skipped, a null cluster puts its rows in none, and
+    * a repeated (cluster, seq_id, t) fails the call. */
   def inferAllLong(spark: SparkSession, longLabeled: DataFrame, alphabetSize: Int,
-                   params: Params = Params(), presort: Boolean = true,
-                   knownClusters: Option[Seq[Int]] = None): Map[Int, Pfsa] = {
-    import org.apache.spark.sql.graft.ColumnBridge
-    val k = alphabetSize
-    val L = contextLength(k, params.eps, params.maxL)
-    val src = if (presort) presorted(longLabeled) else longLabeled
-    val counts = ColumnBridge.collectRows(heapLong(src, L, params.minCtxCount, params.maxContexts))
-      .map(r => r.getInt(0) -> heapOf(
-        r.getSeq[Row](1).map(e => (e.getSeq[Byte](0), e.getInt(1), e.getLong(2))), k))
-      .toMap
-    val allClusters = knownClusters.map(_.toArray).getOrElse(
-      longLabeled.select("cluster").distinct().collect().map(_.getInt(0)))
-    val skeletons = allClusters.map { cluster =>
-      cluster -> buildSkeleton(counts.getOrElse(cluster, Map.empty), k, params)
-    }.toMap
-
-    val visitsAgg = ColumnBridge.column(graft.functions.PfsaVisitLong(
-      ColumnBridge.expression(col("cluster").cast("int")),
-      ColumnBridge.expression(col("t").cast("long")),
-      ColumnBridge.expression(col("symbol").cast("byte")),
-      skeletons.map { case (c, s) => c -> s.conn }, k).toAggregateExpression())
-    // grouping by (cluster, seq_id) reuses src's seq_id partitioning — seq_id
-    // colocates the pair, no second exchange; the per-sequence arrays sum
-    // per cluster inside their partition
-    val visits = sumVisits(src
-      .groupBy(col("cluster"), col("seq_id"))
-      .agg(visitsAgg.as("v")), at = 2)
-    assemblePfsas(skeletons, visits, k, params)
+                   params: Params = Params()): Map[Int, Pfsa] = {
+    val blocks = labeledBlocks(longLabeled).persist()
+    try inferBlocks(blocks, clusterOf, alphabetSize, params)
+    finally blocks.unpersist()
   }
 
-  /** [[inferAllLong]] over sequence blocks (driver-held or cached),
-    * `label` naming each sequence's cluster (< 0: in none) and `clusters`
-    * the clusters to infer. Two folds feed the aggregates' buffers one
-    * sequence at a time: the heap ([[graft.functions.PfsaHeapLong]], one
-    * buffer per cluster and partition, merged on the driver — counts are
-    * integers, so the merge is exact for any split) and the π̃ sweep
-    * ([[graft.functions.PfsaVisitLong]], one buffer per sequence, summed
-    * per cluster). Same machines as [[inferAllLong]] on the same rows. */
+  /** GenESeSS over sequence blocks (driver-held or cached), `label` naming
+    * each sequence's cluster (< 0: in none); the clusters inferred are the
+    * labels the sequences get. Two folds read the sequences one at a time,
+    * in t order: the heap ([[heaps]]), pruned per cluster and finished on
+    * the driver into skeletons, and the π̃ sweep, which runs each sequence
+    * through its cluster's skeleton from state 0 and counts its (state,
+    * symbol) visits into the cluster's sums (an out-of-alphabet symbol is
+    * skipped without advancing, as [[graft.functions.PfsaVisitCounts]]
+    * does on arrays). Counts are integers, so the machines do not depend
+    * on how the sequences are split into partitions. */
   private[graft] def inferBlocks(blocks: SeqBlocks.Parts,
                                  label: (Any, Array[Double]) => Int, alphabetSize: Int,
-                                 params: Params, clusters: Seq[Int]): Map[Int, Pfsa] = {
-    import graft.functions.{PfsaHeapLong, PfsaVisitLong}
+                                 params: Params): Map[Int, Pfsa] = {
     val k = alphabetSize
     val L = contextLength(k, params.eps, params.maxL)
-    val heaps = blocks.fold { it =>
-      val bufs = mutable.HashMap.empty[Int, PfsaHeapLong.Buffer]
-      SeqBlocks.foreachSequence(it, new SeqBlocks.Visitor {
-        private var buf: PfsaHeapLong.Buffer = null
-        def begin(id: Any, features: Array[Double]): Unit = {
-          val c = label(id, features)
-          buf = if (c < 0) null else bufs.getOrElseUpdate(c, new PfsaHeapLong.Buffer(L))
-          if (buf != null) buf.beginSequence()
-        }
-        def symbols(s: Array[Byte], from: Int, until: Int): Unit =
-          if (buf != null) { var i = from; while (i < until) { buf.feed(s(i)); i += 1 } }
-        def end(): Unit = ()
-      })
-      bufs.toArray.map { case (c, b) => (c, b.toBytes) }
+    val skeletons = heaps(blocks, label, L).map { case (c, b) =>
+      c -> buildSkeleton(heapOf(b.result(params.minCtxCount, params.maxContexts), k), k, params)
     }
-    val merged = mutable.HashMap.empty[Int, PfsaHeapLong.Buffer]
-    heaps.foreach(_.foreach { case (c, bytes) =>
-      val b = PfsaHeapLong.Buffer.fromBytes(bytes, L)
-      merged.get(c) match {
-        case Some(m) => m.absorb(b)
-        case None => merged(c) = b
-      }
-    })
-    val counts = merged.map { case (c, b) =>
-      val heap = b.result(params.minCtxCount, params.maxContexts)
-      c -> heapOf((0 until heap.numElements()).map { i =>
-        val e = heap.getStruct(i, 3)
-        (e.getArray(0).toByteArray().toSeq, e.getInt(1), e.getLong(2))
-      }, k)
-    }
-    val skeletons = clusters.map(c => c -> buildSkeleton(counts.getOrElse(c, Map.empty), k, params)).toMap
     val conns = skeletons.map { case (c, sk) => c -> sk.conn }
     val visits = blocks.fold { it =>
       val sums = mutable.HashMap.empty[Int, Array[Long]]
       SeqBlocks.foreachSequence(it, new SeqBlocks.Visitor {
-        private var c = -1
-        private var t = 0L
-        private var buf: PfsaVisitLong.Buffer = null
+        private var conn: Array[Array[Int]] = null
+        private var cnt: Array[Long] = null
+        private var q = 0
         def begin(id: Any, features: Array[Double]): Unit = {
-          c = label(id, features)
-          t = 0L
-          buf = if (conns.contains(c)) new PfsaVisitLong.Buffer else null
+          val c = label(id, features)
+          conn = conns.getOrElse(c, null)
+          if (conn != null) cnt = sums.getOrElseUpdate(c, new Array[Long](conn.length * k))
+          q = 0
         }
         def symbols(s: Array[Byte], from: Int, until: Int): Unit =
-          if (buf != null) {
+          if (conn != null) {
             var i = from
-            while (i < until) { buf.add(c, t, s(i).toInt, conns, k); t += 1; i += 1 }
+            while (i < until) {
+              val x = s(i)
+              if (x >= 0 && x < k) { cnt(q * k + x) += 1; q = conn(q)(x) }
+              i += 1
+            }
           }
-        def end(): Unit =
-          if (buf != null) {
-            val v = buf.result(conns, k)
-            sums(c) = addCounts(sums.getOrElse(c, Array.emptyLongArray), v.length, v(_), _ => false)
-          }
+        def end(): Unit = ()
       })
       sums.toArray
     }
@@ -488,14 +480,14 @@ object GenESeSS {
       .collect()
       .groupBy(_.getInt(0))
       .map { case (cluster, rows) =>
-        cluster -> heapOf(rows.toSeq.map(r => (r.getSeq[Byte](1), r.getInt(2), r.getLong(3))), k)
+        cluster -> heapOf(rows.toSeq.map(r => (r.getSeq[Byte](1).toArray, r.getInt(2), r.getLong(3))), k)
       }
     finally raw.unpersist()
   }
 
   /** Driver boundary for one cluster's pruned (ctx, nxt, cnt) rows: contexts
     * → compact string form, counts → (φ̂, freq). */
-  private def heapOf(rows: Seq[(Seq[Byte], Int, Long)],
+  private def heapOf(rows: Seq[(Array[Byte], Int, Long)],
                      k: Int): Map[String, (Array[Double], Long)] =
     rows.groupBy(_._1.map(enc).mkString)
       .map { case (ctx, rs) =>

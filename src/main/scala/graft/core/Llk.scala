@@ -6,10 +6,16 @@ import org.apache.spark.sql.functions._
 /** Sequence log-likelihood scoring (reference Alg. 1, tex/ms.tex:261-287;
   * invoked at detection.py:141,424,486).
   *
-  * Scale design: sequences stay distributed as `array<tinyint>` cells; the
-  * model library is tiny and rides along as a closure/broadcast. One UDF call
-  * scores a sequence against EVERY library model (O(d·|Q|·k) per sequence,
-  * single pass, no cross join, no shuffle beyond the upstream collect_list).
+  * Two forms score a sequence against EVERY library model in one pass
+  * (O(d·|Q|·k) per sequence, no cross join; the library is tiny and rides
+  * along in the closure):
+  *   - the long form ([[scoreWide]], [[scoreAllLong]]) is the fold fit and
+  *     predict run: `(seq_id, t, symbol)` rows exchanged once into
+  *     sequence blocks ([[SeqBlocks]]), each sequence fed in t order
+  *     through one buffer — no sequence is ever one array cell;
+  *   - the array form ([[scoreAll]]) scores `array<tinyint>` cells in a
+  *     codegen'd expression: the independent comparator the long form is
+  *     checked against (`llk_score_long`).
   */
 object Llk {
 
@@ -83,44 +89,29 @@ object Llk {
   }
 
   /** Score every sequence against every model WITHOUT materializing arrays:
-    * the giant-sequence scale path (SURVEY §2.4 / §4.2 item 1). Folds llk
-    * directly over long-form `(seq_id, t, symbol)` rows through the
-    * [[graft.functions.LlkLongScore]] TypedImperativeAggregate, so per-group
-    * state is O(k·|Q|) — a billion-symbol stream never becomes a 1 GB
-    * `collect_list` cell (the array path's ceiling; reference streams cap at
-    * 500k symbols, examples/M2.cfg:15-17).
+    * the giant-sequence scale path (SURVEY §2.4 / §4.2 item 1). The
+    * long-form `(seq_id, t, symbol)` rows are exchanged once by seq_id and
+    * sorted by (seq_id, t) into sequence blocks ([[SeqBlocks]]), and each
+    * sequence is fed in t order through [[graft.functions.LlkLongScore]]'s
+    * buffer ([[scoreBlocks]]), the fold fit and predict run: per sequence
+    * the state is O(k·|Q|), so a billion-symbol stream never becomes a
+    * 1 GB `collect_list` cell (the array path's ceiling; reference streams
+    * cap at 500k symbols, examples/M2.cfg:15-17), and `llks(j)` is
+    * [[llk]] of the sequence's symbols under `library(j)` bit for bit,
+    * whatever the partitioning.
     *
     * The result is the WIDE cluster_llks matrix (reference detection.py:131):
     * one row `(seq_id, llks)` per sequence, `llks(j)` = llk under `library(j)`.
     *
-    * @param presort true (default) hash-partitions by seq_id and sorts by t
-    *                within partitions first: each sequence folds in one
-    *                in-order pass, BIT-EXACT with the array path. false
-    *                skips the row shuffle entirely — per-partition chunks
-    *                collapse map-side to k |Q|×|Q| matrices and only those
-    *                summaries shuffle (the 100-TB shape for sources already
-    *                written in event order); results then agree with the
-    *                array path to fp tolerance (~1e-12), not bit-exactly.
-    * @param longDf long-form with `seq_id`, `t` (non-negative; dense 0-based
-    *               per sequence is the efficient encoding — sparse t opens
-    *               one run per gap; per-partition arrival must be t-ascending
-    *               when presort=false; t < 0 is rejected) and
-    *               `symbol` (tinyint)
+    * @param longDf long-form with `seq_id`, `t` (any sortable type; only
+    *               the order matters, so sparse or negative t fold
+    *               positionally; a null t skips the row, a repeated
+    *               `(seq_id, t)` fails the call) and `symbol` (tinyint; a
+    *               null symbol skips the row)
     */
-  def scoreWide(spark: SparkSession, longDf: DataFrame, library: Seq[Pfsa],
-                presort: Boolean = true): DataFrame = {
-    import org.apache.spark.sql.graft.ColumnBridge
-    val agg = ColumnBridge.column(
-      graft.functions.LlkLongScore(
-        ColumnBridge.expression(col("t").cast("long")),
-        ColumnBridge.expression(col("symbol").cast("byte")),
-        library.toArray).toAggregateExpression())
-    val src =
-      if (presort) longDf.repartition(col("seq_id")).sortWithinPartitions(col("seq_id"), col("t"))
-      else longDf
-    // the groupBy reuses the repartition's hashpartitioning (no second
-    // exchange — EnsureRequirements sees the child distribution satisfied)
-    src.groupBy(col("seq_id")).agg(agg.as("llks"))
+  def scoreWide(spark: SparkSession, longDf: DataFrame, library: Seq[Pfsa]): DataFrame = {
+    val (blocks, seqType) = SeqBlocks.longForm(longDf, None)
+    scoreBlocks(spark, blocks, seqType, library)
   }
 
   /** Feeds each sequence of a partition's `blocks` whose `label` is not
@@ -146,8 +137,8 @@ object Llk {
       def end(): Unit = if (seq != null) f(id, c, seq.llks)
     })
 
-  /** The wide llk rows `(seq_id, llks)` of [[scoreWide]], from one fold
-    * over sequence blocks ([[foreachScored]]): over cached blocks a frame
+  /** The wide llk rows `(seq_id, llks)` of the sequences of `blocks`, from
+    * one fold over them ([[foreachScored]]): over an RDD of blocks a frame
     * scored when it is read, over driver-held blocks a local relation of
     * rows scored now. */
   private[graft] def scoreBlocks(spark: SparkSession, blocks: SeqBlocks.Parts,
@@ -173,9 +164,8 @@ object Llk {
   }
 
   /** [[scoreWide]] as long (seq_id, cluster_id, llk) rows. */
-  def scoreAllLong(spark: SparkSession, longDf: DataFrame, library: Seq[Pfsa],
-                   presort: Boolean = true): DataFrame =
-    scoreWide(spark, longDf, library, presort)
+  def scoreAllLong(spark: SparkSession, longDf: DataFrame, library: Seq[Pfsa]): DataFrame =
+    scoreWide(spark, longDf, library)
       .select(col("seq_id"), posexplode(col("llks")).as(Seq("cluster_id", "llk")))
 
   /** 0-based index of the lowest model reaching the row's minimum llk — the

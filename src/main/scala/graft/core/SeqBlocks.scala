@@ -4,7 +4,7 @@ import org.apache.spark.SparkContext
 import org.apache.spark.ml.clustering.graft.KMeansLocal
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, Expression,
   GenericInternalRow, InterpretedOrdering, SortOrder, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
@@ -28,11 +28,15 @@ final class SeqBlock(val ids: Array[Any], val ends: Array[Int], val symbols: Arr
 
 /** The fit's one copy of its data: the quantized long rows, exchanged once
   * by seq_id and sorted by (seq_id, t), cut into [[SeqBlock]]s. Every pass
-  * of the fit and of predict is a plain fold over the blocks that feeds
-  * the aggregates' own buffers one sequence at a time, in partition order
-  * and then in seq_id order within a partition: Alg. 1 and Alg. 2 of the
-  * paper (tex/ms.tex:261-338) read one sequence in order, and so do the
-  * folds, whatever the partition holds.
+  * of the fit and of predict, and of the long-form DataFrame entry points
+  * (`Llk.scoreWide`, `Cluster.featuresLong`, `GenESeSS.inferAllLong`,
+  * which cut blocks of their own rows, [[longForm]]), is a plain fold over
+  * the blocks that feeds the llk and heap buffers one sequence at a time,
+  * in partition order and then in seq_id order within a partition: Alg. 1
+  * and Alg. 2 of the paper (tex/ms.tex:261-338) read one sequence in
+  * order, and so do the folds, whatever the partition holds. Only the
+  * order of t matters; two rows of one sequence with the same t fail the
+  * cut.
   *
   * The blocks live in one of two placements ([[Parts]]): a cached RDD,
   * where every pass is one Spark job, or the driver, where a small fit's
@@ -130,33 +134,57 @@ object SeqBlocks {
     runs.map(Await.result(_, scala.concurrent.duration.Duration.Inf).fold(throw _, identity))
   }
 
+  /** A partition's rows sorted by (seq_id, t), wherever they are: [[cut]]
+    * makes the blocks, with each sequence's clustering features against
+    * `bases` when given (such a sequence stays whole in one block). */
+  sealed trait Rows {
+    def seqType: DataType
+    def cut(bases: Option[Seq[Pfsa]]): Parts
+  }
+
   /** The rows of `quantized` (`seq_id`, `t`, `symbol`) exchanged by seq_id
     * into the session's shuffle partitions and sorted by (seq_id, t)
-    * within them, as `(seq_id, symbol)` internal rows, with the type of
-    * seq_id. The partition count is explicit, so adaptive execution keeps
-    * it (it would otherwise coalesce a small input to one partition and
-    * one task per pass). Under adaptive execution this runs the exchange. */
-  def sortedRows(quantized: DataFrame): (RDD[InternalRow], DataType) = {
-    val sorted = quantized.select(col("seq_id"), col("t"), col("symbol"))
+    * within them, `symbol` as a byte. The partition count is explicit, so
+    * adaptive execution keeps it (it would otherwise coalesce a small
+    * input to one partition and one task per pass). Under adaptive
+    * execution this runs the exchange. */
+  def sortedRows(quantized: DataFrame): Rows = {
+    val sorted = quantized.select(col("seq_id"), col("t"), col("symbol").cast("byte"))
       .repartition(quantized.sparkSession.sessionState.conf.numShufflePartitions, col("seq_id"))
       .sortWithinPartitions(col("seq_id"), col("t"))
-      .select(col("seq_id"), col("symbol"))
-    (ColumnBridge.internalRows(sorted), sorted.schema.head.dataType)
+    new SortedRows(ColumnBridge.internalRows(sorted), sorted.schema(0).dataType,
+      sorted.schema(1).dataType)
   }
 
-  /** [[sortedRows]] cut into blocks. With `bases`, each sequence also
-    * carries its clustering features against them and stays whole in one
-    * block. Rows with a null symbol are skipped. */
-  def cut(rows: RDD[InternalRow], seqType: DataType, bases: Option[Seq[Pfsa]]): RDD[SeqBlock] = {
-    val lib = bases.map(_.toArray).orNull
-    rows.mapPartitions(cutPartition(_, seqType, lib))
+  /** [[sortedRows]]' `(seq_id, t, symbol)` rows of the given seq_id and t
+    * types. */
+  private final class SortedRows(rows: RDD[InternalRow], val seqType: DataType,
+                                 tType: DataType) extends Rows {
+    def cut(bases: Option[Seq[Pfsa]]): Parts = {
+      val (lib, idType, t) = (bases.map(_.toArray).orNull, seqType, tType)
+      Parts.Cached(rows.mapPartitions(cutPartition(_, idType, t, lib)))
+    }
   }
 
-  /** One partition of [[cut]]: its `(seq_id, symbol)` rows, sorted by
-    * (seq_id, t), as blocks; `lib` holds the bases, or is null. */
-  private def cutPartition(it: Iterator[InternalRow], seqType: DataType,
+  /** The `(seq_id, t, symbol)` rows of a long-form DataFrame entry point
+    * as blocks ([[sortedRows]], not persisted), with the seq_id type: rows
+    * with a null `t` are skipped, as are (by the cut) rows with a null
+    * symbol. */
+  private[core] def longForm(longDf: DataFrame, bases: Option[Seq[Pfsa]]): (Parts, DataType) = {
+    val rows = sortedRows(longDf.filter(col("t").isNotNull))
+    (rows.cut(bases), rows.seqType)
+  }
+
+  /** One partition of [[Rows.cut]]: its `(seq_id, t, symbol)` rows, sorted
+    * by (seq_id, t), as blocks; `lib` holds the bases, or is null. Rows
+    * with a null symbol are skipped; two rows of one seq_id with the same
+    * non-null t fail the cut, since the order their symbols would fold in
+    * is the exchange's, not the data's. */
+  private def cutPartition(it: Iterator[InternalRow], seqType: DataType, tType: DataType,
                            lib: Array[Pfsa]): Iterator[SeqBlock] = {
     val in = it.buffered
+    var lastId: Any = null
+    var lastT: Any = null
     new Iterator[SeqBlock] {
       def hasNext: Boolean = in.hasNext
       def next(): SeqBlock = {
@@ -183,9 +211,16 @@ object SeqBlocks {
           }
           if (!full) {
             in.next()
-            if (!r.isNullAt(1)) {
+            val t = if (r.isNullAt(1)) null else r.get(1, tType)
+            if (t != null && t == lastT && java.util.Objects.equals(id, lastId))
+              throw new IllegalArgumentException(s"repeated (seq_id, t): seq_id " +
+                s"${CatalystTypeConverters.convertToScala(id, seqType)}, t " +
+                s"${CatalystTypeConverters.convertToScala(t, tType)}; a sequence's rows need distinct t")
+            lastId = ids.last
+            lastT = InternalRow.copyValue(t)
+            if (!r.isNullAt(2)) {
               if (n == syms.length) syms = java.util.Arrays.copyOf(syms, n * 2)
-              val s = r.getByte(1)
+              val s = r.getByte(2)
               syms(n) = s
               n += 1
               if (seq != null) seq.add(s)
@@ -231,7 +266,7 @@ object SeqBlocks {
     * it (the exchange `sortedRows` plans), and every partition is sorted
     * by (seq_id, t) in Spark's ordering of their types. The sort is
     * stable, so rows with equal keys keep the read's order. */
-  private[graft] def replay(read: Read, partitions: Int): LocalRows = {
+  private[graft] def replay(read: Read, partitions: Int): Rows = {
     val seqAt = BoundReference(1, read.schema(1).dataType, nullable = true)
     val tAt = BoundReference(2, read.schema(2).dataType, nullable = true)
     val target = HashPartitioning(Seq(seqAt), partitions).partitionIdExpression
@@ -249,24 +284,25 @@ object SeqBlocks {
       java.util.Arrays.sort(rows, new InterpretedOrdering(Seq(SortOrder(seqAt, Ascending),
         SortOrder(tAt, Ascending))))
       rows
-    }, seqAt.dataType, read.symbol)
+    }, seqAt.dataType, tAt.dataType, read.symbol)
   }
 
   /** [[sortedRows]]' partitions held on the driver ([[replay]]): rows
-    * `(x, seq_id, t)` of the given seq_id type, with `symbol` giving a
-    * row's symbol from its `x`. */
-  private[graft] final class LocalRows(parts: Array[Array[UnsafeRow]], val seqType: DataType,
-                                       symbol: Expression) {
-    /** [[cut]] of these rows: the same blocks, on the driver. */
+    * `(x, seq_id, t)` of the given seq_id and t types, with `symbol`
+    * giving a row's symbol from its `x`; [[cut]] makes the same blocks
+    * as over [[sortedRows]], on the driver. */
+  private final class LocalRows(parts: Array[Array[UnsafeRow]], val seqType: DataType,
+                                tType: DataType, symbol: Expression) extends Rows {
     def cut(bases: Option[Seq[Pfsa]]): Parts = {
       val lib = bases.map(_.toArray).orNull
       Parts.Local(concurrently(parts.length) { p =>
-        val row = new GenericInternalRow(2)
+        val row = new GenericInternalRow(3)
         cutPartition(parts(p).iterator.map { r =>
           row.update(0, if (r.isNullAt(1)) null else r.get(1, seqType))
-          row.update(1, symbol.eval(r))
+          row.update(1, if (r.isNullAt(2)) null else r.get(2, tType))
+          row.update(2, symbol.eval(r))
           row
-        }, seqType, lib).toArray
+        }, seqType, tType, lib).toArray
       })
     }
   }

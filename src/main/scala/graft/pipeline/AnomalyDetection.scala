@@ -126,15 +126,11 @@ object AnomalyDetection {
     require(maxSym.nonEmpty, "AnomalyDetection.fit: input has no rows after quantization")
     val alphabetSize = math.max(2, maxSym.get + 1)
     val bases = if (withFeatures) Some(Cluster.basePfsas(alphabetSize)) else None
-    val (blocks, seqType) = read match {
-      case Some(r) =>
-        val rows = SeqBlocks.replay(r, longDf.sparkSession.sessionState.conf.numShufflePartitions)
-        (rows.cut(bases), rows.seqType)
-      case None =>
-        val (rows, seqType) = SeqBlocks.sortedRows(quantized())
-        (SeqBlocks.Parts.Cached(SeqBlocks.cut(rows, seqType, bases)).persist(), seqType)
+    val rows = read match {
+      case Some(r) => SeqBlocks.replay(r, longDf.sparkSession.sessionState.conf.numShufflePartitions)
+      case None => SeqBlocks.sortedRows(quantized())
     }
-    Placed(blocks, seqType, complexModel, alphabetSize)
+    Placed(rows.cut(bases).persist(), rows.seqType, complexModel, alphabetSize)
   }
 
   private def fitImpl(spark: SparkSession, longDf: DataFrame, params: Params,
@@ -164,29 +160,27 @@ object AnomalyDetection {
         if (feat == null) feat = Cluster.featureFrame(spark, blocks, seqType).persist(MEMORY_AND_DISK)
         feat
       }
-      // each step's label of a sequence, applied inside the passes, and
-      // the clusters with members (rank r has members iff sizes(r) > 0)
-      def labels(k: Int): ((Any, Array[Double]) => Int, Seq[Int]) = {
-        def ranks(sizes: Seq[Long]) = sizes.zipWithIndex.collect { case (n, r) if n > 0 => r }
+      // each step's label of a sequence, applied inside the passes; the
+      // clusters inferred are the labels the sequences get
+      def labels(k: Int): (Any, Array[Double]) => Int =
         clusterer match {
           case None if withFeatures && k > 1 =>
-            val (label, sizes) = Cluster.kmeansLabeler(features, frame, k, params.kmeansSeed)
-            ((_: Any, f: Array[Double]) => label(Vectors.dense(f)), ranks(sizes))
-          case None => ((_: Any, _: Array[Double]) => 0, Seq(0))
+            val label = Cluster.kmeansLabeler(features, frame, k, params.kmeansSeed)
+            (_: Any, f: Array[Double]) => label(Vectors.dense(f))
+          case None => (_: Any, _: Array[Double]) => 0
           case Some(_) =>
-            val (l, sizes) = Cluster.assignFeaturesWithStats(frame, k, params.kmeansSeed, clusterer)
+            val l = Cluster.assignFeatures(frame, k, params.kmeansSeed, clusterer)
             val byId = org.apache.spark.sql.graft.ColumnBridge.internalRows(l.select(col("seq_id"),
                 col("cluster")))
               .map(r => (org.apache.spark.sql.catalyst.InternalRow.copyValue(
                 if (r.isNullAt(0)) null else r.get(0, seqType)), r.getInt(1)))
               .collect().toMap
-            ((id: Any, _: Array[Double]) => byId.getOrElse(id, -1), ranks(sizes))
+            (id: Any, _: Array[Double]) => byId.getOrElse(id, -1)
         }
-      }
 
       var k = k0
-      var (label, observed) = labels(k)
-      var lib = GenESeSS.inferBlocks(blocks, label, alphabetSize, genParams, observed)
+      var label = labels(k)
+      var lib = GenESeSS.inferBlocks(blocks, label, alphabetSize, genParams)
       // KMeans may emit fewer distinct labels than requested (duplicate
       // points); the frequency relabel makes label ids dense, so the
       // effective k is the library size
@@ -204,9 +198,8 @@ object AnomalyDetection {
         var iter = 0
         var reduced = Cluster.reducedClusterCount(t.fractions, k)
         while (reduced < k && iter < 5) {
-          val step = labels(reduced)
-          label = step._1; observed = step._2
-          lib = GenESeSS.inferBlocks(blocks, label, alphabetSize, genParams, observed)
+          label = labels(reduced)
+          lib = GenESeSS.inferBlocks(blocks, label, alphabetSize, genParams)
           k = lib.size
           iter += 1
           t = tally()
@@ -253,9 +246,8 @@ object AnomalyDetection {
     val p = model.params
     val (quantized, _) =
       Quantize.byType(longDf, p.quantize, p.quantizeType, p.nSymbols, model.complexModel)
-    val (rows, seqType) = SeqBlocks.sortedRows(quantized)
-    predictions(Llk.scoreBlocks(spark, SeqBlocks.Parts.Cached(SeqBlocks.cut(rows, seqType, None)),
-      seqType, model.library), model)
+    val rows = SeqBlocks.sortedRows(quantized)
+    predictions(Llk.scoreBlocks(spark, rows.cut(None), rows.seqType, model.library), model)
   }
 
   /** Predictions as a UDF-free projection of the wide llk rows, shared by

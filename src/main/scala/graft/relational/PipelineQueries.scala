@@ -143,9 +143,10 @@ object PipelineQueries {
       .orderBy("seq_id", "cluster_id")
 
   /** llk_score_long: the array-free llk scale path ([[Llk.scoreAllLong]],
-    * SURVEY §4.2 item 1) SELF-VERIFIED against the array path inside the
-    * query — emits one row per (seq, model) with `agree` = the two engines
-    * produced the same llk (bit-exact or ≤1e-9; +∞ matches +∞). The DuckDB
+    * SURVEY §4.2 item 1: the sequence-block fold fit and predict run)
+    * SELF-VERIFIED against the array path inside the query — emits one
+    * row per (seq, model) with `agree` = the two engines produced the
+    * same llk (bit-exact or ≤1e-9; +∞ matches +∞). The DuckDB
     * oracle enumerates the expected (seq, model) grid with agree=true, so
     * any divergence, missing row, or extra row hash-fails the driver gate. */
   def llkScoreLong(s: SparkSession, d: String): DataFrame = {
@@ -185,8 +186,9 @@ object PipelineQueries {
   /** pfsa_infer (GenESeSS, detection.py:372-395): one PFSA per event_type
     * cluster, SELF-VERIFIED as distributed/local parity (the
     * llk_score_long pattern): the long-form inference engine
-    * ([[GenESeSS.inferAllLong]] — run-based heap + visit-sweep aggregates,
-    * no collect_list) must reproduce the array kernel machine-for-machine
+    * ([[GenESeSS.inferAllLong]] — the heap and visit-sweep folds over
+    * sequence blocks the fit runs, no collect_list) must reproduce the
+    * array kernel machine-for-machine
     * on the same labeled data, and the verdict grid is what the DuckDB
     * oracle pins (clusters enumerate from the event_type domain). This
     * hash-gates the core scale claim — that the array-free training path
@@ -207,27 +209,23 @@ object PipelineQueries {
     val typeIds = typeList.zipWithIndex
       .map { case (t, i) => (t, i) }.toSeq.toDF("event_type", "cluster")
     // long-form inference: a "sequence" is one (user, type) sub-stream; its
-    // global per-user t ranks are re-ranked dense within the pair so the
-    // visit aggregate folds single head runs — no collect_list anywhere
+    // global per-user t ranks are re-ranked dense within the pair (both
+    // engines read only their order) — no collect_list on the long side
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("seq_id"), col("event_type")).orderBy(col("t"))
     // eagerly materialized ONCE (r17): the events→quantize→double-rank
-    // chain below feeds FOUR full passes (long engine: ngram heap + visit
-    // sweep; array engine: the collect_list grouping, itself read twice
-    // inside inferAll) — uncheckpointed, each pass re-ran the whole chain
+    // chain below feeds both engines (the long engine's one exchange into
+    // sequence blocks; the array engine's collect_list grouping) —
+    // uncheckpointed, each read re-ran the whole chain
     val labeled = Quantize.simple(long, "seq_id", "t", "value")
       .join(broadcast(typeIds), Seq("event_type"))
       .select(struct(col("seq_id"), col("event_type")).as("seq_id"),
         (row_number().over(w) - 1).cast("long").as("t"),
         col("symbol"), col("cluster"))
       .localCheckpoint(true)
-    // cluster ids are BY CONSTRUCTION 0..n-1 (the zipWithIndex over the
-    // collected type domain) — pass them instead of letting inferAllLong
-    // re-scan the labeled join for a distinct the driver already holds
-    // (the r16 knownClusters lever, unused here until now)
-    val lib = GenESeSS.inferAllLong(s, labeled, alphabetSize = 2,
-      GenESeSS.Params(eps = 0.2),
-      knownClusters = Some(typeList.indices))
+    // the clusters inferred are those the heap fold sees: every type has
+    // events, so 0..n-1 (the zipWithIndex over the collected type domain)
+    val lib = GenESeSS.inferAllLong(s, labeled, alphabetSize = 2, GenESeSS.Params(eps = 0.2))
     // array path over the SAME labeled rows — the independent comparator;
     // checkpointed because inferAll folds it twice (heap + visit sweep)
     // and the collect_list grouping is the expensive step

@@ -77,12 +77,10 @@ class GenESeSSSpec extends AnyFunSuite {
     assert(!plan.contains("collect_list"), plan)
   }
 
-  test("long-form visit sweep survives scattered partitions (serialize + run merge)") {
+  test("long-form inference is unchanged by scattered input partitions") {
     import org.apache.spark.sql.functions._
-    // scatter rows by t-block WITHOUT presorting: partial aggregation folds
-    // per-partition mid runs, buffers SERIALIZE across the exchange, and the
-    // final merge composes transition functions — the distributed shape the
-    // pre-partitioned fit plan never exercises
+    // scatter rows by t-block: each sequence reaches the entry point split
+    // across partitions, and its one exchange must put it back together
     val data = Seq(
       (0L, 0, Pfsa.m2.sample(5000, 41).toSeq),
       (1L, 1, Pfsa.m2u.sample(5000, 42).toSeq))
@@ -94,12 +92,11 @@ class GenESeSSSpec extends AnyFunSuite {
       .sortWithinPartitions("seq_id", "t")
     val p = GenESeSS.Params(eps = 0.05)
     val libA = GenESeSS.inferAll(spark, seqs, alphabetSize = 2, p)
-    val libL = GenESeSS.inferAllLong(spark, long, alphabetSize = 2, p, presort = false)
+    val libL = GenESeSS.inferAllLong(spark, long, alphabetSize = 2, p)
     assert(libA.keySet == libL.keySet)
     for (c <- libA.keySet) {
       assert(libA(c).conn.map(_.toSeq).toSeq == libL(c).conn.map(_.toSeq).toSeq)
-      // visit counts are integers, so even via matrix-run composition the
-      // emissions must be EXACTLY equal
+      // visit counts are integers: the emissions must be EXACTLY equal
       assert(libA(c).pitilde.map(_.toSeq).toSeq == libL(c).pitilde.map(_.toSeq).toSeq,
         s"cluster $c emissions diverged under scattered partitions")
     }
@@ -168,8 +165,8 @@ class GenESeSSSpec extends AnyFunSuite {
       ss.conf.set("spark.sql.adaptive.enabled", aqe)
       ss.conf.set("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", fallback.toLong)
       // t-blocks of 3 (shorter than L), reverse t order within each
-      // partition: partial buffers hold many short runs that only join at
-      // merge/eval, and every buffer crosses the exchange serialized
+      // partition: every sequence arrives in pieces, out of order, and the
+      // heap buffers cross the fold's collect serialized
       val rows = data.flatMap { case (sid, c, tOf, s) =>
         s.zipWithIndex.map { case (sym, i) => (sid, tOf(i), sym, c) } }
       val long = ss.createDataFrame(rows).toDF("seq_id", "t", "symbol", "cluster")
@@ -177,13 +174,13 @@ class GenESeSSSpec extends AnyFunSuite {
         .sortWithinPartitions(col("t").desc)
 
       assert(countsOf(GenESeSS.ngramCountsLong(long, L).collect()) == want, s"$shape: ngramCountsLong")
-      def heap(minCtx: Long, maxCtx: Int) = countsOf(GenESeSS.heapLong(long, L, minCtx, maxCtx)
-        .select(col("cluster"), inline(col("heap"))).collect())
+      def heap(minCtx: Long, maxCtx: Int) =
+        countsOf(GenESeSS.heapCountsLong(long, L, minCtx, maxCtx).collect())
       assert(heap(1L, Int.MaxValue) == want, s"$shape: unpruned heap")
       assert(heap(2L, 3) == wantPruned, s"$shape: pruned heap")
-      sameMachines(libFull, GenESeSS.inferAllLong(ss, long, alphabetSize = 2, full, presort = false),
+      sameMachines(libFull, GenESeSS.inferAllLong(ss, long, alphabetSize = 2, full),
         s"$shape: full heap")
-      sameMachines(libPruned, GenESeSS.inferAllLong(ss, long, alphabetSize = 2, pruned, presort = false),
+      sameMachines(libPruned, GenESeSS.inferAllLong(ss, long, alphabetSize = 2, pruned),
         s"$shape: pruned heap")
     }
   }

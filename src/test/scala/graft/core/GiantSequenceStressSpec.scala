@@ -13,8 +13,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * ever crosses an executor boundary on the Spark side), and pin agreement
   * against an independently computed reference:
   *
-  *   - llk_score_long vs the driver-side array kernel [[Llk.llk]] on the
-  *     same deterministic stream — bit-exact presorted, 1e-9 scattered;
+  *   - `Llk.scoreAllLong` vs the driver-side array kernel [[Llk.llk]] on
+  *     the same deterministic stream — bit-exact, also when the rows
+  *     arrive scattered, where the `LlkLongScore` aggregate
+  *     (`graft_llk_score_long`) agrees to 1e-9;
   *   - inferAllLong on one 6M-symbol sequence vs the SAME stream chunked
   *     into 60 sequences of 100k — identical skeletons, emissions within
   *     1e-3 (the two differ only in 59 boundary contexts out of ~6M).
@@ -55,7 +57,7 @@ class GiantSequenceStressSpec extends AnyFunSuite {
       .collect().map(r => r.getInt(1) -> r.getDouble(2)).toMap
     val want = driverLlk(n)
     assert(got.keySet == want.keySet)
-    // presorted plan folds one in-order head run per sequence — the fold is
+    // the sequence is fed in t order through one buffer — the fold is
     // operation-for-operation the array kernel, so exact equality holds
     for ((ci, v) <- want) assert(got(ci) == v, s"model $ci: ${got(ci)} != $v")
     for ((_, v) <- got) assert(!v.isInfinite && v > 0.0, got.toString)
@@ -63,18 +65,26 @@ class GiantSequenceStressSpec extends AnyFunSuite {
 
   test("llk_score_long: the same 5M symbols scattered across 64 partitions agree to 1e-9") {
     val n = 5000000
-    // t-block scatter WITHOUT presort: every partition contributes mid-run
+    // t-block scatter: every partition feeds the aggregate mid-run
     // MATRICES that only compose at merge/eval — the shape a real shuffle
     // produces when a giant sequence spans many input splits
     val scattered = longDf(n.toLong)
       .repartition(64, expr("cast(t / 78125 as int)"))
       .sortWithinPartitions("seq_id", "t")
-    val got = Llk.scoreAllLong(spark, scattered, lib, presort = false)
-      .collect().map(r => r.getInt(1) -> r.getDouble(2)).toMap
+    import org.apache.spark.sql.graft.ColumnBridge
+    val agg = ColumnBridge.column(graft.functions.LlkLongScore(ColumnBridge.expression(col("t")),
+      ColumnBridge.expression(col("symbol")), lib.toArray).toAggregateExpression())
+    val got = scattered.groupBy(col("seq_id")).agg(agg.as("llks"))
+      .select(posexplode(col("llks")).as(Seq("cluster_id", "llk")))
+      .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
     val want = driverLlk(n)
     assert(got.keySet == want.keySet)
     for ((ci, v) <- want)
       assert(math.abs(got(ci) - v) <= 1e-9, s"model $ci: ${got(ci)} vs $v")
+    // the entry point exchanges the rows into one whole sequence: exact
+    val exact = Llk.scoreAllLong(spark, scattered, lib)
+      .collect().map(r => r.getInt(1) -> r.getDouble(2)).toMap
+    assert(exact == want)
   }
 
   test("inferAllLong: a 6M-symbol sequence infers the same machine as its 100k-chunk split") {
@@ -83,8 +93,8 @@ class GiantSequenceStressSpec extends AnyFunSuite {
     val p = GenESeSS.Params(eps = 0.05)
     val base = spark.range(n).select(col("id"), symCol.as("symbol"))
 
-    // one giant sequence: the single-seq_id worst case (whole visit sweep in
-    // one group's bounded O(|Q|·|Σ|) buffer — NOT one 6M-element array)
+    // one giant sequence: the single-seq_id worst case (the whole stream
+    // in one partition's blocks — NOT one 6M-element array)
     val full = base.select(zeroOf(col("id")).as("seq_id"), col("id").as("t"),
       col("symbol"), zeroOf(col("id")).cast("int").as("cluster"))
     // same stream as 60 bounded sequences — the independently-computable

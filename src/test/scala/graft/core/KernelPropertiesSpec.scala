@@ -101,12 +101,21 @@ class KernelPropertiesSpec extends AnyFunSuite {
         .toDF("seq_id", "t", "symbol")
         .repartition(5, expr(s"cast(t / $block as int)"))
         .sortWithinPartitions("seq_id", "t")
-      val got = Llk.scoreAllLong(spark, long, Seq(Pfsa.m2, Pfsa.m2u), presort = false)
+      // the LlkLongScore aggregate (graft_llk_score_long) over the
+      // scattered rows merges matrix runs; the entry point is exact
+      import org.apache.spark.sql.graft.ColumnBridge
+      val agg = ColumnBridge.column(graft.functions.LlkLongScore(ColumnBridge.expression(col("t")),
+        ColumnBridge.expression(col("symbol")), Array(Pfsa.m2, Pfsa.m2u)).toAggregateExpression())
+      val got = long.groupBy(col("seq_id")).agg(agg.as("llks"))
+        .select(posexplode(col("llks")).as(Seq("cluster_id", "llk")))
+        .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
+      val exact = Llk.scoreAllLong(spark, long, Seq(Pfsa.m2, Pfsa.m2u))
         .collect().map(r => r.getInt(1) -> r.getDouble(2)).toMap
       for ((m, ci) <- Seq(Pfsa.m2, Pfsa.m2u).zipWithIndex) {
         val want = Llk.llk(arr, m)
         assert(math.abs(got(ci) - want) <= 1e-9 || got(ci) == want,
           s"len=${arr.length} block=$block model=$ci: ${got(ci)} vs $want")
+        assert(exact(ci) == want, s"len=${arr.length} block=$block model=$ci: ${exact(ci)} vs $want")
       }
     }
   }

@@ -238,7 +238,7 @@ class AnomalyDetectionSpec extends AnyFunSuite {
         org.apache.spark.ml.linalg.Vectors.dense(
           llks.map(v => if (v.isInfinite || v.isNaN) 1e6 else v).toArray)
       }
-      Llk.scoreAllLong(spark, q, Cluster.basePfsas(alphabetSize), presort = false)
+      Llk.scoreAllLong(spark, q, Cluster.basePfsas(alphabetSize))
         .groupBy(col("seq_id"))
         .agg(expr("transform(array_sort(collect_list(struct(cluster_id, llk))), x -> x.llk)").as("lk"))
         .select(col("seq_id"), toVec(col("lk")).as("features"))
@@ -279,14 +279,12 @@ class AnomalyDetectionSpec extends AnyFunSuite {
       val alphabetSize = math.max(2, q.agg(max(col("symbol"))).head().getByte(0).toInt + 1)
       val feat = features(q, alphabetSize).cache()
       def inferForK(k: Int): (DataFrame, Map[Int, Pfsa]) = {
-        val (l, sizes) = Cluster.assignFeaturesWithStats(feat, k, params.kmeansSeed)
-        val lbl = l.cache()
+        val lbl = Cluster.assignFeatures(feat, k, params.kmeansSeed).cache()
         (lbl, GenESeSS.inferAllLong(spark, q.join(lbl, "seq_id"), alphabetSize,
-          GenESeSS.Params(eps = params.eps), presort = false,
-          knownClusters = Some(sizes.zipWithIndex.collect { case (n, r) if n > 0 => r })))
+          GenESeSS.Params(eps = params.eps)))
       }
       def score(lib: IndexedSeq[Pfsa]) =
-        Llk.scoreAllLong(spark, q, lib, presort = false).persist(MEMORY_AND_DISK)
+        Llk.scoreAllLong(spark, q, lib).persist(MEMORY_AND_DISK)
       var (labels, lib) = inferForK(params.nClusters)
       var k = lib.size
       val ks = scala.collection.mutable.ArrayBuffer(k)
@@ -296,7 +294,7 @@ class AnomalyDetectionSpec extends AnyFunSuite {
       while (params.reduceClusters && k > 1 && !converged && iter < 5) {
         llks = score((0 until k).map(lib))
         val fracs = confusion(llks, labels)
-        val wide = Cluster.llkTally(Llk.scoreWide(spark, q, (0 until k).map(lib), presort = false),
+        val wide = Cluster.llkTally(Llk.scoreWide(spark, q, (0 until k).map(lib)),
           labels, k).fractions
         assert(wide.toSet == fracs.toSet, s"wide confusion $wide != long-form $fracs")
         val reduced = Cluster.reducedClusterCount(fracs, k)
@@ -325,7 +323,7 @@ class AnomalyDetectionSpec extends AnyFunSuite {
 
     def predict(model: AnomalyDetection.Model, longDf: DataFrame): Seq[(Long, Boolean, Int, Long)] =
       predRows(predictions(Llk.scoreAllLong(spark,
-        densify(Quantize.passthrough(longDf)), model.library, presort = false),
+        densify(Quantize.passthrough(longDf)), model.library),
         model.bounds))
   }
 
@@ -623,13 +621,16 @@ class AnomalyDetectionSpec extends AnyFunSuite {
     // before the fit shared its plans and carried model values as data,
     // 90/44/33, 90/32/29 and 90/51/48 (with the cutoffs and ranks inlined,
     // a new corpus compiled 3-11 more classes than a repeat); after,
-    // 77/0/0 and 77/20/20.
+    // 77/0/0 and 77/20/20. The bound is 0, so the fit runs the plans of
+    // the cached-blocks path; a fit on the driver compiles almost nothing
+    // of its own. The first call must compile something, or the budget
+    // measures nothing.
     val params = AnomalyDetection.Params(anomalySensitivity = 2.0, nClusters = 3,
       reduceClusters = true, quantizeType = "complex", nSymbols = 3, eps = 0.2)
     val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
     def compiled(df: DataFrame): Long = {
       val before = compiles.getCount
-      AnomalyDetection.fitPredict(spark, df, params)._2.collect()
+      AnomalyDetection.driverFitBytes.withValue(0L)(AnomalyDetection.fitPredict(spark, df, params))._2.collect()
       compiles.getCount - before
     }
     val a = segmentedCorpus(4100L, 16, 3000)
@@ -639,6 +640,7 @@ class AnomalyDetectionSpec extends AnyFunSuite {
       val second = compiled(b)
       val third = compiled(b)
       info(s"compiles per call: first $first, second $second, third $third")
+      assert(first >= 1, s"the first call compiled no class (second $second, third $third)")
       assert(third <= 30, s"repeated call compiled $third classes (first $first, second $second)")
       assert(second <= third + 2,
         s"a new corpus compiled $second classes against $third on a repeat: model values in code?")

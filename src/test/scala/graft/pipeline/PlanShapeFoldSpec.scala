@@ -11,7 +11,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * 128 groups at which an object hash aggregate falls back to sort (and,
   * when the fold was one, merged split partial buffers), under the
   * session's 4 partitions with adaptive execution and again in one
-  * partition without it. */
+  * partition without it. The long-form DataFrame entry points run the
+  * same folds: `Llk.scoreWide`'s llks are `Llk.llk`'s, `featuresLong`'s
+  * vectors are the features of those llks, and `inferAllLong` infers the
+  * machines `inferAll` infers on the same sequences as arrays. */
 class PlanShapeFoldSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -47,6 +50,52 @@ class PlanShapeFoldSpec extends AnyFunSuite {
     }
   }
 
+  /** The sequences as long-form `(seq_id, t, symbol, cluster)` rows, three
+    * clusters by seq_id. */
+  private def labeled(s: SparkSession): DataFrame = {
+    import s.implicits._
+    seqs.flatMap { case (id, syms) =>
+      syms.zipWithIndex.map { case (x, t) => (id, t.toLong, x, (id % 3).toInt) }
+    }.toDF("seq_id", "t", "symbol", "cluster")
+  }
+
+  private val inferParams = graft.core.GenESeSS.Params(eps = 0.05)
+
+  /** `inferAll` on the same sequences as arrays: the reference machines. */
+  private lazy val arrayMachines = {
+    import spark.implicits._
+    val arrays = seqs.map { case (id, syms) => ((id % 3).toInt, syms.toSeq) }.toDF("cluster", "symbols")
+    graft.core.GenESeSS.inferAll(spark, arrays, alphabetSize = 2, inferParams)
+  }
+
+  private def machinesOf(lib: Map[Int, Pfsa]) = lib.toSeq.sortBy(_._1).map { case (c, p) =>
+    (c, p.conn.map(_.toSeq).toSeq, p.pitilde.map(_.toSeq).toSeq, p.symFrq.toSeq) }
+
+  private def checkEntryPoints(s: SparkSession, shape: String): Unit = {
+    import graft.core.{Cluster, GenESeSS}
+    val long = labeled(s).persist()
+    try {
+      val symbols = seqs.toMap
+      val lib = Seq(Pfsa.m2, Pfsa.m2u)
+      val wide = Llk.scoreWide(s, long, lib).collect()
+      assert(wide.map(_.getLong(0)).sorted.toSeq == seqs.map(_._1), s"$shape scoreWide: not one row per sequence")
+      wide.foreach { r =>
+        val want = lib.map(m => bits(Llk.llk(symbols(r.getLong(0)), m)))
+        assert(r.getSeq[Double](1).map(bits) == want, s"$shape scoreWide: sequence ${r.getLong(0)}")
+      }
+      val feats = Cluster.featuresLong(s, long, alphabetSize = 2).collect()
+      assert(feats.length == seqs.size, s"$shape featuresLong: ${feats.length} rows")
+      feats.foreach { r =>
+        val want = Cluster.basePfsas(2).map(m =>
+          bits(graft.functions.LlkFeatureVector.of(Llk.llk(symbols(r.getLong(0)), m))))
+        assert(r.getAs[org.apache.spark.ml.linalg.Vector](1).toArray.toSeq.map(bits) == want,
+          s"$shape featuresLong: sequence ${r.getLong(0)}")
+      }
+      val inferred = GenESeSS.inferAllLong(s, long, alphabetSize = 2, inferParams)
+      assert(machinesOf(inferred) == machinesOf(arrayMachines), s"$shape inferAllLong: machines differ from inferAll")
+    } finally long.unpersist()
+  }
+
   private def check(s: SparkSession, shape: String): Unit = {
     val train = corpus(s).persist()
     try {
@@ -67,14 +116,26 @@ class PlanShapeFoldSpec extends AnyFunSuite {
     } finally train.unpersist()
   }
 
+  private def onePartition: SparkSession = {
+    val one = spark.newSession()
+    one.conf.set("spark.sql.shuffle.partitions", "1")
+    one.conf.set("spark.sql.adaptive.enabled", "false")
+    one
+  }
+
   test("600 sequences at 4 partitions with adaptive execution: llks are Llk.llk's") {
     check(spark, "4 partitions")
   }
 
   test("600 sequences in one partition without adaptive execution: llks are Llk.llk's") {
-    val one = spark.newSession()
-    one.conf.set("spark.sql.shuffle.partitions", "1")
-    one.conf.set("spark.sql.adaptive.enabled", "false")
-    check(one, "1 partition")
+    check(onePartition, "1 partition")
+  }
+
+  test("entry points at 4 partitions, adaptive: llks, features, machines") {
+    checkEntryPoints(spark, "4 partitions")
+  }
+
+  test("entry points in 1 partition, no adaptive: llks, features, machines") {
+    checkEntryPoints(onePartition, "1 partition")
   }
 }

@@ -23,7 +23,14 @@ import org.apache.spark.sql.types.{IntegerType, StructType}
   * 600 short sequences, about 150 per partition, where an aggregate would
   * fall back to sort. The
   * last also records, per entry point, how many llks differ from `Llk.llk`
-  * on the sequence's symbols. */
+  * on the sequence's symbols.
+  *
+  * Four more dumps cover the long-form DataFrame entry points: the
+  * `Llk.scoreWide` llks and `Cluster.featuresLong` vectors of
+  * `many_groups`' sequences (each with how many differ from `Llk.llk`),
+  * and `GenESeSS.inferAllLong` machines on a `pfsa_infer`-shaped corpus
+  * (struct seq_ids, three clusters) and on `many_groups`' sequences in
+  * three clusters. */
 object SameBitsDump {
 
   def main(args: Array[String]): Unit = {
@@ -37,11 +44,13 @@ object SameBitsDump {
     spark.sparkContext.setLogLevel("WARN")
     try {
       val wanted = args.drop(1).toSet
-      corpora(spark).foreach { case (name, make) =>
+      val dumps = corpora(spark).map { case (name, make) => name -> (() => dump(spark, make())) } ++
+        entryPoints(spark)
+      dumps.foreach { case (name, text) =>
         if (wanted.isEmpty || wanted(name)) {
-          val text = dump(spark, make())
-          java.nio.file.Files.writeString(out.resolve(s"$name.txt"), text)
-          println(s"[same-bits] $name: ${text.length} chars")
+          val t = text()
+          java.nio.file.Files.writeString(out.resolve(s"$name.txt"), t)
+          println(s"[same-bits] $name: ${t.length} chars")
         }
       }
     } finally spark.stop()
@@ -102,14 +111,70 @@ object SameBitsDump {
       "quantize_false" -> (() => Corpus(longForm(twoRegimes(6, 4000, 1700L, 100L)), plain)),
       "pluggable" -> (() => Corpus(longForm(twoRegimes(6, 3000, 1900L, 100L)), plain,
         Some(new SplitAtHalf(6L)))),
-      "many_groups" -> { () =>
-        // PlanShapeFoldSpec's corpus
-        val seqs = (0 until 600).map { i =>
-          i.toLong -> (if (i % 3 == 0) Pfsa.m2u else Pfsa.m2).sample(30 + i % 23, seed = 8800L + i)
-        }
-        Corpus(longForm(seqs), plain.copy(nClusters = 3), symbols = Some(seqs.toMap))
-      })
+      "many_groups" -> (() => Corpus(longForm(manyGroups), plain.copy(nClusters = 3),
+        symbols = Some(manyGroups.toMap))))
   }
+
+  /** PlanShapeFoldSpec's 600 short sequences. */
+  private val manyGroups = (0 until 600).map { i =>
+    i.toLong -> (if (i % 3 == 0) Pfsa.m2u else Pfsa.m2).sample(30 + i % 23, seed = 8800L + i)
+  }
+
+  /** The entry-point dumps, by name. */
+  private def entryPoints(spark: SparkSession): Seq[(String, () => String)] = {
+    import spark.implicits._
+    val symbols = manyGroups.toMap
+    def many = manyGroups.flatMap { case (id, syms) =>
+      syms.zipWithIndex.map { case (x, t) => (id, t.toLong, x, (id % 3).toInt) }
+    }.toDF("seq_id", "t", "symbol", "cluster")
+    def differ(got: Seq[Double], want: Seq[Double]) = got.map(bits) != want.map(bits)
+    val lib = Seq(Pfsa.m2, Pfsa.m2u)
+    Seq(
+      "entry_score_wide" -> { () =>
+        val rows = Llk.scoreWide(spark, many, lib).collect()
+          .map(r => r.getLong(0) -> r.getSeq[Double](1).toSeq).sortBy(_._1)
+        val off = rows.count { case (id, llks) => differ(llks, lib.map(Llk.llk(symbols(id), _))) }
+        rows.map { case (id, llks) => s"$id ${llks.map(bits).mkString(",")}\n" }.mkString +
+          s"== scoreWide llks that differ from Llk.llk: $off of ${rows.length}\n"
+      },
+      "entry_features_long" -> { () =>
+        val bases = graft.core.Cluster.basePfsas(2)
+        val rows = graft.core.Cluster.featuresLong(spark, many, alphabetSize = 2).collect()
+          .map(r => r.getLong(0) -> r.getAs[org.apache.spark.ml.linalg.Vector](1).toArray.toSeq)
+          .sortBy(_._1)
+        val off = rows.count { case (id, f) =>
+          differ(f, bases.map(m => graft.functions.LlkFeatureVector.of(Llk.llk(symbols(id), m)))) }
+        rows.map { case (id, f) => s"$id ${f.map(bits).mkString(",")}\n" }.mkString +
+          s"== featuresLong vectors that differ from Llk.llk's: $off of ${rows.length}\n"
+      },
+      "entry_infer_struct" -> { () =>
+        // pfsa_infer's shape: a sequence is one (user, type) sub-stream,
+        // keyed by a struct, one cluster per type
+        val types = Seq("click", "scroll", "view")
+        val rows = for (user <- 0L until 40L; (ty, c) <- types.zipWithIndex) yield {
+          val m = if ((user + c) % 2 == 0) Pfsa.m2 else Pfsa.m2u
+          (user, ty, c, m.sample(50 + ((user * 7 + c * 13) % 100).toInt, seed = 9400L + user * 3 + c))
+        }
+        val df = rows.flatMap { case (user, ty, c, syms) =>
+          syms.zipWithIndex.map { case (x, t) => (user, ty, t.toLong, x, c) }
+        }.toDF("user_id", "event_type", "t", "symbol", "cluster")
+          .select(org.apache.spark.sql.functions.struct(col("user_id"), col("event_type")).as("seq_id"),
+            col("t"), col("symbol"), col("cluster"))
+        machines(graft.core.GenESeSS.inferAllLong(spark, df, alphabetSize = 2,
+          graft.core.GenESeSS.Params(eps = 0.2)))
+      },
+      "entry_infer_many" -> (() => machines(graft.core.GenESeSS.inferAllLong(spark, many,
+        alphabetSize = 2, graft.core.GenESeSS.Params(eps = 0.05)))))
+  }
+
+  private def machines(lib: Map[Int, Pfsa]): String =
+    lib.toSeq.sortBy(_._1).map { case (c, p) => pfsa(c, p) }.mkString
+
+  private def pfsa(i: Int, p: Pfsa): String =
+    s"pfsa $i conn ${p.conn.map(_.mkString(",")).mkString(";")}\n" +
+      s"pfsa $i pitilde ${p.pitilde.map(_.map(bits).mkString(",")).mkString(";")}\n" +
+      s"pfsa $i symFrq ${p.symFrq.map(bits).mkString(",")} annErr ${bits(p.annErr)} " +
+      s"mrgEps ${bits(p.mrgEps)} synStr ${p.synStr.map(_.mkString(",")).getOrElse("-")}\n"
 
   private def bits(x: Double): String = java.lang.Long.toHexString(java.lang.Double.doubleToRawLongBits(x))
 
@@ -118,12 +183,7 @@ object SameBitsDump {
     sb ++= s"alphabet ${m.alphabetSize} library ${m.library.size}\n"
     sb ++= s"cutoffs ${m.complexModel.map(_.cutoffs.map(bits).mkString(",")).getOrElse("-")}\n"
     sb ++= s"means ${m.llkMeans.map(bits).mkString(",")}\nstds ${m.llkStds.map(bits).mkString(",")}\n"
-    m.library.zipWithIndex.foreach { case (p, i) =>
-      sb ++= s"pfsa $i conn ${p.conn.map(_.mkString(",")).mkString(";")}\n"
-      sb ++= s"pfsa $i pitilde ${p.pitilde.map(_.map(bits).mkString(",")).mkString(";")}\n"
-      sb ++= s"pfsa $i symFrq ${p.symFrq.map(bits).mkString(",")} annErr ${bits(p.annErr)} " +
-        s"mrgEps ${bits(p.mrgEps)} synStr ${p.synStr.map(_.mkString(",")).getOrElse("-")}\n"
-    }
+    m.library.zipWithIndex.foreach { case (p, i) => sb ++= pfsa(i, p) }
     sb ++= AnomalyDetection.describePfsas(m) += '\n'
     sb.result()
   }
